@@ -1,27 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Queries whose iter1 lands below this get no second iteration. */
   private val Iter2MinSec = 0.25
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // iterative graph queries reliably checkpoint per-round state; clean
-      // each query's checkpoint files once its RDDs are GC'd so a 300-query
-      // bench run doesn't accrete them in tmp
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus)
     // Warm-up: JIT the scan/codegen path once so the first timed query isn't
     // charged JVM startup (standard practice; every query still pays its own
     // planning + execution).
@@ -168,43 +153,8 @@ object Bench {
         }
       }
     }
-    // The driver keeps only the last ~2000 chars of stdout; the JSON line must
-    // fit entirely inside that window (minus sbt's trailing "[success] …"
-    // line, ~75 chars) or it is truncated mid-line and never parses
-    // (BENCH_r01..r03 all recorded "parsed": null for this reason).
-    // Compact encoding: per-query keys are the qNN prefix (unambiguous —
-    // names are qNN_description), seconds at 2 decimals, and the map is
-    // BUDGETED: queries enter by descending cost until the line would exceed
-    // QUERIES_BUDGET chars; anything omitted is cheap (sub-threshold) and its
-    // time is still inside "value". "qtotal" is the full inventory size and
-    // "qshown" how many made the map, so a reader can tell the map is a
-    // cost-ranked prefix, not the whole set.
-    def fmt(v: Double): String = f"$v%.3f"
-    def fmtQ(v: Double): String = f"$v%.2f"
-    def short(name: String): String = name.indexOf('_') match {
-      case -1 => name
-      case i  => name.substring(0, i)
-    }
-    val QUERIES_BUDGET = 1500 // chars for the queries map alone
-    val ranked = results.toSeq.sortBy { case (n, s) => (-s, n) }
-      .map { case (k, v) => "\"" + short(k) + "\":" + fmtQ(v) }
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = 2 // braces
-    ranked.foreach { e =>
-      if (used + e.length + 1 <= QUERIES_BUDGET) { kept += e; used += e.length + 1 }
-    }
-    val qs = kept.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => "\"" + short(k) + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    // normally {} — an entry here is a robustness flag; the recorded time
-    // for a flagged query is the MEDIAN of the three listed iterations
-    val disp = dispersion.map { case (k, its) =>
-      "\"" + short(k) + "\":" + its.map(fmtQ).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","qtotal":${results.size},"qshown":${kept.size},"iter2_min_sec":$Iter2MinSec,"prewarm_sec":${fmt(prewarmSec)},"queries":$qs,"errors":$errs,"disp":$disp,"sf":"$sfDir"}"""
-    if (line.length > 1850) // tail window 2000 minus sbt's trailing [success] line
+    val line = formatLine(results.toSeq, errors.toSeq, dispersion.toSeq, prewarmSec, sfDir)
+    if (line.length > LineBudget)
       System.err.println(s"[bench] WARNING: JSON line ${line.length} chars may exceed driver tail window")
     // The JSON goes to a side file FIRST (BENCH.json in the working dir —
     // the repo root under sbt), so a consumer never depends on tail-grepping
@@ -218,5 +168,66 @@ object Bench {
     // nothing this process controls can land between it and the tail.
     spark.stop()
     println(line)
+  }
+
+  /** The driver keeps only the last ~2000 chars of stdout. The JSON line
+    * must fit entirely inside that window, with room for sbt's "[info] "
+    * prefix and trailing "[success] …" line (~75 chars), or it is truncated
+    * mid-line and never parses. So the WHOLE line is budgeted.
+    */
+  private[graft] val LineBudget = 1800
+  /** Chars the `errors` map, and the `disp` map, may each take at most
+    * (braces included), so a bad run's flags cannot crowd every timing out
+    * of the line.
+    */
+  private[graft] val FlagsCap = 300
+
+  /** The bench result as one JSON line of at most [[LineBudget]] chars
+    * (unless the fixed fields alone exceed it). Per-query keys are the qNN
+    * prefix (names are qNN_description), seconds at 2 decimals. The fixed
+    * fields come first, then `errors` and `disp` up to their caps, and the
+    * `queries` map takes what is left: queries enter by descending cost, so
+    * anything omitted is cheap and its time is still inside "value".
+    * "qtotal"/"qshown", "etotal" and "dtotal" give each map's full size, so
+    * a reader can tell a map is a prefix, not the whole set.
+    */
+  private[graft] def formatLine(results: Seq[(String, Double)],
+      errors: Seq[(String, String)], disp: Seq[(String, Seq[Double])],
+      prewarmSec: Double, sfDir: String): String = {
+    def fmt(v: Double): String = f"$v%.3f"
+    def fmtQ(v: Double): String = f"$v%.2f"
+    def short(name: String): String = name.indexOf('_') match {
+      case -1 => name
+      case i  => name.substring(0, i)
+    }
+    def obj(es: Seq[String]): String = es.mkString("{", ",", "}")
+    /** Entries, in order, that keep the braced map within `cap` chars. */
+    def capped(es: Seq[String], cap: Int): Seq[String] = {
+      var used = 2
+      es.filter { e =>
+        val fits = used + e.length + 1 <= cap
+        if (fits) used += e.length + 1
+        fits
+      }
+    }
+    val total = results.map(_._2).sum
+    def render(qs: Seq[String], qshown: Int, es: Seq[String], ds: Seq[String]): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","qtotal":${results.size},"qshown":$qshown,"iter2_min_sec":$Iter2MinSec,"prewarm_sec":${fmt(prewarmSec)},"queries":${obj(qs)},"errors":${obj(es)},"etotal":${errors.size},"disp":${obj(ds)},"dtotal":${disp.size},"sf":"$sfDir"}"""
+    val errEntries = errors.map { case (k, v) => "\"" + short(k) + "\":\"" + v + "\"" }
+    // normally {}: an entry here is a robustness flag, and the recorded time
+    // for a flagged query is the MEDIAN of the three listed iterations
+    val dispEntries = disp.map { case (k, its) =>
+      "\"" + short(k) + "\":" + its.map(fmtQ).mkString("[", ",", "]") }
+    val ranked = results.sortBy { case (n, s) => (-s, n) }
+      .map { case (k, v) => "\"" + short(k) + "\":" + fmtQ(v) }
+    // chars the three maps may add beyond their empty "{}"; qshown has at
+    // most qtotal's digits, so the skeleton bounds the fixed fields
+    var free = LineBudget - render(Nil, results.size, Nil, Nil).length
+    val es = capped(errEntries, math.min(FlagsCap, free + 2))
+    free -= obj(es).length - 2
+    val ds = capped(dispEntries, math.min(FlagsCap, free + 2))
+    free -= obj(ds).length - 2
+    val qs = capped(ranked, free + 2)
+    render(qs, qs.size, es, ds)
   }
 }

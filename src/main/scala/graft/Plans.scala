@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump the formatted physical plan of one or every query —
   * `runMain graft.Plans [queryName] [sfDir]`. Used to audit pushdown, join
   * strategies, and shuffle counts after every operator change.
@@ -10,17 +8,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val name = args.headOption
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(4)
     val targets = name match {
       case Some(n) => Seq(n -> SparkEntry.queries(n))
       case None => SparkEntry.queries.toSeq.sortBy(_._1)

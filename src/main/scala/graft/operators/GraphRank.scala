@@ -56,11 +56,12 @@ object GraphRank {
       val dir = new org.apache.hadoop.fs.Path(
         System.getProperty("java.io.tmpdir"), s"graft-ckpt-${sc.applicationId}")
       sc.setCheckpointDir(dir.toString)
-      // Every session type (Verify, tests, Plans, QBench — not just Bench,
-      // which also sets cleaner.referenceTracking.cleanCheckpoints) must
-      // reclaim its edge-scale checkpoint files: the dir is per-appId, so a
-      // JVM-exit hook deleting it leaks nothing across sessions and races
-      // nothing within one (checkpoints are only read while the JVM lives).
+      // graft.Session sets cleaner.referenceTracking.cleanCheckpoints, which
+      // reclaims checkpoint files only once their RDDs are GC'd; the files
+      // still live at JVM exit, and those of sessions built elsewhere, go
+      // with this hook: the dir is per-appId, so deleting it leaks nothing
+      // across sessions and races nothing within one (checkpoints are only
+      // read while the JVM lives).
       sys.addShutdownHook {
         try dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
           .delete(dir, true)

@@ -43,7 +43,6 @@ object Tables {
     */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(spark, dir, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

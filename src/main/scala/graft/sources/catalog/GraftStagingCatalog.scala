@@ -251,9 +251,10 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // row-level rewrite through it commits against exactly that base
     // (optimistic concurrency).
     val (snapshotVersion, snapshotFiles, readPaths, dvNames) = resolveCurrent(d)
+    val schema = declaredSchema(fs, d)
     new VersionedStagingTable(
-      parquetTable(qualified(ident), readPaths, declaredSchema(fs, d)),
-      parquetTable(qualified(ident), Seq(d.toString), declaredSchema(fs, d)),
+      parquetTable(qualified(ident), readPaths, schema),
+      parquetTable(qualified(ident), Seq(d.toString), schema),
       d, snapshotVersion, snapshotFiles, dvNames)
   }
 

@@ -1011,10 +1011,6 @@ object StagingMaintenance {
     * delete surfaces as identity-keyed deletes and a MOR UPDATE (DV-delete
     * + preserved-id insert) pairs into pre/post images off the shared id.
     */
-  /** Plan-evidence accessor for [[lineageCdfDiff]] (dev tooling only). */
-  private[catalog] def lineageDiffForPlanDump(spark: SparkSession, fs: FileSystem,
-      d: Path, v: Long): DataFrame = lineageCdfDiff(spark, fs, d, v)
-
   private def lineageCdfDiff(spark: SparkSession, fs: FileSystem, d: Path,
       v: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, not, struct}
