@@ -19,10 +19,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *
   * Model (the Iceberg equality-delete idea, file-scoped):
   *
-  *  - A DV sidecar (`_graft_dv/dv-<token>.json`) records a KEY COLUMN, a
-  *    set of deleted key values, and the exact data files it applies to —
-  *    the files the row-level operation's scan planned, i.e. every file
-  *    that may still hold a stale row for those keys. Files written BY the
+  *  - A DV sidecar (`_graft_dv/<name>.json`) names the exact data files it
+  *    applies to — the files the row-level operation's scan planned, i.e.
+  *    every file that may still hold a stale row. Files written BY the
   *    same operation (the new row versions) are never named, so the fresh
   *    rows survive.
   *  - The version manifest gains a `dvs` array naming the active sidecars;
@@ -30,10 +29,25 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   *    is previous-files ++ fresh, dvs ++ one.
   *  - The READ path applies DVs inside the DSv2 scan: partitions holding a
   *    DV'd file are planned one-file-per-partition, and their readers drop
-  *    rows whose key is in that file's delete set. Plain `SELECT`, time
-  *    travel, and the row-level operation's own scan (so a second MERGE
-  *    never re-matches ghost rows) all read through this.
+  *    rows whose key (or position) that file's deletes name. Plain
+  *    `SELECT`, time travel, and the row-level operation's own scan (so a
+  *    second MERGE never re-matches ghost rows) all read through this.
   *  - OPTIMIZE folds: it reads with DVs applied and commits `dvs = []`.
+  *
+  * The four sidecar kinds ([[DvSidecar]]):
+  *  - `Keys` (`dv-<token>.json`, `"type":"long"|"string"`): a key column
+  *    and its deleted key values, inline;
+  *  - `KeyRun` (`dvk-<token>.json`): a key column and executor-written key
+  *    bins under `dvk-<token>/` — the over-inline-cap keyed delete;
+  *  - `Pos` (`dv-<token>.json`): per file, deleted row ordinals, inline —
+  *    keyless MOR;
+  *  - `PosRun` (`dvr-<token>.json`): per file, executor-written binary run
+  *    bins under `dvr-<token>/` — the over-inline-cap position delete.
+  * Each kind has one encoder (its `json`) and [[DvSidecar.decode]] is the
+  * one decoder: no other code reads the `"type"` tag. [[Deletes]] is the
+  * delete state in force at one snapshot — each named sidecar decoded once,
+  * each kind in its own part — and [[mode]] the table's one MOR
+  * declaration (`Key(col)`, `Pos` or `Off`).
   *
   * Contract: the declared merge key (`graft.merge-keys` table property at
   * CREATE) must be a ROW IDENTIFIER — unique per row, the CDC primary key.
@@ -83,22 +97,28 @@ object DeletionVectors {
       "row ordinal within its data file (graft position row id)"
   }
 
-  /** The declared MOR key column, when the table was created merge-on-read
-    * WITH a key ([[morPos]] is the keyless position-delete mode).
+  /** A table's merge-on-read declaration (`_graft_mor.txt`, written at
+    * CREATE): equality deletes on a key column, keyless position deletes,
+    * or copy-on-write.
     */
-  def morKey(fs: FileSystem, d: Path): Option[String] = {
-    val p = new Path(d, MorSidecar)
-    if (GraftStagingCatalog.isFile(fs, p))
-      Some(GraftStagingCatalog.readString(fs, p).trim)
-        .filter(s => s.nonEmpty && s != PosMarker)
-    else None
+  sealed trait MorMode
+  object MorMode {
+    final case class Key(col: String) extends MorMode
+    case object Pos extends MorMode
+    case object Off extends MorMode
   }
 
-  /** Keyless merge-on-read (position-delete) mode? */
-  def morPos(fs: FileSystem, d: Path): Boolean = {
+  /** The table's MOR mode: one probe of the mode sidecar, plus one read
+    * when it exists.
+    */
+  def mode(fs: FileSystem, d: Path): MorMode = {
     val p = new Path(d, MorSidecar)
-    GraftStagingCatalog.isFile(fs, p) &&
-      GraftStagingCatalog.readString(fs, p).trim == PosMarker
+    if (!GraftStagingCatalog.isFile(fs, p)) MorMode.Off
+    else GraftStagingCatalog.readString(fs, p).trim match {
+      case PosMarker => MorMode.Pos
+      case ""        => MorMode.Off
+      case k         => MorMode.Key(k)
+    }
   }
 
   def writeMorKey(fs: FileSystem, d: Path, key: String): Unit =
@@ -162,46 +182,111 @@ object DeletionVectors {
   private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** Write one DV sidecar; returns its DvDir-relative name for the manifest.
-    * Key values are JSON numbers (integral) or URL-encoded JSON strings.
+  /** Write one inline equality-delete sidecar; returns its DvDir-relative
+    * name for the manifest.
     */
   def writeDv(fs: FileSystem, d: Path, keyCol: String, isString: Boolean,
       files: Seq[String], keys: Set[Any]): String = {
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val name = s"dv-$token.json"
-    val dir = new Path(d, DvDir)
-    fs.mkdirs(dir)
-    val keyJson =
-      if (isString) keys.toSeq.map(k => "\"" + enc(k.asInstanceOf[String]) + "\"").sorted
-      else keys.toSeq.map(_.asInstanceOf[Long]).sorted.map(_.toString)
-    val json =
-      s"""{"key":"${enc(keyCol)}","type":"${if (isString) "string" else "long"}",""" +
-        s""""files":[${files.sorted.map(f => "\"" + f + "\"").mkString(",")}],""" +
-        s""""keys":[${keyJson.mkString(",")}]}"""
-    val out = fs.create(new Path(dir, name), false) // DVs are immutable: create-exclusive
-    try out.write(json.getBytes(UTF_8)) finally out.close()
+    val name = s"dv-${java.util.UUID.randomUUID().toString.take(12)}.json"
+    fs.mkdirs(new Path(d, DvDir))
+    writeSidecar(fs, d, name, DvSidecar.Keys(keyCol, isString, files, keys))
+  }
+
+  /** Create one sidecar — create-exclusive: DVs are immutable. */
+  private def writeSidecar(fs: FileSystem, d: Path, name: String,
+      sc: DvSidecar): String = {
+    val out = fs.create(new Path(new Path(d, DvDir), name), false)
+    try out.write(sc.json.getBytes(UTF_8)) finally out.close()
     name
   }
 
-  /** Load the named DV sidecars into a per-file deleted-key map (keys merged
-    * across DVs naming the same file). Missing sidecars fail loudly — a DV
-    * is commit metadata, not an advisory cache.
+  // ---- the sidecar format: one encoder per kind, one decoder ----
+
+  /** One decoded DV sidecar; see the object header for the four kinds.
+    * `json` is the kind's only encoder, [[DvSidecar.decode]] the only
+    * decoder.
     */
-  def loadDvs(fs: FileSystem, d: Path, names: Seq[String]): Map[String, Set[Any]] =
-    if (names.isEmpty) Map.empty
-    else {
-      val perFile = scala.collection.mutable.Map.empty[String, Set[Any]]
-      names.foreach { n =>
-        val txt = GraftStagingCatalog.readString(fs, new Path(new Path(d, DvDir), n))
-        if ("\"type\":\"pos\"".r.findFirstIn(txt).isDefined ||
-            "\"type\":\"keyrun\"".r.findFirstIn(txt).isDefined) {
-          // position sidecars belong to loadPosDvs; keyrun descriptors
-          // (r14 distributed key bins) to loadKeyRuns — parsing a keyrun
-          // here would also mis-read its URL-encoded file names
-        } else {
-        val isString = "\"type\":\"string\"".r.findFirstIn(txt).isDefined
-        val files = GraftStagingCatalog.parseArray(txt, "files")
-        val keysBody = ("\"keys\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt)
+  sealed trait DvSidecar { def json: String }
+  object DvSidecar {
+    /** Inline equality deletes: key values are JSON numbers (integral) or
+      * URL-encoded JSON strings; covered file names are plain.
+      */
+    final case class Keys(keyCol: String, isString: Boolean, files: Seq[String],
+        keys: Set[Any]) extends DvSidecar {
+      def json: String = {
+        val keyJson =
+          if (isString) keys.toSeq.map(k => quote(enc(k.asInstanceOf[String]))).sorted
+          else keys.toSeq.map(_.asInstanceOf[Long]).sorted.map(_.toString)
+        s"""{"key":"${enc(keyCol)}","type":"${if (isString) "string" else "long"}",""" +
+          s""""files":[${files.sorted.map(quote).mkString(",")}],""" +
+          s""""keys":[${keyJson.mkString(",")}]}"""
+      }
+    }
+    /** Distributed key bins: `dir` holds the bins; file names URL-encoded. */
+    final case class KeyRun(keyCol: String, isString: Boolean, dir: String, count: Long,
+        bins: Seq[String], files: Seq[String]) extends DvSidecar {
+      def json: String =
+        s"""{"type":"keyrun","key":"${enc(keyCol)}",""" +
+          s""""ktype":"${if (isString) "string" else "long"}","dir":"$dir",""" +
+          s""""count":$count,""" +
+          s""""bins":[${bins.sorted.map(quote).mkString(",")}],""" +
+          s""""files":[${files.sorted.map(f => quote(enc(f))).mkString(",")}]}"""
+    }
+    /** Inline position deletes: per file, the deleted row ordinals. */
+    final case class Pos(perFile: Seq[(String, Seq[Long])]) extends DvSidecar {
+      def json: String = {
+        val body = perFile.sortBy(_._1).map { case (f, ps) =>
+          quote(enc(f)) + ":[" + ps.distinct.sorted.mkString(",") + "]"
+        }.mkString(",")
+        s"""{"type":"pos","pos":{$body}}"""
+      }
+    }
+    /** Distributed position runs: per file, its run bins under `dir`;
+      * `rows` is the audit total of deleted ordinals.
+      */
+    final case class PosRun(dir: String, rows: Long,
+        perFile: Seq[(String, Seq[String])]) extends DvSidecar {
+      def json: String = {
+        val body = perFile.sortBy(_._1).map { case (f, bins) =>
+          quote(enc(f)) + ":[" + bins.sorted.map(quote).mkString(",") + "]"
+        }.mkString(",")
+        s"""{"type":"posrun","dir":"$dir","rows":$rows,"files":{$body}}"""
+      }
+    }
+
+    private def quote(s: String): String = "\"" + s + "\""
+    private val Entry = "\"([^\"]+)\":\\[([^\\]]*)\\]".r
+    private def entries(txt: String, skip: Set[String]): Seq[(String, Seq[String])] =
+      Entry.findAllMatchIn(txt).map(m => dec(m.group(1)) -> m.group(2).split(',')
+        .iterator.map(_.trim).filter(_.nonEmpty)
+        .map(_.stripPrefix("\"").stripSuffix("\"")).toSeq)
+        .filter { case (f, _) => !skip(f) }.toSeq
+    private def str(txt: String, field: String): Option[String] =
+      ("\"" + field + "\":\"([^\"]+)\"").r.findFirstMatchIn(txt).map(_.group(1))
+    private def num(txt: String, field: String): Option[Long] =
+      ("\"" + field + "\":(\\d+)").r.findFirstMatchIn(txt).map(_.group(1).toLong)
+
+    /** Decode sidecar `name`'s text — the only reader of the type tag. */
+    def decode(name: String, txt: String): DvSidecar =
+      if (txt.contains("\"type\":\"posrun\"")) {
+        PosRun(str(txt, "dir").getOrElse(
+            throw new IllegalStateException(s"run descriptor $name names no dir")),
+          num(txt, "rows").getOrElse(0L),
+          entries(txt, Set("type", "dir", "files")))
+      } else if (txt.contains("\"type\":\"pos\"")) {
+        Pos(entries(txt, Set("type", "pos")).map { case (f, ps) => f -> ps.map(_.toLong) })
+      } else if (txt.contains("\"type\":\"keyrun\"")) {
+        KeyRun(dec(str(txt, "key").getOrElse(
+            throw new IllegalStateException(s"keyrun descriptor $name names no key"))),
+          txt.contains("\"ktype\":\"string\""),
+          str(txt, "dir").getOrElse(
+            throw new IllegalStateException(s"keyrun descriptor $name names no dir")),
+          num(txt, "count").getOrElse(0L),
+          GraftStagingCatalog.parseArray(txt, "bins"),
+          GraftStagingCatalog.parseArray(txt, "files").map(dec))
+      } else {
+        val isString = txt.contains("\"type\":\"string\"")
+        val keysBody = "\"keys\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
           .map(_.group(1)).getOrElse("")
         val keys: Set[Any] =
           if (keysBody.trim.isEmpty) Set.empty
@@ -209,17 +294,96 @@ object DeletionVectors {
             "\"([^\"]*)\"".r.findAllMatchIn(keysBody).map(m => dec(m.group(1)): Any).toSet
           else keysBody.split(',').iterator.map(_.trim).filter(_.nonEmpty)
             .map(_.toLong: Any).toSet
-        files.foreach(f => perFile(f) = perFile.getOrElse(f, Set.empty) ++ keys)
+        Keys(str(txt, "key").map(dec).getOrElse(""), isString,
+          GraftStagingCatalog.parseArray(txt, "files"), keys)
+      }
+
+    /** Read and decode sidecar `name` of table `d`. */
+    def read(fs: FileSystem, d: Path, name: String): DvSidecar =
+      decode(name, GraftStagingCatalog.readString(fs, new Path(new Path(d, DvDir), name)))
+  }
+
+  // ---- the delete state in force at one snapshot ----
+
+  /** Every delete in force at one snapshot, each named sidecar decoded
+    * once and each kind in its own part: `inline` keys per file,
+    * `keyRuns` descriptors, and `pos` (inline ordinals + run bins).
+    * `mode` decides how [[applyTo]] suppresses rows.
+    */
+  final case class Deletes(mode: MorMode, inline: Map[String, Set[Any]],
+      keyRuns: Seq[KeyRuns], pos: PosDvs) {
+    /** Every data file some sidecar names. */
+    def covered: Set[String] =
+      inline.keySet ++ keyRuns.iterator.flatMap(_.files) ++ pos.coveredFiles
+
+    /** The same deletes, scoped to the files `keep` accepts. */
+    def restrict(keep: String => Boolean): Deletes =
+      Deletes(mode, inline.filter { case (f, _) => keep(f) },
+        keyRuns.map(kr => kr.copy(files = kr.files.filter(keep))), pos.filterFiles(keep))
+
+    /** One file's delete state, comparable across versions — the cheap
+      * visibility-change test CDF diffing runs: inline keys, the key-bin
+      * and run-bin identities (immutable, so identity is content) and
+      * inline ordinals.
+      */
+    def stateOf(f: String): (Set[Any], Set[String], (Set[Long], Seq[String])) =
+      (inline.getOrElse(f, Set.empty),
+        keyRuns.iterator.filter(_.files(f)).map(_.spec.dirUri).toSet, pos.stateOf(f))
+
+    /** Suppress the deleted rows of a V1 files-read of the table (the
+      * maintenance read path): inline keys, then key bins, on a keyed
+      * table; positions on a keyless one.
+      */
+    def applyTo(df: DataFrame): DataFrame = mode match {
+      case MorMode.Key(k) => applyKeyRunsToRead(applyToRead(df, k, inline), k, keyRuns)
+      case MorMode.Pos    => applyPosToRead(df, pos)
+      case MorMode.Off    => df
+    }
+  }
+
+  object Deletes {
+    val none: Deletes = Deletes(MorMode.Off, Map.empty, Nil, PosDvs.empty)
+
+    /** The deletes in force at manifest `mf`: one manifest read; a DV-free
+      * version stops there, otherwise one mode read and one read per
+      * sidecar.
+      */
+    def at(fs: FileSystem, d: Path, mf: Path): Deletes =
+      of(fs, d, GraftStagingCatalog.manifestDvs(fs, mf))
+
+    /** The named sidecars' deletes; the mode is read only when some are named. */
+    def of(fs: FileSystem, d: Path, names: Seq[String]): Deletes =
+      if (names.isEmpty) none else load(fs, d, mode(fs, d), names)
+
+    /** Decode each named sidecar once. Missing sidecars fail loudly — a DV
+      * is commit metadata, not an advisory cache.
+      */
+    def load(fs: FileSystem, d: Path, mode: MorMode, names: Seq[String]): Deletes = {
+      val dvDir = new Path(d, DvDir)
+      val inline = scala.collection.mutable.Map.empty[String, Set[Any]]
+      val keyRuns = scala.collection.mutable.ArrayBuffer.empty[KeyRuns]
+      val ords = scala.collection.mutable.Map.empty[String, Set[Long]]
+      val runs = scala.collection.mutable.Map.empty[String, Seq[String]]
+      names.foreach { n =>
+        DvSidecar.read(fs, d, n) match {
+          case k: DvSidecar.Keys =>
+            k.files.foreach(f => inline(f) = inline.getOrElse(f, Set.empty) ++ k.keys)
+          case kr: DvSidecar.KeyRun =>
+            keyRuns += KeyRuns(kr.keyCol, kr.isString, kr.files.toSet,
+              KeySpec(new Path(dvDir, kr.dir).toString, kr.bins, kr.isString), kr.count)
+          case p: DvSidecar.Pos =>
+            p.perFile.foreach { case (f, ps) => ords(f) = ords.getOrElse(f, Set.empty) ++ ps }
+          case r: DvSidecar.PosRun =>
+            val runDir = new Path(dvDir, r.dir)
+            r.perFile.foreach { case (f, bins) =>
+              if (bins.nonEmpty) runs(f) =
+                runs.getOrElse(f, Seq.empty) ++ bins.map(b => new Path(runDir, b).toString)
+            }
         }
       }
-      perFile.toMap
+      Deletes(mode, inline.toMap, keyRuns.toSeq, PosDvs(ords.toMap, runs.toMap))
     }
-
-  /** Deleted-key map in force at `manifest` (empty when the version carries
-    * no DVs — every pre-MOR table and every post-OPTIMIZE version).
-    */
-  def dvMapAt(fs: FileSystem, d: Path, manifest: Path): Map[String, Set[Any]] =
-    loadDvs(fs, d, GraftStagingCatalog.manifestDvs(fs, manifest))
+  }
 
   // ---- DISTRIBUTED EQUALITY-DELETE KEY BINS (r14 — SURVEY r14 candidate
   // #1, the keyed twin of the r13 position-run sidecars): a CDC burst
@@ -333,18 +497,9 @@ object DeletionVectors {
     */
   def writeKeyRunDescriptor(fs: FileSystem, d: Path, runDir: String,
       keyCol: String, isString: Boolean, files: Seq[String],
-      bins: Seq[String], count: Long): String = {
-    val name = s"$runDir.json"
-    val json =
-      s"""{"type":"keyrun","key":"${enc(keyCol)}",""" +
-        s""""ktype":"${if (isString) "string" else "long"}","dir":"$runDir",""" +
-        s""""count":$count,""" +
-        s""""bins":[${bins.sorted.map(b => "\"" + b + "\"").mkString(",")}],""" +
-        s""""files":[${files.sorted.map(f => "\"" + enc(f) + "\"").mkString(",")}]}"""
-    val out = fs.create(new Path(new Path(d, DvDir), name), false)
-    try out.write(json.getBytes(UTF_8)) finally out.close()
-    name
-  }
+      bins: Seq[String], count: Long): String =
+    writeSidecar(fs, d, s"$runDir.json",
+      DvSidecar.KeyRun(keyCol, isString, runDir, count, bins, files))
 
   // ---- purge support (r14): descriptor remap after a history rewrite ----
 
@@ -374,8 +529,15 @@ object DeletionVectors {
         if (np <= e) i += 1
       }
     }
+    mergeRuns(out.toSeq)
+  }
+
+  /** Sort inclusive (start, end) runs and merge touching or overlapping
+    * ones (possible across sidecars).
+    */
+  private def mergeRuns(runs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    out.sortBy(_._1).foreach { case (s, e) =>
+    runs.sortBy(_._1).foreach { case (s, e) =>
       merged.lastOption match {
         case Some((ls, le)) if s <= le + 1 =>
           if (e > le) merged(merged.length - 1) = (ls, e)
@@ -461,25 +623,23 @@ object DeletionVectors {
       purged: Map[String, Array[Long]],
       twinCum: Map[String, Array[Long]]): Unit = {
     val dvDir = new Path(d, DvDir)
+    def touches(perFile: Seq[(String, Seq[_])]): Boolean =
+      perFile.exists { case (f, _) => repl.contains(f) }
+    // equality descriptors: keys survive (a purged ghost key matches
+    // nothing) — only the covered-file names substitute
+    def substituted(files: Seq[String]): Option[Seq[String]] =
+      if (files.exists(repl.contains))
+        Some(files.flatMap(f => repl.getOrElse(f, Seq(f))).distinct)
+      else None
     names.foreach { n =>
-      val p = new Path(dvDir, n)
-      val txt = GraftStagingCatalog.readString(fs, p)
-      if (txt.contains("\"type\":\"posrun\"")) {
-        val dirName = "\"dir\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse(
-            throw new IllegalStateException(s"run descriptor $n names no dir"))
-        val runDir = new Path(dvDir, dirName)
-        val entries = "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(txt).toSeq
-          .map(m => dec(m.group(1)) -> m.group(2).split(',').iterator.map(_.trim)
-            .filter(_.nonEmpty).map(_.stripPrefix("\"").stripSuffix("\"")).toSeq)
-          .filter { case (f, _) => f != "type" && f != "dir" && f != "files" }
-        if (entries.exists { case (f, _) => repl.contains(f) }) {
+      val rewritten: Option[DvSidecar] = DvSidecar.read(fs, d, n) match {
+        case r: DvSidecar.PosRun if touches(r.perFile) =>
+          val runDir = new Path(dvDir, r.dir)
           // audit total: start from the descriptor's recorded count and
           // adjust by the covered entries' delta — untouched entries'
           // bins are never re-read
-          var total = "\"rows\":(\\d+)".r.findFirstMatchIn(txt)
-            .map(_.group(1).toLong).getOrElse(0L)
-          val newEntries = entries.flatMap { case (f, bins) =>
+          var total = r.rows
+          val newEntries = r.perFile.flatMap { case (f, bins) =>
             if (!repl.contains(f)) Seq(f -> bins)
             else {
               val rs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
@@ -498,19 +658,9 @@ object DeletionVectors {
               written
             }
           }
-          val body = newEntries.sortBy(_._1).map { case (f, bins) =>
-            "\"" + enc(f) + "\":[" + bins.sorted.map(b => "\"" + b + "\"").mkString(",") + "]"
-          }.mkString(",")
-          GraftStagingCatalog.writeString(fs, p,
-            s"""{"type":"posrun","dir":"$dirName","rows":$total,"files":{$body}}""")
-        }
-      } else if (txt.contains("\"type\":\"pos\"")) {
-        val entries = "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(txt).toSeq
-          .map(m => dec(m.group(1)) -> m.group(2).split(',').iterator.map(_.trim)
-            .filter(_.nonEmpty).map(_.toLong).toSeq)
-          .filter { case (f, _) => f != "type" && f != "pos" }
-        if (entries.exists { case (f, _) => repl.contains(f) }) {
-          val newEntries = entries.flatMap { case (f, ords) =>
+          Some(DvSidecar.PosRun(r.dir, total, newEntries))
+        case ps: DvSidecar.Pos if touches(ps.perFile) =>
+          Some(DvSidecar.Pos(ps.perFile.flatMap { case (f, ords) =>
             if (!repl.contains(f)) Seq(f -> ords)
             else {
               val pg = purged.getOrElse(f, Array.empty[Long])
@@ -533,34 +683,12 @@ object DeletionVectors {
                   twins(j) -> os.map(_ - cum(j)).sorted
                 }
             }
-          }
-          val body = newEntries.sortBy(_._1).map { case (f, ps) =>
-            "\"" + enc(f) + "\":[" + ps.distinct.sorted.mkString(",") + "]"
-          }.mkString(",")
-          GraftStagingCatalog.writeString(fs, p, s"""{"type":"pos","pos":{$body}}""")
-        }
-      } else if (txt.contains("\"type\":\"keyrun\"")) {
-        // keys survive (a purged ghost key matches nothing) — only the
-        // covered-file names substitute; keyrun file names are URL-encoded
-        val files = GraftStagingCatalog.parseArray(txt, "files").map(dec)
-        if (files.exists(repl.contains)) {
-          val newFiles = files.flatMap(f => repl.getOrElse(f, Seq(f))).distinct
-          val arr = newFiles.sorted.map(f => "\"" + enc(f) + "\"").mkString(",")
-          GraftStagingCatalog.writeString(fs, p, txt.replaceFirst(
-            "\"files\":\\[[^\\]]*\\]",
-            java.util.regex.Matcher.quoteReplacement(s""""files":[$arr]""")))
-        }
-      } else {
-        // keyed inline DV: plain file names, keys untouched
-        val files = GraftStagingCatalog.parseArray(txt, "files")
-        if (files.exists(repl.contains)) {
-          val newFiles = files.flatMap(f => repl.getOrElse(f, Seq(f))).distinct
-          val arr = newFiles.sorted.map(f => "\"" + f + "\"").mkString(",")
-          GraftStagingCatalog.writeString(fs, p, txt.replaceFirst(
-            "\"files\":\\[[^\\]]*\\]",
-            java.util.regex.Matcher.quoteReplacement(s""""files":[$arr]""")))
-        }
+          }))
+        case kr: DvSidecar.KeyRun => substituted(kr.files).map(fls => kr.copy(files = fls))
+        case k: DvSidecar.Keys    => substituted(k.files).map(fls => k.copy(files = fls))
+        case _                    => None
       }
+      rewritten.foreach(sc => GraftStagingCatalog.writeString(fs, new Path(dvDir, n), sc.json))
     }
   }
 
@@ -583,121 +711,42 @@ object DeletionVectors {
     val dstDv = new Path(dst, DvDir)
     fs.mkdirs(dstDv)
     names.map { n =>
-      val txt = GraftStagingCatalog.readString(fs, new Path(srcDv, n))
       val token = java.util.UUID.randomUUID().toString.take(12)
-      if (txt.contains("\"type\":\"posrun\"")) {
-        val dirName = "\"dir\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse(
-            throw new IllegalStateException(s"run descriptor $n names no dir"))
-        val srcRun = new Path(srcDv, dirName)
-        val newDir = s"dvr-$token"
-        val dstRun = new Path(dstDv, newDir)
-        fs.mkdirs(dstRun)
-        val entries = "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(txt).toSeq
-          .map(m => dec(m.group(1)) -> m.group(2).split(',').iterator.map(_.trim)
-            .filter(_.nonEmpty).map(_.stripPrefix("\"").stripSuffix("\"")).toSeq)
-          .filter { case (f, _) => f != "type" && f != "dir" && f != "files" }
-        var total = 0L
-        val newEntries = entries.map { case (f, bins) =>
-          val rs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          bins.foreach(b => readRunFile(conf, new Path(srcRun, b))(rs += _))
-          val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          rs.sortBy(_._1).foreach { case (s0, e0) =>
-            merged.lastOption match {
-              case Some((ls, le)) if s0 <= le + 1 =>
-                if (e0 > le) merged(merged.length - 1) = (ls, e0)
-              case _ => merged += ((s0, e0))
-            }
+      DvSidecar.read(fs, src, n) match {
+        case r: DvSidecar.PosRun =>
+          val srcRun = new Path(srcDv, r.dir)
+          val newDir = s"dvr-$token"
+          val dstRun = new Path(dstDv, newDir)
+          fs.mkdirs(dstRun)
+          var total = 0L
+          val newEntries = r.perFile.map { case (f, bins) =>
+            val rs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+            bins.foreach(b => readRunFile(conf, new Path(srcRun, b))(rs += _))
+            val (bin, cnt) = writeRunPairs(conf, dstRun.toString, rename(f),
+              mergeRuns(rs.toSeq))
+            total += cnt
+            rename(f) -> Seq(bin)
           }
-          val (bin, cnt) = writeRunPairs(conf, dstRun.toString, rename(f),
-            merged.toSeq)
-          total += cnt
-          rename(f) -> Seq(bin)
-        }
-        val body = newEntries.sortBy(_._1).map { case (f, bins) =>
-          "\"" + enc(f) + "\":[" + bins.sorted.map(b => "\"" + b + "\"").mkString(",") + "]"
-        }.mkString(",")
-        val name = s"$newDir.json"
-        val out = fs.create(new Path(dstDv, name), false)
-        try out.write(
-          s"""{"type":"posrun","dir":"$newDir","rows":$total,"files":{$body}}"""
-            .getBytes(UTF_8))
-        finally out.close()
-        name
-      } else if (txt.contains("\"type\":\"pos\"")) {
-        val entries = "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(txt).toSeq
-          .map(m => dec(m.group(1)) -> m.group(2).split(',').iterator.map(_.trim)
-            .filter(_.nonEmpty).map(_.toLong).toSeq)
-          .filter { case (f, _) => f != "type" && f != "pos" }
-        writePosDv(fs, dst, entries.map { case (f, ps) => rename(f) -> ps }.toMap)
-      } else if (txt.contains("\"type\":\"keyrun\"")) {
-        val dirName = "\"dir\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-          .map(_.group(1)).getOrElse(
-            throw new IllegalStateException(s"keyrun descriptor $n names no dir"))
-        val srcRun = new Path(srcDv, dirName)
-        val newDir = s"dvk-$token"
-        val dstRun = new Path(dstDv, newDir)
-        fs.mkdirs(dstRun)
-        GraftStagingCatalog.parseArray(txt, "bins").foreach { b =>
-          GraftStagingCatalog.writeString(fs, new Path(dstRun, b),
-            GraftStagingCatalog.readString(fs, new Path(srcRun, b)))
-        }
-        val files = GraftStagingCatalog.parseArray(txt, "files").map(dec)
-        val arr = files.map(rename).distinct.sorted
-          .map(f => "\"" + enc(f) + "\"").mkString(",")
-        val name = s"$newDir.json"
-        val body = txt
-          .replaceFirst("\"dir\":\"[^\"]+\"",
-            java.util.regex.Matcher.quoteReplacement(s""""dir":"$newDir""""))
-          .replaceFirst("\"files\":\\[[^\\]]*\\]",
-            java.util.regex.Matcher.quoteReplacement(s""""files":[$arr]"""))
-        val out = fs.create(new Path(dstDv, name), false)
-        try out.write(body.getBytes(UTF_8)) finally out.close()
-        name
-      } else {
-        // keyed inline DV: plain file names, keys copy verbatim
-        val files = GraftStagingCatalog.parseArray(txt, "files")
-        val arr = files.map(rename).distinct.sorted
-          .map(f => "\"" + f + "\"").mkString(",")
-        val name = s"dv-$token.json"
-        val out = fs.create(new Path(dstDv, name), false)
-        try out.write(txt.replaceFirst("\"files\":\\[[^\\]]*\\]",
-          java.util.regex.Matcher.quoteReplacement(s""""files":[$arr]"""))
-          .getBytes(UTF_8))
-        finally out.close()
-        name
+          writeSidecar(fs, dst, s"$newDir.json", DvSidecar.PosRun(newDir, total, newEntries))
+        case p: DvSidecar.Pos =>
+          writePosDv(fs, dst, p.perFile.map { case (f, ps) => rename(f) -> ps }.toMap)
+        case kr: DvSidecar.KeyRun =>
+          val srcRun = new Path(srcDv, kr.dir)
+          val newDir = s"dvk-$token"
+          val dstRun = new Path(dstDv, newDir)
+          fs.mkdirs(dstRun)
+          kr.bins.foreach { b =>
+            GraftStagingCatalog.writeString(fs, new Path(dstRun, b),
+              GraftStagingCatalog.readString(fs, new Path(srcRun, b)))
+          }
+          writeSidecar(fs, dst, s"$newDir.json",
+            kr.copy(dir = newDir, files = kr.files.map(rename).distinct))
+        case k: DvSidecar.Keys =>
+          // keyed inline DV: plain file names, keys copy verbatim
+          writeSidecar(fs, dst, s"dv-$token.json", k.copy(files = k.files.map(rename).distinct))
       }
     }
   }
-
-  /** The keyrun descriptors among `names` (inline and pos sidecars skip). */
-  def loadKeyRuns(fs: FileSystem, d: Path, names: Seq[String]): Seq[KeyRuns] =
-    names.flatMap { n =>
-      val txt = GraftStagingCatalog.readString(fs, new Path(new Path(d, DvDir), n))
-      if ("\"type\":\"keyrun\"".r.findFirstIn(txt).isEmpty) None
-      else {
-        val keyCol = dec("\"key\":\"([^\"]*)\"".r.findFirstMatchIn(txt).get.group(1))
-        val isString = "\"ktype\":\"string\"".r.findFirstIn(txt).isDefined
-        val runDir = "\"dir\":\"([^\"]*)\"".r.findFirstMatchIn(txt).get.group(1)
-        val count = "\"count\":(\\d+)".r.findFirstMatchIn(txt).get.group(1).toLong
-        val bins = GraftStagingCatalog.parseArray(txt, "bins")
-        val files = GraftStagingCatalog.parseArray(txt, "files").map(dec).toSet
-        Some(KeyRuns(keyCol, isString, files,
-          KeySpec(new Path(new Path(d, DvDir), runDir).toString, bins, isString),
-          count))
-      }
-    }
-
-  /** Keyrun descriptors in force at `manifest`. */
-  def keyRunsAt(fs: FileSystem, d: Path, manifest: Path): Seq[KeyRuns] =
-    loadKeyRuns(fs, d, GraftStagingCatalog.manifestDvs(fs, manifest))
-
-  /** Per-file keyrun IDENTITY (descriptor dirs) — the cheap
-    * visibility-change test CDF diffing compares across versions.
-    */
-  def keyRunState(krs: Seq[KeyRuns]): Map[String, Set[String]] =
-    krs.flatMap(kr => kr.files.map(_ -> kr.spec.dirUri))
-      .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).toSet }
 
   /** Maintenance-read twin of [[applyToRead]] for bin-backed keys: a
     * NON-broadcast anti-join whose delete side parses one bin per task —
@@ -759,17 +808,9 @@ object DeletionVectors {
     * counter reproduces). Returns the DvDir-relative name.
     */
   def writePosDv(fs: FileSystem, d: Path, perFile: Map[String, Seq[Long]]): String = {
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val name = s"dv-$token.json"
-    val dir = new Path(d, DvDir)
-    fs.mkdirs(dir)
-    val body = perFile.toSeq.sortBy(_._1).map { case (f, ps) =>
-      "\"" + enc(f) + "\":[" + ps.distinct.sorted.mkString(",") + "]"
-    }.mkString(",")
-    val json = s"""{"type":"pos","pos":{$body}}"""
-    val out = fs.create(new Path(dir, name), false) // DVs are immutable
-    try out.write(json.getBytes(UTF_8)) finally out.close()
-    name
+    val name = s"dv-${java.util.UUID.randomUUID().toString.take(12)}.json"
+    fs.mkdirs(new Path(d, DvDir))
+    writeSidecar(fs, d, name, DvSidecar.Pos(perFile.toSeq))
   }
 
   /** POSITION-delete state in force — BOTH representations at once:
@@ -817,20 +858,8 @@ object DeletionVectors {
       else {
         val rs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
         runFiles.foreach(p => readRunFile(conf, new Path(p))(rs += _))
-        val sorted = rs.sortBy(_._1)
-        val starts = Array.newBuilder[Long]; val ends = Array.newBuilder[Long]
-        var lastEnd = Long.MinValue; var have = false
-        sorted.foreach { case (s, e) =>
-          if (have && s <= lastEnd + 1) {
-            // merge touching/overlapping runs (possible across sidecars)
-            if (e > lastEnd) lastEnd = e
-          } else {
-            if (have) ends += lastEnd
-            starts += s; lastEnd = e; have = true
-          }
-        }
-        if (have) ends += lastEnd
-        new PosMembership(inline, starts.result(), ends.result())
+        val merged = mergeRuns(rs.toSeq)
+        new PosMembership(inline, merged.map(_._1).toArray, merged.map(_._2).toArray)
       }
   }
 
@@ -896,45 +925,16 @@ object DeletionVectors {
     val rs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     bins.foreach(b => readRunFile(conf, new Path(b))(rs += _))
     inline.foreach(p => rs += ((p, p)))
-    val sorted = rs.sortBy(_._1)
-    // merge touching/overlapping runs, then stream (start, len) pairs
-    val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    sorted.foreach { case (s, e) =>
-      merged.lastOption match {
-        case Some((ls, le)) if s <= le + 1 =>
-          if (e > le) merged(merged.length - 1) = (ls, e)
-        case _ => merged += ((s, e))
-      }
-    }
-    val name = s"run-${java.util.UUID.randomUUID().toString.take(12)}.bin"
-    val target = new Path(runDirStr, name)
-    val fsx = target.getFileSystem(conf)
-    val out = new java.io.DataOutputStream(fsx.create(target, false))
-    var count = 0L
-    try {
-      out.writeInt(RunMagic); out.writeInt(1); out.writeUTF(rel)
-      merged.foreach { case (s, e) =>
-        out.writeLong(s); out.writeLong(e - s + 1L); count += e - s + 1L
-      }
-    } finally out.close()
-    (name, count)
+    writeRunPairs(conf, runDirStr, rel, mergeRuns(rs.toSeq))
   }
 
   /** Driver-side: commit a run-descriptor sidecar naming the per-file bins
     * written by [[writeRunFile]]. Returns the DvDir-relative name.
     */
   def writeRunDescriptor(fs: FileSystem, d: Path, runDirName: String,
-      perFile: Map[String, Seq[String]], totalRows: Long): String = {
-    val body = perFile.toSeq.sortBy(_._1).map { case (f, bins) =>
-      "\"" + enc(f) + "\":[" + bins.sorted.map(b => "\"" + b + "\"").mkString(",") + "]"
-    }.mkString(",")
-    val name = s"$runDirName.json"
-    val json =
-      s"""{"type":"posrun","dir":"$runDirName","rows":$totalRows,"files":{$body}}"""
-    val out = fs.create(new Path(new Path(d, DvDir), name), false)
-    try out.write(json.getBytes(UTF_8)) finally out.close()
-    name
-  }
+      perFile: Map[String, Seq[String]], totalRows: Long): String =
+    writeSidecar(fs, d, s"$runDirName.json",
+      DvSidecar.PosRun(runDirName, totalRows, perFile.toSeq))
 
   private def readRunFile(conf: org.apache.hadoop.conf.Configuration, p: Path)
       (emit: ((Long, Long)) => Unit): Unit = {
@@ -1017,50 +1017,6 @@ object DeletionVectors {
     val name = writeRunDescriptor(fs, d, runDirName, perFile, total)
     (name, total, runDirName)
   }
-
-  /** Load the named sidecars' POSITION deletes: small JSON sidecars merge
-    * into the per-file ordinal map; distributed run descriptors resolve to
-    * per-file run-sidecar PATHS (ordinals stay on disk — see [[PosDvs]]).
-    * Non-pos sidecars are skipped — one manifest `dvs` array carries every
-    * kind.
-    */
-  def loadPosDvs(fs: FileSystem, d: Path, names: Seq[String]): PosDvs =
-    if (names.isEmpty) PosDvs.empty
-    else {
-      val perFile = scala.collection.mutable.Map.empty[String, Set[Long]]
-      val runRefs = scala.collection.mutable.Map.empty[String, Seq[String]]
-      names.foreach { n =>
-        val txt = GraftStagingCatalog.readString(fs, new Path(new Path(d, DvDir), n))
-        if (txt.contains("\"type\":\"posrun\"")) {
-          val dirName = "\"dir\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1)).getOrElse(
-              throw new IllegalStateException(s"run descriptor $n names no dir"))
-          val runDir = new Path(new Path(d, DvDir), dirName)
-          "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(txt).foreach { m =>
-            val f = dec(m.group(1))
-            val bins = m.group(2).split(',').iterator.map(_.trim)
-              .filter(_.nonEmpty).map(_.stripPrefix("\"").stripSuffix("\""))
-              .map(b => new Path(runDir, b).toString).toSeq
-            if (bins.nonEmpty)
-              runRefs(f) = runRefs.getOrElse(f, Seq.empty) ++ bins
-          }
-        } else if (txt.contains("\"type\":\"pos\"")) {
-          "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(txt).foreach { m =>
-            val f = dec(m.group(1))
-            if (f != "type" && f != "pos") {
-              val ps = m.group(2).split(',').iterator.map(_.trim).filter(_.nonEmpty)
-                .map(_.toLong).toSet
-              perFile(f) = perFile.getOrElse(f, Set.empty) ++ ps
-            }
-          }
-        }
-      }
-      PosDvs(perFile.toMap, runRefs.toMap)
-    }
-
-  /** Position-delete state in force at `manifest`. */
-  def posMapAt(fs: FileSystem, d: Path, manifest: Path): PosDvs =
-    loadPosDvs(fs, d, GraftStagingCatalog.manifestDvs(fs, manifest))
 
   /** Apply a POSITION-delete map to a V1 DataFrame read of the table's
     * files (the maintenance/fold read path): rows are identified by

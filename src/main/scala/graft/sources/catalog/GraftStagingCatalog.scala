@@ -352,12 +352,14 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // a pinned MOR version reads under ITS deletion vectors — without this,
     // time travel would resurrect rows a MERGE had deleted by that version
     val dvNames = manifestDvs(fs, mf)
-    val keyField = DeletionVectors.morKey(fs, d)
-      .flatMap(k => pt.schema.fields.find(_.name.equalsIgnoreCase(k)))
     if (dvNames.isEmpty) pt
-    else if (keyField.isDefined) new DvPinnedTable(pt, d, dvNames, keyField.get)
-    else if (DeletionVectors.morPos(fs, d)) new PosPinnedTable(pt, d, dvNames)
-    else pt
+    else DeletionVectors.mode(fs, d) match {
+      case m @ DeletionVectors.MorMode.Key(k) =>
+        pt.schema.fields.find(_.name.equalsIgnoreCase(k))
+          .fold[Table](pt)(new DvPinnedTable(pt, d, m, dvNames, _))
+      case DeletionVectors.MorMode.Pos => new PosPinnedTable(pt, d, dvNames)
+      case DeletionVectors.MorMode.Off => pt
+    }
   }
 
   /** Time-travel face of a POSITION-delete (keyless-MOR) version: the
@@ -366,6 +368,8 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   private class PosPinnedTable(delegate: ParquetTable, dir: Path, dvNames: Seq[String])
       extends Table with SupportsRead {
     private val tableFs = fs
+    private lazy val pos =
+      DeletionVectors.Deletes.load(tableFs, dir, DeletionVectors.MorMode.Pos, dvNames).pos
     override def name(): String = delegate.name
     override def schema(): StructType = delegate.schema
     override def capabilities(): util.Set[TableCapability] =
@@ -388,7 +392,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
             Map.empty, None,
             GraftStagingCatalog.partSpecsAll(tableFs, dir),
             Map.empty,
-            DeletionVectors.loadPosDvs(tableFs, dir, dvNames),
+            pos,
             posIdxCapable = posCapable)
         case other => other
       }
@@ -398,9 +402,11 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   /** Read-only face of a time-travel-pinned MOR version: the delegate's
     * parquet stack with that version's deletion vectors applied in the scan.
     */
-  private class DvPinnedTable(delegate: ParquetTable, dir: Path, dvNames: Seq[String],
+  private class DvPinnedTable(delegate: ParquetTable, dir: Path,
+      mode: DeletionVectors.MorMode, dvNames: Seq[String],
       keyField: org.apache.spark.sql.types.StructField) extends Table with SupportsRead {
     private val tableFs = fs
+    private lazy val deletes = DeletionVectors.Deletes.load(tableFs, dir, mode, dvNames)
     override def name(): String = delegate.name
     override def schema(): StructType = delegate.schema
     override def capabilities(): util.Set[TableCapability] =
@@ -413,9 +419,10 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
             StagingMaintenance.readNullsFor(tableFs, dir),
             dir.toString,
             () => StagingMaintenance.readBloomsFor(tableFs, dir),
-            DeletionVectors.loadDvs(tableFs, dir, dvNames),
+            deletes.inline,
             Some(keyField),
-            GraftStagingCatalog.partSpecsAll(tableFs, dir))
+            GraftStagingCatalog.partSpecsAll(tableFs, dir),
+            keyRuns = deletes.keyRuns)
         case other => other
       }
   }
@@ -627,8 +634,10 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         mfOpt.map(mf => RowLineage.parse(GraftStagingCatalog.readString(tableFs, mf))._1)
           .getOrElse(Map.empty)
       }
+    /** This table's merge-on-read declaration (one sidecar read). */
+    private lazy val morMode = DeletionVectors.mode(tableFs, dir)
     /** Keyless merge-on-read (position-delete) mode for this table. */
-    private lazy val morPosOn = DeletionVectors.morPos(tableFs, dir)
+    private lazy val morPosOn = morMode == DeletionVectors.MorMode.Pos
     override def metadataColumns()
         : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
       val lin: Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
@@ -648,19 +657,19 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       * planning requires of row-ID attributes.
       */
     private lazy val morKeyField: Option[org.apache.spark.sql.types.StructField] =
-      DeletionVectors.morKey(tableFs, dir)
-        .flatMap(k => readDelegate.schema.fields.find(_.name.equalsIgnoreCase(k)))
-        .map(_.copy(nullable = false))
-    /** Deleted-key map in force at this snapshot (lazy: non-MOR tables and
+      morMode match {
+        case DeletionVectors.MorMode.Key(k) =>
+          readDelegate.schema.fields.find(_.name.equalsIgnoreCase(k))
+            .map(_.copy(nullable = false))
+        case _ => None
+      }
+    /** Deletes in force at this snapshot (lazy: non-MOR tables and
       * DV-free versions never pay the sidecar IO).
       */
-    private lazy val dvMap: Map[String, Set[Any]] =
-      DeletionVectors.loadDvs(tableFs, dir, dvNames)
-    /** Position deletes in force at this snapshot (keyless-MOR tables). */
-    private lazy val posDvMap: DeletionVectors.PosDvs =
-      if (dvNames.nonEmpty && DeletionVectors.morPos(tableFs, dir))
-        DeletionVectors.loadPosDvs(tableFs, dir, dvNames)
-      else DeletionVectors.PosDvs.empty
+    private lazy val deletes: DeletionVectors.Deletes =
+      if (dvNames.isEmpty || morMode == DeletionVectors.MorMode.Off)
+        DeletionVectors.Deletes.none
+      else DeletionVectors.Deletes.load(tableFs, dir, morMode, dvNames)
     override def name(): String = readDelegate.name
     override def schema(): StructType = morKeyField match {
       case Some(key) => StructType(readDelegate.schema.fields.map(f =>
@@ -710,7 +719,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       // pre-r11 whole-file sequential-counter read (which had to surrender
       // ALL pushdown) remains only on the row-level-op path, which pushes
       // nothing by design.
-      val posCapable = (posDvMap.nonEmpty || morPosOn) &&
+      val posCapable = (deletes.pos.nonEmpty || morPosOn) &&
         readDelegate.userSpecifiedSchema.isDefined
       // lineage tables widen the delegate with the physical-id and
       // generated-row-index carriers so a `SELECT _row_id` prune can
@@ -761,13 +770,13 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
           new ZoneMapScanBuilder(fb, stats, StagingMaintenance.readNullsFor(tableFs, dir),
             dir.toString,
             () => StagingMaintenance.readBloomsFor(tableFs, dir),
-            if (dvOn) dvMap else Map.empty,
+            if (dvOn) deletes.inline else Map.empty,
             if (dvOn) morKeyField else None,
             specs,
             scala.jdk.CollectionConverters.MapHasAsScala(options.asCaseSensitiveMap())
               .asScala.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
               .toMap,
-            posDvMap,
+            deletes.pos,
             posIdxCapable = posCapable,
             lineage = if (lineageCapable) Some(lineageEntries) else None,
             spjCandidate = spjCandidate,
@@ -795,8 +804,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
                   // upgrade guard: an unmarked delta-kind history on a MOR
                   // table predates the marker — withdraw (see
                   // hasDeltaKindHistory)
-                  if ((morKeyField.isDefined ||
-                      DeletionVectors.morPos(tableFs, dir)) &&
+                  if ((morKeyField.isDefined || morPosOn) &&
                       GraftStagingCatalog.hasDeltaKindHistory(tableFs, dir)) Nil
                   else so
                 case Some((since, unproven)) =>
@@ -807,9 +815,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
             },
             // r14 distributed equality-delete bins in force at this
             // snapshot (executor-resolved; see DeletionVectors.KeyRuns)
-            keyRuns =
-              if (dvOn) DeletionVectors.loadKeyRuns(tableFs, dir, dvNames)
-              else Nil)
+            keyRuns = if (dvOn) deletes.keyRuns else Nil)
         case other => other
       }
     }
@@ -834,7 +840,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         filters.forall(f => GraftStagingCatalog.filterToColumn(f).isDefined)
 
     override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
-      if (DeletionVectors.morPos(tableFs, dir))
+      if (morPosOn)
         GraftStagingCatalog.posDeleteWhere(tableFs, dir, filters, snapshotVersion,
           snapshotFiles, dvNames)
       else GraftStagingCatalog.deleteWhere(tableFs, dir, filters, snapshotVersion)
@@ -870,7 +876,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
             case Some(key) =>
               // merge-on-read: delta writes + deletion vectors, zero rewrites
               new StagingDeltaOperation(info, readDelegate, writeDelegate, tableFs,
-                dir, snapshotVersion, snapshotFiles, key, dvNames, branch,
+                dir, snapshotVersion, snapshotFiles, key, dvNames, deletes, branch,
                 lineage = if (lineageOn) Some(lineageEntries) else None)
             case None if morPosOn && !DeletionVectors.updateCow(tableFs, dir) =>
               // keyless merge-on-read (r13): UPDATE/MERGE (and DELETEs the
@@ -881,11 +887,11 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
               // 'copy-on-write' (r14) opts a bulk statement out — a
               // 90%-of-table UPDATE rewrites better than it deltas
               new StagingPosDeltaOperation(info, readDelegate, writeDelegate, tableFs,
-                dir, snapshotVersion, snapshotFiles, dvNames, branch,
+                dir, snapshotVersion, snapshotFiles, dvNames, deletes.pos, branch,
                 lineage = if (lineageOn) Some(lineageEntries) else None)
             case None =>
               new StagingRowLevelOperation(info, readDelegate, writeDelegate, tableFs,
-                dir, snapshotVersion, snapshotFiles, dvNames, branch,
+                dir, snapshotVersion, snapshotFiles, dvNames, deletes.pos, branch,
                 lineage = if (lineageOn) Some(lineageEntries) else None)
           }
         }
@@ -1116,7 +1122,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // row-level ops through deletion vectors ([[DeletionVectors]]); the
     // mandatory 'graft.merge-keys' names the row-identifier column (UNIQUE
     // per row — the CDC primary key; equality-delete contract).
-    val morKey: Option[String] =
+    val morDecl: Option[String] =
       Option(properties.get("graft.write.mode")).map(_.trim.toLowerCase) match {
         case Some("merge-on-read")
             if !Option(properties.get("graft.merge-keys")).exists(_.trim.nonEmpty) =>
@@ -1225,7 +1231,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     ckptEvery.foreach(n =>
       GraftStagingCatalog.writeString(fs,
         new Path(d, GraftStagingCatalog.CkptIntervalSidecar), n.toString))
-    morKey.foreach(k => DeletionVectors.writeMorKey(fs, d, k))
+    morDecl.foreach(k => DeletionVectors.writeMorKey(fs, d, k))
     // keyless-MOR row-level admission (r14): 'graft.update.mode' =
     // 'copy-on-write' routes UPDATE/MERGE/untranslatable-DELETE through
     // the group rewrite instead of position deltas — the bulk-statement
@@ -1533,7 +1539,11 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // the MERGE KEY must survive the alter: renaming it re-points the MOR
     // sidecar (the rename rewrite folds active DVs, so old-name DVs die
     // with it); dropping it is refused
-    DeletionVectors.morKey(fs, d).foreach { k =>
+    val mergeKey = DeletionVectors.mode(fs, d) match {
+      case DeletionVectors.MorMode.Key(k) => Some(k)
+      case _                              => None
+    }
+    mergeKey.foreach { k =>
       val effective = renames.find(_._1.equalsIgnoreCase(k)).map(_._2).getOrElse(k)
       if (!schema.fieldNames.exists(_.equalsIgnoreCase(effective)))
         throw new IllegalArgumentException(
@@ -1543,7 +1553,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // renames rewrite the data under the new name (versioned, optimistic)
     if (renames.nonEmpty) {
       GraftStagingCatalog.rewriteRenamed(fs, d, renames, before)
-      DeletionVectors.morKey(fs, d).foreach { k =>
+      mergeKey.foreach { k =>
         renames.find(_._1.equalsIgnoreCase(k)).foreach { case (_, to) =>
           DeletionVectors.writeMorKey(fs, d, to)
         }
@@ -1766,7 +1776,11 @@ private class StagingRowLevelOperation(
     dir: Path,
     snapshotVersion: Long,
     snapshotFiles: Option[Seq[String]],
-    dvNames: Seq[String] = Seq.empty,
+    dvNames: Seq[String],
+    // position deletes in force at the snapshot (keyless MOR): the
+    // rewrite's scans must not resurrect suppressed rows, and the commit
+    // must carry the sidecars for files it does not rewrite
+    posDvs: DeletionVectors.PosDvs,
     branch: Option[String] = None,
     lineage: Option[Map[String, RowLineage.Entry]] = None)
     extends org.apache.spark.sql.connector.write.RowLevelOperation {
@@ -1786,15 +1800,6 @@ private class StagingRowLevelOperation(
       Array(org.apache.spark.sql.connector.expressions.Expressions
         .column(RowLineage.MetaColName))
     else Array.empty
-
-  /** Position deletes in force at this snapshot (keyless-MOR tables): the
-    * rewrite's scans must not resurrect suppressed rows, and the commit
-    * must carry the sidecars for files it does not rewrite.
-    */
-  private lazy val posDvs: DeletionVectors.PosDvs =
-    if (DeletionVectors.morPos(tableFs, dir))
-      DeletionVectors.loadPosDvs(tableFs, dir, dvNames)
-    else DeletionVectors.PosDvs.empty
 
   /** The scans this operation built — interrogated at COMMIT time for
     * their post-runtime-filter planned file set. Commit-time (not
@@ -2044,6 +2049,7 @@ private class StagingDeltaOperation(
     snapshotFiles: Option[Seq[String]],
     keyField: org.apache.spark.sql.types.StructField,
     priorDvNames: Seq[String],
+    priorDeletes: DeletionVectors.Deletes,
     branch: Option[String] = None,
     lineage: Option[Map[String, RowLineage.Entry]] = None)
     extends org.apache.spark.sql.connector.write.RowLevelOperation
@@ -2147,10 +2153,10 @@ private class StagingDeltaOperation(
             // schema (no column pruning on this path), so the key is
             // always present and DVs apply with no projection; with
             // lineage the pruned schema re-adds the key above
-            val dvMap = DeletionVectors.loadDvs(tableFs, dir, priorDvNames)
             // r14: in-force distributed key bins — ghost rows suppressed by
             // a keyrun descriptor must not re-match either
-            val krs = DeletionVectors.loadKeyRuns(tableFs, dir, priorDvNames)
+            val dvMap = priorDeletes.inline
+            val krs = priorDeletes.keyRuns
             val dvInfo =
               if (dvMap.isEmpty && krs.isEmpty) None
               else {
@@ -2483,6 +2489,7 @@ private class StagingPosDeltaOperation(
     snapshotVersion: Long,
     snapshotFiles: Option[Seq[String]],
     priorDvNames: Seq[String],
+    priorPos: DeletionVectors.PosDvs,
     branch: Option[String] = None,
     lineage: Option[Map[String, RowLineage.Entry]] = None)
     extends org.apache.spark.sql.connector.write.RowLevelOperation
@@ -2532,7 +2539,7 @@ private class StagingPosDeltaOperation(
           Map.empty, None,
           GraftStagingCatalog.partSpecsAll(tableFs, dir),
           Map.empty,
-          DeletionVectors.loadPosDvs(tableFs, dir, priorDvNames),
+          priorPos,
           posIdxCapable = false,
           lineage = lineage)
       case other => other
@@ -3145,29 +3152,17 @@ object GraftStagingCatalog {
     val spark = SparkSession.active
     val latest = headManifest(fs, d)
     val base = latest.map(_._1).getOrElse(0L)
-    val current = latest.map { case (_, mf) => manifestFiles(fs, mf) }
-      .getOrElse(dataFiles(fs, d))
+    val head = latest.map { case (_, mf) => readString(fs, mf) }
+    val current = head.map(parseManifestFiles).getOrElse(dataFiles(fs, d))
     if (current.isEmpty && latest.isEmpty) return
     val kept: Seq[String] =
       if (current.isEmpty) Seq.empty
       else {
-        var df = spark.read.schema(oldSchema)
-          .parquet(current.map(f => new Path(d, f).toString): _*)
         // rename rewrites EVERY current file: fold active deletion vectors
         // (suppressed rows must not resurrect under the new column names)
-        DeletionVectors.morKey(fs, d).foreach { k =>
-          val dvMap = latest.map { case (_, mf) => DeletionVectors.dvMapAt(fs, d, mf) }
-            .getOrElse(Map.empty[String, Set[Any]])
-          if (dvMap.nonEmpty) df = DeletionVectors.applyToRead(df, k, dvMap)
-          val krs = latest.map { case (_, mf) =>
-            DeletionVectors.keyRunsAt(fs, d, mf) }.getOrElse(Nil)
-          if (krs.nonEmpty) df = DeletionVectors.applyKeyRunsToRead(df, k, krs)
-        }
-        if (DeletionVectors.morPos(fs, d)) {
-          val posMap = latest.map { case (_, mf) => DeletionVectors.posMapAt(fs, d, mf) }
-            .getOrElse(DeletionVectors.PosDvs.empty)
-          if (posMap.nonEmpty) df = DeletionVectors.applyPosToRead(df, posMap)
-        }
+        var df = DeletionVectors.Deletes.of(fs, d, head.toSeq.flatMap(parseArray(_, "dvs")))
+          .applyTo(spark.read.schema(oldSchema)
+            .parquet(current.map(f => new Path(d, f).toString): _*))
         renames.foreach { case (from, to) => df = df.withColumnRenamed(from, to) }
         // sort-order preservation (r13) — rename rewrites every file; keep
         // each output file sorted on the (possibly just-renamed) order
@@ -3178,19 +3173,10 @@ object GraftStagingCatalog {
             df = df.sortWithinPartitions(
               so.map(org.apache.spark.sql.functions.col): _*)
         }
-        val token = java.util.UUID.randomUUID().toString.take(12)
-        val tmp = new Path(d, s"_rename_$token")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        val moved = fs.listStatus(tmp).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val target = new Path(d, s"ren-$token-${f.getPath.getName}")
-            if (!fs.rename(f.getPath, target))
-              throw new IllegalStateException(s"rename: move ${f.getPath} -> $target failed")
-            target.getName
-          }
-        fs.delete(tmp, true)
-        moved
+        StagedRewrite(fs, d, "rename") { (token, tmp) =>
+          df.write.mode("overwrite").parquet(tmp.toString)
+          StagedRewrite.publish(fs, d, tmp)((part, _) => s"ren-$token-$part")
+        }
       }
     writeExplicitManifest(fs, d, kept, kind = "rename", expectedBase = Some(base))
   }
@@ -4002,7 +3988,7 @@ object GraftStagingCatalog {
     val reader = spark.read
     declaredSchema(fs, d).foreach(reader.schema)
     val raw = reader.parquet(candidates.map(f => new Path(d, f).toString): _*)
-    val inForce = DeletionVectors.loadPosDvs(fs, d, dvNames)
+    val inForce = DeletionVectors.Deletes.load(fs, d, DeletionVectors.MorMode.Pos, dvNames).pos
     val visible = DeletionVectors.applyPosToRead(raw, inForce)
     // (full path, position) of every VISIBLE matching row, capped at
     // maxRows+1: under the cap this set IS the sidecar (collecting it is
@@ -4096,8 +4082,8 @@ object GraftStagingCatalog {
     // don't all match the filter, surviving fresh rows would be rewritten
     // into the remainder AND carried as fresh, duplicating them. The
     // overwrite path therefore passes its pre-insert listing.
-    val current = headManifest(fs, d)
-      .map { case (_, mf) => manifestFiles(fs, mf) }
+    val head = headManifest(fs, d).map { case (_, mf) => readString(fs, mf) }
+    val current = head.map(parseManifestFiles)
       .orElse(noManifestCurrent)
       .getOrElse(dataFiles(fs, d))
     val stats = StagingMaintenance.readStatsFor(fs, d)
@@ -4126,8 +4112,7 @@ object GraftStagingCatalog {
     val lineage = RowLineage.enabled(fs, d)
     val lineageEntries: Map[String, RowLineage.Entry] =
       if (!lineage) Map.empty
-      else headManifest(fs, d).map { case (_, mf) =>
-        RowLineage.parse(readString(fs, mf))._1 }.getOrElse(Map.empty)
+      else head.map(RowLineage.parse(_)._1).getOrElse(Map.empty)
     val kept: Seq[String] =
       if (touched.isEmpty) untouched
       else {
@@ -4147,26 +4132,8 @@ object GraftStagingCatalog {
           if (!lineage) rawTouched0
           else rawTouched0.select(org.apache.spark.sql.functions.col("*"),
             org.apache.spark.sql.functions.col("_metadata"))
-        val dvApplied = DeletionVectors.morKey(fs, d) match {
-          case Some(k) =>
-            val dvMap = headManifest(fs, d)
-              .map { case (_, mf) => DeletionVectors.dvMapAt(fs, d, mf) }
-              .getOrElse(Map.empty[String, Set[Any]])
-              .filter { case (f, _) => touched.contains(f) }
-            val krs = headManifest(fs, d)
-              .map { case (_, mf) => DeletionVectors.keyRunsAt(fs, d, mf) }
-              .getOrElse(Nil)
-              .map(kr => kr.copy(files = kr.files.filter(touched.contains)))
-            DeletionVectors.applyKeyRunsToRead(
-              DeletionVectors.applyToRead(withMeta, k, dvMap), k, krs)
-          case None if DeletionVectors.morPos(fs, d) =>
-            val posMap = headManifest(fs, d)
-              .map { case (_, mf) => DeletionVectors.posMapAt(fs, d, mf) }
-              .getOrElse(DeletionVectors.PosDvs.empty)
-              .filterFiles(touched.contains)
-            DeletionVectors.applyPosToRead(withMeta, posMap)
-          case None => withMeta
-        }
+        val dvApplied = DeletionVectors.Deletes.of(fs, d, head.toSeq.flatMap(parseArray(_, "dvs")))
+          .restrict(touched.toSet).applyTo(withMeta)
         val rawTouched =
           if (!lineage) dvApplied
           else RowLineage.materialize(dvApplied, lineageEntries).drop("_metadata")
@@ -4181,18 +4148,10 @@ object GraftStagingCatalog {
           if (soCols.isEmpty) remaining0
           else remaining0.sortWithinPartitions(
             soCols.map(org.apache.spark.sql.functions.col): _*)
-        val token = java.util.UUID.randomUUID().toString.take(12)
-        val tmp = new Path(d, s"_delete_$token")
-        remaining.write.mode("overwrite").parquet(tmp.toString)
-        val moved = fs.listStatus(tmp).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val target = new Path(d, s"del-$token-${f.getPath.getName}")
-            if (!fs.rename(f.getPath, target))
-              throw new IllegalStateException(s"delete: move ${f.getPath} -> $target failed")
-            target.getName
-          }
-        fs.delete(tmp, true)
+        val moved = StagedRewrite(fs, d, "delete") { (token, tmp) =>
+          remaining.write.mode("overwrite").parquet(tmp.toString)
+          StagedRewrite.publish(fs, d, tmp)((part, _) => s"del-$token-$part")
+        }
         untouched ++ moved
       }
     ZoneMapScan.lastDeleteSplit = Some((untouched.size, dropped.size, touched.size))

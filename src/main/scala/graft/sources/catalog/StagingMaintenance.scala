@@ -91,10 +91,10 @@ object StagingMaintenance {
     val (base, mf) = latest
     val dvNames = GraftStagingCatalog.manifestDvs(fs, mf)
     if (dvNames.size < 2) return (dvNames.size, dvNames.size, -1L)
-    require(DeletionVectors.morPos(fs, d),
+    require(DeletionVectors.mode(fs, d) == DeletionVectors.MorMode.Pos,
       "optimize scope='dvs' folds position-delete sidecars (keyless " +
         "merge-on-read); keyed equality DVs fold with a full OPTIMIZE")
-    val pos = DeletionVectors.loadPosDvs(fs, d, dvNames)
+    val pos = DeletionVectors.Deletes.load(fs, d, DeletionVectors.MorMode.Pos, dvNames).pos
     val token = java.util.UUID.randomUUID().toString.take(12)
     val runDirName = s"dvr-$token"
     val runDir = new Path(new Path(d, DeletionVectors.DvDir), runDirName)
@@ -164,30 +164,21 @@ object StagingMaintenance {
     val latest = GraftStagingCatalog.headManifest(fs, d).getOrElse(
       throw new IllegalArgumentException(s"$d has no committed version"))
     val (base, mf) = latest
-    val dvNames = GraftStagingCatalog.manifestDvs(fs, mf)
+    val txt = readString(fs, mf)
+    val dvNames = GraftStagingCatalog.parseArray(txt, "dvs")
     if (dvNames.isEmpty) return (0, 0, -1L)
-    val all = manifestFiles(fs, mf)
+    val all = GraftStagingCatalog.parseManifestFiles(txt)
     val allSet = all.toSet
-    val morKey = DeletionVectors.morKey(fs, d)
-    val dvMap = morKey.map(_ => DeletionVectors.dvMapAt(fs, d, mf))
-      .getOrElse(Map.empty[String, Set[Any]])
-    val keyRuns = morKey.map(_ => DeletionVectors.keyRunsAt(fs, d, mf)).getOrElse(Nil)
-    val posMap =
-      if (morKey.isEmpty && DeletionVectors.morPos(fs, d))
-        DeletionVectors.posMapAt(fs, d, mf)
-      else DeletionVectors.PosDvs.empty
+    val deletes = DeletionVectors.Deletes.of(fs, d, dvNames)
     // a CLONE's descriptors reference borrowed files by BARE name while
     // its manifest holds the absolute path — resolve through the bare
     // names of foreign entries (UUID-fresh part names cannot alias)
     val byBare: Map[String, String] = all.filter(TableClone.isForeign)
       .groupBy(f => new Path(f).getName)
       .collect { case (b, fs0) if fs0.size == 1 => b -> fs0.head }
-    val covered: Seq[String] =
-      (dvMap.keysIterator ++ keyRuns.iterator.flatMap(_.files) ++
-        posMap.coveredFiles.iterator)
-        .flatMap(f => if (allSet(f)) Iterator.single(f)
-                      else byBare.get(f).iterator)
-        .toSeq.distinct.sorted
+    val covered: Seq[String] = deletes.covered.iterator
+      .flatMap(f => if (allSet(f)) Iterator.single(f) else byBare.get(f).iterator)
+      .toSeq.distinct.sorted
     if (covered.isEmpty) {
       // descriptors with no live targets: drop them from the head with a
       // data-free commit
@@ -198,19 +189,13 @@ object StagingMaintenance {
     val lineage = RowLineage.enabled(fs, d)
     val lineageEntries: Map[String, RowLineage.Entry] =
       if (!lineage) Map.empty
-      else RowLineage.parse(GraftStagingCatalog.readString(fs, mf))._1
+      else RowLineage.parse(txt)._1
     val reader = spark.read
     if (lineage) declaredSchema(fs, d).foreach(s => reader.schema(RowLineage.readSchema(s)))
     else declaredSchema(fs, d).foreach(reader.schema)
     val raw0 = reader.parquet(covered.map(f => new Path(d, f).toString): _*)
     val withMeta = raw0.select(col("*"), col("_metadata"))
-    val dvApplied = morKey match {
-      case Some(k) if dvMap.nonEmpty || keyRuns.nonEmpty =>
-        DeletionVectors.applyKeyRunsToRead(
-          DeletionVectors.applyToRead(withMeta, k, dvMap), k, keyRuns)
-      case _ if posMap.nonEmpty => DeletionVectors.applyPosToRead(withMeta, posMap)
-      case _                    => withMeta
-    }
+    val dvApplied = deletes.applyTo(withMeta)
     // key each survivor back to its source file by the path's LAST TWO
     // segments (bare names collide across partition directories — the
     // purge twin-pass precedent) and remember its original row index
@@ -235,21 +220,18 @@ object StagingMaintenance {
     require(pidOf.size == covered.size,
       s"foldDeltas: covered dir/name keys are not unique (${covered.size} " +
         s"files, ${pidOf.size} distinct keys)")
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(d, s"_fold_$token")
-    resolved
-      .withColumn("__graft_fpid", element_at(typedLit(pidOf), col("__graft_ff")))
-      .repartition(math.max(covered.size, 1), col("__graft_fpid"))
-      .sortWithinPartitions(col("__graft_fpid"), col("__graft_fr"))
-      .drop("__graft_ff", "__graft_fr", "_metadata")
-      .write.partitionBy("__graft_fpid").mode("overwrite").parquet(tmp.toString)
     // place twins beside their originals (same partition directory: the
     // path-based pruner must keep judging them by the same spec)
     val repl = scala.collection.mutable.Map.empty[String, Seq[String]]
-    fs.listStatus(tmp).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__graft_fpid="))
-      .foreach { pd =>
-        val pid = pd.getPath.getName.stripPrefix("__graft_fpid=").toInt
+    StagedRewrite(fs, d, "fold") { (token, tmp) =>
+      resolved
+        .withColumn("__graft_fpid", element_at(typedLit(pidOf), col("__graft_ff")))
+        .repartition(math.max(covered.size, 1), col("__graft_fpid"))
+        .sortWithinPartitions(col("__graft_fpid"), col("__graft_fr"))
+        .drop("__graft_ff", "__graft_fr", "_metadata")
+        .write.partitionBy("__graft_fpid").mode("overwrite").parquet(tmp.toString)
+      StagedRewrite.partitions(fs, tmp, "__graft_fpid").foreach { case (v, pd) =>
+        val pid = v.toInt
         val old = covered(pid)
         val slash = old.lastIndexOf('/')
         // a BORROWED file's twin materializes into the folding table's own
@@ -257,21 +239,10 @@ object StagingMaintenance {
         val dirPart =
           if (TableClone.isForeign(old)) ""
           else if (slash > 0) old.substring(0, slash + 1) else ""
-        // listStatus order is unspecified; sorted part names ARE row order
-        // (the writing task numbers them sequentially) — required for the
-        // preserved-row-order claim the sort-provenance carry rides
-        val parts = fs.listStatus(pd.getPath).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        repl(old) = parts.zipWithIndex.map { case (f, j) =>
-          val name = s"${dirPart}fold-$token-$pid-$j.parquet"
-          val target = new Path(d, name)
-          if (!fs.rename(f.getPath, target))
-            throw new IllegalStateException(s"foldDeltas: move ${f.getPath} -> $target failed")
-          name
-        }
+        repl(old) = StagedRewrite.publish(fs, d, pd)(
+          (_, j) => s"${dirPart}fold-$token-$pid-$j.parquet")
       }
-    fs.delete(tmp, true)
+    }
     // a twin preserves its original's row order, so it inherits the
     // original's provenance: twins of UNPROVEN files re-enter the marker
     // (the r13-advice false-readmission hazard), twins of proven files
@@ -346,8 +317,9 @@ object StagingMaintenance {
     }
     val latest = GraftStagingCatalog.headManifest(fs, d)
     val base = latest.map(_._1).getOrElse(0L)
-    val all = latest.map { case (_, mf) => manifestFiles(fs, mf) }
-      .getOrElse(dataFiles(fs, d))
+    val headTxt = latest.map { case (_, mf) => readString(fs, mf) }
+    val all = headTxt.map(GraftStagingCatalog.parseManifestFiles).getOrElse(dataFiles(fs, d))
+    val headDvs = headTxt.toSeq.flatMap(GraftStagingCatalog.parseArray(_, "dvs"))
     // INCREMENTAL LAYOUT MAINTENANCE (partition-spec evolution's write
     // side): bed ONLY the STRAY files — flat root-level part files from
     // plain appends — into the requested layout; files already under ANY
@@ -372,14 +344,14 @@ object StagingMaintenance {
     // cover every DV'd file — run a full OPTIMIZE).
     val (carried, current) =
       if (strayOnly) {
-        require(manifestDvNames(fs, d, latest).isEmpty,
+        require(headDvs.isEmpty,
           "strayOnly optimize cannot fold active deletion vectors — run a full OPTIMIZE")
         require(!RowLineage.enabled(fs, d),
           "strayOnly optimize does not support row-lineage tables — run a full OPTIMIZE")
         all.partition(_.contains("/"))
       } else minBytes match {
         case Some(mb) =>
-          require(manifestDvNames(fs, d, latest).isEmpty,
+          require(headDvs.isEmpty,
             "small-file optimize cannot fold active deletion vectors — run a full OPTIMIZE")
           // a manifest-listed file whose stat throws FNF (concurrent VACUUM
           // / external damage) must NOT classify as a 0-byte small file —
@@ -401,7 +373,7 @@ object StagingMaintenance {
           // conservatively included. DVs refused like the other partial
           // scopes (a fold must cover every DV'd file).
           case Some(w) =>
-            require(manifestDvNames(fs, d, latest).isEmpty,
+            require(headDvs.isEmpty,
               "where-scoped optimize cannot fold active deletion vectors — run a full OPTIMIZE")
             val parsed = spark.sessionState.sqlParser.parseExpression(w)
             // a misspelled column would look unprunable (conservative keep
@@ -468,9 +440,7 @@ object StagingMaintenance {
     val lineage = RowLineage.enabled(fs, d)
     val lineageEntries: Map[String, RowLineage.Entry] =
       if (!lineage) Map.empty
-      else latest.map { case (_, mf) =>
-        RowLineage.parse(GraftStagingCatalog.readString(fs, mf))._1
-      }.getOrElse(Map.empty)
+      else headTxt.map(RowLineage.parse(_)._1).getOrElse(Map.empty)
     val reader = spark.read
     if (lineage) declaredSchema(fs, d).foreach(s => reader.schema(RowLineage.readSchema(s)))
     else declaredSchema(fs, d).foreach(reader.schema)
@@ -483,35 +453,16 @@ object StagingMaintenance {
     // resolve rows off `_metadata`, which only a bare files-read provides,
     // and id resolution depends only on each surviving row's own
     // (phys, row_index), which the DV filter cannot disturb.
-    val dvMap = latest.map { case (_, mf) => DeletionVectors.dvMapAt(fs, d, mf) }
-      .getOrElse(Map.empty[String, Set[Any]])
-    val posMap = latest.filter(_ => DeletionVectors.morPos(fs, d))
-      .map { case (_, mf) => DeletionVectors.posMapAt(fs, d, mf) }
-      .getOrElse(DeletionVectors.PosDvs.empty)
+    // Keyed fold order: inline keys first, then the distributed bins (r14)
+    // — both anti-joins, both executor-side.
     val withMeta = if (!lineage) raw0 else raw0.select(col("*"), col("_metadata"))
-    val keyRuns = latest.map { case (_, mf) =>
-      DeletionVectors.keyRunsAt(fs, d, mf) }.getOrElse(Nil)
-    val dvApplied = DeletionVectors.morKey(fs, d) match {
-      case Some(k) if dvMap.nonEmpty || keyRuns.nonEmpty =>
-        // fold order: inline keys first, then the distributed bins (r14) —
-        // both anti-joins, both executor-side
-        DeletionVectors.applyKeyRunsToRead(
-          DeletionVectors.applyToRead(withMeta, k, dvMap), k, keyRuns)
-      case _ if posMap.nonEmpty      => DeletionVectors.applyPosToRead(withMeta, posMap)
-      case _                         => withMeta
-    }
+    val dvApplied = DeletionVectors.Deletes.of(fs, d, headDvs).applyTo(withMeta)
     val df =
       if (!lineage) dvApplied
       else RowLineage.materialize(dvApplied, lineageEntries).drop("_metadata")
-    // rewrite into a staging subdir (underscore-prefixed: invisible to data
-    // listings), then move the compacted parts into the table dir under
-    // unique names BEFORE committing the manifest that references them —
-    // a crash mid-move leaves unreferenced files, never a torn version.
-    // (The moves are data-file placement, not the commit: atomicity lives
-    // entirely in the create-exclusive manifest write.)
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(d, s"_optimize_$token")
-    val moved: Seq[String] = partitionBy match {
+    // the moves are data-file placement, not the commit: atomicity lives
+    // entirely in the create-exclusive manifest write below
+    def layOut(token: String, tmp: Path): Seq[String] = partitionBy match {
       case Some(p) =>
         // PARTITION layout: bed the current set into `<prefix>=v/`
         // directories (the reference's readdir namespace). `p` is a
@@ -550,24 +501,13 @@ object StagingMaintenance {
           laidOut.write.partitionBy("__graft_pdir").mode("overwrite")
             .parquet(tmp.toString)
         }
-        fs.listStatus(tmp).toIndexedSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("__graft_pdir="))
-          .flatMap { pd =>
-            // keep Spark's own escaped partition VALUE, swap in the spec's
-            // directory prefix
-            val dirName =
-              spec.dirPrefix + pd.getPath.getName.stripPrefix("__graft_pdir=")
-            val target = new Path(d, dirName)
-            fs.mkdirs(target)
-            fs.listStatus(pd.getPath).toIndexedSeq
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .map { f =>
-                val t = new Path(target, s"opt-$token-${f.getPath.getName}")
-                if (!fs.rename(f.getPath, t))
-                  throw new IllegalStateException(s"optimize: move ${f.getPath} -> $t failed")
-                s"$dirName/${t.getName}"
-              }
-          }
+        StagedRewrite.partitions(fs, tmp, "__graft_pdir").flatMap { case (v, pd) =>
+          // keep Spark's own escaped partition VALUE, swap in the spec's
+          // directory prefix
+          val dirName = spec.dirPrefix + v
+          fs.mkdirs(new Path(d, dirName))
+          StagedRewrite.publish(fs, d, pd)((part, _) => s"$dirName/opt-$token-$part")
+        }
       case None =>
         val laid = clusterBy match {
           case Some(spec) if spec.contains(",") =>
@@ -616,16 +556,9 @@ object StagingMaintenance {
               .sortWithinPartitions(so.map(col): _*)
         }
         laid.write.mode("overwrite").parquet(tmp.toString)
-        fs.listStatus(tmp).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map { f =>
-            val target = new Path(d, s"opt-$token-${f.getPath.getName}")
-            if (!fs.rename(f.getPath, target))
-              throw new IllegalStateException(s"optimize: move ${f.getPath} -> $target failed")
-            target.getName
-          }
+        StagedRewrite.publish(fs, d, tmp)((part, _) => s"opt-$token-$part")
     }
-    fs.delete(tmp, true)
+    val moved = StagedRewrite(fs, d, "optimize")(layOut)
     val v = writeExplicitManifest(fs, d, carried ++ moved, expectedBase = Some(base),
       matFiles = if (lineage) moved.toSet else Set.empty)
     // commit-time zone-map maintenance, if declared — best-effort: the
@@ -636,13 +569,6 @@ object StagingMaintenance {
     }
     (current.size, moved.size, v)
   }
-
-  /** DV sidecar names of the head manifest (empty when none). */
-  private def manifestDvNames(fs: FileSystem,
-      d: org.apache.hadoop.fs.Path,
-      latest: Option[(Long, org.apache.hadoop.fs.Path)]): Seq[String] =
-    latest.map { case (_, mf) => GraftStagingCatalog.manifestDvs(fs, mf) }
-      .getOrElse(Seq.empty)
 
   /** Append-only change data feed: the rows added in versions
     * `(fromVersion, toVersion]`. Because commits only ADD files, the
@@ -745,59 +671,29 @@ object StagingMaintenance {
     // the EXCEPT ALL cancellation surfaces exactly the newly-suppressed
     // rows as deletes. Still slice-cost: only files that changed (by name
     // OR by DV) are scanned.
-    val morKey = DeletionVectors.morKey(fs, d)
-    val morPos = DeletionVectors.morPos(fs, d)
-    val dvFrom = morKey.filter(_ => fromVersion > 0L)
-      .map(_ => DeletionVectors.dvMapAt(fs, d, manifestOf(fromVersion)))
-      .getOrElse(Map.empty[String, Set[Any]])
-    val dvTo = morKey.map(_ => DeletionVectors.dvMapAt(fs, d, manifestOf(toVersion)))
-      .getOrElse(Map.empty[String, Set[Any]])
-    // r14 distributed key bins: visibility compares by descriptor IDENTITY
-    // (immutable dirs), reads suppress via the executor-parallel anti-join
-    val krFrom = morKey.filter(_ => fromVersion > 0L)
-      .map(_ => DeletionVectors.keyRunsAt(fs, d, manifestOf(fromVersion)))
-      .getOrElse(Nil)
-    val krTo = morKey.map(_ => DeletionVectors.keyRunsAt(fs, d, manifestOf(toVersion)))
-      .getOrElse(Nil)
-    val (krFromState, krToState) =
-      (DeletionVectors.keyRunState(krFrom), DeletionVectors.keyRunState(krTo))
-    // position-delete twin of the key maps (keyless-MOR tables)
-    val posFrom =
-      if (morPos && fromVersion > 0L) DeletionVectors.posMapAt(fs, d, manifestOf(fromVersion))
-      else DeletionVectors.PosDvs.empty
-    val posTo =
-      if (morPos) DeletionVectors.posMapAt(fs, d, manifestOf(toVersion))
-      else DeletionVectors.PosDvs.empty
-    // distributed run sidecars compare by IDENTITY (immutable paths), so a
-    // DV-visibility change is detectable without parsing any ordinals
-    val dvChanged = (from intersect to).filter(f =>
-      dvFrom.getOrElse(f, Set.empty) != dvTo.getOrElse(f, Set.empty) ||
-        posFrom.stateOf(f) != posTo.stateOf(f) ||
-        krFromState.getOrElse(f, Set.empty) != krToState.getOrElse(f, Set.empty))
+    // Key bins and run bins compare by IDENTITY (immutable dirs and
+    // paths), so a visibility change is detectable without parsing any
+    // key or ordinal they hold.
+    val mode = DeletionVectors.mode(fs, d)
+    def deletesAt(v: Long): DeletionVectors.Deletes =
+      if (v <= 0L || mode == DeletionVectors.MorMode.Off) DeletionVectors.Deletes.none
+      else DeletionVectors.Deletes.load(fs, d, mode,
+        GraftStagingCatalog.manifestDvs(fs, manifestOf(v)))
+    val (delFrom, delTo) = (deletesAt(fromVersion), deletesAt(toVersion))
+    val dvChanged = (from intersect to).filter(f => delFrom.stateOf(f) != delTo.stateOf(f))
     val removed = ((from -- to) ++ dvChanged).toSeq.sorted
     val added = ((to -- from) ++ dvChanged).toSeq.sorted
-    def read(fls: Seq[String], dv: Map[String, Set[Any]],
-        pos: DeletionVectors.PosDvs,
-        krs: Seq[DeletionVectors.KeyRuns]): DataFrame = {
+    def read(fls: Seq[String], deletes: DeletionVectors.Deletes): DataFrame = {
       val reader = spark.read
       sFrom.foreach(reader.schema)
       val df =
         if (fls.isEmpty)
           reader.schema(sFrom.getOrElse(spark.read.parquet(d.toString).schema)).parquet()
         else reader.parquet(fls.map(f => new Path(d, f).toString): _*)
-      morKey match {
-        case Some(k) =>
-          DeletionVectors.applyKeyRunsToRead(
-            DeletionVectors.applyToRead(df, k,
-              dv.filter { case (f, _) => fls.contains(f) }),
-            k, krs.map(kr => kr.copy(files = kr.files.filter(fls.contains))))
-        case None if morPos && fls.nonEmpty =>
-          DeletionVectors.applyPosToRead(df, pos.filterFiles(fls.contains))
-        case None => df
-      }
+      deletes.restrict(fls.toSet).applyTo(df)
     }
-    val oldRows = read(removed, dvFrom, posFrom, krFrom)
-    val newRows = read(added, dvTo, posTo, krTo)
+    val oldRows = read(removed, delFrom)
+    val newRows = read(added, delTo)
     // ONE multiset difference for both polarities (r14 opt, guide §2.4):
     // `exceptAll` in each direction re-aggregates the SAME two inputs with
     // opposite signs (Spark rewrites ExceptAll to Union → Aggregate(sum ±1)
@@ -889,8 +785,8 @@ object StagingMaintenance {
       // recompute the multiset diff from the changed files every time
       val diff = diff0.persist()
       try {
-      val shaped = DeletionVectors.morKey(fs, d) match {
-        case Some(k) if diff.columns.exists(_.equalsIgnoreCase(k)) =>
+      val shaped = DeletionVectors.mode(fs, d) match {
+        case DeletionVectors.MorMode.Key(k) if diff.columns.exists(_.equalsIgnoreCase(k)) =>
           // pair the two polarities by (key, occurrence#): occurrence rank
           // is deterministic (ordered by every data column), so duplicate
           // keys pair stably. A key's first min(#deletes, #inserts) rows
@@ -1015,15 +911,16 @@ object StagingMaintenance {
       v: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, not, struct}
     def manifestOf(mv: Long): Option[Path] = GraftStagingCatalog.probeManifest(fs, d, mv)
-    def state(mv: Long): (Set[String], Map[String, RowLineage.Entry]) =
-      if (mv <= 0L) (Set.empty, Map.empty)
+    def state(mv: Long): (Set[String], Map[String, RowLineage.Entry], Seq[String]) =
+      if (mv <= 0L) (Set.empty, Map.empty, Nil)
       else manifestOf(mv).map { mf =>
         val txt = readString(fs, mf)
-        (GraftStagingCatalog.parseManifestFiles(txt).toSet, RowLineage.parse(txt)._1)
+        (GraftStagingCatalog.parseManifestFiles(txt).toSet, RowLineage.parse(txt)._1,
+          GraftStagingCatalog.parseArray(txt, "dvs"))
       }.getOrElse(throw new IllegalArgumentException(
         s"$d has no version $mv (vacuumed or never committed)"))
-    val (fromF, fromE) = state(v - 1L)
-    val (toF, toE) = state(v)
+    val (fromF, fromE, fromDvs) = state(v - 1L)
+    val (toF, toE, toDvs) = state(v)
     val sFrom = GraftStagingCatalog.schemaAtVersion(fs, d, math.max(v - 1L, 1L))
     val sTo = GraftStagingCatalog.schemaAtVersion(fs, d, v)
     require(sFrom == sTo,
@@ -1034,47 +931,18 @@ object StagingMaintenance {
     // merge-on-read: a DV-only commit changes visibility without changing
     // the file set — such files enter BOTH sides, each read under its
     // version's vectors (the rowLevelChangesAt rule, identity-paired here)
-    val morKey = DeletionVectors.morKey(fs, d)
-    val morPos = DeletionVectors.morPos(fs, d)
-    def dvState(mv: Long): (Map[String, Set[Any]], DeletionVectors.PosDvs,
-        Seq[DeletionVectors.KeyRuns]) =
-      if (mv <= 0L || (morKey.isEmpty && !morPos))
-        (Map.empty[String, Set[Any]], DeletionVectors.PosDvs.empty,
-          Seq.empty[DeletionVectors.KeyRuns])
-      else manifestOf(mv).map { mf =>
-        (if (morKey.isDefined) DeletionVectors.dvMapAt(fs, d, mf)
-         else Map.empty[String, Set[Any]],
-          if (morPos) DeletionVectors.posMapAt(fs, d, mf)
-          else DeletionVectors.PosDvs.empty,
-          if (morKey.isDefined) DeletionVectors.keyRunsAt(fs, d, mf)
-          else Seq.empty[DeletionVectors.KeyRuns])
-      }.getOrElse((Map.empty[String, Set[Any]], DeletionVectors.PosDvs.empty,
-        Seq.empty[DeletionVectors.KeyRuns]))
-    val (dvFrom, posFrom, krFrom) = dvState(v - 1L)
-    val (dvTo, posTo, krTo) = dvState(v)
-    val (krFromState, krToState) =
-      (DeletionVectors.keyRunState(krFrom), DeletionVectors.keyRunState(krTo))
-    val dvChanged = (fromF intersect toF).filter(f =>
-      dvFrom.getOrElse(f, Set.empty) != dvTo.getOrElse(f, Set.empty) ||
-        posFrom.stateOf(f) != posTo.stateOf(f) ||
-        krFromState.getOrElse(f, Set.empty) != krToState.getOrElse(f, Set.empty))
-    def applyDvsOf(fls: Set[String], dv: Map[String, Set[Any]],
-        pos: DeletionVectors.PosDvs,
-        krs: Seq[DeletionVectors.KeyRuns]): DataFrame => DataFrame = morKey match {
-      case Some(k) =>
-        df => DeletionVectors.applyKeyRunsToRead(
-          DeletionVectors.applyToRead(df, k, dv.filter { case (f, _) => fls(f) }),
-          k, krs.map(kr => kr.copy(files = kr.files.filter(fls))))
-      case None if morPos =>
-        df => DeletionVectors.applyPosToRead(df, pos.filterFiles(fls))
-      case None => identity
-    }
+    val mode = DeletionVectors.mode(fs, d)
+    def deletes(names: Seq[String]): DeletionVectors.Deletes =
+      if (mode == DeletionVectors.MorMode.Off) DeletionVectors.Deletes.none
+      else DeletionVectors.Deletes.load(fs, d, mode, names)
+    val (delFrom, delTo) = (deletes(fromDvs), deletes(toDvs))
+    val dvChanged = (fromF intersect toF).filter(f => delFrom.stateOf(f) != delTo.stateOf(f))
     val oldFiles = (fromF -- toF) ++ dvChanged
     val newFiles = (toF -- fromF) ++ dvChanged
     val olds = RowLineage.readWithIds(spark, d, oldFiles.toSeq.sorted,
-      declared, fromE, applyDvs = applyDvsOf(oldFiles, dvFrom, posFrom, krFrom))
+      declared, fromE, applyDvs = delFrom.restrict(oldFiles).applyTo)
     val news = RowLineage.readWithIds(spark, d, newFiles.toSeq.sorted,
-      declared, toE, applyDvs = applyDvsOf(newFiles, dvTo, posTo, krTo))
+      declared, toE, applyDvs = delTo.restrict(newFiles).applyTo)
     // ONE full-outer join on the id decides every case (r14 opt — the old
     // form ran five joins: two anti for inserts/deletes, one inner for
     // changed ids, two semi for the pre/post images, re-reading each side
@@ -1701,11 +1569,8 @@ object StagingMaintenance {
             dvset -- prevDv, prevDv -- dvset, rids, rnext)
           prevF = fset; prevDv = dvset; dl
         }
-        def dvTargets(names: Set[String]): Set[String] = names.flatMap { n =>
-          DeletionVectors.loadDvs(fs, d, Seq(n)).keySet ++
-            DeletionVectors.loadPosDvs(fs, d, Seq(n)).coveredFiles ++
-            DeletionVectors.loadKeyRuns(fs, d, Seq(n)).flatMap(_.files) // r14
-        }
+        def dvTargets(names: Set[String]): Set[String] =
+          DeletionVectors.Deletes.of(fs, d, names.toSeq).covered
         val branchRemoved = deltas.iterator.flatMap(_.remF).toSet & forkFiles
         def conflict(what: String): Nothing =
           throw new java.util.ConcurrentModificationException(
@@ -1856,18 +1721,9 @@ object StagingMaintenance {
     // merge-on-read (r12): suppress the version's DV-deleted rows before
     // resolving ids — the same filter-then-resolve order the DSv2 combined
     // reader uses
-    val applyDvs: DataFrame => DataFrame = DeletionVectors.morKey(fs, d) match {
-      case Some(k) =>
-        val dv = DeletionVectors.dvMapAt(fs, d, mf)
-        val krs = DeletionVectors.keyRunsAt(fs, d, mf)
-        df => DeletionVectors.applyKeyRunsToRead(
-          DeletionVectors.applyToRead(df, k, dv), k, krs)
-      case None if DeletionVectors.morPos(fs, d) =>
-        val pos = DeletionVectors.posMapAt(fs, d, mf)
-        df => DeletionVectors.applyPosToRead(df, pos)
-      case None => identity
-    }
-    RowLineage.readWithIds(spark, d, files, schema, entries, applyDvs = applyDvs)
+    RowLineage.readWithIds(spark, d, files, schema, entries,
+      applyDvs = DeletionVectors.Deletes.of(fs, d, GraftStagingCatalog.parseArray(txt, "dvs"))
+        .applyTo)
   }
 
   /** Live branches: name → (fork version, branch head version). */
@@ -2186,17 +2042,18 @@ object StagingMaintenance {
       drop.foreach { case (_, f) => fs.delete(f, false) }
       deadNow.foreach(f => fs.delete(new Path(d, f), false))
       deadDvs.foreach(n => fs.delete(new Path(dvDir, n), false))
-      // CRASHED-REWRITE STAGING DIRS (r12): an OPTIMIZE/DELETE that died
-      // mid-write leaves its underscore-prefixed work dir (`_optimize_*`,
-      // `_delete_*`, or the parquet committer's `_temporary`) holding up
-      // to a table's worth of bytes — invisible to data listings, so
-      // without this they leak FOREVER. Reclaim those whose ENTIRE TREE is
+      // CRASHED-REWRITE STAGING DIRS (r12): a rewrite that died mid-write
+      // leaves its underscore-prefixed work dir (one per
+      // [[StagedRewrite.Kinds]]: `_rename_*`, `_delete_*`, `_fold_*`,
+      // `_optimize_*`, `_purge_*`, or the parquet committer's
+      // `_temporary`) holding up to a table's worth of bytes — invisible
+      // to data listings, so without this they leak FOREVER. Reclaim those whose ENTIRE TREE is
       // older than `spark.graft.vacuum.temp-ttl-ms` (default 24 h).
       // Liveness is judged by the max modification time ACROSS the tree,
       // not the top-level dir: a long-running committer write mutates only
       // nested `_temporary/...` task files, so the top-level mtime froze
       // at job start — an in-flight rewrite's tree always has recent
-      // leaves, a crashed one's tree is uniformly old. Only the three
+      // leaves, a crashed one's tree is uniformly old. Only the
       // crash-artifact prefixes are touched — `_graft_*` sidecars and the
       // version log never match.
       val tempTtl = spark.conf.getOption("spark.graft.vacuum.temp-ttl-ms")
@@ -2215,8 +2072,7 @@ object StagingMaintenance {
         .foreach { st =>
           val n = st.getPath.getName
           if (st.isDirectory &&
-              (n.startsWith("_optimize_") || n.startsWith("_delete_") ||
-                n == "_temporary") &&
+              (StagedRewrite.isStagingDir(n) || n == "_temporary") &&
               (try treeMaxMtime(st.getPath) < tempHorizon
                catch { case _: FileNotFoundException => false })) {
             fs.delete(st.getPath, true); ()

@@ -186,7 +186,7 @@ object StagingPurge {
     // original row indices the purge removes, per file. Driver-side
     // materialization bounded by the purge's matched rows IN THOSE FILES
     // (equality descriptors need no ordinals — keys survive a row drop).
-    val posAll = DeletionVectors.loadPosDvs(fs, d, allDvNames)
+    val posAll = DeletionVectors.Deletes.of(fs, d, allDvNames).pos
     val posCovered: Set[String] = cand.filter(posAll.contains).toSet
     val purgedByFile: Map[String, Array[Long]] =
       if (posCovered.isEmpty) Map.empty
@@ -198,8 +198,6 @@ object StagingPurge {
           .groupBy(_.getString(0))
           .map { case (k, rs) => inv(k) -> rs.map(_.getLong(1)).sorted }
       }
-    val token = java.util.UUID.randomUUID().toString.take(12)
-    val tmp = new Path(d, s"_purge_$token")
     val survivors0 = raw.filter(not(hit))
     // ROW LINEAGE (r14): survivors land their RESOLVED id in the physical
     // column (the OPTIMIZE-fold rule) — dropping rows shifts positions,
@@ -223,41 +221,29 @@ object StagingPurge {
             coalesce(col(phys), col("__gl_base") + col("__graft_pr")))
           .drop("__gl_pf", "__gl_base")
       }
-    survivors
-      .withColumn("__graft_pid",
-        org.apache.spark.sql.functions.element_at(typedLit(pidOf), col("__graft_pf")))
-      .repartition(math.max(cand.size, 1), col("__graft_pid"))
-      .sortWithinPartitions(col("__graft_pid"), col("__graft_pr"))
-      .drop("__graft_pf", "__graft_pr")
-      .write.partitionBy("__graft_pid").mode("overwrite").parquet(tmp.toString)
-
     // ---- place twins beside their originals (same partition directory:
     // the path-based pruner must keep judging them by the same spec), then
-    // swap names through every manifest under the catalog monitor
+    // swap names through every manifest under the catalog monitor. A
+    // multi-part twin keeps its row order (the DV ordinal remap riding
+    // twinCum depends on it): parts publish in part-name order.
     val repl = scala.collection.mutable.Map.empty[String, Seq[String]]
-    fs.listStatus(tmp).toIndexedSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__graft_pid="))
-      .foreach { pd =>
-        val pid = pd.getPath.getName.stripPrefix("__graft_pid=").toInt
+    StagedRewrite(fs, d, "purge") { (token, tmp) =>
+      survivors
+        .withColumn("__graft_pid",
+          org.apache.spark.sql.functions.element_at(typedLit(pidOf), col("__graft_pf")))
+        .repartition(math.max(cand.size, 1), col("__graft_pid"))
+        .sortWithinPartitions(col("__graft_pid"), col("__graft_pr"))
+        .drop("__graft_pf", "__graft_pr")
+        .write.partitionBy("__graft_pid").mode("overwrite").parquet(tmp.toString)
+      StagedRewrite.partitions(fs, tmp, "__graft_pid").foreach { case (v, pd) =>
+        val pid = v.toInt
         val old = cand(pid)
         val slash = old.lastIndexOf('/')
         val dirPart = if (slash > 0) old.substring(0, slash + 1) else ""
-        // part names number sequentially within the writing task (c000,
-        // c001, …) but listStatus order is unspecified — sort, or a
-        // multi-part twin's row order (and the DV ordinal remap riding
-        // twinCum) silently scrambles
-        val parts = fs.listStatus(pd.getPath).toIndexedSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        repl(old) = parts.zipWithIndex.map { case (f, j) =>
-          val name = s"${dirPart}purge-$token-$pid-$j.parquet"
-          val target = new Path(d, name)
-          if (!fs.rename(f.getPath, target))
-            throw new IllegalStateException(s"purge: move ${f.getPath} -> $target failed")
-          name
-        }
+        repl(old) = StagedRewrite.publish(fs, d, pd)(
+          (_, j) => s"${dirPart}purge-$token-$pid-$j.parquet")
       }
-    fs.delete(tmp, true)
+    }
     // a twin of a sort-order-UNPROVEN file inherits its unprovenness: it
     // preserves the original (possibly unsorted) row order under a fresh
     // name the provenance marker doesn't know — re-mark it, or the

@@ -1420,9 +1420,11 @@ class CatalogSpec extends SparkSpec {
       def sumV(): Long = spark.table("stage_t.ws.kdb")
         .agg(sum(col("v"))).collect()(0).getLong(0)
       assert(sumV() === expSum)
-      // time travel reads v1 pre-delete
+      // time travel reads v1 pre-delete, and v2 through its key bins
       assert(spark.sql("SELECT count(*) FROM stage_t.ws.kdb VERSION AS OF 1")
         .collect()(0).getLong(0) === 1000L)
+      assert(spark.sql("SELECT count(*) FROM stage_t.ws.kdb VERSION AS OF 2")
+        .collect()(0).getLong(0) === 667L, "pinned read resurrected keyrun-deleted rows")
       // the change feed derives the keyrun delete exactly (executor-side
       // anti-join inside the CDF diff)
       val ckpt = java.nio.file.Files.createTempDirectory("graft_kdbcdf").toString
@@ -2192,18 +2194,23 @@ class CatalogSpec extends SparkSpec {
     val root = spark.conf.get("spark.sql.catalog.stage_t.root")
     val d = new org.apache.hadoop.fs.Path(s"$root/ws/vtmp")
     val hfs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    // simulate a crashed OPTIMIZE and a crashed committer
+    // simulate a crashed rewrite of every kind (OPTIMIZE, DELETE
+    // remainder, RENAME COLUMN, delta fold, purge) and a crashed committer
     val crashedOpt = new org.apache.hadoop.fs.Path(d, "_optimize_deadbeef")
     val crashedTmp = new org.apache.hadoop.fs.Path(d, "_temporary")
-    hfs.mkdirs(crashedOpt)
-    val out = hfs.create(new org.apache.hadoop.fs.Path(crashedOpt, "part-junk.parquet"))
-    out.write(Array.fill[Byte](128)(1)); out.close()
+    val crashedOthers = Seq("_delete_", "_rename_", "_fold_", "_purge_")
+      .map(pre => new org.apache.hadoop.fs.Path(d, pre + "deadbeef"))
+    (crashedOpt +: crashedOthers).foreach { dir =>
+      hfs.mkdirs(dir)
+      val out = hfs.create(new org.apache.hadoop.fs.Path(dir, "part-junk.parquet"))
+      out.write(Array.fill[Byte](128)(1)); out.close()
+    }
     hfs.mkdirs(crashedTmp)
     // with a LONG TTL the (recent) dirs look live and survive vacuum
     spark.conf.set("spark.graft.vacuum.temp-ttl-ms", "3600000")
     try {
       spark.sql("CALL stage_t.vacuum('ws', 'vtmp', 10)").collect()
-      assert(hfs.exists(crashedOpt) && hfs.exists(crashedTmp),
+      assert((crashedTmp +: crashedOpt +: crashedOthers).forall(hfs.exists),
         "vacuum reclaimed a recent (possibly live) staging dir")
       // with TTL 0 they are crash artifacts — reclaimed
       Thread.sleep(20)
@@ -2211,6 +2218,8 @@ class CatalogSpec extends SparkSpec {
       spark.sql("CALL stage_t.vacuum('ws', 'vtmp', 10)").collect()
       assert(!hfs.exists(crashedOpt), "crashed _optimize_ dir not reclaimed")
       assert(!hfs.exists(crashedTmp), "crashed _temporary dir not reclaimed")
+      crashedOthers.foreach(dir =>
+        assert(!hfs.exists(dir), s"crashed ${dir.getName} dir not reclaimed"))
       // the version log and sidecars are untouched; the table still reads
       assert(hfs.exists(new org.apache.hadoop.fs.Path(d, "_graft_versions")))
       assert(spark.table("stage_t.ws.vtmp").count() === 101L)
@@ -3513,7 +3522,7 @@ class CatalogSpec extends SparkSpec {
       val dvs = StagingMaintenance.activeDvs(spark, "stage_t", "ws", "pdd")
       assert(dvs.size === 1 && dvs.head.startsWith("dvr-"), dvs.toString)
       // the loaded state is run REFERENCES, not materialized ordinals
-      val loaded = DeletionVectors.loadPosDvs(fs, tblDir, dvs)
+      val loaded = DeletionVectors.Deletes.load(fs, tblDir, DeletionVectors.MorMode.Pos, dvs).pos
       assert(loaded.map.isEmpty && loaded.runs.nonEmpty,
         s"distributed sidecar materialized a driver map: $loaded")
       // covered files are exactly the two range files holding k < 400
