@@ -1,6 +1,5 @@
 package graft.sources.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, Coalesce, Expression, Literal,
@@ -12,7 +11,7 @@ import org.apache.spark.sql.types.StructType
 
 /** Table-level CHECK constraints for the staging catalog, declared as the
   * `check` table property (`TBLPROPERTIES ('check' = 'qty >= 0')`) and
-  * persisted in a `_graft_check.txt` sidecar beside the schema.
+  * persisted in the table record ([[TableMeta.check]]) beside the schema.
   *
   * Enforcement is WRITE-TIME and row-granular: every ingest path that can
   * add rows — INSERT/CTAS appends, streaming `foreachBatch` appends, and
@@ -35,22 +34,6 @@ import org.apache.spark.sql.types.StructType
   * sealed is the only enforcement point that exists.
   */
 private[catalog] object CheckConstraint {
-  private[catalog] val Sidecar = "_graft_check.txt"
-
-  def read(fs: FileSystem, d: Path): Option[String] = {
-    val p = new Path(d, Sidecar)
-    if (GraftStagingCatalog.isFile(fs, p)) {
-      val s = GraftStagingCatalog.readString(fs, p).trim
-      if (s.nonEmpty) Some(s) else None
-    } else None
-  }
-
-  def write(fs: FileSystem, d: Path, checkSql: String): Unit =
-    GraftStagingCatalog.writeString(fs, new Path(d, Sidecar), checkSql)
-
-  def remove(fs: FileSystem, d: Path): Unit =
-    fs.delete(new Path(d, Sidecar), false)
-
   /** Driver-side compilation: parse the check text, run it through the REAL
     * analyzer against a relation of the write schema (name resolution +
     * implicit casts + "is it boolean" all come from one authority), rewrite

@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   *     publication point.
   *
   * Readers of a member table resolve their snapshot THROUGH the group: the
-  * table carries a `_graft_group` sidecar naming its group, and
+  * table's record names its group ([[TableMeta.group]]), and
   * `loadTable` pins the read at the latest valid group manifest's version
   * for that table instead of the table head. A writer killed anywhere
   * between member commits leaves the group manifest unwritten — every
@@ -52,7 +52,6 @@ import org.apache.spark.sql.SparkSession
 object CommitGroups {
 
   private val GroupsDir = "_graft_groups"
-  private val Sidecar = "_graft_group"
   /** Retained group manifests per group: readers only use the latest, the
     * tail exists so a publish racing a vacuum never strands a reader
     * mid-resolution; versions pinned by ANY retained manifest are
@@ -106,7 +105,7 @@ object CommitGroups {
     StagingMaintenance.tableDir(spark, catalog, ns, table)
 
   /** CREATE a group over `tables`, binding their CURRENT head versions as
-    * sequence 1 and marking each member with the group sidecar. Re-creating
+    * sequence 1 and naming the group in each member's table record. Re-creating
     * an existing group resets it (the ensure-guards' DROP-and-rebuild
     * lifecycle) — old manifests are discarded with the old tables.
     */
@@ -122,10 +121,10 @@ object CommitGroups {
     fs.mkdirs(gd)
     publishManifest(fs, gd, 1L,
       dirs.map { case (t, (tfs, td)) => t -> headVersion(tfs, td) }.toMap)
-    // sidecars AFTER the binding manifest: a reader that sees the sidecar
-    // always finds a group to resolve through
+    // records AFTER the binding manifest: a reader that sees the group
+    // name always finds a group to resolve through
     dirs.foreach { case (_, (tfs, td)) =>
-      GraftStagingCatalog.writeString(tfs, new Path(td, Sidecar), group)
+      TableMeta.update(tfs, td)(_.copy(group = Some(group)))
     }
   }
 
@@ -188,42 +187,22 @@ object CommitGroups {
     }
   }
 
-  /** The version `loadTable` must pin for a member table, resolved through
-    * its group's latest valid manifest. None (read the table head) when the
-    * table carries no sidecar, its group vanished, or the group does not
-    * list it — group resolution is an override, never a gate that can
-    * brick a table.
+  /** The version `loadTable` must pin for a member of `group` (the
+    * table record's [[TableMeta.group]]), resolved through the group's
+    * latest valid manifest. None (read the table head) when the table is
+    * in no group, its group vanished, or the group does not list it —
+    * group resolution is an override, never a gate that can brick a table.
     */
-  /** The group a table is a member of, if any (sidecar lookup) — lets a
-    * maintenance stream publish its member tables' group per batch without
-    * being told the name.
-    */
-  def groupOf(fs: FileSystem, tableDir: Path): Option[String] = {
-    val p = new Path(tableDir, Sidecar)
-    if (GraftStagingCatalog.isFile(fs, p))
-      Some(GraftStagingCatalog.readString(fs, p).trim).filter(_.nonEmpty)
-    else None
-  }
-
-  def pinnedVersion(fs: FileSystem, tableDir: Path): Option[Long] = {
-    val sc = new Path(tableDir, Sidecar)
-    if (!GraftStagingCatalog.isFile(fs, sc)) None
-    else {
-      val group = GraftStagingCatalog.readString(fs, sc).trim
-      latest(fs, groupDir(tableDir.getParent, group))
-        .flatMap(_._2.get(tableDir.getName))
-    }
-  }
+  def pinnedVersion(fs: FileSystem, tableDir: Path, group: Option[String]): Option[Long] =
+    group.flatMap(g => latest(fs, groupDir(tableDir.getParent, g)))
+      .flatMap(_._2.get(tableDir.getName))
 
   /** Every version of `tableDir` pinned by ANY retained manifest of its
     * group — the vacuum exemption set (bounded by [[Retain]]).
     */
-  def pins(fs: FileSystem, tableDir: Path): Set[Long] = {
-    val sc = new Path(tableDir, Sidecar)
-    if (!GraftStagingCatalog.isFile(fs, sc)) Set.empty
-    else {
-      val group = GraftStagingCatalog.readString(fs, sc).trim
-      val gd = groupDir(tableDir.getParent, group)
+  def pins(fs: FileSystem, tableDir: Path, group: Option[String]): Set[Long] =
+    group.fold(Set.empty[Long]) { g =>
+      val gd = groupDir(tableDir.getParent, g)
       (try fs.listStatus(gd).toIndexedSeq
        catch { case _: java.io.IOException => IndexedSeq.empty })
         .filter(s => seqOf(s.getPath).isDefined)
@@ -231,5 +210,4 @@ object CommitGroups {
         .flatMap(_.get(tableDir.getName))
         .toSet
     }
-  }
 }

@@ -62,14 +62,6 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, 
   */
 object DeletionVectors {
   val DvDir = "_graft_dv"
-  val MorSidecar = "_graft_mor.txt"
-
-  /** Sidecar marker for POSITION-delete mode: merge-on-read declared with
-    * NO merge key (raw event ingest — no natural row identifier). Row-level
-    * DELETEs then record `(file, row position)` sidecars instead of paying
-    * a full copy-on-write rewrite; see [[writePosDv]]/[[PosDvPartition]].
-    */
-  val PosMarker = "#pos"
 
   /** `(_graft_file, _graft_pos)` — the POSITION ROW ID of a keyless-MOR
     * table as DSv2 metadata columns (the Iceberg `_file`/`_pos` shape):
@@ -97,72 +89,18 @@ object DeletionVectors {
       "row ordinal within its data file (graft position row id)"
   }
 
-  /** A table's merge-on-read declaration (`_graft_mor.txt`, written at
-    * CREATE): equality deletes on a key column, keyless position deletes,
-    * or copy-on-write.
+  /** A table's merge-on-read declaration ([[TableMeta.mor]], declared at
+    * CREATE): equality deletes on a key column, keyless POSITION deletes
+    * (merge-on-read with NO merge key — raw event ingest with no natural
+    * row identifier: row-level DELETEs record `(file, row position)`
+    * sidecars instead of paying a copy-on-write rewrite; see
+    * [[writePosDv]]/[[PosDvPartition]]), or copy-on-write.
     */
   sealed trait MorMode
   object MorMode {
     final case class Key(col: String) extends MorMode
     case object Pos extends MorMode
     case object Off extends MorMode
-  }
-
-  /** The table's MOR mode: one probe of the mode sidecar, plus one read
-    * when it exists.
-    */
-  def mode(fs: FileSystem, d: Path): MorMode = {
-    val p = new Path(d, MorSidecar)
-    if (!GraftStagingCatalog.isFile(fs, p)) MorMode.Off
-    else GraftStagingCatalog.readString(fs, p).trim match {
-      case PosMarker => MorMode.Pos
-      case ""        => MorMode.Off
-      case k         => MorMode.Key(k)
-    }
-  }
-
-  def writeMorKey(fs: FileSystem, d: Path, key: String): Unit =
-    GraftStagingCatalog.writeString(fs, new Path(d, MorSidecar), key)
-
-  /** Keyless-MOR UPDATE/MERGE admission escape hatch (r14 —
-    * `'graft.update.mode'='copy-on-write'`): every keyless row-level op
-    * deltas by default, but a 90%-of-table UPDATE is better rewritten
-    * once than suppressed-and-replaced forever — the operator flips the
-    * property for the bulk statement and back (ALTER TABLE SET/UNSET).
-    */
-  val UpdateModeSidecar = "_graft_updatemode.txt"
-
-  /** True when keyless row-level ops should COPY-ON-WRITE, not delta. */
-  def updateCow(fs: FileSystem, d: Path): Boolean = {
-    val p = new Path(d, UpdateModeSidecar)
-    GraftStagingCatalog.isFile(fs, p) &&
-      GraftStagingCatalog.readString(fs, p).trim == "copy-on-write"
-  }
-
-  /** Broad-statement admission control for position deltas (r14 —
-    * `'graft.delta.auto-fold-fraction'=f`): the update-mode escape hatch
-    * needs the operator to KNOW a statement is bulk before running it;
-    * this heuristic instead measures after — with exact information the
-    * pre-execution DSv2 planning can never have (a RowLevelOperation is
-    * chosen before any predicate is pushed, let alone evaluated). A
-    * position-delta commit whose statement covered ≥ f of the snapshot's
-    * files AND suppressed ≥ f of the covered files' rows triggers an
-    * immediate scoped fold ([[StagingMaintenance.foldDeltasAt]]) right
-    * after its own commit: the 90%-of-table UPDATE costs one extra pass
-    * over the files it already touched instead of suppressing most of
-    * every file forever, while selective statements skip the check at the
-    * file-fraction gate for free (row counts are only read once the
-    * statement has provably touched most of the table).
-    */
-  val AutoFoldSidecar = "_graft_autofold.txt"
-
-  /** The declared auto-fold fraction, when set and valid. */
-  def autoFoldFraction(fs: FileSystem, d: Path): Option[Double] = {
-    val p = new Path(d, AutoFoldSidecar)
-    if (!GraftStagingCatalog.isFile(fs, p)) None
-    else try Some(GraftStagingCatalog.readString(fs, p).trim.toDouble)
-      .filter(f => f > 0.0 && f <= 1.0)
-    catch { case _: NumberFormatException => None }
   }
 
   /** Canonical in-memory key value: integral keys normalize to Long,
@@ -345,15 +283,15 @@ object DeletionVectors {
     val none: Deletes = Deletes(MorMode.Off, Map.empty, Nil, PosDvs.empty)
 
     /** The deletes in force at manifest `mf`: one manifest read; a DV-free
-      * version stops there, otherwise one mode read and one read per
-      * sidecar.
+      * version stops there, otherwise one table-record read and one read
+      * per sidecar.
       */
     def at(fs: FileSystem, d: Path, mf: Path): Deletes =
       of(fs, d, GraftStagingCatalog.manifestDvs(fs, mf))
 
     /** The named sidecars' deletes; the mode is read only when some are named. */
     def of(fs: FileSystem, d: Path, names: Seq[String]): Deletes =
-      if (names.isEmpty) none else load(fs, d, mode(fs, d), names)
+      if (names.isEmpty) none else load(fs, d, TableMeta.read(fs, d).mor, names)
 
     /** Decode each named sidecar once. Missing sidecars fail loudly — a DV
       * is commit metadata, not an advisory cache.

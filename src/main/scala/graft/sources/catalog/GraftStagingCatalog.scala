@@ -58,10 +58,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * dropping the racer's rows (optimistic concurrency — the lost-update
   * guard).
   *
-  * The declared schema travels in a `_graft_schema.json` sidecar (written by
-  * `createTable`, read by `loadTable`): an empty just-created table has no
-  * parquet footers to infer from, and the leading underscore keeps the
-  * sidecar invisible to Spark's file listing. DDL is intentionally
+  * The declared schema and every other table declaration (partitioning,
+  * sort order, merge-on-read mode, CHECK, maintenance knobs) travel in one
+  * [[TableMeta]] record, `_graft_table.json`: `createTable` writes it,
+  * `alterTable` edits it, and `loadTable` reads it once and hands it to
+  * the table object, which answers its schema, properties, partitioning
+  * and every scan and write build from it. An empty just-created table has
+  * no parquet footers to infer from, and the leading underscore keeps the
+  * record invisible to Spark's file listing. DDL is intentionally
   * single-level (`root/<ns>/<table>`) to match the reference's
   * bucket/pseudo-directory nesting.
   */
@@ -71,8 +75,6 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   private var catalogName: String = _
   private var root: Path = _
   private var fs: FileSystem = _
-
-  private val SchemaSidecar = GraftStagingCatalog.SchemaSidecar
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
@@ -158,7 +160,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** DEFAULT column values: Spark encodes `DEFAULT <expr>` into StructField
-    * metadata (CURRENT_DEFAULT / EXISTS_DEFAULT); the schema sidecar
+    * metadata (CURRENT_DEFAULT / EXISTS_DEFAULT); the table record
     * persists metadata verbatim, so declaring the capability is the whole
     * create-side story — INSERTs that omit the column get CURRENT_DEFAULT
     * filled by the analyzer, and files written before an ADD COLUMN surface
@@ -212,7 +214,8 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       val base = Identifier.of(ident.namespace().take(1), ident.namespace()(1))
       val bd = tableDir(base)
       if (bd == null || !isDir(bd)) throw new NoSuchTableException(base)
-      val schema0 = declaredSchema(fs, bd).getOrElse(
+      val meta = TableMeta.read(fs, bd)
+      val schema0 = meta.schema.getOrElse(
         throw new IllegalStateException(
           s"$catalogName: ${base.name()} has no declared schema — the change feed " +
             "needs one (create the table through this catalog)"))
@@ -220,7 +223,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       // downstream applier pairs update pre/post images (or applies rows)
       // by, with no merge key required
       val schema =
-        if (!RowLineage.enabled(fs, bd)) schema0
+        if (!meta.rowLineage) schema0
         else StructType(schema0.fields :+
           org.apache.spark.sql.types.StructField("_row_id",
             org.apache.spark.sql.types.LongType, nullable = true))
@@ -250,18 +253,20 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // resolved version number is the SNAPSHOT this table object reads; a
     // row-level rewrite through it commits against exactly that base
     // (optimistic concurrency).
-    val (snapshotVersion, snapshotFiles, readPaths, dvNames) = resolveCurrent(d)
-    val schema = declaredSchema(fs, d)
+    // the table's declarations are read ONCE here and pinned with its
+    // snapshot: every scan, write and property answer comes from them
+    val meta = TableMeta.read(fs, d)
+    val (snapshotVersion, snapshotFiles, readPaths, dvNames) = resolveCurrent(d, meta)
     new VersionedStagingTable(
-      parquetTable(qualified(ident), readPaths, schema),
-      parquetTable(qualified(ident), Seq(d.toString), schema),
-      d, snapshotVersion, snapshotFiles, dvNames)
+      parquetTable(qualified(ident), readPaths, meta.schema),
+      parquetTable(qualified(ident), Seq(d.toString), meta.schema),
+      d, meta, snapshotVersion, snapshotFiles, dvNames)
   }
 
   /** CURRENT-snapshot resolution shared by the plain read face and the
     * metadata faces: (version, manifest file names, read paths, DV names).
     */
-  private def resolveCurrent(d: Path)
+  private def resolveCurrent(d: Path, meta: TableMeta)
       : (Long, Option[Seq[String]], Seq[String], Seq[String]) = {
     import GraftStagingCatalog._
     headManifest(fs, d) match {
@@ -276,7 +281,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
           // also anchors row-level ops' optimistic base: DML racing an
           // in-flight group publication surfaces as a version conflict
           // instead of silently rewriting unpublished state.
-          CommitGroups.pinnedVersion(fs, d).filter(_ < v) match {
+          CommitGroups.pinnedVersion(fs, d, meta.group).filter(_ < v) match {
             case Some(pv) if pv <= 0L =>
               (0L, Some(Seq.empty[String]), Seq.empty[String], Seq.empty[String])
             case Some(pv) =>
@@ -320,10 +325,11 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       case None           => (0L, Seq.empty[String], Seq.empty[String]) // forked empty
     }
     val label = s"${qualified(ident)}@branch_$bname"
+    val meta = TableMeta.read(fs, d)
     new VersionedStagingTable(
-      parquetTable(label, files.map(f => new Path(d, f).toString), declaredSchema(fs, d)),
-      parquetTable(label, Seq(d.toString), declaredSchema(fs, d)),
-      d, v, Some(files), dvNames, branch = Some(bname))
+      parquetTable(label, files.map(f => new Path(d, f).toString), meta.schema),
+      parquetTable(label, Seq(d.toString), meta.schema),
+      d, meta, v, Some(files), dvNames, branch = Some(bname))
   }
 
   // ---- time travel -------------------------------------------------------
@@ -346,18 +352,21 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   private def manifestTable(ident: Identifier, d: Path, mf: Path, label: String,
       version: Long): Table = {
     import GraftStagingCatalog._
+    // read only when the version needs it: no schema era covers it, or it
+    // carries deletion vectors
+    lazy val meta = TableMeta.read(fs, d)
     val pt = parquetTable(s"${qualified(ident)}$label",
       manifestFiles(fs, mf).map(f => new Path(d, f).toString),
-      schemaAtVersion(fs, d, version))
+      schemaAtVersion(fs, d, version, meta))
     // a pinned MOR version reads under ITS deletion vectors — without this,
     // time travel would resurrect rows a MERGE had deleted by that version
     val dvNames = manifestDvs(fs, mf)
     if (dvNames.isEmpty) pt
-    else DeletionVectors.mode(fs, d) match {
+    else meta.mor match {
       case m @ DeletionVectors.MorMode.Key(k) =>
         pt.schema.fields.find(_.name.equalsIgnoreCase(k))
-          .fold[Table](pt)(new DvPinnedTable(pt, d, m, dvNames, _))
-      case DeletionVectors.MorMode.Pos => new PosPinnedTable(pt, d, dvNames)
+          .fold[Table](pt)(new DvPinnedTable(pt, d, meta, m, dvNames, _))
+      case DeletionVectors.MorMode.Pos => new PosPinnedTable(pt, d, meta, dvNames)
       case DeletionVectors.MorMode.Off => pt
     }
   }
@@ -365,7 +374,8 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   /** Time-travel face of a POSITION-delete (keyless-MOR) version: the
     * pinned manifest's position DVs applied in the scan.
     */
-  private class PosPinnedTable(delegate: ParquetTable, dir: Path, dvNames: Seq[String])
+  private class PosPinnedTable(delegate: ParquetTable, dir: Path, meta: TableMeta,
+      dvNames: Seq[String])
       extends Table with SupportsRead {
     private val tableFs = fs
     private lazy val pos =
@@ -384,13 +394,12 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
           s => StructType(s.fields :+ DeletionVectors.RowIdxField)))
       scanSrc.newScanBuilder(options) match {
         case fb: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =>
-          new ZoneMapScanBuilder(fb,
-            StagingMaintenance.readStatsFor(tableFs, dir),
-            StagingMaintenance.readNullsFor(tableFs, dir),
+          val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+          new ZoneMapScanBuilder(fb, stats, nulls,
             dir.toString,
             () => StagingMaintenance.readBloomsFor(tableFs, dir),
             Map.empty, None,
-            GraftStagingCatalog.partSpecsAll(tableFs, dir),
+            meta.partSpecsAll,
             Map.empty,
             pos,
             posIdxCapable = posCapable)
@@ -402,7 +411,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   /** Read-only face of a time-travel-pinned MOR version: the delegate's
     * parquet stack with that version's deletion vectors applied in the scan.
     */
-  private class DvPinnedTable(delegate: ParquetTable, dir: Path,
+  private class DvPinnedTable(delegate: ParquetTable, dir: Path, meta: TableMeta,
       mode: DeletionVectors.MorMode, dvNames: Seq[String],
       keyField: org.apache.spark.sql.types.StructField) extends Table with SupportsRead {
     private val tableFs = fs
@@ -414,14 +423,13 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
       delegate.newScanBuilder(options) match {
         case fb: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =>
-          new ZoneMapScanBuilder(fb,
-            StagingMaintenance.readStatsFor(tableFs, dir),
-            StagingMaintenance.readNullsFor(tableFs, dir),
+          val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+          new ZoneMapScanBuilder(fb, stats, nulls,
             dir.toString,
             () => StagingMaintenance.readBloomsFor(tableFs, dir),
             deletes.inline,
             Some(keyField),
-            GraftStagingCatalog.partSpecsAll(tableFs, dir),
+            meta.partSpecsAll,
             keyRuns = deletes.keyRuns)
         case other => other
       }
@@ -544,7 +552,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         case Some(v) => probeManifest(fs, d, v).map(mf => manifestFiles(fs, mf))
           .getOrElse(throw new IllegalArgumentException(
             s"$d has no version $v (vacuumed between resolution and scan)"))
-        case None => resolveCurrent(d)._2.getOrElse(dataFiles(fs, d))
+        case None => resolveCurrent(d, TableMeta.read(fs, d))._2.getOrElse(dataFiles(fs, d))
       }
       files.sorted.map { f =>
         // a concurrent VACUUM can remove a file between manifest
@@ -604,7 +612,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     * readable until VACUUM.
     */
   private class VersionedStagingTable(readDelegate: ParquetTable,
-      writeDelegate: ParquetTable, dir: Path, snapshotVersion: Long,
+      writeDelegate: ParquetTable, dir: Path, meta: TableMeta, snapshotVersion: Long,
       snapshotFiles: Option[Seq[String]], dvNames: Seq[String] = Seq.empty,
       branch: Option[String] = None)
       extends Table with SupportsRead with SupportsWrite
@@ -616,7 +624,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       * `_row_id` metadata column (`SELECT _row_id FROM t` in plain SQL) and
       * routes row-level rewrites through the id-preserving write path.
       */
-    private lazy val lineageOn = RowLineage.enabled(tableFs, dir)
+    private val lineageOn = meta.rowLineage
     /** This snapshot's per-file id bases (empty map off-lineage). A BRANCH
       * face resolves its vector from the branch log (falling back to the
       * fork manifest in main's log — exactly how the snapshot itself
@@ -634,8 +642,8 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         mfOpt.map(mf => RowLineage.parse(GraftStagingCatalog.readString(tableFs, mf))._1)
           .getOrElse(Map.empty)
       }
-    /** This table's merge-on-read declaration (one sidecar read). */
-    private lazy val morMode = DeletionVectors.mode(tableFs, dir)
+    /** This table's merge-on-read declaration. */
+    private val morMode = meta.mor
     /** Keyless merge-on-read (position-delete) mode for this table. */
     private lazy val morPosOn = morMode == DeletionVectors.MorMode.Pos
     override def metadataColumns()
@@ -687,7 +695,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     }
     override def partitioning(): Array[Transform] = {
       import org.apache.spark.sql.connector.expressions.Expressions
-      GraftStagingCatalog.partSpecs(tableFs, dir).map {
+      meta.partSpecs.map {
         case GraftStagingCatalog.IdentityPart(c)  => Expressions.identity(c)
         case GraftStagingCatalog.DaysPart(c)      => Expressions.days(c)
         case GraftStagingCatalog.BucketPart(n, c) => Expressions.bucket(n, c)
@@ -695,19 +703,16 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     }
     override def properties(): util.Map[String, String] = {
       val m = new util.HashMap[String, String](readDelegate.properties())
-      CheckConstraint.read(tableFs, dir).foreach(m.put("check", _))
-      val so = GraftStagingCatalog.sortOrderCols(tableFs, dir)
-      if (so.nonEmpty) m.put("graft.sort-order", so.mkString(","))
-      val aa = GraftStagingCatalog.autoAnalyzeCols(tableFs, dir)
-      if (aa.nonEmpty) m.put("graft.auto-analyze", aa.mkString(","))
-      val tfsz = GraftStagingCatalog.targetFileSize(tableFs, dir)
-      if (tfsz > 0L) m.put("graft.target-file-size", tfsz.toString)
-      DeletionVectors.autoFoldFraction(tableFs, dir).foreach(f =>
-        m.put("graft.delta.auto-fold-fraction", f.toString))
+      meta.check.foreach(m.put("check", _))
+      if (meta.sortOrder.nonEmpty) m.put("graft.sort-order", meta.sortOrder.mkString(","))
+      if (meta.autoAnalyze.nonEmpty) m.put("graft.auto-analyze", meta.autoAnalyze.mkString(","))
+      if (meta.targetFileBytes > 0L)
+        m.put("graft.target-file-size", meta.targetFileBytes.toString)
+      meta.autoFold.foreach(f => m.put("graft.delta.auto-fold-fraction", f.toString))
       // partition evolution introspection: the spec families the pruner
       // still honors for old-layout files
-      val rp = GraftStagingCatalog.retiredPartitionCols(tableFs, dir)
-      if (rp.nonEmpty) m.put("graft.partition.retired", rp.mkString(","))
+      if (meta.retiredPartition.nonEmpty)
+        m.put("graft.partition.retired", meta.retiredPartition.mkString(","))
       m
     }
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -740,8 +745,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       // additionally consulted against the per-file [min,max] ranges and
       // non-intersecting files are dropped from the planned splits — plain
       // `SELECT … WHERE` gets file skipping without the prunedScan side API.
-      val stats = StagingMaintenance.readStatsFor(tableFs, dir)
-      val hasBlooms = StagingMaintenance.hasBloomSidecar(tableFs, dir)
+      val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
       val dvOn = dvNames.nonEmpty && morKeyField.isDefined
       // non-identity partition transforms prune from the file PATH alone —
       // the scan wrapper earns its keep even with no stats sidecar.
@@ -751,10 +755,10 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       // when no retired spec shares its layout prefix (a bucket-count
       // re-spec would otherwise alias old residue dirs into the new
       // grouping).
-      val specs = GraftStagingCatalog.partSpecsAll(tableFs, dir)
+      val specs = meta.partSpecsAll
       val spjCandidate: Option[(GraftStagingCatalog.PartSpec,
           org.apache.spark.sql.types.DataType)] =
-        GraftStagingCatalog.partSpecs(tableFs, dir) match {
+        meta.partSpecs match {
           case Seq(sp @ (_: GraftStagingCatalog.BucketPart |
                          _: GraftStagingCatalog.IdentityPart))
             if specs.forall(s => s == sp || s.dirPrefix != sp.dirPrefix) =>
@@ -767,7 +771,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       // never-ANALYZEd table must still serve readStream.table(…)
       inner match {
         case fb: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =>
-          new ZoneMapScanBuilder(fb, stats, StagingMaintenance.readNullsFor(tableFs, dir),
+          new ZoneMapScanBuilder(fb, stats, nulls,
             dir.toString,
             () => StagingMaintenance.readBloomsFor(tableFs, dir),
             if (dvOn) deletes.inline else Map.empty,
@@ -797,9 +801,9 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
               // write path re-sorts, so the snapshot-intersection gate is
               // exact for them too. DV'd snapshots never SPJ-group, so no
               // report escapes through a suppressed read.
-              val so = GraftStagingCatalog.sortOrderCols(tableFs, dir)
+              val so = meta.sortOrder
               if (so.isEmpty) Nil
-              else GraftStagingCatalog.sortOrderUnproven(tableFs, dir) match {
+              else meta.sortUnproven match {
                 case None =>
                   // upgrade guard: an unmarked delta-kind history on a MOR
                   // table predates the marker — withdraw (see
@@ -841,9 +845,9 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
 
     override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
       if (morPosOn)
-        GraftStagingCatalog.posDeleteWhere(tableFs, dir, filters, snapshotVersion,
+        GraftStagingCatalog.posDeleteWhere(tableFs, dir, meta, filters, snapshotVersion,
           snapshotFiles, dvNames)
-      else GraftStagingCatalog.deleteWhere(tableFs, dir, filters, snapshotVersion)
+      else GraftStagingCatalog.deleteWhere(tableFs, dir, meta, filters, snapshotVersion)
 
     // SQL UPDATE / MERGE INTO (and DELETE with predicates the metadata path
     // can't translate) via Spark's GROUP-BASED row-level operation
@@ -876,9 +880,9 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
             case Some(key) =>
               // merge-on-read: delta writes + deletion vectors, zero rewrites
               new StagingDeltaOperation(info, readDelegate, writeDelegate, tableFs,
-                dir, snapshotVersion, snapshotFiles, key, dvNames, deletes, branch,
+                dir, meta, snapshotVersion, snapshotFiles, key, dvNames, deletes, branch,
                 lineage = if (lineageOn) Some(lineageEntries) else None)
-            case None if morPosOn && !DeletionVectors.updateCow(tableFs, dir) =>
+            case None if morPosOn && !meta.updateCopyOnWrite =>
               // keyless merge-on-read (r13): UPDATE/MERGE (and DELETEs the
               // metadata path could not translate) are POSITION deltas —
               // replaced rows become run-encoded (file, ordinal) sidecars
@@ -887,11 +891,11 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
               // 'copy-on-write' (r14) opts a bulk statement out — a
               // 90%-of-table UPDATE rewrites better than it deltas
               new StagingPosDeltaOperation(info, readDelegate, writeDelegate, tableFs,
-                dir, snapshotVersion, snapshotFiles, dvNames, deletes.pos, branch,
+                dir, meta, snapshotVersion, snapshotFiles, dvNames, deletes.pos, branch,
                 lineage = if (lineageOn) Some(lineageEntries) else None)
             case None =>
               new StagingRowLevelOperation(info, readDelegate, writeDelegate, tableFs,
-                dir, snapshotVersion, snapshotFiles, dvNames, deletes.pos, branch,
+                dir, meta, snapshotVersion, snapshotFiles, dvNames, deletes.pos, branch,
                 lineage = if (lineageOn) Some(lineageEntries) else None)
           }
         }
@@ -908,7 +912,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       val batchId = Option(info.options.get("graft.batch-id")).map(_.toLong)
       // CHECK constraint: compiled ONCE on the driver against the write
       // schema, enforced per row inside the write tasks
-      val check = CheckConstraint.read(tableFs, dir).map(c =>
+      val check = meta.check.map(c =>
         (c, CheckConstraint.compile(SparkSession.active, c, info.schema())))
       // INSERT OVERWRITE (SupportsOverwrite): the statement's delete-rows
       // phase and its insert phase commit as ONE manifest write — survivors
@@ -942,8 +946,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         override def build(): Write = new Write
             with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
           import org.apache.spark.sql.connector.{distributions, expressions => v2x}
-          private val sortCols = GraftStagingCatalog.sortOrderCols(tableFs, dir)
-          private val v2Order: Array[v2x.SortOrder] = sortCols.map(c =>
+          private val v2Order: Array[v2x.SortOrder] = meta.sortOrder.map(c =>
             v2x.Expressions.sort(v2x.Expressions.column(c),
               v2x.SortDirection.ASCENDING)).toArray
           override def requiredDistribution(): distributions.Distribution =
@@ -958,7 +961,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
           // rather than throw; the size takes effect when an order exists.
           override def advisoryPartitionSizeInBytes(): Long =
             if (v2Order.isEmpty) 0L
-            else GraftStagingCatalog.targetFileSize(tableFs, dir)
+            else meta.targetFileBytes
           private val innerWrite = inner.build()
           override def description(): String = innerWrite.description()
           override def toBatch: BatchWrite = new BatchWrite {
@@ -1000,7 +1003,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
                   val fresh = GraftStagingCatalog.dataFiles(tableFs, dir).filterNot(before)
                   // legacy un-versioned table: pre-existing data = the
                   // PRE-insert listing, never this statement's fresh files
-                  val (kept, rewritten) = GraftStagingCatalog.filesAfterDelete(tableFs, dir,
+                  val (kept, rewritten) = GraftStagingCatalog.filesAfterDelete(tableFs, dir, meta,
                     filters, noManifestCurrent = Some(before.toSeq.sorted))
                   // deletion vectors for CARRIED files stay in force
                   // (rewritten files' entries become inert — their files
@@ -1008,14 +1011,14 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
                   // Lineage: the rewritten remainder carries materialized
                   // ids; the overwrite's own fresh files are NEW rows and
                   // get fresh virtual bases by default.
-                  GraftStagingCatalog.writeExplicitManifest(tableFs, dir, kept ++ fresh,
+                  GraftStagingCatalog.writeExplicitManifest(tableFs, dir, meta, kept ++ fresh,
                     kind = "overwrite", expectedBase = Some(snapshotVersion),
                     dvs = dvNames, matFiles = rewritten)
                   ()
                 case None =>
                   // only a SUCCESSFUL commit becomes a version — on the
                   // BRANCH log when this is a branch face (WAP ingest)
-                  GraftStagingCatalog.writeCommitManifest(tableFs, dir, before, batchId,
+                  GraftStagingCatalog.writeCommitManifest(tableFs, dir, meta, before, batchId,
                     branch)
               }
               // commit-time zone-map maintenance (outside the manifest
@@ -1028,7 +1031,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
               if (branch.isEmpty) {
                 val dk = tableFs.makeQualified(dir).toString
                 try {
-                  StagingMaintenance.autoAnalyze(SparkSession.active, tableFs, dir)
+                  StagingMaintenance.autoAnalyze(SparkSession.active, tableFs, dir, meta)
                   ZoneMapScan.autoAnalyzeFailures.remove(dk)
                   ()
                 } catch { case e: Exception =>
@@ -1053,7 +1056,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** Partitioned tables (identity transforms only): the partition columns
-    * are DECLARED here (a `_graft_partition.txt` sidecar) and the layout
+    * are DECLARED here (in the table record) and the layout
     * is applied by maintenance — ingest lands files flat (small-commit
     * reality on an object store), and `OPTIMIZE … partitionBy` beds the
     * current set into `k=v/` directories (the reference's readdir
@@ -1114,22 +1117,26 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     requireNs(ident.namespace())
     val d = tableDir(ident)
     if (isDir(d)) throw new TableAlreadyExistsException(ident)
-    // CHECK constraint: validated against the declared schema NOW (a typo
-    // fails the CREATE, not the first insert), enforced on every write path
-    val check = Option(properties.get("check")).map(_.trim).filter(_.nonEmpty)
-    check.foreach(c => CheckConstraint.compile(SparkSession.active, c, schema))
+    // every declaration is validated NOW (a typo fails the CREATE, not the
+    // first insert) by the same per-key validator ALTER uses; an absent or
+    // blank property declares nothing
+    def declared[A](key: String)(parse: String => A): Option[A] =
+      Option(properties.get(key)).map(_.trim).filter(_.nonEmpty).map(parse)
+    // CHECK constraint: validated against the declared schema, enforced on
+    // every write path
+    val check = declared("check")(checkOf(_, schema))
     // MERGE-ON-READ declaration: 'graft.write.mode'='merge-on-read' routes
     // row-level ops through deletion vectors ([[DeletionVectors]]); the
     // mandatory 'graft.merge-keys' names the row-identifier column (UNIQUE
     // per row — the CDC primary key; equality-delete contract).
-    val morDecl: Option[String] =
+    val mor: DeletionVectors.MorMode =
       Option(properties.get("graft.write.mode")).map(_.trim.toLowerCase) match {
         case Some("merge-on-read")
             if !Option(properties.get("graft.merge-keys")).exists(_.trim.nonEmpty) =>
           // KEYLESS merge-on-read → POSITION-delete mode (raw event ingest
           // with no natural row identifier): row-level DELETEs record
           // (file, row position) sidecars, zero rewrites
-          Some(DeletionVectors.PosMarker)
+          DeletionVectors.MorMode.Pos
         case Some("merge-on-read") =>
           val k = Option(properties.get("graft.merge-keys")).map(_.trim).filter(_.nonEmpty)
             .getOrElse(throw new IllegalArgumentException(
@@ -1152,12 +1159,12 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
           // nullable row identifier is a modeling bug anyway
           if (f.nullable) throw new IllegalArgumentException(
             s"$catalogName: merge-key column $k must be declared NOT NULL")
-          Some(f.name)
+          DeletionVectors.MorMode.Key(f.name)
         case Some(other) if other != "copy-on-write" =>
           throw new IllegalArgumentException(
             s"$catalogName: unknown graft.write.mode '$other' " +
               "(copy-on-write | merge-on-read)")
-        case _ => None
+        case _ => DeletionVectors.MorMode.Off
       }
     // ROW LINEAGE declaration: 'graft.row-lineage'='true' — every commit
     // manifest allocates per-file id bases ([[RowLineage]]); rewrites that
@@ -1175,113 +1182,128 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         case Some(other) => throw new IllegalArgumentException(
           s"$catalogName: graft.row-lineage must be true|false, got '$other'")
       }
-    // DECLARED APPEND SORT ORDER: 'graft.sort-order'='c1[,c2…]' makes every
-    // append request an ordered distribution (range partition + sort) from
-    // Spark before its files land — per-file [min,max] on the sort key are
-    // then disjoint from the FIRST insert, so zone maps prune plain
-    // ingested data with no OPTIMIZE pass. The ingest-time half of the
-    // clustering story (OPTIMIZE clusterBy is the maintenance half).
-    val sortCols: Seq[String] =
-      Option(properties.get("graft.sort-order")).map(_.trim).filter(_.nonEmpty)
-        .map(_.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Seq.empty)
-    sortCols.foreach { c =>
-      require(schema.fields.exists(_.name.equalsIgnoreCase(c)),
-        s"$catalogName: sort-order column $c is not in the table schema")
-    }
-    // COMMIT-TIME ZONE-MAP MAINTENANCE: 'graft.auto-analyze'='c1[,c2…]'
-    // extends the stats sidecar with each commit's new files (incremental
-    // footer harvest, StagingMaintenance.autoAnalyze) so pruning never
-    // waits on a manual ANALYZE.
-    val autoCols: Seq[String] =
-      Option(properties.get("graft.auto-analyze")).map(_.trim).filter(_.nonEmpty)
-        .map(_.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Seq.empty)
-    autoCols.foreach { c =>
-      require(schema.fields.exists(_.name.equalsIgnoreCase(c)),
-        s"$catalogName: auto-analyze column $c is not in the table schema")
-    }
-    // 'graft.target-file-size'=<bytes>: advisory append file sizing (the
-    // Delta/Iceberg targetFileSize knob) — AQE coalesces or splits the
-    // write's range partitions toward this size, so the file count tracks
-    // DATA VOLUME (100 appends of 1 GiB and 1 append of 100 GiB land the
-    // same layout) instead of freezing at the shuffle-partition count.
-    val targetBytes: Long =
-      Option(properties.get("graft.target-file-size")).map(_.trim).filter(_.nonEmpty)
-        .map(_.toLong).getOrElse(0L)
-    require(targetBytes >= 0L,
-      s"$catalogName: graft.target-file-size must be non-negative, got $targetBytes")
     // 'graft.checkpoint-interval'=<n>: checkpoint the version log every nth
     // commit (default 10) — a high-frequency streamed table can trade a few
-    // more checkpoint writes for an even shorter probe window
-    val ckptEvery: Option[Long] =
-      Option(properties.get("graft.checkpoint-interval")).map(_.trim).filter(_.nonEmpty)
-        .map(_.toLong)
-    // unset = the default interval; an EXPLICIT value must be positive — 0
-    // used to pass validation and silently mean "default", contradicting
-    // the error message and giving the boundary value no diagnostic
+    // more checkpoint writes for an even shorter probe window. An EXPLICIT
+    // value must be positive — 0 used to pass validation and silently mean
+    // "default", contradicting the error message
+    val ckptEvery = declared("graft.checkpoint-interval")(_.toLong)
     ckptEvery.foreach(n => require(n > 0L,
       s"$catalogName: graft.checkpoint-interval must be positive, got $n"))
+    val meta = TableMeta(
+      schema = Some(schema),
+      partition = partCols,
+      sortOrder = declared("graft.sort-order")(sortOrderOf(_, schema)).getOrElse(Nil),
+      autoAnalyze = declared("graft.auto-analyze")(autoAnalyzeOf(_, schema)).getOrElse(Nil),
+      targetFileBytes = declared("graft.target-file-size")(targetFileSizeOf).getOrElse(0L),
+      checkpointEvery = ckptEvery.getOrElse(TableMeta.DefaultCkptInterval),
+      mor = mor,
+      updateCopyOnWrite = declared("graft.update.mode")(updateModeOf).getOrElse(false),
+      autoFold = declared("graft.delta.auto-fold-fraction")(autoFoldOf),
+      check = check,
+      rowLineage = rowLineage)
     fs.mkdirs(d)
-    GraftStagingCatalog.writeString(fs, new Path(d, SchemaSidecar), schema.json)
-    if (sortCols.nonEmpty)
-      GraftStagingCatalog.writeString(fs,
-        new Path(d, GraftStagingCatalog.SortOrderSidecar), sortCols.mkString("\n"))
-    if (targetBytes > 0L)
-      GraftStagingCatalog.writeString(fs,
-        new Path(d, GraftStagingCatalog.FileSizeSidecar), targetBytes.toString)
-    ckptEvery.foreach(n =>
-      GraftStagingCatalog.writeString(fs,
-        new Path(d, GraftStagingCatalog.CkptIntervalSidecar), n.toString))
-    morDecl.foreach(k => DeletionVectors.writeMorKey(fs, d, k))
-    // keyless-MOR row-level admission (r14): 'graft.update.mode' =
-    // 'copy-on-write' routes UPDATE/MERGE/untranslatable-DELETE through
-    // the group rewrite instead of position deltas — the bulk-statement
-    // escape hatch (see DeletionVectors.UpdateModeSidecar)
-    Option(properties.get("graft.update.mode")).map(_.trim.toLowerCase).foreach {
-      case "copy-on-write" =>
-        GraftStagingCatalog.writeString(fs,
-          new Path(d, DeletionVectors.UpdateModeSidecar), "copy-on-write")
-      case "position-delta" => () // the default
-      case other => throw new IllegalArgumentException(
-        s"$catalogName: unknown graft.update.mode '$other' " +
-          "(copy-on-write | position-delta)")
-    }
-    // broad-statement auto-fold (r14): 'graft.delta.auto-fold-fraction'=f
-    // — a position-delta statement that covered >= f of the snapshot's
-    // files AND suppressed >= f of the covered rows triggers an immediate
-    // scoped fold (optimize scope='deltas') after its own commit
-    Option(properties.get("graft.delta.auto-fold-fraction")).map(_.trim)
-      .filter(_.nonEmpty).foreach { v =>
-        val f = try v.toDouble catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$catalogName: graft.delta.auto-fold-fraction must be a " +
-              s"fraction in (0, 1], got '$v'") }
-        require(f > 0.0 && f <= 1.0,
-          s"$catalogName: graft.delta.auto-fold-fraction must be in (0, 1], got $f")
-        GraftStagingCatalog.writeString(fs,
-          new Path(d, DeletionVectors.AutoFoldSidecar), f.toString)
-      }
-    if (rowLineage) RowLineage.writeMarker(fs, d)
-    if (partCols.nonEmpty)
-      GraftStagingCatalog.writeString(fs, new Path(d, GraftStagingCatalog.PartitionSidecar),
-        partCols.mkString("\n"))
-    if (autoCols.nonEmpty)
-      GraftStagingCatalog.writeString(fs,
-        new Path(d, GraftStagingCatalog.AutoAnalyzeSidecar), autoCols.mkString("\n"))
-    check.foreach(c => CheckConstraint.write(fs, d, c))
+    TableMeta.update(fs, d)(_ => meta)
     loadTable(ident)
+  }
+
+  // ---- declared properties: one validator per key, shared by CREATE and
+  // ALTER (each returns the value the record stores, or throws)
+
+  /** `'graft.sort-order'='c1[,c2…]'` — DECLARED APPEND SORT ORDER: every
+    * append requests an ordered distribution (range partition + sort) from
+    * Spark before its files land, so per-file [min,max] on the sort key
+    * are disjoint from the FIRST insert and zone maps prune plain ingested
+    * data with no OPTIMIZE pass (OPTIMIZE clusterBy is the maintenance
+    * half of the clustering story).
+    */
+  private def sortOrderOf(v: String, schema: StructType): Seq[String] =
+    columnsOf("graft.sort-order", "sort-order", v, schema)
+
+  /** `'graft.auto-analyze'='c1[,c2…]'` — COMMIT-TIME ZONE-MAP MAINTENANCE:
+    * every commit extends the stats sidecar with its new files
+    * (incremental footer harvest, StagingMaintenance.autoAnalyze), so
+    * pruning never waits on a manual ANALYZE.
+    */
+  private def autoAnalyzeOf(v: String, schema: StructType): Seq[String] =
+    columnsOf("graft.auto-analyze", "auto-analyze", v, schema)
+
+  private def columnsOf(key: String, what: String, v: String,
+      schema: StructType): Seq[String] = {
+    val cols = v.split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
+    require(cols.nonEmpty, s"$catalogName: $key needs column names")
+    cols.foreach(c => require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
+      s"$catalogName: $what column $c is not in the table schema"))
+    cols
+  }
+
+  /** `'graft.target-file-size'=<bytes>` — advisory append file sizing (the
+    * Delta and Iceberg target-file-size knob): AQE coalesces or splits the
+    * write's range partitions toward this size, so the file count tracks
+    * DATA VOLUME instead of freezing at the shuffle-partition count. A
+    * positive byte count; leaving the property unset means "no target".
+    */
+  private def targetFileSizeOf(v: String): Long = {
+    val bytes =
+      try v.trim.toLong
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"$catalogName: graft.target-file-size must be a byte count, got '$v'")
+      }
+    require(bytes > 0L, s"$catalogName: graft.target-file-size must be positive, got $bytes")
+    bytes
+  }
+
+  /** `'graft.update.mode'` — keyless-MOR row-level admission (r14):
+    * 'copy-on-write' routes UPDATE/MERGE/untranslatable-DELETE through the
+    * group rewrite instead of position deltas (the bulk-statement escape
+    * hatch); 'position-delta' is the default.
+    */
+  private def updateModeOf(v: String): Boolean = v.trim.toLowerCase match {
+    case "copy-on-write"  => true
+    case "position-delta" => false
+    case other => throw new IllegalArgumentException(
+      s"$catalogName: unknown graft.update.mode '$other' (copy-on-write | position-delta)")
+  }
+
+  /** `'graft.delta.auto-fold-fraction'=f` — broad-statement auto-fold
+    * (r14): a position-delta statement that covered ≥ f of the snapshot's
+    * files AND suppressed ≥ f of the covered rows triggers an immediate
+    * scoped fold (optimize scope='deltas') after its own commit.
+    */
+  private def autoFoldOf(v: String): Double = {
+    val f =
+      try v.trim.toDouble
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"$catalogName: graft.delta.auto-fold-fraction must be a " +
+            s"fraction in (0, 1], got '$v'")
+      }
+    require(f > 0.0 && f <= 1.0,
+      s"$catalogName: graft.delta.auto-fold-fraction must be in (0, 1], got $f")
+    f
+  }
+
+  /** `'check'` — the CHECK constraint, compiled against `schema` so an
+    * unknown column or a non-boolean expression fails the DDL.
+    */
+  private def checkOf(v: String, schema: StructType): String = {
+    val c = v.trim
+    CheckConstraint.compile(SparkSession.active, c, schema)
+    c
   }
 
   /** Schema evolution, the object-store way (no Iceberg field IDs, no file
     * rewrites where projection can do the job):
     *
-    *  - '''ADD COLUMN''' (nullable, top-level): the DECLARED schema (the
-    *    sidecar) widens; existing parquet files are untouched and the
+    *  - '''ADD COLUMN''' (nullable, top-level): the DECLARED schema (in the
+    *    table record) widens; existing parquet files are untouched and the
     *    reader surfaces NULL for the new column on old files (Spark's
     *    parquet reader fills missing read-schema columns with null).
-    *  - '''DROP COLUMN''': the sidecar shrinks; files are untouched —
-    *    every read projects through the declared schema, so the physical
-    *    column in old files is simply never requested. The column's
-    *    zone-map stats drop with it.
+    *  - '''DROP COLUMN''': the declared schema shrinks; files are
+    *    untouched — every read projects through the declared schema, so the
+    *    physical column in old files is simply never requested. The
+    *    column's zone-map stats drop with it.
     *  - '''RENAME COLUMN''': parquet matches columns BY NAME and this
     *    catalog deliberately has no field-ID layer (the reference's store
     *    has none), so a metadata-only rename would silently read NULLs
@@ -1295,17 +1317,28 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     * `_graft_versions/schema_upto_v<latest>.json`, so `VERSION AS OF` on
     * an old version reads with the schema OF ITS ERA — a dropped column is
     * still visible when pinning a pre-drop snapshot.
+    *
+    * Table properties are record edits: each is validated NOW and governs
+    * writes and commits from here on, minting no version. All of the
+    * statement's edits land in ONE read-modify-write of the record at the
+    * end ([[TableMeta.update]]), so a concurrent commit's provenance edit
+    * is never lost.
     */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val d = tableDir(ident)
     if (d == null || !isDir(d)) throw new NoSuchTableException(ident)
-    val sidecar = new Path(d, SchemaSidecar)
+    val meta = TableMeta.read(fs, d)
     val before: StructType =
-      if (GraftStagingCatalog.isFile(fs, sidecar))
-        DataType.fromJson(GraftStagingCatalog.readString(fs, sidecar)).asInstanceOf[StructType]
-      else SparkSession.active.read.parquet(d.toString).schema
+      meta.schema.getOrElse(SparkSession.active.read.parquet(d.toString).schema)
     var schema = before
     var renames = Seq.empty[(String, String)]
+    var edits = Seq.empty[TableMeta => TableMeta]
+    def edit(f: TableMeta => TableMeta): Unit = edits :+= f
+    def isProp(c: TableChange, key: String): Boolean = c match {
+      case sp: TableChange.SetProperty    => sp.property().equalsIgnoreCase(key)
+      case rp: TableChange.RemoveProperty => rp.property().equalsIgnoreCase(key)
+      case _                              => false
+    }
     changes.foreach {
       case add: TableChange.AddColumn =>
         if (add.fieldNames().length != 1)
@@ -1323,14 +1356,14 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         // DEFAULT: the SQL text goes into the standard metadata keys —
         // CURRENT_DEFAULT fills future INSERTs that omit the column,
         // EXISTS_DEFAULT is what pre-ADD files surface instead of NULL
-        val meta = default.fold(org.apache.spark.sql.types.Metadata.empty) { dv =>
+        val colMeta = default.fold(org.apache.spark.sql.types.Metadata.empty) { dv =>
           new org.apache.spark.sql.types.MetadataBuilder()
             .putString("CURRENT_DEFAULT", dv.getSql)
             .putString("EXISTS_DEFAULT", dv.getSql)
             .build()
         }
         schema = StructType(schema.fields :+ org.apache.spark.sql.types.StructField(
-          add.fieldNames()(0), add.dataType(), add.isNullable, meta))
+          add.fieldNames()(0), add.dataType(), add.isNullable, colMeta))
       case del: TableChange.DeleteColumn =>
         if (del.fieldNames().length != 1)
           throw new UnsupportedOperationException(
@@ -1364,7 +1397,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         // PROJECTION alone: Spark 4's vectorized parquet reader promotes
         // int32→int64, int32→double, and float→double at read time
         // (SPARK-40876), so ALTER COLUMN … TYPE BIGINT/DOUBLE is a pure
-        // sidecar edit — zero file rewrites on a 100 TB table. Anything
+        // record edit — zero file rewrites on a 100 TB table. Anything
         // that would narrow, re-interpret, or change kind is refused. Era
         // snapshots (below) keep pre-widen versions readable under the
         // narrow schema of their day.
@@ -1395,34 +1428,20 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         // (int->double) re-keys on the next ANALYZE instead
         if (field.dataType == IntegerType && up.newDataType() == DoubleType)
           StagingMaintenance.dropColumnStats(fs, d, field.name)
-      case sp: TableChange.SetProperty if sp.property().equalsIgnoreCase("check") =>
-        // SET TBLPROPERTIES('check'=…): validate against the CURRENT
-        // declared schema, then persist — future writes enforce it
-        CheckConstraint.compile(SparkSession.active, sp.value(), schema)
-        CheckConstraint.write(fs, d, sp.value())
-      case rp: TableChange.RemoveProperty if rp.property().equalsIgnoreCase("check") =>
-        CheckConstraint.remove(fs, d)
-      // MAINTENANCE KNOBS become ALTER-able (r11 — they were CREATE-only,
-      // which forced a drop-recreate to tune a live table): each is a pure
-      // sidecar edit validated NOW, governing writes/commits from here on.
-      case sp: TableChange.SetProperty
-          if sp.property().equalsIgnoreCase("graft.auto-analyze") =>
-        val cols = sp.value().split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
-        require(cols.nonEmpty, s"$catalogName: graft.auto-analyze needs column names")
-        cols.foreach(c => require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-          s"$catalogName: auto-analyze column $c is not in the table schema"))
-        GraftStagingCatalog.writeString(fs,
-          new Path(d, GraftStagingCatalog.AutoAnalyzeSidecar), cols.mkString("\n"))
-      case rp: TableChange.RemoveProperty
-          if rp.property().equalsIgnoreCase("graft.auto-analyze") =>
-        fs.delete(new Path(d, GraftStagingCatalog.AutoAnalyzeSidecar), false)
-        ()
-      case sp: TableChange.SetProperty
-          if sp.property().equalsIgnoreCase("graft.sort-order") =>
-        val cols = sp.value().split(",").toIndexedSeq.map(_.trim).filter(_.nonEmpty)
-        require(cols.nonEmpty, s"$catalogName: graft.sort-order needs column names")
-        cols.foreach(c => require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-          s"$catalogName: sort-order column $c is not in the table schema"))
+      // PROPERTIES (the maintenance knobs became ALTER-able in r11 — they
+      // were CREATE-only, which forced a drop-recreate to tune a live
+      // table): SET validates against the CURRENT declared schema; UNSET
+      // returns the knob to its default
+      case sp: TableChange.SetProperty if isProp(sp, "check") =>
+        val c = checkOf(sp.value(), schema)
+        edit(_.copy(check = Some(c)))
+      case c if isProp(c, "check") => edit(_.copy(check = None))
+      case sp: TableChange.SetProperty if isProp(sp, "graft.auto-analyze") =>
+        val cols = autoAnalyzeOf(sp.value(), schema)
+        edit(_.copy(autoAnalyze = cols))
+      case c if isProp(c, "graft.auto-analyze") => edit(_.copy(autoAnalyze = Nil))
+      case sp: TableChange.SetProperty if isProp(sp, "graft.sort-order") =>
+        val cols = sortOrderOf(sp.value(), schema)
         // PROVENANCE (r14, advice r13): files laid out BEFORE this
         // declaration (or under a different one) were never write-path
         // sorted on `cols` — record every file name any still-readable
@@ -1430,64 +1449,29 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         // resurrect any of them) could hand a future snapshot, plus the
         // version the declaration takes effect at. The ordering report
         // withdraws while any such file is in the scanned snapshot.
-        val priorFiles: Set[String] =
-          GraftStagingCatalog.reachableFiles(fs, d)
-        val since = GraftStagingCatalog.headManifest(fs, d)
-          .map(_._1).getOrElse(0L) + 1L
-        GraftStagingCatalog.writeSortOrderSidecar(fs, d, cols,
-          if (priorFiles.isEmpty) None else Some((since, priorFiles)))
-      case rp: TableChange.RemoveProperty
-          if rp.property().equalsIgnoreCase("graft.sort-order") =>
-        fs.delete(new Path(d, GraftStagingCatalog.SortOrderSidecar), false)
-        ()
-      case sp: TableChange.SetProperty
-          if sp.property().equalsIgnoreCase("graft.target-file-size") =>
-        val bytes =
-          try sp.value().trim.toLong
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"$catalogName: graft.target-file-size must be a byte count, " +
-                s"got '${sp.value()}'")
-          }
-        require(bytes > 0L, s"$catalogName: graft.target-file-size must be positive")
-        GraftStagingCatalog.writeString(fs,
-          new Path(d, GraftStagingCatalog.FileSizeSidecar), bytes.toString)
-      case rp: TableChange.RemoveProperty
-          if rp.property().equalsIgnoreCase("graft.target-file-size") =>
-        fs.delete(new Path(d, GraftStagingCatalog.FileSizeSidecar), false)
-        ()
-      case sp: TableChange.SetProperty
-          if sp.property().equalsIgnoreCase("graft.update.mode") =>
-        sp.value().trim.toLowerCase match {
-          case "copy-on-write" =>
-            GraftStagingCatalog.writeString(fs,
-              new Path(d, DeletionVectors.UpdateModeSidecar), "copy-on-write")
-          case "position-delta" =>
-            fs.delete(new Path(d, DeletionVectors.UpdateModeSidecar), false)
-            ()
-          case other => throw new IllegalArgumentException(
-            s"$catalogName: unknown graft.update.mode '$other' " +
-              "(copy-on-write | position-delta)")
+        // Files already in the marker stay in it (over-marking is only
+        // conservative), so a delta commit racing this ALTER keeps its mark.
+        val priorFiles: Set[String] = GraftStagingCatalog.reachableFiles(fs, d)
+        val since = GraftStagingCatalog.headManifest(fs, d).map(_._1).getOrElse(0L) + 1L
+        edit { m =>
+          val unproven = priorFiles ++ m.sortUnproven.fold(Set.empty[String])(_._2)
+          m.copy(sortOrder = cols,
+            sortUnproven = if (unproven.isEmpty) None else Some((since, unproven)))
         }
-      case rp: TableChange.RemoveProperty
-          if rp.property().equalsIgnoreCase("graft.update.mode") =>
-        fs.delete(new Path(d, DeletionVectors.UpdateModeSidecar), false)
-        ()
-      case sp: TableChange.SetProperty
-          if sp.property().equalsIgnoreCase("graft.delta.auto-fold-fraction") =>
-        val f = try sp.value().trim.toDouble
-          catch { case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"$catalogName: graft.delta.auto-fold-fraction must be a " +
-                s"fraction in (0, 1], got '${sp.value()}'") }
-        require(f > 0.0 && f <= 1.0,
-          s"$catalogName: graft.delta.auto-fold-fraction must be in (0, 1], got $f")
-        GraftStagingCatalog.writeString(fs,
-          new Path(d, DeletionVectors.AutoFoldSidecar), f.toString)
-      case rp: TableChange.RemoveProperty
-          if rp.property().equalsIgnoreCase("graft.delta.auto-fold-fraction") =>
-        fs.delete(new Path(d, DeletionVectors.AutoFoldSidecar), false)
-        ()
+      case c if isProp(c, "graft.sort-order") =>
+        edit(_.copy(sortOrder = Nil, sortUnproven = None))
+      case sp: TableChange.SetProperty if isProp(sp, "graft.target-file-size") =>
+        val bytes = targetFileSizeOf(sp.value())
+        edit(_.copy(targetFileBytes = bytes))
+      case c if isProp(c, "graft.target-file-size") => edit(_.copy(targetFileBytes = 0L))
+      case sp: TableChange.SetProperty if isProp(sp, "graft.update.mode") =>
+        val cow = updateModeOf(sp.value())
+        edit(_.copy(updateCopyOnWrite = cow))
+      case c if isProp(c, "graft.update.mode") => edit(_.copy(updateCopyOnWrite = false))
+      case sp: TableChange.SetProperty if isProp(sp, "graft.delta.auto-fold-fraction") =>
+        val f = autoFoldOf(sp.value())
+        edit(_.copy(autoFold = Some(f)))
+      case c if isProp(c, "graft.delta.auto-fold-fraction") => edit(_.copy(autoFold = None))
       case other =>
         throw new UnsupportedOperationException(
           s"$catalogName: unsupported ALTER TABLE change $other " +
@@ -1496,10 +1480,11 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
             "'graft.target-file-size' / 'graft.update.mode' / " +
             "'graft.delta.auto-fold-fraction')")
     }
+    val edited = edits.foldLeft(meta)((m, f) => f(m))
     // a schema change must not strand the CHECK constraint: re-validate it
     // against the post-change schema (dropping a checked column fails HERE,
     // not at the next insert)
-    if (schema != before) CheckConstraint.read(fs, d).foreach { c =>
+    if (schema != before) edited.check.foreach { c =>
       try CheckConstraint.compile(SparkSession.active, c, schema)
       catch { case e: Exception =>
         throw new IllegalArgumentException(
@@ -1507,22 +1492,18 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
             "UNSET TBLPROPERTIES ('check') first", e)
       }
     }
-    // a DROP/RENAME must not strand the maintenance sidecars: columns no
-    // longer in the schema fall out (a renamed column re-opts-in under its
-    // new name via SET TBLPROPERTIES)
-    if (schema != before) {
-      def pruneCols(sidecar: String, cols: Seq[String]): Unit = {
-        val live = cols.filter(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))
-        if (live != cols) {
-          val p = new Path(d, sidecar)
-          if (live.isEmpty) { fs.delete(p, false); () }
-          else GraftStagingCatalog.writeString(fs, p, live.mkString("\n"))
-        }
-      }
-      pruneCols(GraftStagingCatalog.AutoAnalyzeSidecar,
-        GraftStagingCatalog.autoAnalyzeCols(fs, d))
-      pruneCols(GraftStagingCatalog.SortOrderSidecar,
-        GraftStagingCatalog.sortOrderCols(fs, d))
+    // the MERGE KEY must survive the alter: renaming it re-points the MOR
+    // declaration (the rename rewrite folds active DVs, so old-name DVs die
+    // with it); dropping it is refused
+    val mor = meta.mor match {
+      case DeletionVectors.MorMode.Key(k) =>
+        val effective = renames.find(_._1.equalsIgnoreCase(k)).map(_._2).getOrElse(k)
+        if (!schema.fieldNames.exists(_.equalsIgnoreCase(effective)))
+          throw new IllegalArgumentException(
+            s"$catalogName: cannot drop merge-key column $k of merge-on-read " +
+              s"table ${ident.name()}")
+        DeletionVectors.MorMode.Key(effective)
+      case other => other
     }
     // era snapshot: the OLD schema governs every version committed so far
     GraftStagingCatalog.headManifest(fs, d).foreach { case (latest, _) =>
@@ -1536,30 +1517,20 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       if (!GraftStagingCatalog.isFile(fs, snap))
         GraftStagingCatalog.writeString(fs, snap, before.json)
     }
-    // the MERGE KEY must survive the alter: renaming it re-points the MOR
-    // sidecar (the rename rewrite folds active DVs, so old-name DVs die
-    // with it); dropping it is refused
-    val mergeKey = DeletionVectors.mode(fs, d) match {
-      case DeletionVectors.MorMode.Key(k) => Some(k)
-      case _                              => None
-    }
-    mergeKey.foreach { k =>
-      val effective = renames.find(_._1.equalsIgnoreCase(k)).map(_._2).getOrElse(k)
-      if (!schema.fieldNames.exists(_.equalsIgnoreCase(effective)))
-        throw new IllegalArgumentException(
-          s"$catalogName: cannot drop merge-key column $k of merge-on-read " +
-            s"table ${ident.name()}")
-    }
     // renames rewrite the data under the new name (versioned, optimistic)
-    if (renames.nonEmpty) {
-      GraftStagingCatalog.rewriteRenamed(fs, d, renames, before)
-      mergeKey.foreach { k =>
-        renames.find(_._1.equalsIgnoreCase(k)).foreach { case (_, to) =>
-          DeletionVectors.writeMorKey(fs, d, to)
-        }
-      }
+    if (renames.nonEmpty) GraftStagingCatalog.rewriteRenamed(fs, d, meta, renames, before)
+    // a DROP/RENAME must not strand the column-list declarations: columns
+    // no longer in the schema fall out (a renamed column re-opts-in under
+    // its new name via SET TBLPROPERTIES); a sort order pruned to nothing
+    // takes its provenance marker with it
+    def live(cols: Seq[String]): Seq[String] =
+      cols.filter(c => schema.fieldNames.exists(_.equalsIgnoreCase(c)))
+    TableMeta.update(fs, d) { cur =>
+      val m = edits.foldLeft(cur)((acc, f) => f(acc))
+      val so = live(m.sortOrder)
+      m.copy(schema = Some(schema), mor = mor, autoAnalyze = live(m.autoAnalyze),
+        sortOrder = so, sortUnproven = if (so.isEmpty) None else m.sortUnproven)
     }
-    GraftStagingCatalog.writeString(fs, sidecar, schema.json)
     loadTable(ident)
   }
 
@@ -1774,6 +1745,7 @@ private class StagingRowLevelOperation(
     writeDelegate: ParquetTable,
     tableFs: FileSystem,
     dir: Path,
+    meta: TableMeta,
     snapshotVersion: Long,
     snapshotFiles: Option[Seq[String]],
     dvNames: Seq[String],
@@ -1869,8 +1841,7 @@ private class StagingRowLevelOperation(
         }
       override def build(): org.apache.spark.sql.connector.read.Scan = {
         val scan = sb.build()
-        val stats = StagingMaintenance.readStatsFor(tableFs, dir)
-        val nulls = StagingMaintenance.readNullsFor(tableFs, dir)
+        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
         scan match {
           case fscan: org.apache.spark.sql.execution.datasources.v2.FileScan =>
             // always wrap: with no stats or no filters nothing prunes, but
@@ -1880,7 +1851,7 @@ private class StagingRowLevelOperation(
             // filter attributes would break the optimizer rule.
             val statCols = stats.keysIterator.map(_._2).toArray.distinct.sorted
             val blooms = () => StagingMaintenance.readBloomsFor(tableFs, dir)
-            val specs = GraftStagingCatalog.partSpecsAll(tableFs, dir)
+            val specs = meta.partSpecsAll
             val li = lineageInfo(scan)
             val zms =
               if (statCols.nonEmpty)
@@ -1909,10 +1880,9 @@ private class StagingRowLevelOperation(
       override def build(): Write = new Write
           with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
         import org.apache.spark.sql.connector.{distributions, expressions => v2x}
-        private val sortCols = GraftStagingCatalog.sortOrderCols(tableFs, dir)
         override def requiredDistribution(): distributions.Distribution =
           distributions.Distributions.unspecified()
-        override def requiredOrdering(): Array[v2x.SortOrder] = sortCols.map(c =>
+        override def requiredOrdering(): Array[v2x.SortOrder] = meta.sortOrder.map(c =>
           v2x.Expressions.sort(v2x.Expressions.column(c),
             v2x.SortDirection.ASCENDING)).toArray
         override def toBatch: BatchWrite = new BatchWrite {
@@ -1942,7 +1912,7 @@ private class StagingRowLevelOperation(
           // the CHECK constraint also governs replacement rows: an UPDATE
           // cannot move a row INTO violation (evaluated after the trailing
           // projection, i.e. on exactly the declared write schema)
-          private val check = CheckConstraint.read(tableFs, dir).map(c =>
+          private val check = meta.check.map(c =>
             (c, CheckConstraint.compile(SparkSession.active, c, lwi.schema())))
           // ReplaceData's query emits leading bookkeeping columns
           // (`__row_operation`) ahead of the data columns, and the plain
@@ -1985,7 +1955,7 @@ private class StagingRowLevelOperation(
                   (TableClone.isForeign(f) && read(new Path(f).getName)))
               case _                        => Seq.empty[String]
             }
-            GraftStagingCatalog.writeExplicitManifest(tableFs, dir, carried ++ fresh,
+            GraftStagingCatalog.writeExplicitManifest(tableFs, dir, meta, carried ++ fresh,
               kind = info.command().toString.toLowerCase,
               expectedBase = Some(snapshotVersion),
               // keyless-MOR: carried (unrewritten) files still read under
@@ -2045,6 +2015,7 @@ private class StagingDeltaOperation(
     writeDelegate: ParquetTable,
     tableFs: FileSystem,
     dir: Path,
+    meta: TableMeta,
     snapshotVersion: Long,
     snapshotFiles: Option[Seq[String]],
     keyField: org.apache.spark.sql.types.StructField,
@@ -2145,8 +2116,7 @@ private class StagingDeltaOperation(
         }
       override def build(): org.apache.spark.sql.connector.read.Scan = {
         val scan = sb.build()
-        val stats = StagingMaintenance.readStatsFor(tableFs, dir)
-        val nulls = StagingMaintenance.readNullsFor(tableFs, dir)
+        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
         scan match {
           case fscan: org.apache.spark.sql.execution.datasources.v2.FileScan =>
             // without lineage the row-level scan reads the FULL table
@@ -2171,7 +2141,7 @@ private class StagingDeltaOperation(
               }
             val statCols = stats.keysIterator.map(_._2).toArray.distinct.sorted
             val blooms = () => StagingMaintenance.readBloomsFor(tableFs, dir)
-            val specs = GraftStagingCatalog.partSpecsAll(tableFs, dir)
+            val specs = meta.partSpecsAll
             val li = lineageInfo(scan)
             val zms =
               if (statCols.nonEmpty)
@@ -2223,7 +2193,7 @@ private class StagingDeltaOperation(
               private lazy val inner = writeDelegate.newWriteBuilder(innerInfo).build().toBatch
               private val check =
                 if (deleteOnly) None
-                else CheckConstraint.read(tableFs, dir).map(c =>
+                else meta.check.map(c =>
                   (c, CheckConstraint.compile(SparkSession.active, c, lwi.schema())))
               private val keyIsString =
                 keyField.dataType == org.apache.spark.sql.types.StringType
@@ -2319,7 +2289,7 @@ private class StagingDeltaOperation(
                 // planner-sorted — register them with the sort-order
                 // provenance marker (r14 readmission)
                 GraftStagingCatalog.markUnsorted(tableFs, dir, fresh)
-                GraftStagingCatalog.writeExplicitManifest(tableFs, dir, snap ++ fresh,
+                GraftStagingCatalog.writeExplicitManifest(tableFs, dir, meta, snap ++ fresh,
                   kind = info.command().toString.toLowerCase,
                   expectedBase = Some(snapshotVersion), dvs = dvs, branch = branch,
                   // lineage: carried files keep their id bases verbatim
@@ -2334,7 +2304,7 @@ private class StagingDeltaOperation(
                 // (under-counting) otherwise.
                 ZoneMapScan.lastDeltaAutoFold = None
                 if (branch.isEmpty && (deleted.nonEmpty || bins.nonEmpty))
-                  DeletionVectors.autoFoldFraction(tableFs, dir).foreach { frac =>
+                  meta.autoFold.foreach { frac =>
                     try {
                       val applies2 = snap.filter(f => scanned(f) ||
                         (TableClone.isForeign(f) && scanned(new Path(f).getName)))
@@ -2347,8 +2317,10 @@ private class StagingDeltaOperation(
                             SparkSession.active.sessionState.newHadoopConf()),
                           dir, applies2.toSeq)
                         if (rowsCovered > 0L && suppressed >= frac * rowsCovered) {
+                          // a fresh record: this commit's provenance
+                          // edit must reach the fold's twins
                           val (_, _, v) = StagingMaintenance.foldDeltasAt(
-                            SparkSession.active, tableFs, dir)
+                            SparkSession.active, tableFs, dir, TableMeta.read(tableFs, dir))
                           ZoneMapScan.lastDeltaAutoFold = Some(v)
                         }
                       }
@@ -2486,6 +2458,7 @@ private class StagingPosDeltaOperation(
     writeDelegate: ParquetTable,
     tableFs: FileSystem,
     dir: Path,
+    meta: TableMeta,
     snapshotVersion: Long,
     snapshotFiles: Option[Seq[String]],
     priorDvNames: Seq[String],
@@ -2531,13 +2504,12 @@ private class StagingPosDeltaOperation(
         sch => StructType(sch.fields ++ carriers)))
     scanSrc.newScanBuilder(options) match {
       case fb: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =>
-        new ZoneMapScanBuilder(fb,
-          StagingMaintenance.readStatsFor(tableFs, dir),
-          StagingMaintenance.readNullsFor(tableFs, dir),
+        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+        new ZoneMapScanBuilder(fb, stats, nulls,
           dir.toString,
           () => StagingMaintenance.readBloomsFor(tableFs, dir),
           Map.empty, None,
-          GraftStagingCatalog.partSpecsAll(tableFs, dir),
+          meta.partSpecsAll,
           Map.empty,
           priorPos,
           posIdxCapable = false,
@@ -2573,7 +2545,7 @@ private class StagingPosDeltaOperation(
               private lazy val inner = writeDelegate.newWriteBuilder(innerInfo).build().toBatch
               private val check =
                 if (deleteOnly) None
-                else CheckConstraint.read(tableFs, dir).map(c =>
+                else meta.check.map(c =>
                   (c, CheckConstraint.compile(SparkSession.active, c, lwi.schema())))
               // the id row's (file, pos) ordinals, resolved from the
               // declared rowId schema — never assumed positional
@@ -2638,12 +2610,12 @@ private class StagingPosDeltaOperation(
                       bins.iterator.map(_._3).sum)
                   }
                 GraftStagingCatalog.markUnsorted(tableFs, dir, fresh) // r14 readmission
-                GraftStagingCatalog.writeExplicitManifest(tableFs, dir, snap ++ fresh,
+                GraftStagingCatalog.writeExplicitManifest(tableFs, dir, meta, snap ++ fresh,
                   kind = info.command().toString.toLowerCase,
                   expectedBase = Some(snapshotVersion), dvs = dvs, branch = branch,
                   matFiles = if (lineageMeta) fresh.toSet else Set.empty)
                 // BROAD-STATEMENT AUTO-FOLD (r14 — see
-                // DeletionVectors.AutoFoldSidecar): with exact
+                // TableMeta.autoFold): with exact
                 // post-statement information (per-file suppressed counts
                 // from the writers' own bins), a statement that covered
                 // most of the snapshot AND killed most of what it covered
@@ -2658,7 +2630,7 @@ private class StagingPosDeltaOperation(
                 // layout maintenance.
                 ZoneMapScan.lastDeltaAutoFold = None
                 if (branch.isEmpty && bins.nonEmpty)
-                  DeletionVectors.autoFoldFraction(tableFs, dir).foreach { frac =>
+                  meta.autoFold.foreach { frac =>
                     try {
                       val coveredN = bins.iterator.map(_._1).toSet
                       if (snap.nonEmpty && coveredN.size >= frac * snap.size) {
@@ -2675,8 +2647,10 @@ private class StagingPosDeltaOperation(
                         val rowsCovered = GraftStagingCatalog.rowCountOf(
                           SparkSession.active, hconf, dir, resolved)
                         if (rowsCovered > 0L && suppressed >= frac * rowsCovered) {
+                          // a fresh record: this commit's provenance
+                          // edit must reach the fold's twins
                           val (_, _, v) = StagingMaintenance.foldDeltasAt(
-                            SparkSession.active, tableFs, dir)
+                            SparkSession.active, tableFs, dir, TableMeta.read(tableFs, dir))
                           ZoneMapScan.lastDeltaAutoFold = Some(v)
                         }
                       }
@@ -2790,20 +2764,6 @@ private class StagingPosDeltaWriterFactory(
   * over object storage — never `java.io.File`.
   */
 object GraftStagingCatalog {
-  private[catalog] val SchemaSidecar = "_graft_schema.json"
-  private[catalog] val PartitionSidecar = "_graft_partition.txt"
-  private[catalog] val PartitionPrevSidecar = "_graft_partition_prev.txt"
-  private[catalog] val AutoAnalyzeSidecar = "_graft_autoanalyze.txt"
-
-  /** Columns declared for commit-time zone-map maintenance
-    * (`'graft.auto-analyze'` — see [[StagingMaintenance.autoAnalyze]]).
-    */
-  private[catalog] def autoAnalyzeCols(fs: FileSystem, d: Path): Seq[String] = {
-    val p = new Path(d, AutoAnalyzeSidecar)
-    if (isFile(fs, p)) readString(fs, p).split('\n').toIndexedSeq.filter(_.nonEmpty)
-    else Seq.empty
-  }
-
   /** Schemas of the metadata table faces (`t.files` / `.partitions` /
     * `.snapshots`).
     */
@@ -2826,54 +2786,8 @@ object GraftStagingCatalog {
     def contains(name: String): Boolean = schemas.contains(name)
     def schemaOf(name: String): StructType = schemas(name)
   }
-  private[catalog] val SortOrderSidecar = "_graft_sortorder.txt"
   private[catalog] val VersionsDir = "_graft_versions"
   private val VersionFile = "^v(\\d+)\\.json$".r
-
-  /** Declared append sort order (empty = none): the column list every
-    * append is range-partitioned and sorted on before its files land —
-    * see `'graft.sort-order'` in [[GraftStagingCatalog.createTable]].
-    *
-    * Sidecar format: one column per line; an optional `#unsorted@<v>`
-    * marker line (r14, see [[sortOrderUnproven]]) followed by file names
-    * terminates the column list — a sort order declared by ALTER on a
-    * NON-EMPTY table records there which live files PREDATE the
-    * declaration (and from which version the declaration holds), so the
-    * scan's `SupportsReportOrdering` report can be gated on provenance
-    * instead of trusting the live property retroactively (advice r13: a
-    * bucketed SMJ that skipped its Sorts over pre-declaration files
-    * silently mis-joined).
-    */
-  private[catalog] def sortOrderCols(fs: FileSystem, d: Path): Seq[String] = {
-    val p = new Path(d, SortOrderSidecar)
-    if (isFile(fs, p))
-      readString(fs, p).split('\n').toIndexedSeq
-        .takeWhile(!_.startsWith("#")).filter(_.nonEmpty)
-    else Seq.empty
-  }
-
-  /** Sort-order provenance marker (r14): `Some((since, files))` when the
-    * declared order was SET by ALTER on a non-empty table — `since` is the
-    * first version committed under the declaration, `files` the names
-    * (across every then-readable version and branch head, so RESTORE
-    * cannot resurrect an unlisted pre-declaration file) whose layout the
-    * declaration never governed. A snapshot reports ordering only when its
-    * version is ≥ `since` AND it holds none of the listed files; the
-    * marker shrinks as OPTIMIZE/VACUUM retire the listed files and their
-    * manifests ([[StagingMaintenance.pruneSortOrderUnproven]]).
-    */
-  private[catalog] def sortOrderUnproven(fs: FileSystem, d: Path)
-      : Option[(Long, Set[String])] = {
-    val p = new Path(d, SortOrderSidecar)
-    if (!isFile(fs, p)) None
-    else {
-      val lines = readString(fs, p).split('\n').toIndexedSeq
-      val i = lines.indexWhere(_.startsWith("#unsorted@"))
-      if (i < 0) None
-      else Some((lines(i).stripPrefix("#unsorted@").trim.toLong,
-        lines.drop(i + 1).filter(_.nonEmpty).toSet))
-    }
-  }
 
   /** Every file name any still-readable version could hand a snapshot:
     * the union across main-log manifests and every branch log's (what
@@ -2910,14 +2824,6 @@ object GraftStagingCatalog {
         val k = manifestKind(fs, mf); k == "update" || k == "merge"
       }
 
-  /** Writes the sort-order sidecar with an optional provenance marker. */
-  private[catalog] def writeSortOrderSidecar(fs: FileSystem, d: Path,
-      cols: Seq[String], unproven: Option[(Long, Set[String])]): Unit =
-    writeString(fs, new Path(d, SortOrderSidecar),
-      (cols ++ unproven.toSeq.flatMap { case (since, files) =>
-        s"#unsorted@$since" +: files.toSeq.sorted
-      }).mkString("\n"))
-
   /** Registers delta-written files as sort-order-UNPROVEN (r14 — the
     * "sort-order readmission" candidate): a merge-on-read table's
     * replacement/upsert files are writer-shaped, not planner-sorted, so
@@ -2930,19 +2836,16 @@ object GraftStagingCatalog {
     * BEFORE the manifest commits (a crash in between over-marks, which is
     * merely conservative). `since = 0` keeps the version gate neutral.
     */
-  private[catalog] def markUnsorted(fs: FileSystem, d: Path,
-      files: Seq[String]): Unit = synchronized {
+  private[catalog] def markUnsorted(fs: FileSystem, d: Path, files: Seq[String]): Unit =
     if (files.nonEmpty) {
-      val cols = sortOrderCols(fs, d)
-      if (cols.nonEmpty) {
-        val cur = sortOrderUnproven(fs, d)
-        writeSortOrderSidecar(fs, d, cols, Some((cur.map(_._1).getOrElse(0L),
-          cur.map(_._2).getOrElse(Set.empty) ++ files)))
+      TableMeta.update(fs, d) { m =>
+        if (m.sortOrder.isEmpty) m
+        else m.copy(sortUnproven = Some((m.sortUnproven.map(_._1).getOrElse(0L),
+          m.sortUnproven.map(_._2).getOrElse(Set.empty[String]) ++ files)))
       }
+      ()
     }
-  }
 
-  private[catalog] val FileSizeSidecar = "_graft_filesize.txt"
   private[catalog] val TagsSidecar = "_graft_tags.tsv"
 
   /** Named version TAGS (`name → version`) — the reproducible-training
@@ -2967,37 +2870,6 @@ object GraftStagingCatalog {
       else writeString(fs, p,
         tags.toSeq.sortBy(_._1).map { case (n, v) => s"$n\t$v" }.mkString("\n"))
     }
-
-  /** Declared target file size in bytes (0 = none): advisory — AQE sizes
-    * the append's range partitions toward it, so file count tracks data
-    * volume instead of the static shuffle-partition count.
-    */
-  private[catalog] def targetFileSize(fs: FileSystem, d: Path): Long = {
-    val p = new Path(d, FileSizeSidecar)
-    if (isFile(fs, p)) readString(fs, p).trim.toLong else 0L
-  }
-
-  /** Declared partition transform lines (empty = unpartitioned): a bare
-    * column name (identity), `days(c)`, or `bucket(n,c)`.
-    */
-  private[catalog] def partitionCols(fs: FileSystem, d: Path): Seq[String] = {
-    val p = new Path(d, PartitionSidecar)
-    if (isFile(fs, p)) readString(fs, p).split('\n').toIndexedSeq.filter(_.nonEmpty)
-    else Seq.empty
-  }
-
-  /** RETIRED partition transform lines (partition-spec evolution,
-    * [[StagingMaintenance.setPartitionSpec]]): specs the table was laid
-    * out under BEFORE its current declaration. Old-layout files stay in
-    * their old directories — the per-file path pruner matches whichever
-    * spec family a file's path carries, so historical specs keep pruning
-    * the old family while the current spec prunes (and lays out) new work.
-    */
-  private[catalog] def retiredPartitionCols(fs: FileSystem, d: Path): Seq[String] = {
-    val p = new Path(d, PartitionPrevSidecar)
-    if (isFile(fs, p)) readString(fs, p).split('\n').toIndexedSeq.filter(_.nonEmpty)
-    else Seq.empty
-  }
 
   /** One declared partition transform. `dirPrefix` is the `name=` directory
     * component OPTIMIZE's layout writes and the path-based pruner matches;
@@ -3034,21 +2906,6 @@ object GraftStagingCatalog {
     case BucketRe(n, c) => BucketPart(n.toInt, c.trim)
     case c              => IdentityPart(c)
   }
-
-  private[catalog] def partSpecs(fs: FileSystem, d: Path): Seq[PartSpec] =
-    partitionCols(fs, d).map(parsePartSpec)
-
-  /** CURRENT ++ RETIRED specs — the set the PRUNING paths consult. Sound
-    * per file: [[StagingMaintenance.partValueOf]] applies a spec only to
-    * files whose path matches ITS layout prefix, and when two DISTINCT
-    * specs share a prefix (a bucket-count re-spec) the pruning predicates
-    * drop both from consideration (`unambiguousSpecs` in
-    * [[StagingMaintenance]]) — attribution would otherwise judge an old
-    * bucket(4) file by the current bucket(8) residue and lose rows.
-    * Current-first, deduped.
-    */
-  private[catalog] def partSpecsAll(fs: FileSystem, d: Path): Seq[PartSpec] =
-    (partitionCols(fs, d) ++ retiredPartitionCols(fs, d)).distinct.map(parsePartSpec)
 
   private[catalog] def isFile(fs: FileSystem, p: Path): Boolean =
     try fs.getFileStatus(p).isFile catch { case _: FileNotFoundException => false }
@@ -3104,28 +2961,22 @@ object GraftStagingCatalog {
       case e: IOException if isFile(fs, p) => false // FS reported the race as a plain IOE
     }
 
-  private[catalog] def declaredSchema(fs: FileSystem, d: Path): Option[StructType] = {
-    val sidecar = new Path(d, SchemaSidecar)
-    if (isFile(fs, sidecar))
-      Some(DataType.fromJson(readString(fs, sidecar)).asInstanceOf[StructType])
-    else None
-  }
-
   private val SchemaEra = "^schema_upto_v(\\d+)\\.json$".r
 
   /** Schema governing reads of version `v`: every ALTER snapshots the
     * pre-alter schema as `schema_upto_v<latest>.json`, so time travel reads
     * a version with the declared schema OF ITS ERA (a post-drop pin still
     * shows the dropped column; a pre-add pin doesn't show the added one).
-    * The smallest `upto ≥ v` wins; no snapshot → the current sidecar.
+    * The smallest `upto ≥ v` wins; no snapshot → the current declared schema.
     */
   private[catalog] val EraDir = "eras"
 
-  private[catalog] def schemaAtVersion(fs: FileSystem, d: Path, v: Long): Option[StructType] = {
+  private[catalog] def schemaAtVersion(fs: FileSystem, d: Path, v: Long,
+      meta: => TableMeta): Option[StructType] = {
     // era snapshots live under eras/ since r10, but tables ALTERed before
     // that wrote them directly under the versions dir — list BOTH homes, or
     // a pinned read of a pre-upgrade table would silently resolve to the
-    // current sidecar schema instead of its era's
+    // current declared schema instead of its era's
     def listEras(p: Path): Seq[(Long, Path)] =
       (try fs.listStatus(p).toIndexedSeq
        catch { case _: FileNotFoundException => Seq.empty })
@@ -3139,7 +2990,7 @@ object GraftStagingCatalog {
     val eras = (listEras(new Path(vd, EraDir)) ++ listEras(vd)).sortBy(_._1)
     eras.headOption
       .map { case (_, p) => DataType.fromJson(readString(fs, p)).asInstanceOf[StructType] }
-      .orElse(declaredSchema(fs, d))
+      .orElse(meta.schema)
   }
 
   /** RENAME COLUMN's copy-on-write rewrite: read the current file set with
@@ -3147,7 +2998,7 @@ object GraftStagingCatalog {
     * against the base the rewrite scanned (optimistic). No-op on an empty
     * uncommitted table.
     */
-  private[catalog] def rewriteRenamed(fs: FileSystem, d: Path,
+  private[catalog] def rewriteRenamed(fs: FileSystem, d: Path, meta: TableMeta,
       renames: Seq[(String, String)], oldSchema: StructType): Unit = {
     val spark = SparkSession.active
     val latest = headManifest(fs, d)
@@ -3160,14 +3011,15 @@ object GraftStagingCatalog {
       else {
         // rename rewrites EVERY current file: fold active deletion vectors
         // (suppressed rows must not resurrect under the new column names)
-        var df = DeletionVectors.Deletes.of(fs, d, head.toSeq.flatMap(parseArray(_, "dvs")))
+        var df = DeletionVectors.Deletes.load(fs, d, meta.mor,
+            head.toSeq.flatMap(parseArray(_, "dvs")))
           .applyTo(spark.read.schema(oldSchema)
             .parquet(current.map(f => new Path(d, f).toString): _*))
         renames.foreach { case (from, to) => df = df.withColumnRenamed(from, to) }
         // sort-order preservation (r13) — rename rewrites every file; keep
         // each output file sorted on the (possibly just-renamed) order
         locally {
-          val so = sortOrderCols(fs, d)
+          val so = meta.sortOrder
             .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
           if (so.nonEmpty)
             df = df.sortWithinPartitions(
@@ -3178,7 +3030,7 @@ object GraftStagingCatalog {
           StagedRewrite.publish(fs, d, tmp)((part, _) => s"ren-$token-$part")
         }
       }
-    writeExplicitManifest(fs, d, kept, kind = "rename", expectedBase = Some(base))
+    writeExplicitManifest(fs, d, meta, kept, kind = "rename", expectedBase = Some(base))
   }
 
   private[catalog] def versionManifests(fs: FileSystem, d: Path): Seq[(Long, Path)] = {
@@ -3240,13 +3092,6 @@ object GraftStagingCatalog {
       d: Path): Long = Option(m.get(d.toString)).map(_.longValue).getOrElse(0L)
 
   private[catalog] val CkptPointer = "_last_ckpt"
-  private[catalog] val CkptIntervalSidecar = "_graft_ckpt_interval.txt"
-  private[catalog] val DefaultCkptInterval = 10L
-
-  private[catalog] def ckptInterval(fs: FileSystem, d: Path): Long = {
-    val p = new Path(d, CkptIntervalSidecar)
-    if (isFile(fs, p)) readString(fs, p).trim.toLong else DefaultCkptInterval
-  }
 
   private[catalog] def manifestPath(d: Path, v: Long): Path =
     new Path(new Path(d, VersionsDir), s"v$v.json")
@@ -3364,9 +3209,9 @@ object GraftStagingCatalog {
     * snapshot is itself assembled through the PREVIOUS checkpoint, so the
     * walk is bounded by the interval, not the history.
     */
-  private[catalog] def maybeCheckpoint(fs: FileSystem, d: Path, v: Long,
+  private[catalog] def maybeCheckpoint(fs: FileSystem, d: Path, meta: TableMeta, v: Long,
       files: Seq[String], dvs: Seq[String]): Unit =
-    if (v % ckptInterval(fs, d) == 0L)
+    if (v % meta.checkpointEvery == 0L)
       writeCheckpoint(fs, d, v, files, dvs, committedBatchIds(fs, d),
         assembleHistory(fs, d))
 
@@ -3607,7 +3452,8 @@ object GraftStagingCatalog {
     * retries as the next version — no append is ever lost and none
     * conflicts.
     */
-  private[catalog] def writeCommitManifest(fs: FileSystem, d: Path, before: Set[String],
+  private[catalog] def writeCommitManifest(fs: FileSystem, d: Path, meta: TableMeta,
+      before: Set[String],
       batchId: Option[Long] = None, branch: Option[String] = None): Unit =
     synchronized {
       val vd = branch.fold(new Path(d, VersionsDir))(b => branchLogDir(d, b))
@@ -3628,14 +3474,14 @@ object GraftStagingCatalog {
         // manifest arithmetic, atomic under the same create-exclusive race.
         // The floor spans main + every branch log (branch-aware allocation)
         val rids =
-          if (!RowLineage.enabled(fs, d)) None
+          if (!meta.rowLineage) None
           else {
             val prevTxt = latest.map { case (_, f) => readString(fs, f) }
             Some(assignLeased(fs, d, prevTxt, prevTxt, files, Set.empty, branch))
           }
         committed = tryCreateExclusive(fs, new Path(vd, s"v$next.json"),
           manifestJson(files, batchId, "commit", dvs, rids))
-        if (committed && branch.isEmpty) maybeCheckpoint(fs, d, next, files, dvs)
+        if (committed && branch.isEmpty) maybeCheckpoint(fs, d, meta, next, files, dvs)
       }
     }
 
@@ -3806,7 +3652,8 @@ object GraftStagingCatalog {
     * rows), so it aborts with a conflict and the caller decides whether to
     * retry from the new current state.
     */
-  private[catalog] def writeExplicitManifest(fs: FileSystem, d: Path, files: Seq[String],
+  private[catalog] def writeExplicitManifest(fs: FileSystem, d: Path, meta: TableMeta,
+      files: Seq[String],
       kind: String = "optimize", expectedBase: Option[Long] = None,
       dvs: Seq[String] = Seq.empty, branch: Option[String] = None,
       matFiles: Set[String] = Set.empty,
@@ -3838,7 +3685,7 @@ object GraftStagingCatalog {
         // manifest (`rowIdsFrom`) so rolled-back rows keep their pinned
         // identities, while the watermark stays monotonic off the latest.
         val rids =
-          if (!RowLineage.enabled(fs, d)) None
+          if (!meta.rowLineage) None
           else {
             val latestTxt = (branch.fold(headManifest(fs, d))(b => branchHead(fs, d, b)))
               .map { case (_, f) => readString(fs, f) }
@@ -3851,7 +3698,7 @@ object GraftStagingCatalog {
         // lost the create race: loop re-reads the advanced version — with an
         // expectedBase that re-read throws the conflict above
       }
-      if (branch.isEmpty) maybeCheckpoint(fs, d, out, files, dvs)
+      if (branch.isEmpty) maybeCheckpoint(fs, d, meta, out, files, dvs)
       out
     }
 
@@ -3898,10 +3745,10 @@ object GraftStagingCatalog {
     * table — the Delta/Iceberg copy-on-write shape. Unanalyzed files are
     * conservatively rewritten (correct, just not minimal).
     */
-  private[catalog] def deleteWhere(fs: FileSystem, d: Path,
+  private[catalog] def deleteWhere(fs: FileSystem, d: Path, meta: TableMeta,
       filters: Array[org.apache.spark.sql.sources.Filter], baseVersion: Long): Unit = {
-    val (kept, rewritten) = filesAfterDelete(fs, d, filters)
-    writeExplicitManifest(fs, d, kept,
+    val (kept, rewritten) = filesAfterDelete(fs, d, meta, filters)
+    writeExplicitManifest(fs, d, meta, kept,
       kind = "delete", expectedBase = Some(baseVersion), matFiles = rewritten)
     ()
   }
@@ -3962,7 +3809,7 @@ object GraftStagingCatalog {
     * [[StagingMaintenance.ZoneMapScan.lastPosDeleteMode]] records which
     * path ran ("dv" | "dv-distributed" | "cow-fallback" | "noop").
     */
-  private[catalog] def posDeleteWhere(fs: FileSystem, d: Path,
+  private[catalog] def posDeleteWhere(fs: FileSystem, d: Path, meta: TableMeta,
       filters: Array[org.apache.spark.sql.sources.Filter], baseVersion: Long,
       snapshotFiles: Option[Seq[String]], dvNames: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, split}
@@ -3971,9 +3818,8 @@ object GraftStagingCatalog {
     val current = snapshotFiles.getOrElse(
       headManifest(fs, d).map { case (_, mf) => manifestFiles(fs, mf) }
         .getOrElse(dataFiles(fs, d)))
-    val stats = StagingMaintenance.readStatsFor(fs, d)
-    val nulls = StagingMaintenance.readNullsFor(fs, d)
-    val specs = partSpecsAll(fs, d)
+    val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d)
+    val specs = meta.partSpecsAll
     // zone-map candidate split: files whose ranges cannot match are never read
     val candidates = current.filter(f =>
       filters.forall(fl => ZoneMapPrunedScan.canMatch(stats, nulls, f, fl) &&
@@ -3981,12 +3827,12 @@ object GraftStagingCatalog {
     if (candidates.isEmpty) {
       // no row can match: still a (no-op) delete version — SQL ran
       ZoneMapScan.lastPosDeleteMode = Some("noop")
-      writeExplicitManifest(fs, d, current, kind = "delete",
+      writeExplicitManifest(fs, d, meta, current, kind = "delete",
         expectedBase = Some(baseVersion), dvs = dvNames)
       return
     }
     val reader = spark.read
-    declaredSchema(fs, d).foreach(reader.schema)
+    meta.schema.foreach(reader.schema)
     val raw = reader.parquet(candidates.map(f => new Path(d, f).toString): _*)
     val inForce = DeletionVectors.Deletes.load(fs, d, DeletionVectors.MorMode.Pos, dvNames).pos
     val visible = DeletionVectors.applyPosToRead(raw, inForce)
@@ -4004,7 +3850,7 @@ object GraftStagingCatalog {
       .collect()
     if (matched.isEmpty) {
       ZoneMapScan.lastPosDeleteMode = Some("noop")
-      writeExplicitManifest(fs, d, current, kind = "delete",
+      writeExplicitManifest(fs, d, meta, current, kind = "delete",
         expectedBase = Some(baseVersion), dvs = dvNames)
       return
     }
@@ -4033,13 +3879,13 @@ object GraftStagingCatalog {
         fs.delete(new Path(new Path(d, DeletionVectors.DvDir), runDirName), true)
         fs.delete(new Path(new Path(d, DeletionVectors.DvDir), dvName), false)
         ZoneMapScan.lastPosDeleteMode = Some("cow-fallback")
-        val (kept, rewritten) = filesAfterDelete(fs, d, filters)
-        writeExplicitManifest(fs, d, kept, kind = "delete",
+        val (kept, rewritten) = filesAfterDelete(fs, d, meta, filters)
+        writeExplicitManifest(fs, d, meta, kept, kind = "delete",
           expectedBase = Some(baseVersion), dvs = dvNames, matFiles = rewritten)
         return
       }
       ZoneMapScan.lastPosDeleteMode = Some("dv-distributed")
-      writeExplicitManifest(fs, d, current, kind = "delete",
+      writeExplicitManifest(fs, d, meta, current, kind = "delete",
         expectedBase = Some(baseVersion), dvs = dvNames :+ dvName)
       return
     }
@@ -4054,7 +3900,7 @@ object GraftStagingCatalog {
     val perFile = matched.groupBy(r => rel(r.getString(0)))
       .map { case (f, rs) => f -> rs.map(_.getLong(1)).toSeq }
     val dvName = DeletionVectors.writePosDv(fs, d, perFile)
-    writeExplicitManifest(fs, d, current, kind = "delete",
+    writeExplicitManifest(fs, d, meta, current, kind = "delete",
       expectedBase = Some(baseVersion), dvs = dvNames :+ dvName)
   }
 
@@ -4068,7 +3914,7 @@ object GraftStagingCatalog {
   /** Returns (new current file set, the rewrite's fresh remainder files —
     * lineage-materialized when the table tracks row ids).
     */
-  private[catalog] def filesAfterDelete(fs: FileSystem, d: Path,
+  private[catalog] def filesAfterDelete(fs: FileSystem, d: Path, meta: TableMeta,
       filters: Array[org.apache.spark.sql.sources.Filter],
       noManifestCurrent: Option[Seq[String]] = None): (Seq[String], Set[String]) = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
@@ -4086,8 +3932,7 @@ object GraftStagingCatalog {
     val current = head.map(parseManifestFiles)
       .orElse(noManifestCurrent)
       .getOrElse(dataFiles(fs, d))
-    val stats = StagingMaintenance.readStatsFor(fs, d)
-    val nulls = StagingMaintenance.readNullsFor(fs, d)
+    val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d)
     // conjunction semantics, three ways per file:
     //  - no filter can match any row       → UNTOUCHED (carried by name)
     //  - every row provably matches ALL    → DROPPED metadata-only (no
@@ -4097,7 +3942,7 @@ object GraftStagingCatalog {
     // An empty filter array is TRUNCATE: every row matches vacuously.
     // path-based partition pruning joins the stats: a `days(ts)` layout
     // serves a whole-day DELETE metadata-only with NO stats sidecar at all
-    val specs = partSpecsAll(fs, d)
+    val specs = meta.partSpecsAll
     val (touched0, untouched) = current.partition(f =>
       filters.forall(fl => ZoneMapPrunedScan.canMatch(stats, nulls, f, fl) &&
         ZoneMapPrunedScan.partCanMatch(specs, f, fl)))
@@ -4109,7 +3954,7 @@ object GraftStagingCatalog {
     // lineage tables: the surviving remainder of a rewritten file must keep
     // its row ids — read WITH resolved ids and write them into the
     // physical column; untouched files carry their entries by name
-    val lineage = RowLineage.enabled(fs, d)
+    val lineage = meta.rowLineage
     val lineageEntries: Map[String, RowLineage.Entry] =
       if (!lineage) Map.empty
       else head.map(RowLineage.parse(_)._1).getOrElse(Map.empty)
@@ -4117,9 +3962,8 @@ object GraftStagingCatalog {
       if (touched.isEmpty) untouched
       else {
         val reader = spark.read
-        if (lineage)
-          declaredSchema(fs, d).foreach(s => reader.schema(RowLineage.readSchema(s)))
-        else declaredSchema(fs, d).foreach(reader.schema)
+        if (lineage) meta.schema.foreach(s => reader.schema(RowLineage.readSchema(s)))
+        else meta.schema.foreach(reader.schema)
         val rawTouched0 = reader
           .parquet(touched.map(f => new Path(d, f).toString): _*)
         // lineage reads carry `_metadata` explicitly for id resolution;
@@ -4132,7 +3976,8 @@ object GraftStagingCatalog {
           if (!lineage) rawTouched0
           else rawTouched0.select(org.apache.spark.sql.functions.col("*"),
             org.apache.spark.sql.functions.col("_metadata"))
-        val dvApplied = DeletionVectors.Deletes.of(fs, d, head.toSeq.flatMap(parseArray(_, "dvs")))
+        val dvApplied = DeletionVectors.Deletes.load(fs, d, meta.mor,
+            head.toSeq.flatMap(parseArray(_, "dvs")))
           .restrict(touched.toSet).applyTo(withMeta)
         val rawTouched =
           if (!lineage) dvApplied
@@ -4142,7 +3987,7 @@ object GraftStagingCatalog {
         // per-file sorted on a declared-sort-order table (a task may
         // concatenate several input files, so the read order alone is not
         // enough) — the SupportsReportOrdering invariant
-        val soCols = sortOrderCols(fs, d)
+        val soCols = meta.sortOrder
           .filter(c => remaining0.columns.exists(_.equalsIgnoreCase(c)))
         val remaining =
           if (soCols.isEmpty) remaining0

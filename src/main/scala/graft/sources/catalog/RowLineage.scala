@@ -1,6 +1,6 @@
 package graft.sources.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, split}
@@ -51,7 +51,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    pinned SQL faces are separate Table classes without the metadata
   *    column).
   *
-  * Declared at CREATE with `'graft.row-lineage'='true'` (a marker sidecar;
+  * Declared at CREATE with `'graft.row-lineage'='true'` (recorded in the table record;
   * the property is a contract on every future commit, not a backfill).
   *
   * MERGE-ON-READ (r12): fully combinable. DV commits move no rows, so id
@@ -74,9 +74,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object RowLineage {
 
-  /** Marker sidecar: present ⇔ the table tracks row lineage. */
-  val Marker = "_graft_rowlineage"
-
   /** Physical column name in materialized files. Underscore-prefixed so it
     * can never collide with a declared column (the catalog's data columns
     * come from SQL identifiers; the declared schema never contains it).
@@ -87,12 +84,6 @@ object RowLineage {
     * file, and 2^63 / 2^32 = 2^31 file-slots of lifetime headroom.
     */
   val Stride: Long = 1L << 32
-
-  def enabled(fs: FileSystem, d: Path): Boolean =
-    GraftStagingCatalog.isFile(fs, new Path(d, Marker))
-
-  def writeMarker(fs: FileSystem, d: Path): Unit =
-    GraftStagingCatalog.writeString(fs, new Path(d, Marker), "1")
 
   /** One current file's lineage: id base + whether a physical column holds
     * the authoritative ids.

@@ -91,7 +91,8 @@ object StagingMaintenance {
     val (base, mf) = latest
     val dvNames = GraftStagingCatalog.manifestDvs(fs, mf)
     if (dvNames.size < 2) return (dvNames.size, dvNames.size, -1L)
-    require(DeletionVectors.mode(fs, d) == DeletionVectors.MorMode.Pos,
+    val meta = TableMeta.read(fs, d)
+    require(meta.mor == DeletionVectors.MorMode.Pos,
       "optimize scope='dvs' folds position-delete sidecars (keyless " +
         "merge-on-read); keyed equality DVs fold with a full OPTIMIZE")
     val pos = DeletionVectors.Deletes.load(fs, d, DeletionVectors.MorMode.Pos, dvNames).pos
@@ -120,7 +121,7 @@ object StagingMaintenance {
       written.iterator.map(_._3).sum)
     // same data files, one descriptor: carried files keep their lineage
     // bases verbatim (nothing fresh, nothing materialized)
-    val v = GraftStagingCatalog.writeExplicitManifest(fs, d,
+    val v = GraftStagingCatalog.writeExplicitManifest(fs, d, meta,
       manifestFiles(fs, mf), kind = "optimize", expectedBase = Some(base),
       dvs = Seq(desc))
     (dvNames.size, 1, v)
@@ -155,11 +156,11 @@ object StagingMaintenance {
   def foldDeltas(spark: SparkSession, catalog: String, ns: String,
       table: String): (Int, Int, Long) = {
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    foldDeltasAt(spark, fs, d)
+    foldDeltasAt(spark, fs, d, TableMeta.read(fs, d))
   }
 
   private[catalog] def foldDeltasAt(spark: SparkSession, fs: FileSystem,
-      d: Path): (Int, Int, Long) = {
+      d: Path, meta: TableMeta): (Int, Int, Long) = {
     import org.apache.spark.sql.functions.{col, concat_ws, element_at, split, typedLit}
     val latest = GraftStagingCatalog.headManifest(fs, d).getOrElse(
       throw new IllegalArgumentException(s"$d has no committed version"))
@@ -169,7 +170,7 @@ object StagingMaintenance {
     if (dvNames.isEmpty) return (0, 0, -1L)
     val all = GraftStagingCatalog.parseManifestFiles(txt)
     val allSet = all.toSet
-    val deletes = DeletionVectors.Deletes.of(fs, d, dvNames)
+    val deletes = DeletionVectors.Deletes.load(fs, d, meta.mor, dvNames)
     // a CLONE's descriptors reference borrowed files by BARE name while
     // its manifest holds the absolute path — resolve through the bare
     // names of foreign entries (UUID-fresh part names cannot alias)
@@ -182,17 +183,17 @@ object StagingMaintenance {
     if (covered.isEmpty) {
       // descriptors with no live targets: drop them from the head with a
       // data-free commit
-      val v = GraftStagingCatalog.writeExplicitManifest(fs, d, all,
+      val v = GraftStagingCatalog.writeExplicitManifest(fs, d, meta, all,
         kind = "optimize", expectedBase = Some(base))
       return (0, 0, v)
     }
-    val lineage = RowLineage.enabled(fs, d)
+    val lineage = meta.rowLineage
     val lineageEntries: Map[String, RowLineage.Entry] =
       if (!lineage) Map.empty
       else RowLineage.parse(txt)._1
     val reader = spark.read
-    if (lineage) declaredSchema(fs, d).foreach(s => reader.schema(RowLineage.readSchema(s)))
-    else declaredSchema(fs, d).foreach(reader.schema)
+    if (lineage) meta.schema.foreach(s => reader.schema(RowLineage.readSchema(s)))
+    else meta.schema.foreach(reader.schema)
     val raw0 = reader.parquet(covered.map(f => new Path(d, f).toString): _*)
     val withMeta = raw0.select(col("*"), col("_metadata"))
     val dvApplied = deletes.applyTo(withMeta)
@@ -247,7 +248,7 @@ object StagingMaintenance {
     // original's provenance: twins of UNPROVEN files re-enter the marker
     // (the r13-advice false-readmission hazard), twins of proven files
     // stay proven for free
-    GraftStagingCatalog.sortOrderUnproven(fs, d).foreach { case (_, unproven) =>
+    meta.sortUnproven.foreach { case (_, unproven) =>
       val twins = repl.iterator.collect {
         case (old0, news) if unproven(old0) => news
       }.flatten.toSeq
@@ -257,10 +258,10 @@ object StagingMaintenance {
     val newFiles = all.flatMap(f =>
       if (coveredSet(f)) repl.getOrElse(f, Seq.empty) else Seq(f))
     val twinSet = repl.valuesIterator.flatten.toSet
-    val v = GraftStagingCatalog.writeExplicitManifest(fs, d, newFiles,
+    val v = GraftStagingCatalog.writeExplicitManifest(fs, d, meta, newFiles,
       kind = "optimize", expectedBase = Some(base),
       matFiles = if (lineage) twinSet else Set.empty)
-    try autoAnalyze(spark, fs, d)
+    try autoAnalyze(spark, fs, d, meta)
     catch { case e: Exception =>
       System.err.println(s"[graft] auto-analyze after foldDeltas on $d failed: $e")
     }
@@ -303,13 +304,14 @@ object StagingMaintenance {
     require(targetFiles >= 0,
       s"target_files must be positive, or 0 for size-derived — got $targetFiles")
     val (fs, d) = tableDir(spark, catalog, ns, table)
+    val meta = TableMeta.read(fs, d)
     // a declared-sort-order table's files are per-file sorted on the
     // declared columns by EVERY write path (the SupportsReportOrdering
     // invariant) — a cluster_by on a different column would silently break
     // that, so refuse loudly (drop the property first, or cluster by the
     // declared leading column)
     clusterBy.foreach { cb =>
-      val so = GraftStagingCatalog.sortOrderCols(fs, d)
+      val so = meta.sortOrder
       require(so.isEmpty || cb.equalsIgnoreCase(so.head),
         s"optimize cluster_by '$cb' contradicts declared " +
           s"'graft.sort-order'='${so.mkString(",")}' — files must stay sorted " +
@@ -346,7 +348,7 @@ object StagingMaintenance {
       if (strayOnly) {
         require(headDvs.isEmpty,
           "strayOnly optimize cannot fold active deletion vectors — run a full OPTIMIZE")
-        require(!RowLineage.enabled(fs, d),
+        require(!meta.rowLineage,
           "strayOnly optimize does not support row-lineage tables — run a full OPTIMIZE")
         all.partition(_.contains("/"))
       } else minBytes match {
@@ -379,7 +381,7 @@ object StagingMaintenance {
             // a misspelled column would look unprunable (conservative keep
             // on every file) and silently turn the O(slice) operation into
             // an O(table) rewrite — refuse loudly instead
-            val declaredNames = declaredSchema(fs, d)
+            val declaredNames = meta.schema
               .map(_.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet)
               .getOrElse(Set.empty)
             parsed.collect {
@@ -393,9 +395,8 @@ object StagingMaintenance {
               throw new IllegalArgumentException(
                 s"optimize where-filter '$w' is not zone-map-translatable " +
                   "(use comparisons/IN/AND/OR over plain columns and literals)"))
-            val stats0 = readStatsFor(fs, d)
-            val nulls0 = readNullsFor(fs, d)
-            val specs0 = GraftStagingCatalog.partSpecsAll(fs, d)
+            val (stats0, nulls0) = readStatsFor(fs, d)
+            val specs0 = meta.partSpecsAll
             val (sel, keep) = all.partition(f =>
               ZoneMapPrunedScan.canMatch(stats0, nulls0, f, v1) &&
                 ZoneMapPrunedScan.partCanMatch(specs0, f, v1))
@@ -427,7 +428,7 @@ object StagingMaintenance {
           catch { case _: FileNotFoundException =>
             throw new java.util.ConcurrentModificationException(
               s"optimize: manifest-listed file $f is gone (concurrent VACUUM?)") }).sum
-        val per = GraftStagingCatalog.targetFileSize(fs, d) match {
+        val per = meta.targetFileBytes match {
           case 0L => 128L << 20
           case x  => x
         }
@@ -437,13 +438,13 @@ object StagingMaintenance {
     // every row WITH its resolved id and write it into the physical
     // column ([[RowLineage.materialize]]); the commit marks the compacted
     // files materialized. Non-lineage tables read the declared schema.
-    val lineage = RowLineage.enabled(fs, d)
+    val lineage = meta.rowLineage
     val lineageEntries: Map[String, RowLineage.Entry] =
       if (!lineage) Map.empty
       else headTxt.map(RowLineage.parse(_)._1).getOrElse(Map.empty)
     val reader = spark.read
-    if (lineage) declaredSchema(fs, d).foreach(s => reader.schema(RowLineage.readSchema(s)))
-    else declaredSchema(fs, d).foreach(reader.schema)
+    if (lineage) meta.schema.foreach(s => reader.schema(RowLineage.readSchema(s)))
+    else meta.schema.foreach(reader.schema)
     val raw0 = reader.parquet(current.map(f => new Path(d, f).toString): _*)
     // OPTIMIZE is where deletion vectors FOLD: the rewrite reads with the
     // current DVs applied (deleted rows must not resurrect into the
@@ -456,7 +457,7 @@ object StagingMaintenance {
     // Keyed fold order: inline keys first, then the distributed bins (r14)
     // — both anti-joins, both executor-side.
     val withMeta = if (!lineage) raw0 else raw0.select(col("*"), col("_metadata"))
-    val dvApplied = DeletionVectors.Deletes.of(fs, d, headDvs).applyTo(withMeta)
+    val dvApplied = DeletionVectors.Deletes.load(fs, d, meta.mor, headDvs).applyTo(withMeta)
     val df =
       if (!lineage) dvApplied
       else RowLineage.materialize(dvApplied, lineageEntries).drop("_metadata")
@@ -490,7 +491,7 @@ object StagingMaintenance {
           // laid-out files stay per-file sorted — the invariant the scan's
           // SupportsReportOrdering report rides (and what makes a bucket
           // layout SMJ sort-free on top of exchange-free)
-          val so = GraftStagingCatalog.sortOrderCols(fs, d)
+          val so = meta.sortOrder
             .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
           val base0 = df.withColumn("__graft_pdir", derived)
             .repartition(col("__graft_pdir"))
@@ -549,7 +550,7 @@ object StagingMaintenance {
             // columns — the compacted files stay per-file sorted (the
             // SupportsReportOrdering invariant) AND the zone ranges stay
             // disjoint, exactly what the table declared it wants
-            val so = GraftStagingCatalog.sortOrderCols(fs, d)
+            val so = meta.sortOrder
               .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
             if (so.isEmpty) df.repartition(effTarget)
             else df.repartitionByRange(effTarget, so.map(col): _*)
@@ -559,11 +560,11 @@ object StagingMaintenance {
         StagedRewrite.publish(fs, d, tmp)((part, _) => s"opt-$token-$part")
     }
     val moved = StagedRewrite(fs, d, "optimize")(layOut)
-    val v = writeExplicitManifest(fs, d, carried ++ moved, expectedBase = Some(base),
+    val v = writeExplicitManifest(fs, d, meta, carried ++ moved, expectedBase = Some(base),
       matFiles = if (lineage) moved.toSet else Set.empty)
     // commit-time zone-map maintenance, if declared — best-effort: the
     // rewrite is already committed, stats self-heal at the next trigger
-    try autoAnalyze(spark, fs, d)
+    try autoAnalyze(spark, fs, d, meta)
     catch { case e: Exception =>
       System.err.println(s"[graft] auto-analyze after optimize on $d failed: $e")
     }
@@ -600,11 +601,11 @@ object StagingMaintenance {
     val fromFiles =
       if (fromVersion == 0L) Set.empty[String] else manifestFiles(fs, mf(fromVersion)).toSet
     val newFiles = manifestFiles(fs, mf(toVersion)).filterNot(fromFiles)
+    val declared = TableMeta.read(fs, d).schema
     val reader = spark.read
-    declaredSchema(fs, d).foreach(reader.schema)
+    declared.foreach(reader.schema)
     if (newFiles.isEmpty)
-      reader.schema(declaredSchema(fs, d).getOrElse(
-        spark.read.parquet(d.toString).schema))
+      reader.schema(declared.getOrElse(spark.read.parquet(d.toString).schema))
         .parquet() // empty relation with the table schema
     else reader.parquet(newFiles.map(f => new Path(d, f).toString): _*)
   }
@@ -638,7 +639,7 @@ object StagingMaintenance {
     */
   private[catalog] def rowLevelChangesAt(spark: SparkSession, fs: FileSystem, d: Path,
       fromVersion: Long, toVersion: Long): DataFrame =
-    rowLevelChangesParts(spark, fs, d, fromVersion, toVersion)._1
+    rowLevelChangesParts(spark, fs, d, TableMeta.read(fs, d), fromVersion, toVersion)._1
 
   /** [[rowLevelChangesAt]] core, additionally exposing STRUCTURAL
     * one-sidedness: `hasRemoved`/`hasAdded` report whether any file left or
@@ -648,7 +649,7 @@ object StagingMaintenance {
     * use this to skip pairing work on pure-append / pure-drop versions.
     */
   private[catalog] def rowLevelChangesParts(spark: SparkSession, fs: FileSystem, d: Path,
-      fromVersion: Long, toVersion: Long): (DataFrame, Boolean, Boolean) = {
+      meta: TableMeta, fromVersion: Long, toVersion: Long): (DataFrame, Boolean, Boolean) = {
     import org.apache.spark.sql.functions.lit
     require(fromVersion <= toVersion, s"from $fromVersion > to $toVersion")
     def manifestOf(v: Long): Path = GraftStagingCatalog.probeManifest(fs, d, v).getOrElse(
@@ -658,8 +659,8 @@ object StagingMaintenance {
     // first commit diffs against nothing)
     def files(v: Long): Set[String] =
       if (v <= 0L) Set.empty else manifestFiles(fs, manifestOf(v)).toSet
-    val sFrom = GraftStagingCatalog.schemaAtVersion(fs, d, math.max(fromVersion, 1L))
-    val sTo = GraftStagingCatalog.schemaAtVersion(fs, d, toVersion)
+    val sFrom = GraftStagingCatalog.schemaAtVersion(fs, d, math.max(fromVersion, 1L), meta)
+    val sTo = GraftStagingCatalog.schemaAtVersion(fs, d, toVersion, meta)
     require(sFrom == sTo,
       s"row-level diff across a schema change is not comparable ($sFrom vs $sTo)")
     val from = files(fromVersion)
@@ -674,7 +675,7 @@ object StagingMaintenance {
     // Key bins and run bins compare by IDENTITY (immutable dirs and
     // paths), so a visibility change is detectable without parsing any
     // key or ordinal they hold.
-    val mode = DeletionVectors.mode(fs, d)
+    val mode = meta.mor
     def deletesAt(v: Long): DeletionVectors.Deletes =
       if (v <= 0L || mode == DeletionVectors.MorMode.Off) DeletionVectors.Deletes.none
       else DeletionVectors.Deletes.load(fs, d, mode,
@@ -749,8 +750,9 @@ object StagingMaintenance {
       v: Long): Path = GraftStagingCatalog.synchronized {
     import org.apache.spark.sql.functions.{col, lit, row_number, when}
     val out = new Path(new Path(d, CdfDir), s"v$v")
+    lazy val meta = TableMeta.read(fs, d)
     if (isFile(fs, new Path(out, "_SUCCESS"))) out
-    else if (RowLineage.enabled(fs, d)) {
+    else if (meta.rowLineage) {
       // LINEAGE tables: the diff pairs by ROW IDENTITY, not by key
       // heuristics — exact CDC for keyless-but-identified tables. Every
       // changed file's rows read WITH their resolved ids (each side under
@@ -759,7 +761,7 @@ object StagingMaintenance {
       // update pre/post PAIR sharing the id, one-sided ids are
       // deletes/inserts. `_row_id` is part of the feed schema, so a
       // downstream applier joins pre→post (or applies by id) directly.
-      lineageCdfDiff(spark, fs, d, v)
+      lineageCdfDiff(spark, fs, d, meta, v)
         .withColumnRenamed("_change", "_change_type")
         .withColumn("_commit_version", org.apache.spark.sql.functions.lit(v))
         .write.mode("overwrite").parquet(out.toString)
@@ -767,7 +769,7 @@ object StagingMaintenance {
     }
     else {
       val (diff0, hasRemoved, hasAdded) =
-        rowLevelChangesParts(spark, fs, d, v - 1L, v)
+        rowLevelChangesParts(spark, fs, d, meta, v - 1L, v)
       if (!hasRemoved || !hasAdded) {
         // STRUCTURALLY one-sided version (pure append / pure metadata
         // drop, r14 opt): the other polarity's relation is empty by
@@ -785,7 +787,7 @@ object StagingMaintenance {
       // recompute the multiset diff from the changed files every time
       val diff = diff0.persist()
       try {
-      val shaped = DeletionVectors.mode(fs, d) match {
+      val shaped = meta.mor match {
         case DeletionVectors.MorMode.Key(k) if diff.columns.exists(_.equalsIgnoreCase(k)) =>
           // pair the two polarities by (key, occurrence#): occurrence rank
           // is deterministic (ordered by every data column), so duplicate
@@ -908,7 +910,7 @@ object StagingMaintenance {
     * + preserved-id insert) pairs into pre/post images off the shared id.
     */
   private def lineageCdfDiff(spark: SparkSession, fs: FileSystem, d: Path,
-      v: Long): DataFrame = {
+      meta: TableMeta, v: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, not, struct}
     def manifestOf(mv: Long): Option[Path] = GraftStagingCatalog.probeManifest(fs, d, mv)
     def state(mv: Long): (Set[String], Map[String, RowLineage.Entry], Seq[String]) =
@@ -921,8 +923,8 @@ object StagingMaintenance {
         s"$d has no version $mv (vacuumed or never committed)"))
     val (fromF, fromE, fromDvs) = state(v - 1L)
     val (toF, toE, toDvs) = state(v)
-    val sFrom = GraftStagingCatalog.schemaAtVersion(fs, d, math.max(v - 1L, 1L))
-    val sTo = GraftStagingCatalog.schemaAtVersion(fs, d, v)
+    val sFrom = GraftStagingCatalog.schemaAtVersion(fs, d, math.max(v - 1L, 1L), meta)
+    val sTo = GraftStagingCatalog.schemaAtVersion(fs, d, v, meta)
     require(sFrom == sTo,
       s"row-level diff across a schema change is not comparable ($sFrom vs $sTo)")
     val declared = sTo.getOrElse(
@@ -931,7 +933,7 @@ object StagingMaintenance {
     // merge-on-read: a DV-only commit changes visibility without changing
     // the file set — such files enter BOTH sides, each read under its
     // version's vectors (the rowLevelChangesAt rule, identity-paired here)
-    val mode = DeletionVectors.mode(fs, d)
+    val mode = meta.mor
     def deletes(names: Seq[String]): DeletionVectors.Deletes =
       if (mode == DeletionVectors.MorMode.Off) DeletionVectors.Deletes.none
       else DeletionVectors.Deletes.load(fs, d, mode, names)
@@ -1000,41 +1002,42 @@ object StagingMaintenance {
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** (file, column) -> range, from the stats sidecar. Tolerates torn or
-    * legacy lines (4-field = long-typed; 5-field = pre-null-count) by
-    * skipping what fails to parse — advisory cache semantics.
+  /** The stats sidecar as ((file, column) -> range, (file, column) ->
+    * (nullCount, rowCount)), from one probe and one read. Tolerates torn
+    * or legacy lines (4-field = long-typed; 5-field = pre-null-count) by
+    * skipping what fails to parse — advisory cache semantics. Null counts
+    * come from the 7-field lines (ANALYZE ≥ r8) and are absent for legacy
+    * lines and when any chunk's null count was unavailable — every
+    * consumer treats absence as unknown (no IS NULL pruning, no
+    * all-rows-match proofs).
     */
-  private[catalog] def readStatsFor(fs: FileSystem, d: Path): Map[(String, String), ZStat] = {
+  private[catalog] def readStatsFor(fs: FileSystem, d: Path)
+      : (Map[(String, String), ZStat], Map[(String, String), (Long, Long)]) = {
     val f = new Path(d, StatsSidecar)
-    if (!isFile(fs, f)) Map.empty
-    else readString(fs, f).split('\n').toIndexedSeq.filter(_.nonEmpty).flatMap { line =>
-      try line.split("\t", 8).take(5) match {
-        case Array(file, col, "L", mn, mx) => Some((file, col) -> LongZ(mn.toLong, mx.toLong))
-        case Array(file, col, "D", mn, mx) =>
-          Some((file, col) -> DoubleZ(mn.toDouble, mx.toDouble))
-        case Array(file, col, "S", mn, mx) => Some((file, col) -> StringZ(dec(mn), dec(mx)))
-        case Array(file, col, "N", _, _)   => Some((file, col) -> NoneZ)
-        case Array(file, col, mn, mx)      => Some((file, col) -> LongZ(mn.toLong, mx.toLong))
-        case _                             => None
-      } catch { case _: RuntimeException => None }
-    }.toMap
-  }
-
-  /** (file, column) -> (nullCount, rowCount), from the 7-field sidecar
-    * lines (ANALYZE ≥ r8). Absent for legacy 5-field lines and when any
-    * chunk's null count was unavailable — every consumer treats absence as
-    * unknown (no IS NULL pruning, no all-rows-match proofs).
-    */
-  private[catalog] def readNullsFor(fs: FileSystem, d: Path): Map[(String, String), (Long, Long)] = {
-    val f = new Path(d, StatsSidecar)
-    if (!isFile(fs, f)) Map.empty
-    else readString(fs, f).split('\n').toIndexedSeq.filter(_.nonEmpty).flatMap { line =>
-      try line.split("\t", 8) match {
-        case Array(file, col, _, _, _, nulls, total) if nulls != "-" =>
-          Some((file, col) -> (nulls.toLong, total.toLong))
-        case _ => None
-      } catch { case _: RuntimeException => None }
-    }.toMap
+    if (!isFile(fs, f)) (Map.empty, Map.empty)
+    else {
+      val lines = readString(fs, f).split('\n').toIndexedSeq.filter(_.nonEmpty)
+        .map(_.split("\t", 8))
+      val ranges = lines.flatMap { parts =>
+        try parts.take(5) match {
+          case Array(file, col, "L", mn, mx) => Some((file, col) -> LongZ(mn.toLong, mx.toLong))
+          case Array(file, col, "D", mn, mx) =>
+            Some((file, col) -> DoubleZ(mn.toDouble, mx.toDouble))
+          case Array(file, col, "S", mn, mx) => Some((file, col) -> StringZ(dec(mn), dec(mx)))
+          case Array(file, col, "N", _, _)   => Some((file, col) -> NoneZ)
+          case Array(file, col, mn, mx)      => Some((file, col) -> LongZ(mn.toLong, mx.toLong))
+          case _                             => None
+        } catch { case _: RuntimeException => None }
+      }.toMap
+      val nulls = lines.flatMap { parts =>
+        try parts match {
+          case Array(file, col, _, _, _, n, total) if n != "-" =>
+            Some((file, col) -> (n.toLong, total.toLong))
+          case _ => None
+        } catch { case _: RuntimeException => None }
+      }.toMap
+      (ranges, nulls)
+    }
   }
 
   private def statLine(file: String, col: String, z: ZStat,
@@ -1090,10 +1093,9 @@ object StagingMaintenance {
     * covers every current file still missing stats, not just the
     * triggering commit's.
     */
-  private[catalog] def autoAnalyze(spark: SparkSession, fs: FileSystem, d: Path): Unit = {
-    val cols = GraftStagingCatalog.autoAnalyzeCols(fs, d)
-    if (cols.nonEmpty) { analyzeAt(spark, fs, d, cols); () }
-  }
+  private[catalog] def autoAnalyze(spark: SparkSession, fs: FileSystem, d: Path,
+      meta: TableMeta): Unit =
+    if (meta.autoAnalyze.nonEmpty) { analyzeAt(spark, fs, d, meta.autoAnalyze); () }
 
   /** (fs, dir)-level core of [[analyze]] — also the auto-analyze hook. */
   private[catalog] def analyzeAt(spark: SparkSession, fs: FileSystem, d: Path,
@@ -1101,8 +1103,7 @@ object StagingMaintenance {
     import org.apache.parquet.column.statistics.{BinaryStatistics, DoubleStatistics,
       FloatStatistics, IntStatistics, LongStatistics}
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val existing = readStatsFor(fs, d)
-    val existingNulls = readNullsFor(fs, d)
+    val (existing, existingNulls) = readStatsFor(fs, d)
     val todo = currentFiles(fs, d)
       .filterNot(f => columns.forall(c => existing.contains((f, c))))
     val conf = spark.sessionState.newHadoopConf()
@@ -1213,7 +1214,7 @@ object StagingMaintenance {
     import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
     require(preds.nonEmpty, "prunedScan needs at least one predicate")
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    val stats = readStatsFor(fs, d)
+    val (stats, _) = readStatsFor(fs, d)
     val current = currentFiles(fs, d)
     val keep = current.filter { f =>
       preds.forall { case (column, lo, hi) =>
@@ -1224,12 +1225,12 @@ object StagingMaintenance {
         }
       }
     }
+    val declared = TableMeta.read(fs, d).schema
     val reader = spark.read
-    declaredSchema(fs, d).foreach(reader.schema)
+    declared.foreach(reader.schema)
     val df =
       if (keep.isEmpty)
-        reader.schema(declaredSchema(fs, d).getOrElse(
-          spark.read.parquet(d.toString).schema)).parquet()
+        reader.schema(declared.getOrElse(spark.read.parquet(d.toString).schema)).parquet()
       else reader.parquet(keep.map(f => new Path(d, f).toString): _*)
     val cond = preds.map { case (c, lo, hi) =>
       df.schema.find(_.name == c).map(_.dataType) match {
@@ -1266,11 +1267,10 @@ object StagingMaintenance {
     * stats with it — a renamed column re-ANALYZEs under its new name).
     */
   private[catalog] def dropColumnStats(fs: FileSystem, d: Path, column: String): Unit = {
-    val stats = readStatsFor(fs, d)
+    val (stats, nulls) = readStatsFor(fs, d)
     val live = stats.filter { case ((_, c), _) => !c.equalsIgnoreCase(column) }
     if (live.size != stats.size)
-      writeStats(fs, d, live,
-        readNullsFor(fs, d).filter { case ((_, c), _) => !c.equalsIgnoreCase(column) })
+      writeStats(fs, d, live, nulls.filter { case ((_, c), _) => !c.equalsIgnoreCase(column) })
     val blooms = readBloomsFor(fs, d)
     val liveBlooms = blooms.filter { case ((_, c), _) => !c.equalsIgnoreCase(column) }
     if (liveBlooms.size != blooms.size) writeBlooms(fs, d, liveBlooms)
@@ -1381,7 +1381,7 @@ object StagingMaintenance {
   def setPartitionSpec(spark: SparkSession, catalog: String, ns: String, table: String,
       spec: String): Unit = {
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    val schema = GraftStagingCatalog.declaredSchema(fs, d).getOrElse(
+    val schema = TableMeta.read(fs, d).schema.getOrElse(
       spark.table(s"$catalog.$ns.$table").schema)
     // validate each transform against the declared schema NOW (a typo fails
     // the CALL, not the next OPTIMIZE) — the same rules CREATE enforces;
@@ -1407,23 +1407,17 @@ object StagingMaintenance {
           GraftStagingCatalog.BucketPart(n, f.name).render
       }
     }
-    // read-modify-write of BOTH sidecars under the catalog monitor (the
+    // read-modify-write of the record under the catalog monitor (the
     // tag() rule: concurrent evolutions must not lose each other's history)
-    GraftStagingCatalog.synchronized {
-      val cur = GraftStagingCatalog.partitionCols(fs, d)
-      if (cur != rendered) {
+    TableMeta.update(fs, d) { m =>
+      if (m.partition == rendered) m
+      else m.copy(partition = rendered,
         // a re-adopted spec leaves history (it is current again); everything
         // else the table ever declared stays retired for pruning
-        val retired = (GraftStagingCatalog.retiredPartitionCols(fs, d) ++ cur)
-          .distinct.filterNot(rendered.contains)
-        val prevP = new Path(d, GraftStagingCatalog.PartitionPrevSidecar)
-        if (retired.isEmpty) { fs.delete(prevP, false); () }
-        else GraftStagingCatalog.writeString(fs, prevP, retired.mkString("\n"))
-        val curP = new Path(d, GraftStagingCatalog.PartitionSidecar)
-        if (rendered.isEmpty) { fs.delete(curP, false); () }
-        else GraftStagingCatalog.writeString(fs, curP, rendered.mkString("\n"))
-      }
+        retiredPartition = (m.retiredPartition ++ m.partition).distinct
+          .filterNot(rendered.contains))
     }
+    ()
   }
 
   // ---- writable branches (write-audit-publish) --------------------------
@@ -1597,7 +1591,7 @@ object StagingMaintenance {
         // carried (main) files keep MAIN's bases, branch-added files keep
         // their BRANCH bases, and the watermark is the max of both logs —
         // the id twin of the file re-anchor.
-        val lineageOn = RowLineage.enabled(fs, d)
+        val lineageOn = TableMeta.read(fs, d).rowLineage
         val (mainE, mainNext) =
           if (!lineageOn) (Map.empty[String, RowLineage.Entry], 0L)
           else if (mainHead == 0L) (Map.empty[String, RowLineage.Entry], 0L)
@@ -1703,7 +1697,8 @@ object StagingMaintenance {
   def readLineage(spark: SparkSession, catalog: String, ns: String,
       table: String, asOf: Option[Long] = None): DataFrame = {
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    require(RowLineage.enabled(fs, d),
+    val meta = TableMeta.read(fs, d)
+    require(meta.rowLineage,
       s"$catalog.$ns.$table does not track row lineage " +
         "(create it with 'graft.row-lineage'='true')")
     val mf = asOf match {
@@ -1716,14 +1711,14 @@ object StagingMaintenance {
     val txt = readString(fs, mf)
     val files = GraftStagingCatalog.parseManifestFiles(txt)
     val (entries, _) = RowLineage.parse(txt)
-    val schema = declaredSchema(fs, d).getOrElse(
+    val schema = meta.schema.getOrElse(
       throw new IllegalStateException(s"$catalog.$ns.$table has no declared schema"))
     // merge-on-read (r12): suppress the version's DV-deleted rows before
     // resolving ids — the same filter-then-resolve order the DSv2 combined
     // reader uses
     RowLineage.readWithIds(spark, d, files, schema, entries,
-      applyDvs = DeletionVectors.Deletes.of(fs, d, GraftStagingCatalog.parseArray(txt, "dvs"))
-        .applyTo)
+      applyDvs = DeletionVectors.Deletes.load(fs, d, meta.mor,
+        GraftStagingCatalog.parseArray(txt, "dvs")).applyTo)
   }
 
   /** Live branches: name → (fork version, branch head version). */
@@ -1753,7 +1748,7 @@ object StagingMaintenance {
     GraftStagingCatalog.readTags(fs, d)
   }
 
-  /** DESCRIBE-DETAIL snapshot: (version, nFiles, nBytes, partitionCols,
+  /** DESCRIBE-DETAIL snapshot: (version, nFiles, nBytes, partition spec,
     * analyzedCols, nVersions) — the operator's one-call answer to "what is
     * this table right now": how big, laid out how, prunable on what, and
     * how much retained history VACUUM has to work with. Bytes come from
@@ -1771,8 +1766,8 @@ object StagingMaintenance {
       try fs.getFileStatus(new Path(d, f)).getLen
       catch { case _: FileNotFoundException => 0L }
     }.sum
-    val parts = GraftStagingCatalog.partitionCols(fs, d).mkString(",")
-    val acols = readStatsFor(fs, d).keysIterator.map(_._2).toSeq.distinct.sorted.mkString(",")
+    val parts = TableMeta.read(fs, d).partition.mkString(",")
+    val acols = readStatsFor(fs, d)._1.keysIterator.map(_._2).toSeq.distinct.sorted.mkString(",")
     // consecutive commit-time auto-analyze failures (0 = healthy): the
     // harvest is best-effort, so this is where persistent breakage shows
     val aaFails: Long =
@@ -1800,9 +1795,6 @@ object StagingMaintenance {
   // would group by `_metadata.file_path` in one pass instead.
 
   private val BloomSidecar = "_graft_bloom.tsv"
-
-  private[catalog] def hasBloomSidecar(fs: FileSystem, d: Path): Boolean =
-    isFile(fs, new Path(d, BloomSidecar))
 
   private[catalog] def readBloomsFor(fs: FileSystem, d: Path)
       : Map[(String, String), org.apache.spark.util.sketch.BloomFilter] = {
@@ -1922,7 +1914,7 @@ object StagingMaintenance {
     // pinned time-travel read of that version does; lineage ids map from
     // the restore TARGET's manifest (rolled-back rows keep their pinned
     // identities) while the allocation watermark stays monotonic
-    GraftStagingCatalog.writeExplicitManifest(fs, d, files,
+    GraftStagingCatalog.writeExplicitManifest(fs, d, TableMeta.read(fs, d), files,
       kind = "restore", expectedBase = Some(base), dvs = dvs,
       rowIdsFrom = Some(mf))
   }
@@ -1955,6 +1947,7 @@ object StagingMaintenance {
     // cannot age out between planning and deletion.
     val horizon: Option[Long] = olderThanMillis.map(w => System.currentTimeMillis() - w)
     val (fs, d) = tableDir(spark, catalog, ns, table)
+    val meta = TableMeta.read(fs, d)
     val manifests = versionManifests(fs, d)
     // The reclamation plan (keep/drop/dead) is derived INSIDE the locked
     // section below. TAGGED versions are retention-exempt: a tag pins its
@@ -1974,7 +1967,7 @@ object StagingMaintenance {
       // commit-group pins are retention-exempt like tags: a reader resolves
       // member tables AT the group vector, so a vacuumed pin would brick
       // every group read (bounded: groups retain a fixed manifest window)
-      val groupPinned = CommitGroups.pins(fs, d)
+      val groupPinned = CommitGroups.pins(fs, d, meta.group)
       val tail = ms.drop(math.max(0, ms.size - retainLast)).map(_._1).toSet
       // versions committed inside the time window survive regardless of count
       val recent: Set[Long] = horizon.fold(Set.empty[Long])(h =>
@@ -2110,7 +2103,7 @@ object StagingMaintenance {
       // (unparsable) leases are reclaimable once older than the temp
       // horizon (their owner never saw a successful claim), as are
       // orphaned `.tmp-lease-*` spool files from crashed claims.
-      if (RowLineage.enabled(fs, d)) {
+      if (meta.rowLineage) {
         val maxW = (GraftStagingCatalog.headManifest(fs, d).iterator ++
           GraftStagingCatalog.readBranches(fs, d).keysIterator.flatMap(b =>
             GraftStagingCatalog.branchHead(fs, d, b).iterator))
@@ -2158,21 +2151,20 @@ object StagingMaintenance {
       deadNow
     }
     // trim reclaimed files out of the advisory stats cache
-    val stats = readStatsFor(fs, d)
+    val (stats, nulls) = readStatsFor(fs, d)
     val deadSet = dead.toSet
     val live = stats.filter { case ((f, _), _) => !deadSet(f) }
     if (live.size != stats.size)
-      writeStats(fs, d, live,
-        readNullsFor(fs, d).filter { case ((f, _), _) => !deadSet(f) })
+      writeStats(fs, d, live, nulls.filter { case ((f, _), _) => !deadSet(f) })
     val blooms = readBloomsFor(fs, d)
     val liveBlooms = blooms.filter { case ((f, _), _) => !deadSet(f) }
     if (liveBlooms.size != blooms.size) writeBlooms(fs, d, liveBlooms)
-    pruneSortOrderUnproven(fs, d)
+    if (meta.sortUnproven.isDefined) pruneSortOrderUnproven(fs, d)
     dead
   }
 
   /** Shrinks the sort-order provenance marker (r14 — see
-    * [[GraftStagingCatalog.sortOrderUnproven]]) to the pre-declaration
+    * [[TableMeta.sortUnproven]]) to the pre-declaration
     * files still REACHABLE through some readable version (main or branch
     * log — what RESTORE/rebase could resurrect). Called after VACUUM
     * reclaims manifests: once no readable version holds any listed file,
@@ -2180,15 +2172,16 @@ object StagingMaintenance {
     * declaration), and the live-property trust the r13 advice flagged is
     * restored legitimately — by provenance, not assumption.
     */
-  private[catalog] def pruneSortOrderUnproven(fs: FileSystem, d: Path): Unit =
-    GraftStagingCatalog.sortOrderUnproven(fs, d).foreach { case (since, unproven) =>
-      val cols = GraftStagingCatalog.sortOrderCols(fs, d)
-      val reachable: Set[String] = GraftStagingCatalog.reachableFiles(fs, d)
-      val remaining = unproven.filter(reachable)
-      if (remaining.size != unproven.size)
-        GraftStagingCatalog.writeSortOrderSidecar(fs, d, cols,
-          if (remaining.isEmpty) None else Some((since, remaining)))
+  private[catalog] def pruneSortOrderUnproven(fs: FileSystem, d: Path): Unit = {
+    val reachable: Set[String] = GraftStagingCatalog.reachableFiles(fs, d)
+    TableMeta.update(fs, d) { m =>
+      m.copy(sortUnproven = m.sortUnproven.flatMap { case (since, unproven) =>
+        val remaining = unproven.filter(reachable)
+        if (remaining.isEmpty) None else Some((since, remaining))
+      })
     }
+    ()
+  }
 }
 
 /** DSv2 zone-map integration: wraps the native parquet `FileScanBuilder` so

@@ -72,13 +72,14 @@ object StagingPurge {
   def purge(spark: SparkSession, catalog: String, ns: String, table: String,
       where: String): (Int, Int, Long, Int) = {
     import GraftStagingCatalog._
-    import StagingMaintenance.{readStatsFor, readNullsFor, CdfDir}
+    import StagingMaintenance.{readStatsFor, CdfDir}
     val (fs, d) = StagingMaintenance.tableDir(spark, catalog, ns, table)
+    val meta = TableMeta.read(fs, d)
 
     // ---- predicate: validated against the declared schema, V1-translated
     // when possible (file pruning), always applied row-exactly
     val parsed = spark.sessionState.sqlParser.parseExpression(where)
-    val declaredNames = declaredSchema(fs, d)
+    val declaredNames = meta.schema
       .map(_.fieldNames.map(_.toLowerCase(java.util.Locale.ROOT)).toSet)
       .getOrElse(Set.empty)
     parsed.collect {
@@ -91,7 +92,7 @@ object StagingPurge {
     val v1 = ZoneMapScanBuilder.toV1(parsed)
 
     // ---- refusals (see class doc)
-    val lineage = RowLineage.enabled(fs, d)
+    val lineage = meta.rowLineage
     val clones = TableClone.liveClones(fs, d)
     require(clones.isEmpty,
       s"cannot purge $catalog.$ns.$table: live shallow clones borrow its " +
@@ -117,9 +118,8 @@ object StagingPurge {
 
     // ---- candidate selection: zone maps + partition paths prune files
     // the predicate provably cannot touch (conservative keep otherwise)
-    val stats0 = readStatsFor(fs, d)
-    val nulls0 = readNullsFor(fs, d)
-    val specs0 = partSpecsAll(fs, d)
+    val (stats0, nulls0) = readStatsFor(fs, d)
+    val specs0 = meta.partSpecsAll
     val cand = v1 match {
       case Some(f) => union0.filter(fl =>
         ZoneMapPrunedScan.canMatch(stats0, nulls0, fl, f) &&
@@ -139,9 +139,8 @@ object StagingPurge {
     // split matched from survivors, regroup survivors per source file in
     // original row order
     val reader = spark.read
-    if (lineage)
-      declaredSchema(fs, d).foreach(sch => reader.schema(RowLineage.readSchema(sch)))
-    else declaredSchema(fs, d).foreach(reader.schema)
+    if (lineage) meta.schema.foreach(sch => reader.schema(RowLineage.readSchema(sch)))
+    else meta.schema.foreach(reader.schema)
     val raw0 = reader.parquet(cand.map(f => new Path(d, f).toString): _*)
     // key each row back to its source file by the path's LAST TWO segments
     // ("<partition-dir>/<name>", or "<table-dir>/<name>" for root files):
@@ -248,7 +247,7 @@ object StagingPurge {
     // preserves the original (possibly unsorted) row order under a fresh
     // name the provenance marker doesn't know — re-mark it, or the
     // ordering report would falsely re-admit (the exact r13-advice bug)
-    sortOrderUnproven(fs, d).foreach { case (_, unproven) =>
+    meta.sortUnproven.foreach { case (_, unproven) =>
       val twins = repl.iterator.collect {
         case (old0, news) if unproven(old0) => news
       }.flatten.toSeq
@@ -334,15 +333,14 @@ object StagingPurge {
     // originals are unreferenced by every manifest now — delete, and trim
     // their sidecar entries (vacuum's hygiene, applied to the purged set)
     cand.foreach(f => fs.delete(new Path(d, f), false))
-    val stats = readStatsFor(fs, d)
+    val (stats, nulls) = readStatsFor(fs, d)
     val live = stats.filter { case ((f, _), _) => !candSet(f) }
     if (live.size != stats.size)
-      StagingMaintenance.writeStats(fs, d, live,
-        readNullsFor(fs, d).filter { case ((f, _), _) => !candSet(f) })
+      StagingMaintenance.writeStats(fs, d, live, nulls.filter { case ((f, _), _) => !candSet(f) })
     val blooms = StagingMaintenance.readBloomsFor(fs, d)
     val liveB = blooms.filter { case ((f, _), _) => !candSet(f) }
     if (liveB.size != blooms.size) StagingMaintenance.writeBlooms(fs, d, liveB)
-    try StagingMaintenance.autoAnalyze(spark, fs, d)
+    try StagingMaintenance.autoAnalyze(spark, fs, d, meta)
     catch { case e: Exception =>
       System.err.println(s"[graft] auto-analyze after purge on $d failed: $e")
     }

@@ -152,7 +152,7 @@ private[catalog] class StagingMicroBatchStream(
     val s = start.asInstanceOf[StagingVersionOffset].version
     val e = end.asInstanceOf[StagingVersionOffset].version
     val paths = appendedFiles(s, e).map(f => new Path(dir, f).toString)
-    val declared = GraftStagingCatalog.declaredSchema(fs, dir)
+    val declared = TableMeta.read(fs, dir).schema
     val table = ParquetTable(s"$tableDirStr[stream ($s,$e]]", SparkSession.active,
       CaseInsensitiveStringMap.empty(), paths, declared, classOf[ParquetFileFormat])
     val sb = table.newScanBuilder(CaseInsensitiveStringMap.empty())
@@ -544,7 +544,7 @@ private[catalog] object ChangeFeedPlanner {
     // `_row_id`, which a raw added-file read cannot resolve (virtual ids
     // live in the manifest's base vector). Still slice-cost — a commit's
     // diff reads exactly its added files.
-    val lineage = RowLineage.enabled(fs, dir)
+    val lineage = TableMeta.read(fs, dir).rowLineage
     versions.foreach { v =>
       val mf = manifestOf(v)
       manifestKind(fs, mf) match {

@@ -54,7 +54,7 @@ import org.apache.spark.sql.SparkSession
   * Declared sort order transfers WITH provenance: if the source's files
   * are all write-path-proven sorted, the clone's report stands; if the
   * source carries an `#unsorted@` marker, the affected borrowed files stay
-  * unproven in the clone too ([[GraftStagingCatalog.sortOrderUnproven]]).
+  * unproven in the clone too ([[TableMeta.sortUnproven]]).
   */
 object TableClone {
 
@@ -66,9 +66,8 @@ object TableClone {
     entry.startsWith("/") || entry.contains(":/")
 
   /** Stable fingerprint of a table's declared schema (empty = none). */
-  private[catalog] def schemaFingerprint(fs: FileSystem, d: Path): String =
-    GraftStagingCatalog.declaredSchema(fs, d)
-      .map(s => java.lang.Integer.toHexString(s.json.hashCode)).getOrElse("-")
+  private[catalog] def schemaFingerprint(meta: TableMeta): String =
+    meta.schema.map(s => java.lang.Integer.toHexString(s.json.hashCode)).getOrElse("-")
 
   /** The table directory an absolute manifest entry lives in: its parent,
     * or — for partition-laid-out entries (`…/k=v/file`) — the grandparent;
@@ -130,7 +129,8 @@ object TableClone {
         }
     }
     // scope boundaries — refuse, never silently mis-clone
-    require(!RowLineage.enabled(fs, src),
+    val srcMeta = TableMeta.read(fs, src)
+    require(!srcMeta.rowLineage,
       s"cannot shallow-clone $catalog.$ns.$table: row-lineage tables' " +
         "per-file id bases do not transfer (materialize with CTAS instead)")
     val names = manifestFiles(fs, mf)
@@ -158,34 +158,20 @@ object TableClone {
     val upstreams: Seq[Path] = (src +:
       names.filter(isForeign).map(f => tableDirOf(fs, f))).distinct
     fs.mkdirs(dst)
-    // metadata sidecars transfer; data bytes do not
-    def copySidecar(name: String): Unit = {
-      val p = new Path(src, name)
-      if (isFile(fs, p)) writeString(fs, new Path(dst, name), readString(fs, p))
-    }
-    copySidecar(SchemaSidecar)
-    copySidecar(PartitionSidecar)
-    copySidecar(PartitionPrevSidecar)
-    copySidecar(AutoAnalyzeSidecar)
-    copySidecar(FileSizeSidecar)
-    // write-admission declarations follow the schema: the clone keeps the
-    // source's update mode, auto-fold threshold, and merge-on-read mode
-    copySidecar(DeletionVectors.UpdateModeSidecar)
-    copySidecar(DeletionVectors.AutoFoldSidecar)
-    copySidecar(DeletionVectors.MorSidecar)
-    CheckConstraint.read(fs, src).foreach(c => CheckConstraint.write(fs, dst, c))
-    // declared sort order transfers with provenance (see class doc)
-    val soCols = sortOrderCols(fs, src)
-    if (soCols.nonEmpty) {
-      val unproven = sortOrderUnproven(fs, src) match {
-        case None => None
-        case Some((_, u)) =>
+    // the table record transfers (data bytes do not): schema, partitioning,
+    // the maintenance knobs, CHECK and the write-admission declarations.
+    // Not the source's commit-group membership, and not its checkpoint
+    // cadence (the clone's log checkpoints at the default interval); the
+    // declared sort order transfers with provenance (see class doc) —
+    // the clone's marker names the borrowed unproven files by absolute path
+    val dstMeta = TableMeta.update(fs, dst)(_ => srcMeta.copy(
+      group = None, checkpointEvery = TableMeta.DefaultCkptInterval,
+      sortUnproven =
+        if (srcMeta.sortOrder.isEmpty) None
+        else srcMeta.sortUnproven.flatMap { case (_, u) =>
           val borrowedUnproven = names.filter(u).map(f => new Path(src, f).toString)
-          if (borrowedUnproven.isEmpty) None
-          else Some((1L, borrowedUnproven.toSet))
-      }
-      writeSortOrderSidecar(fs, dst, soCols, unproven)
-    }
+          if (borrowedUnproven.isEmpty) None else Some((1L, borrowedUnproven.toSet))
+        }))
     // zone-map stats / null counts / bloom sidecars transfer keyed by
     // BARE file name — exactly the key the scan's statKey falls back to
     // for a file outside the table directory. A partition-laid-out source
@@ -195,12 +181,12 @@ object TableClone {
     val bare: Map[String, String] =
       names.filter(f => byBare(f.substring(f.lastIndexOf('/') + 1)).size == 1)
         .map(f => f -> f.substring(f.lastIndexOf('/') + 1)).toMap
-    val stats = StagingMaintenance.readStatsFor(fs, src)
+    val (srcStats, srcNulls) = StagingMaintenance.readStatsFor(fs, src)
+    val stats = srcStats
       .collect { case ((f, c), st) if bare.contains(f) => (bare(f), c) -> st }
     if (stats.nonEmpty)
       StagingMaintenance.writeStats(fs, dst, stats,
-        StagingMaintenance.readNullsFor(fs, src)
-          .collect { case ((f, c), n) if bare.contains(f) => (bare(f), c) -> n })
+        srcNulls.collect { case ((f, c), n) if bare.contains(f) => (bare(f), c) -> n })
     val blooms = StagingMaintenance.readBloomsFor(fs, src)
       .collect { case ((f, c), b) if bare.contains(f) => (bare(f), c) -> b }
     if (blooms.nonEmpty) StagingMaintenance.writeBlooms(fs, dst, blooms)
@@ -221,14 +207,14 @@ object TableClone {
     // branch and sync refuses (re-clone after publish)
     val watermark = branch.map(b => s"branch:$b:$srcV").getOrElse(srcV.toString)
     writeString(fs, new Path(dst, CloneSrcSidecar),
-      (s"$src\n${regs.head._2}\n$watermark\n${schemaFingerprint(fs, src)}" +:
+      (s"$src\n${regs.head._2}\n$watermark\n${schemaFingerprint(srcMeta)}" +:
         regs.tail.map { case (u, r) => s"$u\t$r" }).mkString("\n"))
     val dvs2 =
       if (srcDvNames.isEmpty) Seq.empty[String]
       else DeletionVectors.transplantDvs(fs, src, dst,
         SparkSession.active.sessionState.newHadoopConf(), srcDvNames,
         f => f.substring(f.lastIndexOf('/') + 1))
-    val v = writeExplicitManifest(fs, dst, absolute, kind = "clone",
+    val v = writeExplicitManifest(fs, dst, dstMeta, absolute, kind = "clone",
       expectedBase = Some(0L), dvs = dvs2)
     (srcV, names.size, v)
   }
@@ -290,10 +276,11 @@ object TableClone {
         "— branch version numbers cannot anchor a main-log sync; re-clone " +
         "after the branch publishes")
     val lastV = lines(2).trim.toLong
+    val srcMeta = TableMeta.read(fs, src)
     // schema-drift guard: borrowed files written under an evolved source
     // schema would read wrongly through the clone's copied schema
     if (lines.length >= 4)
-      require(schemaFingerprint(fs, src) == lines(3).trim,
+      require(schemaFingerprint(srcMeta) == lines(3).trim,
         s"sync: clone source $src changed its schema since the clone — " +
           "the borrowed files would mis-read through the clone's copied " +
           "schema; re-clone")
@@ -301,7 +288,7 @@ object TableClone {
       throw new IllegalStateException(
         s"clone source $src has no readable head — was it dropped?"))
     if (headV <= lastV) return (lastV, lastV, 0, -1L)
-    require(!RowLineage.enabled(fs, src),
+    require(!srcMeta.rowLineage,
       s"clone source $src enabled row lineage after the clone — re-clone")
     def stateAt(v: Long): (Seq[String], Set[String]) = {
       val mf = probeManifest(fs, src, v).getOrElse(
@@ -311,7 +298,7 @@ object TableClone {
       (manifestFiles(fs, mf), manifestDvs(fs, mf).toSet)
     }
     val fp = if (lines.length >= 4) lines(3).trim
-             else schemaFingerprint(fs, src)
+             else schemaFingerprint(srcMeta)
     // watermark updates REPLACE line 3 only — lines 5+ carry the
     // transitive upstream registrations and must survive every rewrite
     def writeWatermark(): Unit = {
@@ -376,10 +363,10 @@ object TableClone {
     }
     // borrowed files the SOURCE knows are sort-order-unproven (its own
     // provenance marker) stay unproven through the clone's report too
-    val srcUnproven = sortOrderUnproven(fs, src).map(_._2).getOrElse(Set.empty)
+    val srcUnproven = srcMeta.sortUnproven.map(_._2).getOrElse(Set.empty[String])
     markUnsorted(fs, d, added.toSeq.filter(srcUnproven)
       .map(f => new Path(src, f).toString))
-    val v = writeExplicitManifest(fs, d, (curFiles ++ absolute).distinct,
+    val v = writeExplicitManifest(fs, d, TableMeta.read(fs, d), (curFiles ++ absolute).distinct,
       kind = "sync", expectedBase = Some(base))
     writeWatermark()
     (lastV, headV, absolute.size.toLong, v)
@@ -398,7 +385,7 @@ object TableClone {
       catalog: String, ns: String, table: String, lastV: Long, headV: Long,
       keys: Seq[String], writeWatermark: () => Unit): (Long, Long, Long, Long) = {
     import org.apache.spark.sql.functions.col
-    val declared = GraftStagingCatalog.declaredSchema(fs, d)
+    val declared = TableMeta.read(fs, d).schema
     keys.foreach(k => require(
       declared.forall(_.fieldNames.exists(_.equalsIgnoreCase(k))),
       s"sync keys: unknown column '$k' (declared: " +

@@ -206,7 +206,7 @@ object StreamingOps {
           val raw = new org.apache.hadoop.fs.Path(
             new org.apache.hadoop.fs.Path(root, ns), tbl)
           val fs = raw.getFileSystem(spark.sessionState.newHadoopConf())
-          graft.sources.catalog.CommitGroups.groupOf(fs, fs.makeQualified(raw))
+          graft.sources.catalog.TableMeta.read(fs, fs.makeQualified(raw)).group
             .map(g => (cat, ns, g))
         }
       } else Seq.empty

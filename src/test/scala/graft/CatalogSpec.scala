@@ -98,6 +98,19 @@ class CatalogSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.stage_t.root", stageRoot)
   }
 
+  /** A table's declared sort order and provenance marker as text: the
+    * order's columns, one per line, then `#unsorted@<since>` and the
+    * marked files — read through the table record.
+    */
+  private def sortOrderText(tableDir: String): String = {
+    val d = new org.apache.hadoop.fs.Path(tableDir)
+    val m = graft.sources.catalog.TableMeta.read(
+      d.getFileSystem(spark.sessionState.newHadoopConf()), d)
+    (m.sortOrder ++ m.sortUnproven.toSeq.flatMap { case (since, files) =>
+      s"#unsorted@$since" +: files.toSeq.sorted
+    }).mkString("\n")
+  }
+
   /** Messages of the whole cause chain — Spark wraps task failures. */
   private def exMessages(e: Throwable): Seq[String] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10)
@@ -1106,14 +1119,7 @@ class CatalogSpec extends SparkSpec {
     }
     mk("rsp1", "true")
     mk("rsp2", "(id * 77) % 400 % 3 = 0")
-    def sidecar(name: String): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$stageRoot/ws/$name/_graft_sortorder.txt")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
+    def sidecar(name: String): String = sortOrderText(s"$stageRoot/ws/$name")
     assert(sidecar("rsp1").contains("#unsorted@"),
       "ALTER on a non-empty table must record the provenance marker")
     val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
@@ -1765,14 +1771,7 @@ class CatalogSpec extends SparkSpec {
       "SELECT (id * 77) % 400, id FROM range(0, 400)")
     spark.sql("ALTER TABLE stage_t.ws.pqr SET TBLPROPERTIES ('graft.sort-order'='k')")
     spark.sql("CALL stage_t.purge('ws', 'pqr', 'k >= 100')")
-    val fs2 = new org.apache.hadoop.fs.Path(stageRoot)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val soTxt = {
-      val in = fs2.open(new org.apache.hadoop.fs.Path(
-        s"$stageRoot/ws/pqr/_graft_sortorder.txt"))
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    }
+    val soTxt = sortOrderText(s"$stageRoot/ws/pqr")
     assert(soTxt.contains("purge-"),
       s"unproven twin missing from the provenance marker:\n$soTxt")
     assert(spark.table("stage_t.ws.pqr").count() === 100L)

@@ -5,10 +5,11 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, FilterFileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.catalog.DeletionVectors
+import graft.CountingFs
+import graft.sources.catalog.{DeletionVectors, TableMeta}
 import graft.sources.catalog.DeletionVectors.{Deletes, DvSidecar, MorMode}
 
 /** The deletion-vector sidecar format behind its one decoder: every kind
@@ -21,20 +22,6 @@ class DeletesSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
   private val local = FileSystem.getLocal(conf)
-
-  /** Counts `open` and `getFileStatus` calls by file name. */
-  private final class CountingFs(inner: FileSystem) extends FilterFileSystem(inner) {
-    val opens = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    val stats = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-      opens(f.getName) += 1
-      super.open(f, bufferSize)
-    }
-    override def getFileStatus(f: Path): FileStatus = {
-      stats(f.getName) += 1
-      super.getFileStatus(f)
-    }
-  }
 
   private def write(p: Path, s: String): Unit = {
     val out = local.create(p, true)
@@ -53,7 +40,7 @@ class DeletesSpec extends AnyFunSuite {
     */
   private def fixture(): (Path, Seq[String]) = {
     val d = new Path(Files.createTempDirectory("deletesspec_").toUri)
-    DeletionVectors.writeMorKey(local, d, "k")
+    TableMeta.update(local, d)(_.copy(mor = MorMode.Key("k")))
     val names = Seq(
       DeletionVectors.writeDv(local, d, "k", isString = false, Seq("a.parquet"), Set(1L, 2L)),
       DeletionVectors.writeDv(local, d, "s", isString = true, Seq("b.parquet"),
@@ -116,10 +103,10 @@ class DeletesSpec extends AnyFunSuite {
     val del = Deletes.at(fs, d, new Path(d, "_graft_versions/v1.json"))
     assert(del.covered.size === 6)
     assert(fs.opens("v1.json") === 1)
-    assert(fs.opens(DeletionVectors.MorSidecar) <= 1)
-    assert(fs.stats(DeletionVectors.MorSidecar) <= 1)
+    assert(fs.opens(TableMeta.FileName) <= 1)
+    assert(fs.stats(TableMeta.FileName) === 0)
     names.foreach(n => assert(fs.opens(n) === 1, s"sidecar $n"))
-    assert(fs.opens.keySet === (names.toSet + "v1.json" + DeletionVectors.MorSidecar))
+    assert(fs.opens.keySet === (names.toSet + "v1.json" + TableMeta.FileName))
     // a DV-free version reads its manifest and nothing else
     val clean = new CountingFs(local)
     assert(Deletes.at(clean, d, new Path(d, "_graft_versions/v2.json")) === Deletes.none)

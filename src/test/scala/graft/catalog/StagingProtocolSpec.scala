@@ -29,7 +29,7 @@ class StagingProtocolSpec extends graft.SparkSpec {
     val (fs, d) = freshTable()
     // v1: an explicit manifest with file a
     writeString(fs, new Path(d, "a.parquet"), "x")
-    val v1 = writeExplicitManifest(fs, d, Seq("a.parquet"), kind = "commit")
+    val v1 = writeExplicitManifest(fs, d, TableMeta(), Seq("a.parquet"), kind = "commit")
     assert(v1 === 1L)
     // forge a racer: v2 lands underneath (as a concurrent commit would)
     writeString(fs, new Path(d, "b.parquet"), "x")
@@ -38,20 +38,20 @@ class StagingProtocolSpec extends graft.SparkSpec {
     // an APPEND commit on the stale view merges: it re-reads current (v2)
     // and mints v3 containing the racer's file plus its own delta
     writeString(fs, new Path(d, "c.parquet"), "x")
-    writeCommitManifest(fs, d, before = Set("a.parquet", "b.parquet"))
+    writeCommitManifest(fs, d, TableMeta(), before = Set("a.parquet", "b.parquet"))
     val (v3, mf3) = versionManifests(fs, d).last
     assert(v3 === 3L)
     assert(manifestFiles(fs, mf3).toSet === Set("a.parquet", "b.parquet", "c.parquet"))
     // a REWRITE commit computed against v1 must NOT replace v3's state
     val e = intercept[java.util.ConcurrentModificationException] {
-      writeExplicitManifest(fs, d, Seq("rewritten.parquet"),
+      writeExplicitManifest(fs, d, TableMeta(), Seq("rewritten.parquet"),
         kind = "update", expectedBase = Some(1L))
     }
     assert(e.getMessage.contains("conflict"), e.getMessage)
     // the chain is untouched by the aborted rewrite
     assert(versionManifests(fs, d).map(_._1) === Seq(1L, 2L, 3L))
     // the same rewrite re-run against the CURRENT base succeeds
-    val v4 = writeExplicitManifest(fs, d, Seq("rewritten.parquet"),
+    val v4 = writeExplicitManifest(fs, d, TableMeta(), Seq("rewritten.parquet"),
       kind = "update", expectedBase = Some(3L))
     assert(v4 === 4L)
     assert(manifestFiles(fs, versionManifests(fs, d).last._2) === Seq("rewritten.parquet"))
@@ -212,9 +212,9 @@ class StagingProtocolSpec extends graft.SparkSpec {
         } finally rd.close()
       assert(sChunks.contains(false), "expected a chunk with dropped s-stats")
       assert(sChunks.contains(true), "expected a chunk with surviving s-stats")
-      writeCommitManifest(fs, d, before = Set.empty)
+      writeCommitManifest(fs, d, TableMeta(), before = Set.empty)
       StagingMaintenance.analyze(spark, "gapcat", "t", "g", Seq("s", "id"))
-      val stats = StagingMaintenance.readStatsFor(fs, d)
+      val (stats, _) = StagingMaintenance.readStatsFor(fs, d)
       assert(stats(("gap.parquet", "s")) === NoneZ,
         s"partial chunk stats must yield NoneZ, got ${stats(("gap.parquet", "s"))}")
       assert(stats(("gap.parquet", "id")).isInstanceOf[LongZ])
@@ -234,19 +234,19 @@ class StagingProtocolSpec extends graft.SparkSpec {
       rng.nextInt(4) match {
         case 0 => // append
           val f = newFile()
-          writeCommitManifest(fs, d, before = model ++ dataFiles(fs, d).filterNot(_ == f).toSet)
+          writeCommitManifest(fs, d, TableMeta(), before = model ++ dataFiles(fs, d).filterNot(_ == f).toSet)
           model += f
         case 1 => // rewrite against the true current base: succeeds
           val base = versionManifests(fs, d).lastOption.map(_._1).getOrElse(0L)
           val f = newFile()
-          writeExplicitManifest(fs, d, Seq(f), kind = "optimize", expectedBase = Some(base))
+          writeExplicitManifest(fs, d, TableMeta(), Seq(f), kind = "optimize", expectedBase = Some(base))
           model = Set(f)
         case 2 => // rewrite against a stale base: must abort, model unchanged
           val base = versionManifests(fs, d).lastOption.map(_._1).getOrElse(0L)
           if (base >= 1) {
             val f = newFile()
             intercept[java.util.ConcurrentModificationException] {
-              writeExplicitManifest(fs, d, Seq(f), kind = "delete",
+              writeExplicitManifest(fs, d, TableMeta(), Seq(f), kind = "delete",
                 expectedBase = Some(base - 1))
             }
           }
@@ -256,7 +256,7 @@ class StagingProtocolSpec extends graft.SparkSpec {
           val base = versionManifests(fs, d).lastOption.map(_._1).getOrElse(0L)
           val carried = model.filter(_ => rng.nextBoolean())
           val f = newFile()
-          writeExplicitManifest(fs, d, (carried + f).toSeq, kind = "update",
+          writeExplicitManifest(fs, d, TableMeta(), (carried + f).toSeq, kind = "update",
             expectedBase = Some(base))
           model = carried + f
       }
