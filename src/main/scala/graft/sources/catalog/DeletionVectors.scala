@@ -286,12 +286,10 @@ object DeletionVectors {
       * version stops there, otherwise one table-record read and one read
       * per sidecar.
       */
-    def at(fs: FileSystem, d: Path, mf: Path): Deletes =
-      of(fs, d, GraftStagingCatalog.manifestDvs(fs, mf))
-
-    /** The named sidecars' deletes; the mode is read only when some are named. */
-    def of(fs: FileSystem, d: Path, names: Seq[String]): Deletes =
+    def at(fs: FileSystem, d: Path, mf: Path): Deletes = {
+      val names = GraftStagingCatalog.manifestDvs(fs, mf)
       if (names.isEmpty) none else load(fs, d, TableMeta.read(fs, d).mor, names)
+    }
 
     /** Decode each named sidecar once. Missing sidecars fail loudly — a DV
       * is commit metadata, not an advisory cache.

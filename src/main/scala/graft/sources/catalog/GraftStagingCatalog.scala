@@ -253,10 +253,9 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // resolved version number is the SNAPSHOT this table object reads; a
     // row-level rewrite through it commits against exactly that base
     // (optimistic concurrency).
-    // the table's declarations are read ONCE here and pinned with its
-    // snapshot: every scan, write and property answer comes from them
-    val meta = TableMeta.read(fs, d)
-    val (snapshotVersion, snapshotFiles, readPaths, dvNames) = resolveCurrent(d, meta)
+    // the table's declarations are read ONCE, by resolveCurrent, and pinned
+    // with its snapshot: every scan, write and property answer comes from them
+    val (meta, snapshotVersion, snapshotFiles, readPaths, dvNames) = resolveCurrent(d)
     new VersionedStagingTable(
       parquetTable(qualified(ident), readPaths, meta.schema),
       parquetTable(qualified(ident), Seq(d.toString), meta.schema),
@@ -264,12 +263,20 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** CURRENT-snapshot resolution shared by the plain read face and the
-    * metadata faces: (version, manifest file names, read paths, DV names).
+    * metadata faces: (record, version, manifest file names, read paths, DV
+    * names). The record is read AFTER the head probe: a merge-on-read commit
+    * marks its delta files unsorted in the record before it publishes its
+    * manifest ([[GraftStagingCatalog.markUnsorted]]), so a record read after
+    * the head lists every unsorted file the resolved snapshot can hold —
+    * read before it, a commit landing in between would leave fresh delta
+    * files in the snapshot that the ordering gate does not know about.
     */
-  private def resolveCurrent(d: Path, meta: TableMeta)
-      : (Long, Option[Seq[String]], Seq[String], Seq[String]) = {
+  private def resolveCurrent(d: Path)
+      : (TableMeta, Long, Option[Seq[String]], Seq[String], Seq[String]) = {
     import GraftStagingCatalog._
-    headManifest(fs, d) match {
+    val head = headManifest(fs, d)
+    val meta = TableMeta.read(fs, d)
+    val (v, files, paths, dvs) = head match {
         case Some((v, mf)) =>
           // COMMIT-GROUP members resolve through their group's latest
           // published vector, not the table head (CommitGroups): member
@@ -302,6 +309,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
           }
         case None => (0L, None, Seq(d.toString), Seq.empty[String])
       }
+    (meta, v, files, paths, dvs)
   }
 
   /** The writable face of a BRANCH (`cat.ns.t.branch_<name>`): reads the
@@ -552,7 +560,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         case Some(v) => probeManifest(fs, d, v).map(mf => manifestFiles(fs, mf))
           .getOrElse(throw new IllegalArgumentException(
             s"$d has no version $v (vacuumed between resolution and scan)"))
-        case None => resolveCurrent(d, TableMeta.read(fs, d))._2.getOrElse(dataFiles(fs, d))
+        case None => resolveCurrent(d)._3.getOrElse(dataFiles(fs, d))
       }
       files.sorted.map { f =>
         // a concurrent VACUUM can remove a file between manifest
@@ -2842,6 +2850,28 @@ object GraftStagingCatalog {
         if (m.sortOrder.isEmpty) m
         else m.copy(sortUnproven = Some((m.sortUnproven.map(_._1).getOrElse(0L),
           m.sortUnproven.map(_._2).getOrElse(Set.empty[String]) ++ files)))
+      }
+      ()
+    }
+
+  /** A rewrite's TWINS keep their originals' row order, so the twins of
+    * unproven files join the marker (twins of proven files stay proven).
+    * The marker is read here, after the caller resolved the head it
+    * rewrote: a commit that marked a file and published it after the
+    * caller loaded its record still hands its mark on to the file's twin.
+    */
+  private[catalog] def markTwinsUnsorted(fs: FileSystem, d: Path,
+      twins: Iterable[(String, Seq[String])]): Unit =
+    if (twins.nonEmpty) {
+      TableMeta.update(fs, d) { m =>
+        m.sortUnproven match {
+          case Some((since, unproven)) =>
+            val news = twins.iterator.collect {
+              case (old, ns) if unproven(old) => ns
+            }.flatten.toSet
+            if (news.isEmpty) m else m.copy(sortUnproven = Some((since, unproven ++ news)))
+          case None => m
+        }
       }
       ()
     }

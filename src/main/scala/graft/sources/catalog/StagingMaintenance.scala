@@ -245,15 +245,8 @@ object StagingMaintenance {
       }
     }
     // a twin preserves its original's row order, so it inherits the
-    // original's provenance: twins of UNPROVEN files re-enter the marker
-    // (the r13-advice false-readmission hazard), twins of proven files
-    // stay proven for free
-    meta.sortUnproven.foreach { case (_, unproven) =>
-      val twins = repl.iterator.collect {
-        case (old0, news) if unproven(old0) => news
-      }.flatten.toSeq
-      GraftStagingCatalog.markUnsorted(fs, d, twins)
-    }
+    // original's provenance (the r13-advice false-readmission hazard)
+    if (meta.sortOrder.nonEmpty) GraftStagingCatalog.markTwinsUnsorted(fs, d, repl)
     val coveredSet = covered.toSet
     val newFiles = all.flatMap(f =>
       if (coveredSet(f)) repl.getOrElse(f, Seq.empty) else Seq(f))
@@ -1563,8 +1556,9 @@ object StagingMaintenance {
             dvset -- prevDv, prevDv -- dvset, rids, rnext)
           prevF = fset; prevDv = dvset; dl
         }
+        val meta = TableMeta.read(fs, d)
         def dvTargets(names: Set[String]): Set[String] =
-          DeletionVectors.Deletes.of(fs, d, names.toSeq).covered
+          DeletionVectors.Deletes.load(fs, d, meta.mor, names.toSeq).covered
         val branchRemoved = deltas.iterator.flatMap(_.remF).toSet & forkFiles
         def conflict(what: String): Nothing =
           throw new java.util.ConcurrentModificationException(
@@ -1591,7 +1585,7 @@ object StagingMaintenance {
         // carried (main) files keep MAIN's bases, branch-added files keep
         // their BRANCH bases, and the watermark is the max of both logs —
         // the id twin of the file re-anchor.
-        val lineageOn = TableMeta.read(fs, d).rowLineage
+        val lineageOn = meta.rowLineage
         val (mainE, mainNext) =
           if (!lineageOn) (Map.empty[String, RowLineage.Entry], 0L)
           else if (mainHead == 0L) (Map.empty[String, RowLineage.Entry], 0L)

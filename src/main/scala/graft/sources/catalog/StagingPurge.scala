@@ -185,7 +185,7 @@ object StagingPurge {
     // original row indices the purge removes, per file. Driver-side
     // materialization bounded by the purge's matched rows IN THOSE FILES
     // (equality descriptors need no ordinals — keys survive a row drop).
-    val posAll = DeletionVectors.Deletes.of(fs, d, allDvNames).pos
+    val posAll = DeletionVectors.Deletes.load(fs, d, meta.mor, allDvNames).pos
     val posCovered: Set[String] = cand.filter(posAll.contains).toSet
     val purgedByFile: Map[String, Array[Long]] =
       if (posCovered.isEmpty) Map.empty
@@ -247,12 +247,7 @@ object StagingPurge {
     // preserves the original (possibly unsorted) row order under a fresh
     // name the provenance marker doesn't know — re-mark it, or the
     // ordering report would falsely re-admit (the exact r13-advice bug)
-    meta.sortUnproven.foreach { case (_, unproven) =>
-      val twins = repl.iterator.collect {
-        case (old0, news) if unproven(old0) => news
-      }.flatten.toSeq
-      markUnsorted(fs, d, twins)
-    }
+    if (meta.sortOrder.nonEmpty) markTwinsUnsorted(fs, d, repl)
     val candSet = candSet0
     val touchedManifests = GraftStagingCatalog.synchronized {
       val headNow = headManifest(fs, d).map(_._1).getOrElse(0L)

@@ -276,6 +276,12 @@ object TableClone {
         "— branch version numbers cannot anchor a main-log sync; re-clone " +
         "after the branch publishes")
     val lastV = lines(2).trim.toLong
+    val (headV, _) = headManifest(fs, src).getOrElse(
+      throw new IllegalStateException(
+        s"clone source $src has no readable head — was it dropped?"))
+    // the source record is read AFTER its head: a source commit marks its
+    // delta files unsorted before it publishes them, so this marker covers
+    // every file the head can hold
     val srcMeta = TableMeta.read(fs, src)
     // schema-drift guard: borrowed files written under an evolved source
     // schema would read wrongly through the clone's copied schema
@@ -284,9 +290,6 @@ object TableClone {
         s"sync: clone source $src changed its schema since the clone — " +
           "the borrowed files would mis-read through the clone's copied " +
           "schema; re-clone")
-    val (headV, _) = headManifest(fs, src).getOrElse(
-      throw new IllegalStateException(
-        s"clone source $src has no readable head — was it dropped?"))
     if (headV <= lastV) return (lastV, lastV, 0, -1L)
     require(!srcMeta.rowLineage,
       s"clone source $src enabled row lineage after the clone — re-clone")
@@ -345,9 +348,9 @@ object TableClone {
     }
     val absolute = added.toSeq.map(f =>
       if (isForeign(f)) f else new Path(src, f).toString)
-    val curFiles = headManifest(fs, d)
-      .map { case (_, mf) => manifestFiles(fs, mf) }.getOrElse(Seq.empty)
-    val base = headManifest(fs, d).map(_._1).getOrElse(0L)
+    val head = headManifest(fs, d)
+    val curFiles = head.map { case (_, mf) => manifestFiles(fs, mf) }.getOrElse(Seq.empty)
+    val base = head.map(_._1).getOrElse(0L)
     // transitive chains: files the SOURCE itself borrowed arrive as
     // foreign entries pointing at ITS upstream — register there too (once)
     // so that upstream's vacuum keeps walking this clone's manifests

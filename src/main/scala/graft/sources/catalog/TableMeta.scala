@@ -41,6 +41,13 @@ import DeletionVectors.MorMode
   * [[TableMeta.read]] is one `open` (a missing record means "nothing
   * declared") and [[TableMeta.update]] the only writer. A table load reads
   * the record once and answers every declaration from it.
+  *
+  * Concurrency: within one JVM a read never overlaps a write (see
+  * [[TableMeta.lock]]) and read-modify-writes serialize on the catalog
+  * monitor. Across driver JVMs the record keeps the catalog's single-driver
+  * contract ([[GraftStagingCatalog.tryCreateExclusive]]): two processes
+  * can interleave their read-modify-writes and the later write wins, and a
+  * reader in another process can land inside a write.
   */
 final case class TableMeta(
     schema: Option[StructType] = None,
@@ -184,10 +191,27 @@ object TableMeta {
 
   private def path(d: Path): Path = new Path(d, FileName)
 
+  /** Keeps this JVM's record reads out of its record writes. A write
+    * replaces the file in place (`create` with overwrite): until it closes,
+    * a reader can find the file empty, partial, or — where overwrite
+    * deletes first — missing, which reads as "nothing declared". Publishing
+    * by rename over the record would not close the window on the local
+    * file system: it renames the data file and its checksum file in two
+    * steps, and a reader between them fails its checksum. Writes are rare
+    * (DDL, maintenance, and merge-on-read commits on sort-ordered tables)
+    * and short, so readers share the lock and only a write excludes them.
+    */
+  private val lock = new java.util.concurrent.locks.ReentrantReadWriteLock()
+
   /** The table's declarations: one `open`; no record = nothing declared. */
-  def read(fs: FileSystem, d: Path): TableMeta =
-    try decode(GraftStagingCatalog.readString(fs, path(d)))
-    catch { case _: FileNotFoundException => TableMeta() }
+  def read(fs: FileSystem, d: Path): TableMeta = {
+    lock.readLock().lock()
+    val txt =
+      try Some(GraftStagingCatalog.readString(fs, path(d)))
+      catch { case _: FileNotFoundException => None }
+      finally lock.readLock().unlock()
+    txt.fold(TableMeta())(decode)
+  }
 
   /** The only writer: read-modify-write under the catalog monitor (the one
     * `markUnsorted`, `writeTags` and `setPartitionSpec` hold), so an ALTER
@@ -198,7 +222,11 @@ object TableMeta {
     GraftStagingCatalog.synchronized {
       val cur = read(fs, d)
       val next = f(cur)
-      if (next != cur) GraftStagingCatalog.writeString(fs, path(d), next.json)
+      if (next != cur) {
+        lock.writeLock().lock()
+        try GraftStagingCatalog.writeString(fs, path(d), next.json)
+        finally lock.writeLock().unlock()
+      }
       next
     }
 }

@@ -8,22 +8,31 @@ import org.apache.spark.sql.SparkSession
   * file name. Wrap a FileSystem directly (`new CountingFs(fs)`), or let
   * Hadoop build one as the `file` scheme while [[CountingFs.capture]] runs
   * — e.g. around a catalog's first use, so that catalog's handle counts.
+  * `before` runs ahead of every `open`, `getFileStatus` and `listStatus`,
+  * so a spec can land a concurrent change at an exact point of a read.
   */
 class CountingFs(inner: FileSystem) extends FilterFileSystem(inner) {
   def this() = { this(new LocalFileSystem()); CountingFs.built = this }
 
   val opens = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
   val stats = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+  @volatile var before: Path => Unit = _ => ()
 
   def reset(): Unit = synchronized { opens.clear(); stats.clear() }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    before(f)
     synchronized(opens(f.getName) += 1)
     super.open(f, bufferSize)
   }
   override def getFileStatus(f: Path): FileStatus = {
+    before(f)
     synchronized(stats(f.getName) += 1)
     super.getFileStatus(f)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    before(f)
+    super.listStatus(f)
   }
 }
 
