@@ -164,7 +164,10 @@ object FsParity {
           } finally f.close()
         }
       }
-    spark.read.format("binaryFile").load(s"$out/part_*.bin")
+    // the directory with a name filter, not a glob path: a glob makes
+    // FileStreamSink.hasMetadata probe a literal `part_*.bin` and log a
+    // FileNotFoundException on every run
+    spark.read.format("binaryFile").option("pathGlobFilter", "part_*.bin").load(out)
       .select(col("content")).as[Array[Byte]]
       .flatMap { bytes => // re-frame: one (doc_id, payload bytes, md5) per doc
         val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))

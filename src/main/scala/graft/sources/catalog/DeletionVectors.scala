@@ -3,6 +3,7 @@ package graft.sources.catalog
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader,
@@ -10,6 +11,7 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader,
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField,
   StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Equality-delete DELETION VECTORS — the merge-on-read (MOR) write path for
   * staging-catalog tables whose row-level churn is keyed but NOT clustered
@@ -698,8 +700,7 @@ object DeletionVectors {
     else {
       val spark = df.sparkSession
       import spark.implicits._
-      val hconf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
+      val hconf = ScanConf.broadcast(spark)
       // input_file_name() is only meaningful in the SCAN's stage — tag the
       // provenance columns ONCE, before any of the (shuffling,
       // non-broadcast) anti-joins below, and reuse the materialized values
@@ -715,10 +716,10 @@ object DeletionVectors {
         val keysDf =
           if (kr.isString)
             binRdd.flatMap(b => readKeyBin(spec.dirUri, b, isString = true,
-              hconf.value).map(_.asInstanceOf[String])).toDF("__gdvk")
+              hconf.value.value).map(_.asInstanceOf[String])).toDF("__gdvk")
           else
             binRdd.flatMap(b => readKeyBin(spec.dirUri, b, isString = false,
-              hconf.value).map(_.asInstanceOf[Long])).toDF("__gdvk")
+              hconf.value.value).map(_.asInstanceOf[Long])).toDF("__gdvk")
         val filesDf = kr.files.toSeq.map(f => (base(f), f))
           .toDF("__gk_f", "__gk_rel")
         val cov = s"__gk_cov_$i"
@@ -918,9 +919,7 @@ object DeletionVectors {
     fs.mkdirs(runDir)
     val runDirStr = runDir.toString
     val prefix = d.toString + "/"
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+    val confBc = ScanConf.broadcast(spark)
     val written: Array[(String, String, Long)] = matched
       .select(col("__f").cast("string").as("__f"), col("__p").cast("long").as("__p"))
       .repartition(col("__f"))
@@ -994,9 +993,7 @@ object DeletionVectors {
           // a 500M-ordinal delete
           val refs: Seq[(String, String)] = dv.runs.toSeq
             .flatMap { case (f, bins) => bins.map(f -> _) }
-          val confBc = spark.sparkContext.broadcast(
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf()))
+          val confBc = ScanConf.broadcast(spark)
           val runDf = spark.createDataset(refs)
             .repartition(math.min(refs.size,
               math.max(1, spark.sparkContext.defaultParallelism)))
@@ -1051,7 +1048,7 @@ object DeletionVectors {
     * safe, so pushdown stays on), `_row_id` via the lineage rule.
     */
   final class PosMetaReaderFactory(inner: PartitionReaderFactory, info: PosMetaInfo,
-      hconf: org.apache.spark.util.SerializableConfiguration)
+      hconf: Broadcast[SerializableConfiguration])
       extends PartitionReaderFactory {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 
@@ -1061,7 +1058,7 @@ object DeletionVectors {
       partition match {
         case PosMetaPartition(fp, rel, base, spec) =>
           val r = inner.createReader(fp)
-          val deleted = spec.resolve(hconf.value)
+          val deleted = spec.resolve(hconf.value.value)
           val active = !spec.isEmpty
           val relU = org.apache.spark.unsafe.types.UTF8String.fromString(rel)
           val idx = info.idxOrd
@@ -1169,7 +1166,7 @@ object DeletionVectors {
     */
   final class PosIdxReaderFactory(inner: PartitionReaderFactory, info: PosIdxInfo,
       tableDir: String,
-      hconf: org.apache.spark.util.SerializableConfiguration)
+      hconf: Broadcast[SerializableConfiguration])
       extends PartitionReaderFactory {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 
@@ -1193,7 +1190,7 @@ object DeletionVectors {
       partition match {
         case PosDvPartition(fp, spec) =>
           val base = inner.createReader(fp)
-          val deleted = spec.resolve(hconf.value)
+          val deleted = spec.resolve(hconf.value.value)
           val ord = info.idxOrdinal
           projected(new PartitionReader[InternalRow] {
             private var current: InternalRow = _
@@ -1247,14 +1244,14 @@ object DeletionVectors {
     * non-position partitions pass through to the delegate.
     */
   final class PosDvReaderFactory(inner: PartitionReaderFactory,
-      hconf: org.apache.spark.util.SerializableConfiguration)
+      hconf: Broadcast[SerializableConfiguration])
       extends PartitionReaderFactory {
     override def supportColumnarReads(partition: InputPartition): Boolean = false
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
       partition match {
         case PosDvPartition(fp, spec) =>
           val base = inner.createReader(fp)
-          val deleted = spec.resolve(hconf.value)
+          val deleted = spec.resolve(hconf.value.value)
           new PartitionReader[InternalRow] {
             private var pos = -1L
             private var current: InternalRow = _
@@ -1377,7 +1374,7 @@ object DeletionVectors {
     * folds the DVs away).
     */
   final class DvReaderFactory(inner: PartitionReaderFactory, info: DvScanInfo,
-      hconf: Option[org.apache.spark.util.SerializableConfiguration] = None)
+      hconf: Broadcast[SerializableConfiguration])
       extends PartitionReaderFactory {
     private val project: Option[Array[(Int, DataType, Boolean)]] =
       info.projectOrdinals.map(_.zip(info.outputSchema.fields).map { case (ord, f) =>
@@ -1409,8 +1406,7 @@ object DeletionVectors {
           // bin-backed keys resolve HERE, in the executor (cached per JVM;
           // integral keys as a sorted primitive array, not a boxed set)
           val membs: Seq[KeyMembership] =
-            binSpecs.map(sp => binMembership(sp, hconf.map(_.value).getOrElse(
-              new org.apache.hadoop.conf.Configuration())))
+            binSpecs.map(sp => binMembership(sp, hconf.value.value))
           val ord = info.keyOrdinal
           val isInt = info.keyType == IntegerType
           val isLong = info.keyType == LongType

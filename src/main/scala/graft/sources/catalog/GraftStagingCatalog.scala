@@ -68,6 +68,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * record invisible to Spark's file listing. DDL is intentionally
   * single-level (`root/<ns>/<table>`) to match the reference's
   * bucket/pseudo-directory nesting.
+  *
+  * Executors reach storage through the driver's Hadoop configuration
+  * (credentials, file-system bindings), about a thousand settings. Catalog
+  * scans, current and `VERSION AS OF` alike, and every deletion-vector
+  * reader, delta writer and executor-side maintenance job ship it through
+  * [[ScanConf]]: one broadcast per session, and one parquet reader factory
+  * per scan shape, reused until a setting changes. No factory embeds a
+  * Configuration, so a task does not deserialize one.
   */
 class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog
@@ -360,87 +368,66 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
   private def manifestTable(ident: Identifier, d: Path, mf: Path, label: String,
       version: Long): Table = {
     import GraftStagingCatalog._
-    // read only when the version needs it: no schema era covers it, or it
-    // carries deletion vectors
+    // read only when the version needs it: no schema era covers it, or a
+    // scan is built (deletion vectors, the stats flag, partition specs)
     lazy val meta = TableMeta.read(fs, d)
     val pt = parquetTable(s"${qualified(ident)}$label",
       manifestFiles(fs, mf).map(f => new Path(d, f).toString),
       schemaAtVersion(fs, d, version, meta))
     // a pinned MOR version reads under ITS deletion vectors — without this,
     // time travel would resurrect rows a MERGE had deleted by that version
-    val dvNames = manifestDvs(fs, mf)
-    if (dvNames.isEmpty) pt
-    else meta.mor match {
-      case m @ DeletionVectors.MorMode.Key(k) =>
-        pt.schema.fields.find(_.name.equalsIgnoreCase(k))
-          .fold[Table](pt)(new DvPinnedTable(pt, d, meta, m, dvNames, _))
-      case DeletionVectors.MorMode.Pos => new PosPinnedTable(pt, d, meta, dvNames)
-      case DeletionVectors.MorMode.Off => pt
-    }
+    new PinnedTable(pt, d, meta, manifestDvs(fs, mf))
   }
 
-  /** Time-travel face of a POSITION-delete (keyless-MOR) version: the
-    * pinned manifest's position DVs applied in the scan.
+  /** Read-only face of a time-travel-pinned version: the delegate's parquet
+    * stack behind the same zone-map scan the current face uses, so a pinned
+    * read prunes by the table's stats and ships the session's one Hadoop
+    * configuration ([[ScanConf]]). A merge-on-read version's deletion
+    * vectors apply in the scan: keyed DVs filter on the merge key, position
+    * DVs on a row-index-widened delegate (pushdown kept, as on the current
+    * face).
     */
-  private class PosPinnedTable(delegate: ParquetTable, dir: Path, meta: TableMeta,
-      dvNames: Seq[String])
-      extends Table with SupportsRead {
+  private class PinnedTable(delegate: ParquetTable, dir: Path, meta: => TableMeta,
+      dvNames: Seq[String]) extends Table with SupportsRead {
     private val tableFs = fs
-    private lazy val pos =
-      DeletionVectors.Deletes.load(tableFs, dir, DeletionVectors.MorMode.Pos, dvNames).pos
+    private lazy val mode =
+      if (dvNames.isEmpty) DeletionVectors.MorMode.Off else meta.mor
+    private lazy val keyField = mode match {
+      case DeletionVectors.MorMode.Key(k) =>
+        delegate.schema.fields.find(_.name.equalsIgnoreCase(k))
+      case _ => None
+    }
+    private lazy val deletes =
+      if (mode == DeletionVectors.MorMode.Off) DeletionVectors.Deletes.none
+      else DeletionVectors.Deletes.load(tableFs, dir, mode, dvNames)
     override def name(): String = delegate.name
     override def schema(): StructType = delegate.schema
     override def capabilities(): util.Set[TableCapability] =
       util.EnumSet.of(TableCapability.BATCH_READ)
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-      // pinned reads keep pushdown the same way the current-version face
-      // does: a row-index-widened delegate (see VersionedStagingTable)
-      val posCapable = delegate.userSpecifiedSchema.isDefined
+      val posCapable = mode == DeletionVectors.MorMode.Pos &&
+        delegate.userSpecifiedSchema.isDefined
       val scanSrc =
         if (!posCapable) delegate
         else delegate.copy(userSpecifiedSchema = delegate.userSpecifiedSchema.map(
           s => StructType(s.fields :+ DeletionVectors.RowIdxField)))
       scanSrc.newScanBuilder(options) match {
         case fb: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =>
-          val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+          val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir, meta.stats)
+          val keyed = keyField.isDefined
           new ZoneMapScanBuilder(fb, stats, nulls,
             dir.toString,
             () => StagingMaintenance.readBloomsFor(tableFs, dir),
-            Map.empty, None,
+            if (keyed) deletes.inline else Map.empty,
+            keyField,
             meta.partSpecsAll,
-            Map.empty,
-            pos,
-            posIdxCapable = posCapable)
+            posDvs = if (mode == DeletionVectors.MorMode.Pos) deletes.pos
+                     else DeletionVectors.PosDvs.empty,
+            posIdxCapable = posCapable,
+            keyRuns = if (keyed) deletes.keyRuns else Nil)
         case other => other
       }
     }
-  }
-
-  /** Read-only face of a time-travel-pinned MOR version: the delegate's
-    * parquet stack with that version's deletion vectors applied in the scan.
-    */
-  private class DvPinnedTable(delegate: ParquetTable, dir: Path, meta: TableMeta,
-      mode: DeletionVectors.MorMode, dvNames: Seq[String],
-      keyField: org.apache.spark.sql.types.StructField) extends Table with SupportsRead {
-    private val tableFs = fs
-    private lazy val deletes = DeletionVectors.Deletes.load(tableFs, dir, mode, dvNames)
-    override def name(): String = delegate.name
-    override def schema(): StructType = delegate.schema
-    override def capabilities(): util.Set[TableCapability] =
-      util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      delegate.newScanBuilder(options) match {
-        case fb: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =>
-          val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
-          new ZoneMapScanBuilder(fb, stats, nulls,
-            dir.toString,
-            () => StagingMaintenance.readBloomsFor(tableFs, dir),
-            deletes.inline,
-            Some(keyField),
-            meta.partSpecsAll,
-            keyRuns = deletes.keyRuns)
-        case other => other
-      }
   }
 
   override def loadTable(ident: Identifier, version: String): Table = {
@@ -753,7 +740,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
       // additionally consulted against the per-file [min,max] ranges and
       // non-intersecting files are dropped from the planned splits — plain
       // `SELECT … WHERE` gets file skipping without the prunedScan side API.
-      val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+      val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir, meta.stats)
       val dvOn = dvNames.nonEmpty && morKeyField.isDefined
       // non-identity partition transforms prune from the file PATH alone —
       // the scan wrapper earns its keep even with no stats sidecar.
@@ -1849,7 +1836,7 @@ private class StagingRowLevelOperation(
         }
       override def build(): org.apache.spark.sql.connector.read.Scan = {
         val scan = sb.build()
-        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir, meta.stats)
         scan match {
           case fscan: org.apache.spark.sql.execution.datasources.v2.FileScan =>
             // always wrap: with no stats or no filters nothing prunes, but
@@ -2124,7 +2111,7 @@ private class StagingDeltaOperation(
         }
       override def build(): org.apache.spark.sql.connector.read.Scan = {
         val scan = sb.build()
-        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir, meta.stats)
         scan match {
           case fscan: org.apache.spark.sql.execution.datasources.v2.FileScan =>
             // without lineage the row-level scan reads the FULL table
@@ -2218,9 +2205,7 @@ private class StagingDeltaOperation(
               private val binsOn = true
               private val runDir =
                 s"dvk-${java.util.UUID.randomUUID().toString.take(12)}"
-              private val whconf =
-                new org.apache.spark.util.SerializableConfiguration(
-                  SparkSession.active.sessionState.newHadoopConf())
+              private val whconf = ScanConf.broadcast(SparkSession.active)
 
               override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
                   : org.apache.spark.sql.connector.write.DeltaWriterFactory =
@@ -2237,7 +2222,7 @@ private class StagingDeltaOperation(
                   binCap = if (binsOn) inlineCap else Int.MaxValue,
                   dirStr = dir.toString,
                   runDir = runDir,
-                  hconf = Some(whconf))
+                  hconf = whconf)
 
               override def useCommitCoordinator(): Boolean =
                 !deleteOnly && inner.useCommitCoordinator()
@@ -2320,10 +2305,7 @@ private class StagingDeltaOperation(
                       if (snap.nonEmpty && applies2.size >= frac * snap.size) {
                         val suppressed = binCount + deleted.size
                         val rowsCovered = GraftStagingCatalog.rowCountOf(
-                          SparkSession.active,
-                          new org.apache.spark.util.SerializableConfiguration(
-                            SparkSession.active.sessionState.newHadoopConf()),
-                          dir, applies2.toSeq)
+                          SparkSession.active, dir, applies2.toSeq)
                         if (rowsCovered > 0L && suppressed >= frac * rowsCovered) {
                           // a fresh record: this commit's provenance
                           // edit must reach the fold's twins
@@ -2365,7 +2347,7 @@ private class StagingDeltaWriterFactory(
     binCap: Int = Int.MaxValue,
     dirStr: String = "",
     runDir: String = "",
-    hconf: Option[org.apache.spark.util.SerializableConfiguration] = None)
+    hconf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   import org.apache.spark.sql.catalyst.InternalRow
 
@@ -2420,8 +2402,7 @@ private class StagingDeltaWriterFactory(
         else {
           // executor-side spill: the task's keys become one immutable bin
           val d = new org.apache.hadoop.fs.Path(dirStr)
-          val fs = d.getFileSystem(hconf.map(_.value).getOrElse(
-            new org.apache.hadoop.conf.Configuration()))
+          val fs = d.getFileSystem(hconf.value.value)
           val bin = DeletionVectors.writeKeyBin(fs, d, runDir,
             deleted.iterator, keyKind == 2, taskId)
           DvDeltaMsg(Option(w).map(_.commit()), Array.empty,
@@ -2512,7 +2493,7 @@ private class StagingPosDeltaOperation(
         sch => StructType(sch.fields ++ carriers)))
     scanSrc.newScanBuilder(options) match {
       case fb: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder =>
-        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir)
+        val (stats, nulls) = StagingMaintenance.readStatsFor(tableFs, dir, meta.stats)
         new ZoneMapScanBuilder(fb, stats, nulls,
           dir.toString,
           () => StagingMaintenance.readBloomsFor(tableFs, dir),
@@ -2583,8 +2564,7 @@ private class StagingPosDeltaOperation(
                 tableFs.mkdirs(rd)
                 rd.toString
               }
-              private val hconf = new org.apache.spark.util.SerializableConfiguration(
-                SparkSession.active.sessionState.newHadoopConf())
+              private val hconf = ScanConf.broadcast(SparkSession.active)
 
               override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
                   : org.apache.spark.sql.connector.write.DeltaWriterFactory =
@@ -2653,7 +2633,7 @@ private class StagingPosDeltaOperation(
                         val resolved = coveredN.toSeq.flatMap(f =>
                           if (snapSet(f)) Some(f) else foreignByBare.get(f))
                         val rowsCovered = GraftStagingCatalog.rowCountOf(
-                          SparkSession.active, hconf, dir, resolved)
+                          SparkSession.active, dir, resolved)
                         if (rowsCovered > 0L && suppressed >= frac * rowsCovered) {
                           // a fresh record: this commit's provenance
                           // edit must reach the fold's twins
@@ -2704,7 +2684,7 @@ private class StagingPosDeltaWriterFactory(
     check: Option[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
     lineageMetaOrd: Int,
     runDirStr: String,
-    hconf: org.apache.spark.util.SerializableConfiguration)
+    hconf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   import org.apache.spark.sql.catalyst.InternalRow
 
@@ -2751,7 +2731,7 @@ private class StagingPosDeltaWriterFactory(
       override def insert(row: InternalRow): Unit = sink(row, null)
 
       override def commit(): WriterCommitMessage = {
-        val conf = hconf.value
+        val conf = hconf.value.value
         val bins = perFile.iterator.map { case (rel, ords) =>
           val sorted = ords.toArray
           java.util.Arrays.sort(sorted)
@@ -3343,17 +3323,17 @@ object GraftStagingCatalog {
     * a 100k-file table never serializes metadata I/O on the driver.
     */
   private[catalog] def rowCountsOf(spark: SparkSession,
-      hconf: org.apache.spark.util.SerializableConfiguration,
       d: Path, files: Seq[String]): Map[String, Long] = {
     if (files.isEmpty) Map.empty
     else {
       val dirStr = d.toString
+      val hconf = ScanConf.broadcast(spark)
       spark.sparkContext.parallelize(files,
           math.min(files.size, math.max(1, spark.sparkContext.defaultParallelism)))
         .map { f =>
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new Path(dirStr, f), hconf.value))
+              new Path(dirStr, f), hconf.value.value))
           try f -> r.getRecordCount finally r.close()
         }.collect().toMap
     }
@@ -3361,9 +3341,8 @@ object GraftStagingCatalog {
 
   /** Total row count across `files` — the [[rowCountsOf]] sum. */
   private[catalog] def rowCountOf(spark: SparkSession,
-      hconf: org.apache.spark.util.SerializableConfiguration,
       d: Path, files: Seq[String]): Long =
-    rowCountsOf(spark, hconf, d, files).valuesIterator.sum
+    rowCountsOf(spark, d, files).valuesIterator.sum
 
   /** Extract one NAMED string array from a manifest — scoped to the field,
     * not the whole document (a manifest may carry several arrays: `files`
@@ -3848,7 +3827,7 @@ object GraftStagingCatalog {
     val current = snapshotFiles.getOrElse(
       headManifest(fs, d).map { case (_, mf) => manifestFiles(fs, mf) }
         .getOrElse(dataFiles(fs, d)))
-    val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d)
+    val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d, meta.stats)
     val specs = meta.partSpecsAll
     // zone-map candidate split: files whose ranges cannot match are never read
     val candidates = current.filter(f =>
@@ -3962,7 +3941,7 @@ object GraftStagingCatalog {
     val current = head.map(parseManifestFiles)
       .orElse(noManifestCurrent)
       .getOrElse(dataFiles(fs, d))
-    val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d)
+    val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d, meta.stats)
     // conjunction semantics, three ways per file:
     //  - no filter can match any row       → UNTOUCHED (carried by name)
     //  - every row provably matches ALL    → DROPPED metadata-only (no

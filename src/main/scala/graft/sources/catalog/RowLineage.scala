@@ -343,7 +343,8 @@ object RowLineage {
       info: LineageScanInfo,
       keyOrd: Int, // -1 = no equality-DV key (keyless position mode)
       keyKind: Int, // 0 = int, 1 = long, 2 = string (ignored when keyOrd<0)
-      hconf: org.apache.spark.util.SerializableConfiguration)
+      hconf: org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration])
       extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow,
@@ -357,8 +358,8 @@ object RowLineage {
         case MorLineagePartition(fp, base, delKeys, delSpec, binSpecs) =>
           val r = inner.createReader(fp)
           // r14 distributed key bins resolve here, in the executor
-          val membs = binSpecs.map(sp => DeletionVectors.binMembership(sp, hconf.value))
-          val delPos = delSpec.resolve(hconf.value)
+          val membs = binSpecs.map(sp => DeletionVectors.binMembership(sp, hconf.value.value))
+          val delPos = delSpec.resolve(hconf.value.value)
           val posActive = !delSpec.isEmpty
           val joinOrd = info.delegateArity
           val exprs = info.requested.fields.toIndexedSeq.zip(info.outOrds).map {

@@ -101,9 +101,7 @@ object StagingMaintenance {
     val runDir = new Path(new Path(d, DeletionVectors.DvDir), runDirName)
     fs.mkdirs(runDir)
     val runDirStr = runDir.toString
-    val confBc = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf()))
+    val confBc = ScanConf.broadcast(spark)
     val work: Seq[(String, Seq[Long], Seq[String])] = pos.coveredFiles.toSeq.sorted
       .map(f => (f, pos.map.getOrElse(f, Set.empty).toSeq,
         pos.runs.getOrElse(f, Seq.empty)))
@@ -1002,12 +1000,13 @@ object StagingMaintenance {
     * come from the 7-field lines (ANALYZE ≥ r8) and are absent for legacy
     * lines and when any chunk's null count was unavailable — every
     * consumer treats absence as unknown (no IS NULL pruning, no
-    * all-rows-match proofs).
+    * all-rows-match proofs). `written = false` (the table record's
+    * [[TableMeta.stats]] flag) skips the probe: no sidecar was ever written.
     */
-  private[catalog] def readStatsFor(fs: FileSystem, d: Path)
+  private[catalog] def readStatsFor(fs: FileSystem, d: Path, written: Boolean = true)
       : (Map[(String, String), ZStat], Map[(String, String), (Long, Long)]) = {
     val f = new Path(d, StatsSidecar)
-    if (!isFile(fs, f)) (Map.empty, Map.empty)
+    if (!written || !isFile(fs, f)) (Map.empty, Map.empty)
     else {
       val lines = readString(fs, f).split('\n').toIndexedSeq.filter(_.nonEmpty)
         .map(_.split("\t", 8))
@@ -1050,8 +1049,15 @@ object StagingMaintenance {
       nulls: Map[(String, String), (Long, Long)]): Unit = {
     val body = stats.toSeq.sortBy { case ((f, c), _) => (f, c) }
       .map { case ((f, c), z) => statLine(f, c, z, nulls.get((f, c))) }
-    if (body.isEmpty) fs.delete(new Path(d, StatsSidecar), false)
-    else writeString(fs, new Path(d, StatsSidecar), body.mkString("", "\n", "\n"))
+    // the record's flag is set before the sidecar lands and cleared after it
+    // is gone: a reader that trusts the flag never misses a written sidecar
+    if (body.isEmpty) {
+      fs.delete(new Path(d, StatsSidecar), false)
+      TableMeta.update(fs, d)(_.copy(stats = false))
+    } else {
+      TableMeta.update(fs, d)(_.copy(stats = true))
+      writeString(fs, new Path(d, StatsSidecar), body.mkString("", "\n", "\n"))
+    }
   }
 
   /** Files the CURRENT version reads (manifest-pinned when versioned). */
@@ -2606,12 +2612,13 @@ private[catalog] class ZoneMapPrunedScan(delegate: FileScan,
     if (dv.isDefined || posDvs.nonEmpty || lineage.isDefined || posMeta.isDefined)
       Scan.ColumnarSupportMode.PARTITION_DEFINED
     else delegate.columnarSupportMode()
+  // planning asks twice (columnar support, then the RDD); one lookup per scan
+  private lazy val innerFactory = ScanConf.readerFactory(delegate)
   override def createReaderFactory(): PartitionReaderFactory = {
-    val inner = delegate.createReaderFactory()
+    val inner = innerFactory
     // executors resolve distributed run sidecars through the DRIVER's
-    // Hadoop conf (credentials, fs bindings) — shipped serialized
-    lazy val hconf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+    // Hadoop conf (credentials, fs bindings) — the session's one broadcast
+    lazy val hconf = ScanConf.broadcast(org.apache.spark.sql.SparkSession.active)
     if (posMeta.isDefined)
       return new DeletionVectors.PosMetaReaderFactory(inner, posMeta.get, hconf)
     lineage match {
@@ -2633,7 +2640,7 @@ private[catalog] class ZoneMapPrunedScan(delegate: FileScan,
           new DeletionVectors.PosIdxReaderFactory(inner, info, tableDir, hconf)
         case None =>
           val keyed = dv.fold(inner)(info =>
-            new DeletionVectors.DvReaderFactory(inner, info, Some(hconf)))
+            new DeletionVectors.DvReaderFactory(inner, info, hconf))
           if (posDvs.isEmpty) keyed
           else new DeletionVectors.PosDvReaderFactory(keyed, hconf)
       }

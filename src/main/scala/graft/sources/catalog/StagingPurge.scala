@@ -266,8 +266,7 @@ object StagingPurge {
         val replAll: Map[String, Seq[String]] =
           cand.map(f => f -> repl.getOrElse(f, Seq.empty).toSeq).toMap
         // twin row counts in ONE executor-parallel footer pass
-        val twinRows: Map[String, Long] = rowCountsOf(spark,
-          new org.apache.spark.util.SerializableConfiguration(conf), d,
+        val twinRows: Map[String, Long] = rowCountsOf(spark, d,
           posCovered.iterator.flatMap(replAll(_)).toSeq)
         val twinCum: Map[String, Array[Long]] = posCovered.iterator.map { f =>
           f -> replAll(f).map(twinRows).scanLeft(0L)(_ + _).toArray

@@ -166,6 +166,7 @@ object TableClone {
     // the clone's marker names the borrowed unproven files by absolute path
     val dstMeta = TableMeta.update(fs, dst)(_ => srcMeta.copy(
       group = None, checkpointEvery = TableMeta.DefaultCkptInterval,
+      stats = false, // set below when stats transfer
       sortUnproven =
         if (srcMeta.sortOrder.isEmpty) None
         else srcMeta.sortUnproven.flatMap { case (_, u) =>

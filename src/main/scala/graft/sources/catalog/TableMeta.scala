@@ -36,6 +36,10 @@ import DeletionVectors.MorMode
   *  - `check`: the CHECK constraint's SQL text.
   *  - `rowLineage`: per-file row-id bases in every manifest ([[RowLineage]]).
   *  - `group`: the commit group the table is a member of ([[CommitGroups]]).
+  *  - `stats`: a zone-map sidecar was written
+  *    ([[StagingMaintenance.writeStats]]); scans of a table that never had
+  *    one skip the sidecar probe. Set before the sidecar is written, so a
+  *    set flag whose sidecar is gone reads as "no stats".
   *
   * [[json]] is the only encoder and [[TableMeta.decode]] the only decoder;
   * [[TableMeta.read]] is one `open` (a missing record means "nothing
@@ -63,7 +67,8 @@ final case class TableMeta(
     autoFold: Option[Double] = None,
     check: Option[String] = None,
     rowLineage: Boolean = false,
-    group: Option[String] = None) {
+    group: Option[String] = None,
+    stats: Boolean = false) {
   import GraftStagingCatalog.{parsePartSpec, PartSpec}
 
   /** The current partition specs. */
@@ -109,7 +114,8 @@ final case class TableMeta(
       "autoFoldFraction" -> opt(autoFold)(JDouble(_)),
       "check" -> opt(check)(JString(_)),
       "rowLineage" -> (if (rowLineage) JBool(true) else JNothing),
-      "group" -> opt(group)(JString(_))
+      "group" -> opt(group)(JString(_)),
+      "stats" -> (if (stats) JBool(true) else JNothing)
     ).filter(_._2 != JNothing)))
   }
 }
@@ -186,7 +192,8 @@ object TableMeta {
       },
       check = str("check"),
       rowLineage = bool("rowLineage"),
-      group = str("group"))
+      group = str("group"),
+      stats = bool("stats"))
   }
 
   private def path(d: Path): Path = new Path(d, FileName)

@@ -23,7 +23,13 @@ class CountingFs(inner: FileSystem) extends FilterFileSystem(inner) {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     before(f)
     synchronized(opens(f.getName) += 1)
+    CountingFs.allOpens.merge(f.getName, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
     super.open(f, bufferSize)
+  }
+  // Parquet's readers open data files through the `openFile` builder
+  override def openFile(f: Path): org.apache.hadoop.fs.FutureDataInputStreamBuilder = {
+    CountingFs.allOpens.merge(f.getName, 1, (a: Integer, b: Integer) => Integer.valueOf(a + b))
+    super.openFile(f)
   }
   override def getFileStatus(f: Path): FileStatus = {
     before(f)
@@ -39,11 +45,18 @@ class CountingFs(inner: FileSystem) extends FilterFileSystem(inner) {
 object CountingFs {
   @volatile private var built: CountingFs = _
 
+  /** `open` and `openFile` calls by file name over every instance built
+    * since the last [[capture]] began — executor-side reads build their own
+    * instances.
+    */
+  val allOpens = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+
   /** Runs `body` with every `file:` FileSystem the session builds being a
     * fresh, uncached [[CountingFs]]; returns the last one built.
     */
   def capture(spark: SparkSession)(body: => Unit): CountingFs = {
     built = null
+    allOpens.clear()
     spark.conf.set("fs.file.impl", classOf[CountingFs].getName)
     spark.conf.set("fs.file.impl.disable.cache", "true")
     try body

@@ -63,7 +63,8 @@ class TableMetaSpec extends SparkSpec {
       autoFold = Some(0.5),
       check = Some("v >= 0 AND k <> 'x,\"y\"'"),
       rowLineage = true,
-      group = Some("serve"))
+      group = Some("serve"),
+      stats = true)
     assert(TableMeta.decode(full.json) === full)
     assert(TableMeta.decode(full.copy(mor = MorMode.Pos).json).mor === MorMode.Pos)
     assert(TableMeta().json === "{}")
@@ -96,6 +97,43 @@ class TableMetaSpec extends SparkSpec {
     val touched = Retired.filter(n => cfs.stats(n) > 0 || cfs.opens(n) > 0)
     assert(touched.isEmpty, s"retired sidecars probed: $touched")
     assert(spark.table("meta_cnt.ws.t").count() === 100L)
+  }
+
+  test("stats flag: scans of a never-ANALYZEd table probe no stats sidecar; a flag without its sidecar reads as no stats") {
+    val root = mount("meta_stats")
+    val cfs = CountingFs.capture(spark) { catalog("meta_stats"); () }
+    spark.sql("CREATE NAMESPACE meta_stats.ws")
+    spark.sql("CREATE TABLE meta_stats.ws.t (k BIGINT, v BIGINT)")
+    spark.sql("INSERT INTO meta_stats.ws.t SELECT id, id FROM range(0, 100)")
+    spark.sql("INSERT INTO meta_stats.ws.t SELECT id, id FROM range(100, 200)")
+    val sidecar = "_graft_stats.tsv"
+    def scanOnce(version: Option[String]): Unit = {
+      val id = Identifier.of(Array("ws"), "t")
+      val t = version.fold(catalog("meta_stats").loadTable(id))(
+        catalog("meta_stats").loadTable(id, _))
+      t.asInstanceOf[SupportsRead].newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+      ()
+    }
+    cfs.reset()
+    scanOnce(None)
+    scanOnce(Some("1"))
+    assert(!recordOf(root, "t").stats)
+    assert(cfs.stats(sidecar) === 0 && cfs.opens(sidecar) === 0,
+      s"stats sidecar probed on a never-ANALYZEd table: ${cfs.stats} ${cfs.opens}")
+    StagingMaintenance.analyze(spark, "meta_stats", "ws", "t", Seq("k"))
+    assert(recordOf(root, "t").stats, "ANALYZE must set the record's stats flag")
+    cfs.reset()
+    scanOnce(None)
+    assert(cfs.opens(sidecar) === 1, cfs.opens)
+    assert(spark.sql("SELECT count(*) FROM meta_stats.ws.t WHERE k >= 150")
+      .head().getLong(0) === 50L)
+    val d = new Path(s"$root/ws/t")
+    d.getFileSystem(spark.sessionState.newHadoopConf()).delete(new Path(d, sidecar), false)
+    assert(recordOf(root, "t").stats)
+    assert(spark.sql("SELECT count(*) FROM meta_stats.ws.t WHERE k >= 150")
+      .head().getLong(0) === 50L, "a flag whose sidecar is gone must read as no stats")
+    assert(spark.sql("SELECT count(*) FROM meta_stats.ws.t VERSION AS OF 1")
+      .head().getLong(0) === 100L)
   }
 
   test("SET and UNSET of every ALTER-able property: properties() shows the same map") {
