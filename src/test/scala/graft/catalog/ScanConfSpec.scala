@@ -184,8 +184,8 @@ class ScanConfSpec extends SparkSpec {
       case _                                                   => Nil
     }
     val cmd = Seq(javaBin, "-Xmx768m", "-Dspark.ui.enabled=false") ++ opens ++
-      Seq("-cp", System.getProperty("java.class.path"), classOf[ScanConfRestart].getName
-        .stripSuffix("$"), root)
+      Seq("-cp", System.getProperty("java.class.path"),
+        ScanConfRestart.getClass.getName.stripSuffix("$"), root)
     val log = new StringBuilder
     val exit = scala.sys.process.Process(cmd)
       .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n'),
@@ -215,7 +215,6 @@ class ScanConfSpec extends SparkSpec {
   * the context, rebuilds it, and reads again. The second context must get
   * its own broadcast and factory, and its reads must work.
   */
-class ScanConfRestart
 object ScanConfRestart {
   def main(args: Array[String]): Unit = {
     val root = args(0)
