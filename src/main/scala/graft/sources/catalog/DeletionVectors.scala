@@ -205,6 +205,13 @@ object DeletionVectors {
       ("\"" + field + "\":\"([^\"]+)\"").r.findFirstMatchIn(txt).map(_.group(1))
     private def num(txt: String, field: String): Option[Long] =
       ("\"" + field + "\":(\\d+)").r.findFirstMatchIn(txt).map(_.group(1).toLong)
+    /** One NAMED string array, scoped to the field. */
+    private def parseArray(txt: String, field: String): Seq[String] =
+      ("\"" + field + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt) match {
+        case Some(m) if m.group(1).trim.nonEmpty =>
+          "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
+        case _ => Seq.empty
+      }
 
     /** Decode sidecar `name`'s text — the only reader of the type tag. */
     def decode(name: String, txt: String): DvSidecar =
@@ -222,8 +229,8 @@ object DeletionVectors {
           str(txt, "dir").getOrElse(
             throw new IllegalStateException(s"keyrun descriptor $name names no dir")),
           num(txt, "count").getOrElse(0L),
-          GraftStagingCatalog.parseArray(txt, "bins"),
-          GraftStagingCatalog.parseArray(txt, "files").map(dec))
+          parseArray(txt, "bins"),
+          parseArray(txt, "files").map(dec))
       } else {
         val isString = txt.contains("\"type\":\"string\"")
         val keysBody = "\"keys\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
@@ -235,7 +242,7 @@ object DeletionVectors {
           else keysBody.split(',').iterator.map(_.trim).filter(_.nonEmpty)
             .map(_.toLong: Any).toSet
         Keys(str(txt, "key").map(dec).getOrElse(""), isString,
-          GraftStagingCatalog.parseArray(txt, "files"), keys)
+          parseArray(txt, "files"), keys)
       }
 
     /** Read and decode sidecar `name` of table `d`. */
@@ -289,7 +296,7 @@ object DeletionVectors {
       * per sidecar.
       */
     def at(fs: FileSystem, d: Path, mf: Path): Deletes = {
-      val names = GraftStagingCatalog.manifestDvs(fs, mf)
+      val names = Manifest.read(fs, mf).dvs
       if (names.isEmpty) none else load(fs, d, TableMeta.read(fs, d).mor, names)
     }
 

@@ -263,28 +263,30 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // (optimistic concurrency).
     // the table's declarations are read ONCE, by resolveCurrent, and pinned
     // with its snapshot: every scan, write and property answer comes from them
-    val (meta, snapshotVersion, snapshotFiles, readPaths, dvNames) = resolveCurrent(d)
+    val (meta, snapshotVersion, snapshot) = resolveCurrent(d)
+    val readPaths = snapshot.fold(Seq(d.toString))(_.files.map(f => new Path(d, f).toString))
     new VersionedStagingTable(
       parquetTable(qualified(ident), readPaths, meta.schema),
       parquetTable(qualified(ident), Seq(d.toString), meta.schema),
-      d, meta, snapshotVersion, snapshotFiles, dvNames)
+      d, meta, snapshotVersion, snapshot)
   }
 
   /** CURRENT-snapshot resolution shared by the plain read face and the
-    * metadata faces: (record, version, manifest file names, read paths, DV
-    * names). The record is read AFTER the head probe: a merge-on-read commit
+    * metadata faces: (record, version, manifest). No manifest = a table
+    * with no commits, read from its directory; a commit-group pin at
+    * version 0 reads as an empty manifest. The record is read AFTER the
+    * head probe: a merge-on-read commit
     * marks its delta files unsorted in the record before it publishes its
     * manifest ([[GraftStagingCatalog.markUnsorted]]), so a record read after
     * the head lists every unsorted file the resolved snapshot can hold —
     * read before it, a commit landing in between would leave fresh delta
     * files in the snapshot that the ordering gate does not know about.
     */
-  private def resolveCurrent(d: Path)
-      : (TableMeta, Long, Option[Seq[String]], Seq[String], Seq[String]) = {
+  private def resolveCurrent(d: Path): (TableMeta, Long, Option[Manifest]) = {
     import GraftStagingCatalog._
     val head = headManifest(fs, d)
     val meta = TableMeta.read(fs, d)
-    val (v, files, paths, dvs) = head match {
+    val (v, snapshot) = head match {
         case Some((v, mf)) =>
           // COMMIT-GROUP members resolve through their group's latest
           // published vector, not the table head (CommitGroups): member
@@ -297,27 +299,14 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
           // in-flight group publication surfaces as a version conflict
           // instead of silently rewriting unpublished state.
           CommitGroups.pinnedVersion(fs, d, meta.group).filter(_ < v) match {
-            case Some(pv) if pv <= 0L =>
-              (0L, Some(Seq.empty[String]), Seq.empty[String], Seq.empty[String])
-            case Some(pv) =>
-              probeManifest(fs, d, pv) match {
-                case Some(pmf) =>
-                  val names = manifestFiles(fs, pmf)
-                  (pv, Some(names), names.map(f => new Path(d, f).toString),
-                    manifestDvs(fs, pmf))
-                case None =>
-                  val names = manifestFiles(fs, mf)
-                  (v, Some(names), names.map(f => new Path(d, f).toString),
-                    manifestDvs(fs, mf))
-              }
-            case None =>
-              val names = manifestFiles(fs, mf)
-              (v, Some(names), names.map(f => new Path(d, f).toString),
-                manifestDvs(fs, mf))
+            case Some(pv) if pv <= 0L => (0L, Some(Manifest(0L)))
+            case Some(pv) => readVersion(fs, d, pv).map(pv -> Some(_))
+              .getOrElse(v -> Some(Manifest.read(fs, mf)))
+            case None => (v, Some(Manifest.read(fs, mf)))
           }
-        case None => (0L, None, Seq(d.toString), Seq.empty[String])
+        case None => (0L, None)
       }
-    (meta, v, files, paths, dvs)
+    (meta, v, snapshot)
   }
 
   /** The writable face of a BRANCH (`cat.ns.t.branch_<name>`): reads the
@@ -336,16 +325,14 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         s"$catalogName: ${ident.name()} has no branch '$bname'" +
           (if (branches.isEmpty) " (no branches exist — CALL branch(ns, tbl, name))"
            else s" (branches: ${branches.keys.toSeq.sorted.mkString(", ")})"))
-    val (v, files, dvNames) = branchHead(fs, d, bname) match {
-      case Some((bv, mf)) => (bv, manifestFiles(fs, mf), manifestDvs(fs, mf))
-      case None           => (0L, Seq.empty[String], Seq.empty[String]) // forked empty
-    }
+    // a branch forked at an empty table reads as an empty manifest
+    val (v, snapshot) = readHead(fs, d, Some(bname)).getOrElse((0L, Manifest(0L)))
     val label = s"${qualified(ident)}@branch_$bname"
     val meta = TableMeta.read(fs, d)
     new VersionedStagingTable(
-      parquetTable(label, files.map(f => new Path(d, f).toString), meta.schema),
+      parquetTable(label, snapshot.files.map(f => new Path(d, f).toString), meta.schema),
       parquetTable(label, Seq(d.toString), meta.schema),
-      d, meta, v, Some(files), dvNames, branch = Some(bname))
+      d, meta, v, Some(snapshot), branch = Some(bname))
   }
 
   // ---- time travel -------------------------------------------------------
@@ -371,12 +358,13 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     // read only when the version needs it: no schema era covers it, or a
     // scan is built (deletion vectors, the stats flag, partition specs)
     lazy val meta = TableMeta.read(fs, d)
+    val m = Manifest.read(fs, mf)
     val pt = parquetTable(s"${qualified(ident)}$label",
-      manifestFiles(fs, mf).map(f => new Path(d, f).toString),
+      m.files.map(f => new Path(d, f).toString),
       schemaAtVersion(fs, d, version, meta))
     // a pinned MOR version reads under ITS deletion vectors — without this,
     // time travel would resurrect rows a MERGE had deleted by that version
-    new PinnedTable(pt, d, meta, manifestDvs(fs, mf))
+    new PinnedTable(pt, d, meta, m.dvs)
   }
 
   /** Read-only face of a time-travel-pinned version: the delegate's parquet
@@ -492,7 +480,7 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         .flatMap { case (hv, _) => probeManifest(fs, d, hv).map(hv -> _) }
     }
     val at = viaCkpt.orElse {
-      versionManifests(fs, d).takeWhile { case (_, f) => commitMillis(fs, f) <= millis }
+      versionManifests(fs, d).takeWhile { case (_, f) => Manifest.read(fs, f).ts <= millis }
         .lastOption
     }
     val (v, mf) = at.getOrElse(throw new IllegalArgumentException(
@@ -544,10 +532,10 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     import org.apache.spark.unsafe.types.UTF8String
     def fileEntries(): Seq[(String, Long, String)] = {
       val files = pinned match {
-        case Some(v) => probeManifest(fs, d, v).map(mf => manifestFiles(fs, mf))
+        case Some(v) => readVersion(fs, d, v).map(_.files)
           .getOrElse(throw new IllegalArgumentException(
             s"$d has no version $v (vacuumed between resolution and scan)"))
-        case None => resolveCurrent(d)._3.getOrElse(dataFiles(fs, d))
+        case None => resolveCurrent(d)._3.fold(dataFiles(fs, d))(_.files)
       }
       files.sorted.map { f =>
         // a concurrent VACUUM can remove a file between manifest
@@ -586,12 +574,11 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
         versionManifests(fs, d)
           .filter { case (v, _) => pinned.forall(v <= _) }
           .map { case (v, mf) =>
-          new GenericInternalRow(Array[Any](v,
-            UTF8String.fromString(manifestKind(fs, mf)),
-            commitMillis(fs, mf) * 1000L,
-            manifestFiles(fs, mf).size))
-            : org.apache.spark.sql.catalyst.InternalRow
-        }.toArray
+            val m = Manifest.read(fs, mf)
+            new GenericInternalRow(Array[Any](v,
+              UTF8String.fromString(m.kind), m.ts * 1000L, m.files.size))
+              : org.apache.spark.sql.catalyst.InternalRow
+          }.toArray
       case other => throw new IllegalArgumentException(s"unknown metadata face $other")
     }
   }
@@ -608,35 +595,24 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
     */
   private class VersionedStagingTable(readDelegate: ParquetTable,
       writeDelegate: ParquetTable, dir: Path, meta: TableMeta, snapshotVersion: Long,
-      snapshotFiles: Option[Seq[String]], dvNames: Seq[String] = Seq.empty,
-      branch: Option[String] = None)
+      snapshot: Option[Manifest], branch: Option[String] = None)
       extends Table with SupportsRead with SupportsWrite
       with org.apache.spark.sql.connector.catalog.SupportsDelete
       with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
       with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
     private val tableFs = fs
+    /** The snapshot's files; None = a table with no commits, read from its
+      * directory.
+      */
+    private val snapshotFiles = snapshot.map(_.files)
+    private val dvNames = snapshot.fold(Seq.empty[String])(_.dvs)
     /** Row lineage declared at CREATE ([[RowLineage]]): exposes the
       * `_row_id` metadata column (`SELECT _row_id FROM t` in plain SQL) and
       * routes row-level rewrites through the id-preserving write path.
       */
     private val lineageOn = meta.rowLineage
-    /** This snapshot's per-file id bases (empty map off-lineage). A BRANCH
-      * face resolves its vector from the branch log (falling back to the
-      * fork manifest in main's log — exactly how the snapshot itself
-      * resolved); probing main's log at a branch version would read an
-      * unrelated vector.
-      */
-    private lazy val lineageEntries: Map[String, RowLineage.Entry] =
-      if (!lineageOn) Map.empty
-      else {
-        val mfOpt = branch.flatMap { b =>
-          val p = new Path(GraftStagingCatalog.branchLogDir(dir, b),
-            s"v$snapshotVersion.json")
-          if (GraftStagingCatalog.isFile(tableFs, p)) Some(p) else None
-        }.orElse(GraftStagingCatalog.probeManifest(tableFs, dir, snapshotVersion))
-        mfOpt.map(mf => RowLineage.parse(GraftStagingCatalog.readString(tableFs, mf))._1)
-          .getOrElse(Map.empty)
-      }
+    /** This snapshot's per-file id bases (empty off-lineage). */
+    private val lineageEntries = snapshot.fold(Map.empty[String, RowLineage.Entry])(_.rowIds)
     /** This table's merge-on-read declaration. */
     private val morMode = meta.mor
     /** Keyless merge-on-read (position-delete) mode for this table. */
@@ -976,8 +952,10 @@ class GraftStagingCatalog extends TableCatalog with SupportsNamespaces
               // BRANCH log, so the replay probe must union it in — a main-
               // only probe would re-commit a replayed branch batch and the
               // duplicate rows would later publish to main
-              if (batchId.exists(
-                  GraftStagingCatalog.committedBatchIdsFor(tableFs, dir, branch).contains)) {
+              // (consulted only for a tagged batch: eta-expanding
+              // `ledger.contains` would read the ledger for every INSERT)
+              if (batchId.exists(b =>
+                  GraftStagingCatalog.committedBatchIdsFor(tableFs, dir, branch).contains(b))) {
                 d.abort(messages) // replay of a committed batch: discard staged files
                 return
               }
@@ -2782,19 +2760,8 @@ object GraftStagingCatalog {
     * RESTORE and rebase can resurrect) — the reachability set the
     * sort-order provenance marker is recorded and pruned against.
     */
-  private[catalog] def reachableFiles(fs: FileSystem, d: Path): Set[String] = {
-    val mainF = versionManifests(fs, d).iterator
-      .flatMap { case (_, mf) => manifestFiles(fs, mf) }
-    val branchF = readBranches(fs, d).keysIterator.flatMap { b =>
-      val bld = branchLogDir(d, b)
-      (try fs.listStatus(bld).toIndexedSeq
-       catch { case _: java.io.FileNotFoundException => IndexedSeq.empty })
-        .iterator.filter(st => st.isFile &&
-          st.getPath.getName.matches("^v\\d+\\.json$"))
-        .flatMap(st => manifestFiles(fs, st.getPath))
-    }
-    (mainF ++ branchF).toSet
-  }
+  private[catalog] def reachableFiles(fs: FileSystem, d: Path): Set[String] =
+    allManifests(fs, d).iterator.flatMap(Manifest.read(fs, _).files).toSet
 
   /** Any readable manifest (main or branch logs) of a DELTA kind
     * (update/merge)? Post-r14 delta commits self-register their fresh
@@ -2805,12 +2772,9 @@ object GraftStagingCatalog {
     * they stay trusted as in r13).
     */
   private[catalog] def hasDeltaKindHistory(fs: FileSystem, d: Path): Boolean =
-    (versionManifests(fs, d).iterator.map(_._2) ++
-      readBranches(fs, d).keysIterator.flatMap(b =>
-        branchManifests(fs, d, b).iterator.map(_._2)))
-      .exists { mf =>
-        val k = manifestKind(fs, mf); k == "update" || k == "merge"
-      }
+    allManifests(fs, d).exists { mf =>
+      val k = Manifest.read(fs, mf).kind; k == "update" || k == "merge"
+    }
 
   /** Registers delta-written files as sort-order-UNPROVEN (r14 — the
     * "sort-order readmission" candidate): a merge-on-read table's
@@ -3011,10 +2975,9 @@ object GraftStagingCatalog {
   private[catalog] def rewriteRenamed(fs: FileSystem, d: Path, meta: TableMeta,
       renames: Seq[(String, String)], oldSchema: StructType): Unit = {
     val spark = SparkSession.active
-    val latest = headManifest(fs, d)
-    val base = latest.map(_._1).getOrElse(0L)
-    val head = latest.map { case (_, mf) => readString(fs, mf) }
-    val current = head.map(parseManifestFiles).getOrElse(dataFiles(fs, d))
+    val latest = readHead(fs, d)
+    val base = latest.fold(0L)(_._1)
+    val current = latest.fold(dataFiles(fs, d))(_._2.files)
     if (current.isEmpty && latest.isEmpty) return
     val kept: Seq[String] =
       if (current.isEmpty) Seq.empty
@@ -3022,7 +2985,7 @@ object GraftStagingCatalog {
         // rename rewrites EVERY current file: fold active deletion vectors
         // (suppressed rows must not resurrect under the new column names)
         var df = DeletionVectors.Deletes.load(fs, d, meta.mor,
-            head.toSeq.flatMap(parseArray(_, "dvs")))
+            latest.fold(Seq.empty[String])(_._2.dvs))
           .applyTo(spark.read.schema(oldSchema)
             .parquet(current.map(f => new Path(d, f).toString): _*))
         renames.foreach { case (from, to) => df = df.withColumnRenamed(from, to) }
@@ -3045,7 +3008,12 @@ object GraftStagingCatalog {
 
   private[catalog] def versionManifests(fs: FileSystem, d: Path): Seq[(Long, Path)] = {
     bump(fullLogListings, d)
-    (try fs.listStatus(new Path(d, VersionsDir)).toIndexedSeq
+    logManifests(fs, new Path(d, VersionsDir))
+  }
+
+  /** The (version, manifest) entries of log directory `ld`, ascending. */
+  private def logManifests(fs: FileSystem, ld: Path): Seq[(Long, Path)] =
+    (try fs.listStatus(ld).toIndexedSeq
      catch { case _: FileNotFoundException => Seq.empty })
       .flatMap { f =>
         f.getPath.getName match {
@@ -3053,7 +3021,11 @@ object GraftStagingCatalog {
           case _              => None
         }
       }.sortBy(_._1)
-  }
+
+  /** Every readable manifest: main's log, then each live branch's. */
+  private[catalog] def allManifests(fs: FileSystem, d: Path): Seq[Path] =
+    versionManifests(fs, d).map(_._2) ++ readBranches(fs, d).keys.toSeq.sorted
+      .flatMap(b => branchManifests(fs, d, b).map(_._2))
 
   // ---- manifest-log checkpointing (the Delta `_last_checkpoint` shape) --
   //
@@ -3130,84 +3102,86 @@ object GraftStagingCatalog {
       case _ => versionManifests(fs, d).lastOption
     }
 
-  private[catalog] def writeCheckpoint(fs: FileSystem, d: Path, v: Long,
-      files: Seq[String], dvs: Seq[String], batchIds: Set[Long],
-      history: Seq[(Long, Long)] = Seq.empty): Unit = {
+  /** Head (version, record) of main (`branch` None) or of a branch. */
+  private[catalog] def readHead(fs: FileSystem, d: Path,
+      branch: Option[String] = None): Option[(Long, Manifest)] =
+    branch.fold(headManifest(fs, d))(b => branchHead(fs, d, b))
+      .map { case (v, mf) => v -> Manifest.read(fs, mf) }
+
+  /** Version `v` of main's log, if it is still there. */
+  private[catalog] def readVersion(fs: FileSystem, d: Path, v: Long): Option[Manifest] =
+    probeManifest(fs, d, v).map(Manifest.read(fs, _))
+
+  private[catalog] def writeCheckpoint(fs: FileSystem, d: Path, c: Checkpoint): Unit = {
     val vd = new Path(d, VersionsDir)
-    val dest = new Path(vd, s"ckpt-v$v.json")
+    val dest = new Path(vd, s"ckpt-v${c.version}.json")
     // NEVER rewrite a valid existing checkpoint in place (VACUUM used to,
     // when the head was already checkpointed): the resolved state at a
     // version is deterministic, so a valid file is already the right bytes,
     // and an in-place overwrite opens a torn-read window on the exactly-once
     // ledger — a crash mid-write would leave a truncated file that a
     // concurrent reader parses as an EMPTY ledger.
-    if (readCheckpointTxt(fs, d, v).isEmpty) {
-      def arr(xs: Seq[String]) = xs.distinct.sorted.map(f => "\"" + f + "\"").mkString(",")
-      // history rides as two flat parallel arrays (version, commit-ts) —
-      // TIMESTAMP AS OF resolves through them instead of reading every
-      // manifest's ts. The trailing "eof" field is the integrity sentinel:
-      // readers reject any checkpoint text that doesn't carry it (torn or
-      // truncated write) and fall back to the full listing.
-      val txt =
-        s"""{"version":$v,"batchIds":[${batchIds.toSeq.sorted.mkString(",")}],""" +
-          s""""hv":[${history.map(_._1).mkString(",")}],""" +
-          s""""hts":[${history.map(_._2).mkString(",")}],""" +
-          s""""dvs":[${arr(dvs)}],"files":[${arr(files)}],"eof":1}"""
+    if (readCheckpoint(fs, d, c.version).isEmpty) {
       // crash-safe publication: land the bytes under a temp name, then
       // rename into place — readers only ever see absent or complete
-      val tmp = new Path(vd, s".ckpt-v$v.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      writeString(fs, tmp, txt)
+      val tmp = new Path(vd,
+        s".ckpt-v${c.version}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+      writeString(fs, tmp, c.json)
       if (isFile(fs, dest)) fs.delete(dest, false) // invalid (sentinel-less) leftover
       if (!fs.rename(tmp, dest)) { fs.delete(tmp, false); () } // racer published: theirs is valid
     }
-    writeString(fs, new Path(vd, CkptPointer), v.toString)
+    writeString(fs, new Path(vd, CkptPointer), c.version.toString)
+  }
+
+  /** The manifests after version `v` up to the head, each decoded once. */
+  private def manifestsAfter(fs: FileSystem, d: Path, v: Long): Seq[(Long, Manifest)] =
+    Iterator.iterate(v + 1L)(_ + 1L).map(nv => nv -> probeManifest(fs, d, nv))
+      .takeWhile(_._2.isDefined).map { case (nv, mf) => nv -> Manifest.read(fs, mf.get) }.toSeq
+
+  /** The pointed checkpoint, when it reads complete, and the manifests the
+    * exactly-once ledger needs beyond it: those after it, or the whole log
+    * without one — one walk, each manifest decoded once.
+    */
+  private def logWalk(fs: FileSystem, d: Path): (Option[Checkpoint], Seq[(Long, Manifest)]) = {
+    val c = readCkptPointer(fs, d).flatMap(readCheckpoint(fs, d, _))
+    (c, c.fold(versionManifests(fs, d).map { case (v, mf) => v -> Manifest.read(fs, mf) })(
+      ck => manifestsAfter(fs, d, ck.version)))
   }
 
   /** (version, commit-ts) of every RETAINED version up to the head,
-    * assembled BOUNDEDLY when a checkpoint carries history (snapshot +
-    * per-manifest probes beyond it); None when it cannot be (no pointer, or
-    * a pre-history checkpoint) — the caller falls back to the listing.
+    * assembled BOUNDEDLY when a checkpoint carries history; None when it
+    * cannot be (no pointer, or a pre-history checkpoint) — the caller falls
+    * back to the listing.
     */
   private[catalog] def boundedHistory(fs: FileSystem, d: Path): Option[Seq[(Long, Long)]] =
-    readCkptPointer(fs, d).flatMap { cv =>
-      readCheckpointTxt(fs, d, cv).flatMap { txt =>
-        def longs(field: String): Seq[Long] =
-          ("\"" + field + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt)
-            .map(_.group(1)).filter(_.trim.nonEmpty)
-            .map(_.split(',').iterator.map(_.trim.toLong).toSeq).getOrElse(Seq.empty)
-        val hv = longs("hv"); val hts = longs("hts")
-        if (hv.isEmpty || hv.length != hts.length) None // legacy/torn → listing
-        else {
-          val newer = Iterator.iterate(cv + 1L)(_ + 1L)
-            .map(nv => nv -> probeManifest(fs, d, nv)).takeWhile(_._2.isDefined)
-            .map { case (nv, mf) => nv -> commitMillis(fs, mf.get) }.toSeq
-          Some(hv.zip(hts).filter(_._1 <= cv) ++ newer)
-        }
-      }
+    readCkptPointer(fs, d).flatMap(readCheckpoint(fs, d, _)).filter(_.history.nonEmpty)
+      .map(c => c.history.filter(_._1 <= c.version) ++
+        manifestsAfter(fs, d, c.version).map { case (v, m) => v -> m.ts })
+
+  /** The ledger and the history for a checkpoint about to be written at
+    * the current head, from one [[logWalk]]; a pre-history checkpoint adds
+    * one full listing for the history, the one-time upgrade cost.
+    */
+  private[catalog] def ledgerAndHistory(fs: FileSystem, d: Path): (Set[Long], Seq[(Long, Long)]) = {
+    val (c, ms) = logWalk(fs, d)
+    val ts = ms.map { case (v, m) => v -> m.ts }
+    val history = c.fold(ts) { ck =>
+      if (ck.history.nonEmpty) ck.history.filter(_._1 <= ck.version) ++ ts
+      else versionManifests(fs, d).map { case (v, mf) => v -> Manifest.read(fs, mf).ts }
     }
+    (c.fold(Set.empty[Long])(_.batchIds) ++ ms.flatMap(_._2.batchId), history)
+  }
 
-  /** History for a checkpoint about to be written at the current head:
-    * through the previous checkpoint when possible, else one full listing
-    * (the one-time upgrade cost of a pre-history log).
+  /** Checkpoint `v` iff the file exists AND decodes complete — a torn
+    * checkpoint (crash mid-write on a pre-rename store) reads as ABSENT, so
+    * its callers fall back to the full listing, which is slow but always
+    * correct.
     */
-  private[catalog] def assembleHistory(fs: FileSystem, d: Path): Seq[(Long, Long)] =
-    boundedHistory(fs, d).getOrElse(
-      versionManifests(fs, d).map { case (nv, mf) => nv -> commitMillis(fs, mf) })
-
-  /** Checkpoint text iff the file exists AND carries the integrity sentinel
-    * — a torn/truncated checkpoint (crash mid-write on a pre-rename store)
-    * must read as ABSENT, not as an empty ledger: the callers
-    * ([[committedBatchIds]], [[boundedHistory]]) fall back to the full
-    * listing, which is slow but always correct.
-    */
-  private[catalog] def readCheckpointTxt(fs: FileSystem, d: Path, v: Long): Option[String] = {
+  private[catalog] def readCheckpoint(fs: FileSystem, d: Path, v: Long): Option[Checkpoint] = {
     val p = new Path(new Path(d, VersionsDir), s"ckpt-v$v.json")
     try {
       if (!isFile(fs, p)) None
-      else {
-        val txt = readString(fs, p)
-        if (txt.endsWith("\"eof\":1}")) Some(txt) else None
-      }
+      else Checkpoint.decode(readString(fs, p))
     } catch {
       // an unreadable checkpoint (checksum mismatch, concurrent replace on
       // a non-atomic store) is the same as a torn one: absent
@@ -3216,14 +3190,15 @@ object GraftStagingCatalog {
   }
 
   /** Post-commit hook: checkpoint every interval-th version. The ledger
-    * snapshot is itself assembled through the PREVIOUS checkpoint, so the
+    * and history are assembled through the PREVIOUS checkpoint, so the
     * walk is bounded by the interval, not the history.
     */
   private[catalog] def maybeCheckpoint(fs: FileSystem, d: Path, meta: TableMeta, v: Long,
       files: Seq[String], dvs: Seq[String]): Unit =
-    if (v % meta.checkpointEvery == 0L)
-      writeCheckpoint(fs, d, v, files, dvs, committedBatchIds(fs, d),
-        assembleHistory(fs, d))
+    if (v % meta.checkpointEvery == 0L) {
+      val (batchIds, history) = ledgerAndHistory(fs, d)
+      writeCheckpoint(fs, d, Checkpoint(v, batchIds, history, dvs, files))
+    }
 
   // ---- writable branches (write-audit-publish) --------------------------
   //
@@ -3269,14 +3244,7 @@ object GraftStagingCatalog {
     * ingest-audit cycle), so a plain listing is the right cost.
     */
   private[catalog] def branchManifests(fs: FileSystem, d: Path, name: String): Seq[(Long, Path)] =
-    (try fs.listStatus(branchLogDir(d, name)).toIndexedSeq
-     catch { case _: FileNotFoundException => Seq.empty })
-      .flatMap { f =>
-        f.getPath.getName match {
-          case VersionFile(v) => Some(v.toLong -> f.getPath)
-          case _              => None
-        }
-      }.sortBy(_._1)
+    logManifests(fs, branchLogDir(d, name))
 
   /** Head (version, manifest) of a branch: its own latest commit, else the
     * fork-point manifest from the main log (a fresh branch reads exactly
@@ -3308,15 +3276,6 @@ object GraftStagingCatalog {
       }
   }
 
-  private[catalog] def manifestFiles(fs: FileSystem, mf: Path): Seq[String] =
-    parseManifestFiles(readString(fs, mf))
-
-  /** Active deletion-vector sidecar names recorded by a manifest (r9+;
-    * absent field = none — every pre-MOR manifest).
-    */
-  private[catalog] def manifestDvs(fs: FileSystem, mf: Path): Seq[String] =
-    parseArray(readString(fs, mf), "dvs")
-
   /** Per-file parquet row counts of `files` under `d` — footer reads
     * pushed to the EXECUTORS (one task per slice of files), so a broad
     * statement's auto-fold gate or a purge's twin-boundary computation on
@@ -3343,23 +3302,6 @@ object GraftStagingCatalog {
   private[catalog] def rowCountOf(spark: SparkSession,
       d: Path, files: Seq[String]): Long =
     rowCountsOf(spark, d, files).valuesIterator.sum
-
-  /** Extract one NAMED string array from a manifest — scoped to the field,
-    * not the whole document (a manifest may carry several arrays: `files`
-    * and `dvs`).
-    */
-  private[catalog] def parseArray(txt: String, field: String): Seq[String] =
-    ("\"" + field + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt) match {
-      case Some(m) if m.group(1).trim.nonEmpty =>
-        "\"([^\"]+)\"".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
-      case _ => Seq.empty
-    }
-
-  private[catalog] def parseManifestFiles(txt: String): Seq[String] =
-    parseArray(txt, "files")
-
-  private[catalog] def commitMillis(fs: FileSystem, mf: Path): Long =
-    "\"ts\":(\\d+)".r.findFirstMatchIn(readString(fs, mf)).map(_.group(1).toLong).getOrElse(0L)
 
   /** Data files of the table dir as RELATIVE paths (excludes the schema
     * sidecar, the versions dir, and committer temporaries). RECURSIVE since
@@ -3391,48 +3333,15 @@ object GraftStagingCatalog {
     out.result().sorted
   }
 
-  private[catalog] def manifestJson(files: Seq[String], batchId: Option[Long], kind: String,
-      dvs: Seq[String] = Seq.empty,
-      rowIds: Option[(Seq[String], Long)] = None): String = {
-    val bid = batchId.map(b => s""""batchId":$b,""").getOrElse("")
-    val dvField =
-      if (dvs.isEmpty) ""
-      else s""""dvs":[${dvs.distinct.sorted.map(f => "\"" + f + "\"").mkString(",")}],"""
-    // row-lineage vector: per-file id bases + the allocation watermark
-    // (RowLineage) — present on every manifest of a lineage table
-    val ridField = rowIds.map { case (entries, next) =>
-      s""""nextRowId":$next,"rowIds":[${
-        entries.map(e => "\"" + e + "\"").mkString(",")}],"""
-    }.getOrElse("")
-    s"""{"ts":${System.currentTimeMillis()},"kind":"$kind",$bid$dvField$ridField"files":[${
-      // distinct: under concurrent commits a racer's files can arrive both
-      // via the previous-current set AND via this commit's directory delta
-      // (its `before` snapshot predates the racer's move) — a double-listed
-      // file would read its rows twice
-      files.distinct.sorted.map(f => "\"" + f + "\"").mkString(",")}]}"""
-  }
-
   /** Micro-batch ids recorded by prior commits (the exactly-once ledger).
-    * Consulted on EVERY streaming commit, so it must not walk the whole
+    * Consulted on every streaming commit, so it must not walk the whole
     * log: with a checkpoint it reads the snapshot's ledger plus only the
     * manifests committed since. The checkpointed ledger also survives
     * VACUUM reclaiming the manifests that recorded it.
     */
   private[catalog] def committedBatchIds(fs: FileSystem, d: Path): Set[Long] = {
-    def idOf(txt: String): Option[Long] =
-      "\"batchId\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    readCkptPointer(fs, d).flatMap(cv => readCheckpointTxt(fs, d, cv).map(cv -> _)) match {
-      case Some((cv, ckpt)) =>
-        val snapshot = "\"batchIds\":\\[([^\\]]*)\\]".r.findFirstMatchIn(ckpt)
-          .map(_.group(1)).filter(_.trim.nonEmpty)
-          .map(_.split(',').iterator.map(_.trim.toLong).toSet).getOrElse(Set.empty[Long])
-        val newer = Iterator.iterate(cv + 1L)(_ + 1L)
-          .map(v => probeManifest(fs, d, v)).takeWhile(_.isDefined)
-          .flatMap(mf => idOf(readString(fs, mf.get))).toSet
-        snapshot ++ newer
-      case None =>
-        versionManifests(fs, d).flatMap { case (_, f) => idOf(readString(fs, f)) }.toSet
-    }
+    val (c, ms) = logWalk(fs, d)
+    c.fold(Set.empty[Long])(_.batchIds) ++ ms.flatMap(_._2.batchId)
   }
 
   /** The exactly-once ledger for a WRITE FACE: main's ledger, plus — for a
@@ -3445,9 +3354,7 @@ object GraftStagingCatalog {
       branch: Option[String]): Set[Long] = {
     val main = committedBatchIds(fs, d)
     branch.fold(main) { b =>
-      main ++ branchManifests(fs, d, b).flatMap { case (_, mf) =>
-        "\"batchId\":(\\d+)".r.findFirstMatchIn(readString(fs, mf)).map(_.group(1).toLong)
-      }
+      main ++ branchManifests(fs, d, b).flatMap { case (_, mf) => Manifest.read(fs, mf).batchId }
     }
   }
 
@@ -3471,25 +3378,24 @@ object GraftStagingCatalog {
       while (!committed) {
         // a branch append's base is the BRANCH head (falling back to the
         // fork manifest) — main's log is never consulted nor advanced
-        val latest = branch.fold(headManifest(fs, d))(b => branchHead(fs, d, b))
-        val cur = latest.map { case (_, f) => manifestFiles(fs, f) }.getOrElse(Seq.empty)
+        val latest = readHead(fs, d, branch)
+        val prev = latest.map(_._2)
+        val next = latest.fold(0L)(_._1) + 1L
+        val files = (prev.fold(Seq.empty[String])(_.files) ++
+          dataFiles(fs, d).filterNot(before)).distinct.sorted
         // appends CARRY the active deletion vectors: DVs are file-scoped,
         // so they can never suppress rows of this commit's new files
-        val dvs = latest.map { case (_, f) => manifestDvs(fs, f) }.getOrElse(Seq.empty)
-        val next = latest.map(_._1).getOrElse(0L) + 1L
-        val files = (cur ++ dataFiles(fs, d).filterNot(before)).distinct.sorted
+        val dvs = prev.fold(Seq.empty[String])(_.dvs)
         // lineage tables: carried files keep their id bases, this commit's
         // new files get fresh virtual bases off the watermark — pure
         // manifest arithmetic, atomic under the same create-exclusive race.
         // The floor spans main + every branch log (branch-aware allocation)
         val rids =
           if (!meta.rowLineage) None
-          else {
-            val prevTxt = latest.map { case (_, f) => readString(fs, f) }
-            Some(assignLeased(fs, d, prevTxt, prevTxt, files, Set.empty, branch))
-          }
-        committed = tryCreateExclusive(fs, new Path(vd, s"v$next.json"),
-          manifestJson(files, batchId, "commit", dvs, rids))
+          else Some(assignLeased(fs, d, prev, prev, files, Set.empty, branch))
+        committed = Manifest.create(fs, new Path(vd, s"v$next.json"),
+          Manifest(System.currentTimeMillis(), "commit", batchId, dvs,
+            rids.fold(Map.empty[String, RowLineage.Entry])(_._1), rids.map(_._2), files))
         if (committed && branch.isEmpty) maybeCheckpoint(fs, d, meta, next, files, dvs)
       }
     }
@@ -3599,18 +3505,18 @@ object GraftStagingCatalog {
     * files ⇒ nothing to claim. Called under the catalog monitor.
     */
   private[catalog] def assignLeased(fs: FileSystem, d: Path,
-      prevMapTxt: Option[String], nextFromTxt: Option[String],
+      prevMap: Option[Manifest], nextFrom: Option[Manifest],
       files: Seq[String], mat: Set[String],
-      ownBranch: Option[String]): (Seq[String], Long) = {
+      ownBranch: Option[String]): (Map[String, RowLineage.Entry], Long) = {
     while (true) {
       val floor = math.max(lineageFloor(fs, d, ownBranch), leaseFloor(fs, d))
-      val a = RowLineage.assignRange(prevMapTxt, nextFromTxt, files, mat, floor)
-      if (a.freshCount == 0) return (a.vector, a.next)
+      val a = RowLineage.assignRange(prevMap, nextFrom, files, mat, floor)
+      if (a.freshCount == 0) return (a.entries, a.next)
       val ld = new Path(d, RowLeaseDir)
       fs.mkdirs(ld)
       if (tryClaimLease(fs, ld, a.allocStart,
           s"${a.next},${System.currentTimeMillis() + LeaseTtlMs}"))
-        return (a.vector, a.next)
+        return (a.entries, a.next)
       // lost the claim to another PROCESS: usually its lease end is
       // visible now and the re-read floor moves this allocation above it.
       // A TORN legacy lease would keep the floor unchanged forever —
@@ -3623,7 +3529,7 @@ object GraftStagingCatalog {
   /** Branch-aware row-id allocation floor (r12): the max `nextRowId`
     * watermark across every log OTHER than the one being committed to
     * (`ownBranch` = None for a main commit). The committing log's own
-    * watermark rides in through the caller's `nextFromTxt`, so reading it
+    * watermark rides in through the caller's `nextFrom`, so reading it
     * again here would only duplicate manifest I/O on the streaming-ingest
     * hot path. Every lineage commit allocates at or above the floor, so a
     * fork can never hand the same base range to both sides WITHIN a
@@ -3637,17 +3543,13 @@ object GraftStagingCatalog {
   private[catalog] def lineageFloor(fs: FileSystem, d: Path,
       ownBranch: Option[String]): Long = {
     val branches = readBranches(fs, d)
-    val branchW = branches.keysIterator.filterNot(ownBranch.contains).flatMap(b =>
-      branchHead(fs, d, b).map { case (_, mf) =>
-        RowLineage.parse(readString(fs, mf))._2
-      })
+    val branchW = branches.keysIterator.filterNot(ownBranch.contains)
+      .flatMap(b => readHead(fs, d, Some(b)).map(_._2.watermark))
     // main's head matters only for BRANCH commits (a main commit carries
-    // its own watermark in nextFromTxt)
+    // its own watermark in nextFrom)
     val mainW =
       if (ownBranch.isEmpty) Iterator.empty
-      else headManifest(fs, d).iterator.map { case (_, mf) =>
-        RowLineage.parse(readString(fs, mf))._2
-      }
+      else readHead(fs, d).iterator.map(_._2.watermark)
     (branchW ++ mainW).foldLeft(0L)(math.max)
   }
 
@@ -3666,7 +3568,7 @@ object GraftStagingCatalog {
       kind: String = "optimize", expectedBase: Option[Long] = None,
       dvs: Seq[String] = Seq.empty, branch: Option[String] = None,
       matFiles: Set[String] = Set.empty,
-      rowIdsFrom: Option[Path] = None): Long =
+      rowIdsFrom: Option[Manifest] = None): Long =
     synchronized {
       // a BRANCH rewrite (DML on the WAP ingest surface) versions in the
       // branch log against the branch head — main is never consulted nor
@@ -3676,8 +3578,8 @@ object GraftStagingCatalog {
       fs.mkdirs(vd)
       var out = -1L
       while (out < 0) {
-        val latest = branch.fold(headManifest(fs, d))(b => branchHead(fs, d, b))
-          .map(_._1).getOrElse(0L)
+        val head = branch.fold(headManifest(fs, d))(b => branchHead(fs, d, b))
+        val latest = head.fold(0L)(_._1)
         expectedBase.foreach { base =>
           if (latest != base)
             throw new java.util.ConcurrentModificationException(
@@ -3696,13 +3598,12 @@ object GraftStagingCatalog {
         val rids =
           if (!meta.rowLineage) None
           else {
-            val latestTxt = (branch.fold(headManifest(fs, d))(b => branchHead(fs, d, b)))
-              .map { case (_, f) => readString(fs, f) }
-            val mapTxt = rowIdsFrom.map(readString(fs, _)).orElse(latestTxt)
-            Some(assignLeased(fs, d, mapTxt, latestTxt, files, matFiles, branch))
+            val prev = head.map { case (_, mf) => Manifest.read(fs, mf) }
+            Some(assignLeased(fs, d, rowIdsFrom.orElse(prev), prev, files, matFiles, branch))
           }
-        if (tryCreateExclusive(fs, new Path(vd, s"v${latest + 1}.json"),
-            manifestJson(files, None, kind, dvs, rids)))
+        if (Manifest.create(fs, new Path(vd, s"v${latest + 1}.json"),
+            Manifest(System.currentTimeMillis(), kind, None, dvs,
+              rids.fold(Map.empty[String, RowLineage.Entry])(_._1), rids.map(_._2), files)))
           out = latest + 1
         // lost the create race: loop re-reads the advanced version — with an
         // expectedBase that re-read throws the conflict above
@@ -3825,8 +3726,7 @@ object GraftStagingCatalog {
     val spark = SparkSession.active
     val pred = filters.flatMap(filterToColumn(_)).reduceOption(_ && _).getOrElse(lit(true))
     val current = snapshotFiles.getOrElse(
-      headManifest(fs, d).map { case (_, mf) => manifestFiles(fs, mf) }
-        .getOrElse(dataFiles(fs, d)))
+      readHead(fs, d).fold(dataFiles(fs, d))(_._2.files))
     val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d, meta.stats)
     val specs = meta.partSpecsAll
     // zone-map candidate split: files whose ranges cannot match are never read
@@ -3937,8 +3837,8 @@ object GraftStagingCatalog {
     // don't all match the filter, surviving fresh rows would be rewritten
     // into the remainder AND carried as fresh, duplicating them. The
     // overwrite path therefore passes its pre-insert listing.
-    val head = headManifest(fs, d).map { case (_, mf) => readString(fs, mf) }
-    val current = head.map(parseManifestFiles)
+    val head = readHead(fs, d).map(_._2)
+    val current = head.map(_.files)
       .orElse(noManifestCurrent)
       .getOrElse(dataFiles(fs, d))
     val (stats, nulls) = StagingMaintenance.readStatsFor(fs, d, meta.stats)
@@ -3964,9 +3864,7 @@ object GraftStagingCatalog {
     // its row ids — read WITH resolved ids and write them into the
     // physical column; untouched files carry their entries by name
     val lineage = meta.rowLineage
-    val lineageEntries: Map[String, RowLineage.Entry] =
-      if (!lineage) Map.empty
-      else head.map(RowLineage.parse(_)._1).getOrElse(Map.empty)
+    val lineageEntries = head.fold(Map.empty[String, RowLineage.Entry])(_.rowIds)
     val kept: Seq[String] =
       if (touched.isEmpty) untouched
       else {
@@ -3986,7 +3884,7 @@ object GraftStagingCatalog {
           else rawTouched0.select(org.apache.spark.sql.functions.col("*"),
             org.apache.spark.sql.functions.col("_metadata"))
         val dvApplied = DeletionVectors.Deletes.load(fs, d, meta.mor,
-            head.toSeq.flatMap(parseArray(_, "dvs")))
+            head.fold(Seq.empty[String])(_.dvs))
           .restrict(touched.toSet).applyTo(withMeta)
         val rawTouched =
           if (!lineage) dvApplied
@@ -4011,8 +3909,4 @@ object GraftStagingCatalog {
     ZoneMapScan.lastDeleteSplit = Some((untouched.size, dropped.size, touched.size))
     (kept, (kept.toSet -- untouched).toSet)
   }
-
-  private[catalog] def manifestKind(fs: FileSystem, mf: Path): String =
-    "\"kind\":\"([a-z]+)\"".r.findFirstMatchIn(readString(fs, mf))
-      .map(_.group(1)).getOrElse("commit")
 }

@@ -90,69 +90,34 @@ object RowLineage {
     */
   final case class Entry(base: Long, mat: Boolean)
 
-  /** Parse a manifest's `rowIds` vector + `nextRowId` watermark. Absent
-    * fields read as empty/0 — every pre-lineage manifest.
+  /** One version's id assignment for a new version's full file set:
+    * carried files keep their entries from `prevMap` (normally the latest
+    * manifest; RESTORE maps from the restore target), new files get fresh
+    * bases off `nextFrom`'s watermark (always the latest, so the watermark
+    * stays monotonic). `mat` names the new files written with the physical
+    * column. `floor` raises the watermark to at least that value —
+    * branch-aware allocation (r12): a commit on ANY face of a branched
+    * table allocates above the max watermark across main + every branch
+    * log, so fork-side allocations can never collide at publish/rebase.
+    * Returns the entries, the new watermark, and the fresh-allocation
+    * range `[allocStart, next)` (`freshCount` = 0 ⇒ nothing was
+    * allocated) — the shape the cross-process allocation LEASE (r13)
+    * claims before committing.
     */
-  def parse(txt: String): (Map[String, Entry], Long) = {
-    val next = "\"nextRowId\":(\\d+)".r.findFirstMatchIn(txt)
-      .map(_.group(1).toLong).getOrElse(0L)
-    val m = GraftStagingCatalog.parseArray(txt, "rowIds").flatMap { e =>
-      // rsplit twice: file names never contain '|' (part-file names +
-      // `k=v/` partition dirs), but guard the parse against one anyway
-      val i2 = e.lastIndexOf('|'); val i1 = e.lastIndexOf('|', i2 - 1)
-      if (i1 < 0) None
-      else Some(e.substring(0, i1) ->
-        Entry(e.substring(i1 + 1, i2).toLong, e.substring(i2 + 1) == "m"))
-    }.toMap
-    (m, next)
-  }
-
-  private def render(map: Map[String, Entry]): Seq[String] =
-    map.toSeq.sortBy(_._1).map { case (f, e) =>
-      s"$f|${e.base}|${if (e.mat) "m" else "v"}" }
-
-  /** Assign the `rowIds` vector for a new version's full file set:
-    * carried files keep their entries from `prevMapTxt`'s manifest, new
-    * files get fresh bases off `nextFromTxt`'s watermark (normally the same
-    * manifest; RESTORE maps from the restore target but must keep the
-    * watermark monotonic off the LATEST manifest). `mat` names the new
-    * files written with the physical column. `floor` raises the watermark
-    * to at least that value — branch-aware allocation (r12): a commit on
-    * ANY face of a branched table allocates above the max watermark across
-    * main + every branch log, so fork-side allocations can never collide
-    * at publish/rebase. Returns (rendered entries, new watermark).
-    */
-  def assign(prevMapTxt: Option[String], nextFromTxt: Option[String],
-      files: Seq[String], mat: Set[String], floor: Long = 0L): (Seq[String], Long) = {
-    val a = assignRange(prevMapTxt, nextFromTxt, files, mat, floor)
-    (a.vector, a.next)
-  }
-
-  /** One version's id assignment: the rendered vector, the new watermark,
-    * and the fresh-allocation range `[allocStart, next)` (`freshCount` = 0
-    * ⇒ nothing was allocated and the range is empty) — the shape the
-    * cross-process allocation LEASE (r13) claims before committing.
-    */
-  final case class Assignment(vector: Seq[String], next: Long,
+  final case class Assignment(entries: Map[String, Entry], next: Long,
     allocStart: Long, freshCount: Int)
 
-  def assignRange(prevMapTxt: Option[String], nextFromTxt: Option[String],
+  def assignRange(prevMap: Option[Manifest], nextFrom: Option[Manifest],
       files: Seq[String], mat: Set[String], floor: Long = 0L): Assignment = {
-    val (prev, _) = parse(prevMapTxt.getOrElse(""))
-    val next0 = math.max(parse(nextFromTxt.getOrElse(""))._2, floor)
+    val prev = prevMap.fold(Map.empty[String, Entry])(_.rowIds)
+    val next0 = math.max(nextFrom.fold(0L)(_.watermark), floor)
     val fresh = files.filterNot(prev.contains).sorted.zipWithIndex.toMap
     val entries = files.map { f =>
       f -> prev.getOrElse(f,
         Entry(next0 + fresh(f) * Stride, mat.contains(f)))
     }.toMap
-    Assignment(render(entries), next0 + fresh.size * Stride, next0, fresh.size)
+    Assignment(entries, next0 + fresh.size * Stride, next0, fresh.size)
   }
-
-  /** Render an entry map as manifest `rowIds` lines — the rebase replay
-    * builds vectors directly (carried bases from main, branch-file bases
-    * from the branch manifests) instead of re-assigning.
-    */
-  def renderVector(map: Map[String, Entry]): Seq[String] = render(map)
 
   /** The read schema a lineage-aware rewrite uses: the declared schema plus
     * the (nullable — virtual files lack it) physical id column.

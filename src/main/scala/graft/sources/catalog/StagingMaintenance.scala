@@ -85,11 +85,10 @@ object StagingMaintenance {
       table: String): (Int, Int, Long) = {
     import org.apache.spark.sql.functions.col
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    val latest = GraftStagingCatalog.headManifest(fs, d).getOrElse(
+    val (base, head) = readHead(fs, d).getOrElse(
       throw new IllegalArgumentException(
         s"$catalog.$ns.$table has no committed version"))
-    val (base, mf) = latest
-    val dvNames = GraftStagingCatalog.manifestDvs(fs, mf)
+    val dvNames = head.dvs
     if (dvNames.size < 2) return (dvNames.size, dvNames.size, -1L)
     val meta = TableMeta.read(fs, d)
     require(meta.mor == DeletionVectors.MorMode.Pos,
@@ -120,7 +119,7 @@ object StagingMaintenance {
     // same data files, one descriptor: carried files keep their lineage
     // bases verbatim (nothing fresh, nothing materialized)
     val v = GraftStagingCatalog.writeExplicitManifest(fs, d, meta,
-      manifestFiles(fs, mf), kind = "optimize", expectedBase = Some(base),
+      head.files, kind = "optimize", expectedBase = Some(base),
       dvs = Seq(desc))
     (dvNames.size, 1, v)
   }
@@ -160,13 +159,11 @@ object StagingMaintenance {
   private[catalog] def foldDeltasAt(spark: SparkSession, fs: FileSystem,
       d: Path, meta: TableMeta): (Int, Int, Long) = {
     import org.apache.spark.sql.functions.{col, concat_ws, element_at, split, typedLit}
-    val latest = GraftStagingCatalog.headManifest(fs, d).getOrElse(
+    val (base, head) = readHead(fs, d).getOrElse(
       throw new IllegalArgumentException(s"$d has no committed version"))
-    val (base, mf) = latest
-    val txt = readString(fs, mf)
-    val dvNames = GraftStagingCatalog.parseArray(txt, "dvs")
+    val dvNames = head.dvs
     if (dvNames.isEmpty) return (0, 0, -1L)
-    val all = GraftStagingCatalog.parseManifestFiles(txt)
+    val all = head.files
     val allSet = all.toSet
     val deletes = DeletionVectors.Deletes.load(fs, d, meta.mor, dvNames)
     // a CLONE's descriptors reference borrowed files by BARE name while
@@ -186,9 +183,7 @@ object StagingMaintenance {
       return (0, 0, v)
     }
     val lineage = meta.rowLineage
-    val lineageEntries: Map[String, RowLineage.Entry] =
-      if (!lineage) Map.empty
-      else RowLineage.parse(txt)._1
+    val lineageEntries = head.rowIds
     val reader = spark.read
     if (lineage) meta.schema.foreach(s => reader.schema(RowLineage.readSchema(s)))
     else meta.schema.foreach(reader.schema)
@@ -308,11 +303,10 @@ object StagingMaintenance {
           s"'graft.sort-order'='${so.mkString(",")}' — files must stay sorted " +
           "on the declared order; unset the table property to re-cluster")
     }
-    val latest = GraftStagingCatalog.headManifest(fs, d)
-    val base = latest.map(_._1).getOrElse(0L)
-    val headTxt = latest.map { case (_, mf) => readString(fs, mf) }
-    val all = headTxt.map(GraftStagingCatalog.parseManifestFiles).getOrElse(dataFiles(fs, d))
-    val headDvs = headTxt.toSeq.flatMap(GraftStagingCatalog.parseArray(_, "dvs"))
+    val latest = readHead(fs, d)
+    val base = latest.fold(0L)(_._1)
+    val all = latest.fold(dataFiles(fs, d))(_._2.files)
+    val headDvs = latest.fold(Seq.empty[String])(_._2.dvs)
     // INCREMENTAL LAYOUT MAINTENANCE (partition-spec evolution's write
     // side): bed ONLY the STRAY files — flat root-level part files from
     // plain appends — into the requested layout; files already under ANY
@@ -430,9 +424,7 @@ object StagingMaintenance {
     // column ([[RowLineage.materialize]]); the commit marks the compacted
     // files materialized. Non-lineage tables read the declared schema.
     val lineage = meta.rowLineage
-    val lineageEntries: Map[String, RowLineage.Entry] =
-      if (!lineage) Map.empty
-      else headTxt.map(RowLineage.parse(_)._1).getOrElse(Map.empty)
+    val lineageEntries = latest.fold(Map.empty[String, RowLineage.Entry])(_._2.rowIds)
     val reader = spark.read
     if (lineage) meta.schema.foreach(s => reader.schema(RowLineage.readSchema(s)))
     else meta.schema.foreach(reader.schema)
@@ -577,11 +569,12 @@ object StagingMaintenance {
       table: String, fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion, s"from $fromVersion > to $toVersion")
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    def mf(v: Long): Path = GraftStagingCatalog.probeManifest(fs, d, v).getOrElse(
+    def at(v: Long): Manifest = readVersion(fs, d, v).getOrElse(
       throw new IllegalArgumentException(
         s"$catalog.$ns.$table has no version $v (vacuumed or never committed)"))
-    ((fromVersion + 1) to toVersion).foreach { v =>
-      val kind = manifestKind(fs, mf(v))
+    val ms = ((fromVersion + 1) to toVersion).map(v => v -> at(v))
+    ms.foreach { case (v, m) =>
+      val kind = m.kind
       // clone (a shallow clone's first version) and sync (absorbed source
       // appends) are pure file additions — append-comparable (r14)
       if (kind != "commit" && kind != "clone" && kind != "sync")
@@ -590,8 +583,8 @@ object StagingMaintenance {
             "are not append-comparable across a rewrite — read the versions directly")
     }
     val fromFiles =
-      if (fromVersion == 0L) Set.empty[String] else manifestFiles(fs, mf(fromVersion)).toSet
-    val newFiles = manifestFiles(fs, mf(toVersion)).filterNot(fromFiles)
+      if (fromVersion == 0L) Set.empty[String] else at(fromVersion).files.toSet
+    val newFiles = ms.lastOption.fold(at(toVersion))(_._2).files.filterNot(fromFiles)
     val declared = TableMeta.read(fs, d).schema
     val reader = spark.read
     declared.foreach(reader.schema)
@@ -643,19 +636,19 @@ object StagingMaintenance {
       meta: TableMeta, fromVersion: Long, toVersion: Long): (DataFrame, Boolean, Boolean) = {
     import org.apache.spark.sql.functions.lit
     require(fromVersion <= toVersion, s"from $fromVersion > to $toVersion")
-    def manifestOf(v: Long): Path = GraftStagingCatalog.probeManifest(fs, d, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"$d has no version $v (vacuumed or never committed)"))
     // version 0 = the empty pre-history (an overwrite/restore as the very
     // first commit diffs against nothing)
-    def files(v: Long): Set[String] =
-      if (v <= 0L) Set.empty else manifestFiles(fs, manifestOf(v)).toSet
+    def manifestOf(v: Long): Manifest =
+      if (v <= 0L) Manifest(0L)
+      else readVersion(fs, d, v).getOrElse(throw new IllegalArgumentException(
+        s"$d has no version $v (vacuumed or never committed)"))
     val sFrom = GraftStagingCatalog.schemaAtVersion(fs, d, math.max(fromVersion, 1L), meta)
     val sTo = GraftStagingCatalog.schemaAtVersion(fs, d, toVersion, meta)
     require(sFrom == sTo,
       s"row-level diff across a schema change is not comparable ($sFrom vs $sTo)")
-    val from = files(fromVersion)
-    val to = files(toVersion)
+    val (mFrom, mTo) = (manifestOf(fromVersion), manifestOf(toVersion))
+    val from = mFrom.files.toSet
+    val to = mTo.files.toSet
     // MERGE-ON-READ: a DV-only commit changes row VISIBILITY without
     // changing the file set, so a file whose deleted-key set differs
     // between the versions is part of the delta — it enters BOTH sides of
@@ -667,11 +660,10 @@ object StagingMaintenance {
     // paths), so a visibility change is detectable without parsing any
     // key or ordinal they hold.
     val mode = meta.mor
-    def deletesAt(v: Long): DeletionVectors.Deletes =
-      if (v <= 0L || mode == DeletionVectors.MorMode.Off) DeletionVectors.Deletes.none
-      else DeletionVectors.Deletes.load(fs, d, mode,
-        GraftStagingCatalog.manifestDvs(fs, manifestOf(v)))
-    val (delFrom, delTo) = (deletesAt(fromVersion), deletesAt(toVersion))
+    def deletesAt(m: Manifest): DeletionVectors.Deletes =
+      if (m.dvs.isEmpty || mode == DeletionVectors.MorMode.Off) DeletionVectors.Deletes.none
+      else DeletionVectors.Deletes.load(fs, d, mode, m.dvs)
+    val (delFrom, delTo) = (deletesAt(mFrom), deletesAt(mTo))
     val dvChanged = (from intersect to).filter(f => delFrom.stateOf(f) != delTo.stateOf(f))
     val removed = ((from -- to) ++ dvChanged).toSeq.sorted
     val added = ((to -- from) ++ dvChanged).toSeq.sorted
@@ -903,14 +895,10 @@ object StagingMaintenance {
   private def lineageCdfDiff(spark: SparkSession, fs: FileSystem, d: Path,
       meta: TableMeta, v: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, not, struct}
-    def manifestOf(mv: Long): Option[Path] = GraftStagingCatalog.probeManifest(fs, d, mv)
     def state(mv: Long): (Set[String], Map[String, RowLineage.Entry], Seq[String]) =
       if (mv <= 0L) (Set.empty, Map.empty, Nil)
-      else manifestOf(mv).map { mf =>
-        val txt = readString(fs, mf)
-        (GraftStagingCatalog.parseManifestFiles(txt).toSet, RowLineage.parse(txt)._1,
-          GraftStagingCatalog.parseArray(txt, "dvs"))
-      }.getOrElse(throw new IllegalArgumentException(
+      else readVersion(fs, d, mv).map(m => (m.files.toSet, m.rowIds, m.dvs))
+      .getOrElse(throw new IllegalArgumentException(
         s"$d has no version $mv (vacuumed or never committed)"))
     val (fromF, fromE, fromDvs) = state(v - 1L)
     val (toF, toE, toDvs) = state(v)
@@ -1062,8 +1050,7 @@ object StagingMaintenance {
 
   /** Files the CURRENT version reads (manifest-pinned when versioned). */
   private def currentFiles(fs: FileSystem, d: Path): Seq[String] =
-    GraftStagingCatalog.headManifest(fs, d)
-      .map { case (_, mf) => manifestFiles(fs, mf) }.getOrElse(dataFiles(fs, d))
+    readHead(fs, d).fold(dataFiles(fs, d))(_._2.files)
 
   /** Harvest per-file min/max for `columns` from parquet footers — no data
     * pages are read. Covers integral, DATE (epoch days), TIMESTAMP
@@ -1252,11 +1239,8 @@ object StagingMaintenance {
       table: String): DataFrame = {
     val (fs, d) = tableDir(spark, catalog, ns, table)
     val rows = versionManifests(fs, d).map { case (v, mf) =>
-      val txt = readString(fs, mf)
-      val bid = "\"batchId\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      val kind = "\"kind\":\"([a-z]+)\"".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse("commit")
-      (v, kind, parseManifestFiles(txt).size.toLong, bid)
+      val m = Manifest.read(fs, mf)
+      (v, m.kind, m.files.size.toLong, m.batchId)
     }
     import spark.implicits._
     rows.toDF("version", "kind", "n_files", "batch_id")
@@ -1292,9 +1276,8 @@ object StagingMaintenance {
   def filesAtVersion(spark: SparkSession, catalog: String, ns: String,
       table: String, version: Long): Seq[String] = {
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    val mf = GraftStagingCatalog.probeManifest(fs, d, version).getOrElse(
-      throw new IllegalArgumentException(s"$catalog.$ns.$table has no version $version"))
-    manifestFiles(fs, mf)
+    readVersion(fs, d, version).getOrElse(
+      throw new IllegalArgumentException(s"$catalog.$ns.$table has no version $version")).files
   }
 
   /** TAG a version by name ([[GraftStagingCatalog.readTags]] semantics:
@@ -1468,19 +1451,18 @@ object StagingMaintenance {
             s"$fork but main is now at $mainHead — a commit landed on main since the " +
             "fork; re-branch from the current head and re-apply (or drop the branch)")
       val bms = GraftStagingCatalog.branchManifests(fs, d, name)
-      bms.foreach { case (v, mf) =>
-        if (!GraftStagingCatalog.tryCreateExclusive(fs,
-            GraftStagingCatalog.manifestPath(d, v), readString(fs, mf)))
+      val published = bms.map { case (v, mf) =>
+        val m = Manifest.read(fs, mf)
+        if (!Manifest.create(fs, GraftStagingCatalog.manifestPath(d, v), m))
           throw new java.util.ConcurrentModificationException(
             s"publish conflict on $catalog.$ns.$table: version $v already exists on main")
+        v -> m
       }
       // the published head is main's head now — checkpoint it (bounded walk)
-      bms.lastOption.foreach { case (v, mf) =>
-        GraftStagingCatalog.writeCheckpoint(fs, d, v,
-          GraftStagingCatalog.manifestFiles(fs, mf),
-          GraftStagingCatalog.manifestDvs(fs, mf),
-          GraftStagingCatalog.committedBatchIds(fs, d),
-          GraftStagingCatalog.assembleHistory(fs, d))
+      published.lastOption.foreach { case (v, m) =>
+        val (batchIds, history) = GraftStagingCatalog.ledgerAndHistory(fs, d)
+        GraftStagingCatalog.writeCheckpoint(fs, d,
+          Checkpoint(v, batchIds, history, m.dvs, m.files))
       }
       fs.delete(GraftStagingCatalog.branchLogDir(d, name), true)
       GraftStagingCatalog.writeBranches(fs, d, branches - name)
@@ -1528,17 +1510,14 @@ object StagingMaintenance {
       val mainHead = GraftStagingCatalog.headManifest(fs, d).map(_._1).getOrElse(0L)
       if (mainHead == fork) fork // already based — publish will fast-forward
       else {
-        def state(v: Long): (Set[String], Set[String]) =
-          if (v == 0L) (Set.empty, Set.empty)
-          else {
-            val mf = GraftStagingCatalog.probeManifest(fs, d, v).getOrElse(
-              throw new IllegalStateException(
-                s"rebase: version $v of $catalog.$ns.$table is gone (VACUUMed?)"))
-            (GraftStagingCatalog.manifestFiles(fs, mf).toSet,
-              GraftStagingCatalog.manifestDvs(fs, mf).toSet)
-          }
-        val (forkFiles, forkDvs) = state(fork)
-        val (mainFiles, mainDvs) = state(mainHead)
+        def state(v: Long): Manifest =
+          if (v == 0L) Manifest(0L)
+          else readVersion(fs, d, v).getOrElse(
+            throw new IllegalStateException(
+              s"rebase: version $v of $catalog.$ns.$table is gone (VACUUMed?)"))
+        val (forkM, mainM) = (state(fork), state(mainHead))
+        val (forkFiles, forkDvs) = (forkM.files.toSet, forkM.dvs.toSet)
+        val (mainFiles, mainDvs) = (mainM.files.toSet, mainM.dvs.toSet)
         val mainRemoved = forkFiles -- mainFiles
         // per-commit deltas, oldest first; kind/batchId carry verbatim so
         // change-feed consumers and the exactly-once ledger see the same
@@ -1546,20 +1525,13 @@ object StagingMaintenance {
         // each manifest's rowIds vector + watermark: the replay re-anchors
         // id bases the way it re-anchors files (branch files keep their
         // branch-allocated bases — globally unique by the allocation floor)
-        final case class Delta(kind: String, batchId: Option[Long],
-          addF: Set[String], remF: Set[String], addDv: Set[String], remDv: Set[String],
-          rowIds: Map[String, RowLineage.Entry], next: Long)
+        final case class Delta(m: Manifest,
+          addF: Set[String], remF: Set[String], addDv: Set[String], remDv: Set[String])
         var prevF = forkFiles; var prevDv = forkDvs
         val deltas = GraftStagingCatalog.branchManifests(fs, d, name).map { case (_, mf) =>
-          val txt = readString(fs, mf)
-          val fset = GraftStagingCatalog.parseManifestFiles(txt).toSet
-          val dvset = GraftStagingCatalog.parseArray(txt, "dvs").toSet
-          val kind = "\"kind\":\"([^\"]+)\"".r.findFirstMatchIn(txt)
-            .map(_.group(1)).getOrElse("commit")
-          val bid = "\"batchId\":(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-          val (rids, rnext) = RowLineage.parse(txt)
-          val dl = Delta(kind, bid, fset -- prevF, prevF -- fset,
-            dvset -- prevDv, prevDv -- dvset, rids, rnext)
+          val m = Manifest.read(fs, mf)
+          val (fset, dvset) = (m.files.toSet, m.dvs.toSet)
+          val dl = Delta(m, fset -- prevF, prevF -- fset, dvset -- prevDv, prevDv -- dvset)
           prevF = fset; prevDv = dvset; dl
         }
         val meta = TableMeta.read(fs, d)
@@ -1592,11 +1564,7 @@ object StagingMaintenance {
         // their BRANCH bases, and the watermark is the max of both logs —
         // the id twin of the file re-anchor.
         val lineageOn = meta.rowLineage
-        val (mainE, mainNext) =
-          if (!lineageOn) (Map.empty[String, RowLineage.Entry], 0L)
-          else if (mainHead == 0L) (Map.empty[String, RowLineage.Entry], 0L)
-          else RowLineage.parse(readString(fs,
-            GraftStagingCatalog.probeManifest(fs, d, mainHead).get))
+        val (mainE, mainNext) = (mainM.rowIds, mainM.watermark)
         // CROSS-PROCESS id-range guard: the allocation floor serializes
         // main and branch commits on the catalog monitor, but two DRIVER
         // PROCESSES sharing a table dir write to different log files and
@@ -1616,25 +1584,19 @@ object StagingMaintenance {
         // interleaved allocations stay disjoint by the shared floor and
         // pass untouched.
         if (lineageOn) {
-          val forkNext =
-            if (fork == 0L) 0L
-            else RowLineage.parse(readString(fs,
-              GraftStagingCatalog.probeManifest(fs, d, fork).getOrElse(
-                throw new IllegalStateException(
-                  s"rebase: fork version $fork of $catalog.$ns.$table is gone (VACUUMed?)"))))._2
+          val forkNext = forkM.watermark
           var missingMid = false
           val mainEverBases = ((fork + 1L) to mainHead).iterator.flatMap { v =>
-            GraftStagingCatalog.probeManifest(fs, d, v) match {
-              case Some(mf) =>
-                RowLineage.parse(readString(fs, mf))._1.valuesIterator.map(_.base)
-              case None => missingMid = true; Iterator.empty
+            readVersion(fs, d, v) match {
+              case Some(m) => m.rowIds.valuesIterator.map(_.base)
+              case None    => missingMid = true; Iterator.empty
             }
           }.toSet
           // a vacuumed intermediate manifest can hide a retired slot —
           // fall back to the conservative watermark test (refuse ANY
           // branch-allocated base below main's head watermark; over-refusal
           // is safe, the remedy is re-branch + re-apply)
-          val clash = deltas.iterator.flatMap(_.rowIds.iterator).collectFirst {
+          val clash = deltas.iterator.flatMap(_.m.rowIds.iterator).collectFirst {
             case (f, e) if e.base >= forkNext &&
               (mainEverBases(e.base) || (missingMid && e.base < mainNext)) => f
           }
@@ -1647,24 +1609,20 @@ object StagingMaintenance {
         val replayed = deltas.zipWithIndex.map { case (dl, i) =>
           curF = curF ++ dl.addF -- dl.remF
           curDv = curDv ++ dl.addDv -- dl.remDv
-          val rids =
-            if (!lineageOn) None
-            else {
-              curE = (curE -- dl.remF) ++ dl.addF.iterator.map { f =>
-                f -> dl.rowIds.getOrElse(f, throw new IllegalStateException(
-                  s"rebase: branch file $f has no rowIds entry in its manifest"))
-              }
-              Some((RowLineage.renderVector(curE.view.filterKeys(curF).toMap),
-                math.max(mainNext, dl.next)))
-            }
-          (mainHead + i + 1L, GraftStagingCatalog.manifestJson(
-            curF.toSeq, dl.batchId, dl.kind, curDv.toSeq, rids))
+          if (lineageOn) curE = (curE -- dl.remF) ++ dl.addF.iterator.map { f =>
+            f -> dl.m.rowIds.getOrElse(f, throw new IllegalStateException(
+              s"rebase: branch file $f has no rowIds entry in its manifest"))
+          }
+          (mainHead + i + 1L, Manifest(System.currentTimeMillis(), dl.m.kind, dl.m.batchId,
+            curDv.toSeq, curE.view.filterKeys(curF).toMap,
+            if (lineageOn) Some(math.max(mainNext, dl.m.watermark)) else None, curF.toSeq))
         }
         val logDir = GraftStagingCatalog.branchLogDir(d, name)
         fs.delete(logDir, true)
         fs.mkdirs(logDir)
-        replayed.foreach { case (v, json) =>
-          GraftStagingCatalog.writeString(fs, new Path(logDir, s"v$v.json"), json)
+        replayed.foreach { case (v, m) =>
+          if (!Manifest.create(fs, new Path(logDir, s"v$v.json"), m))
+            conflict(s"a concurrent commit landed on the branch at version $v")
         }
         GraftStagingCatalog.writeBranches(fs, d, branches + (name -> mainHead))
         mainHead
@@ -1701,24 +1659,20 @@ object StagingMaintenance {
     require(meta.rowLineage,
       s"$catalog.$ns.$table does not track row lineage " +
         "(create it with 'graft.row-lineage'='true')")
-    val mf = asOf match {
-      case Some(v) => GraftStagingCatalog.probeManifest(fs, d, v).getOrElse(
+    val m = asOf match {
+      case Some(v) => readVersion(fs, d, v).getOrElse(
         throw new IllegalArgumentException(
           s"$catalog.$ns.$table has no version $v"))
-      case None => GraftStagingCatalog.headManifest(fs, d).map(_._2).getOrElse(
+      case None => readHead(fs, d).map(_._2).getOrElse(
         throw new IllegalStateException(s"$catalog.$ns.$table has no commits yet"))
     }
-    val txt = readString(fs, mf)
-    val files = GraftStagingCatalog.parseManifestFiles(txt)
-    val (entries, _) = RowLineage.parse(txt)
     val schema = meta.schema.getOrElse(
       throw new IllegalStateException(s"$catalog.$ns.$table has no declared schema"))
     // merge-on-read (r12): suppress the version's DV-deleted rows before
     // resolving ids — the same filter-then-resolve order the DSv2 combined
     // reader uses
-    RowLineage.readWithIds(spark, d, files, schema, entries,
-      applyDvs = DeletionVectors.Deletes.load(fs, d, meta.mor,
-        GraftStagingCatalog.parseArray(txt, "dvs")).applyTo)
+    RowLineage.readWithIds(spark, d, m.files, schema, m.rowIds,
+      applyDvs = DeletionVectors.Deletes.load(fs, d, meta.mor, m.dvs).applyTo)
   }
 
   /** Live branches: name → (fork version, branch head version). */
@@ -1897,12 +1851,11 @@ object StagingMaintenance {
   def restore(spark: SparkSession, catalog: String, ns: String, table: String,
       toVersion: Long): Long = {
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    val mf = GraftStagingCatalog.probeManifest(fs, d, toVersion).getOrElse(
+    val target = readVersion(fs, d, toVersion).getOrElse(
       throw new IllegalArgumentException(
         s"$catalog.$ns.$table has no version $toVersion " +
           s"(available: ${versionManifests(fs, d).map(_._1).mkString(", ")})"))
-    val files = manifestFiles(fs, mf)
-    val dvs = GraftStagingCatalog.manifestDvs(fs, mf)
+    val (files, dvs) = (target.files, target.dvs)
     val missing = files.filterNot(f => isFile(fs, new Path(d, f))) ++
       dvs.filterNot(n => isFile(fs, new Path(new Path(d, DeletionVectors.DvDir), n)))
     if (missing.nonEmpty)
@@ -1916,7 +1869,7 @@ object StagingMaintenance {
     // identities) while the allocation watermark stays monotonic
     GraftStagingCatalog.writeExplicitManifest(fs, d, TableMeta.read(fs, d), files,
       kind = "restore", expectedBase = Some(base), dvs = dvs,
-      rowIdsFrom = Some(mf))
+      rowIdsFrom = Some(target))
   }
 
   /** Deletion-vector sidecars active at the table's HEAD version (empty for
@@ -1926,9 +1879,7 @@ object StagingMaintenance {
   def activeDvs(spark: SparkSession, catalog: String, ns: String,
       table: String): Seq[String] = {
     val (fs, d) = tableDir(spark, catalog, ns, table)
-    GraftStagingCatalog.headManifest(fs, d)
-      .map { case (_, mf) => GraftStagingCatalog.manifestDvs(fs, mf) }
-      .getOrElse(Seq.empty)
+    readHead(fs, d).fold(Seq.empty[String])(_._2.dvs)
   }
 
   /** Keep only the last `retainLast` versions; delete every data file no
@@ -1956,8 +1907,10 @@ object StagingMaintenance {
     // re-checking the head) also closes the tag race: a CALL tag that
     // lands before the lock is honored, because tags are read under the
     // same monitor their writer holds.
-    def plan(): (Seq[(Long, Path)], Seq[(Long, Path)], Seq[String]) = {
+    def plan(): (Seq[(Long, Manifest)], Seq[(Long, Path)], Seq[String]) = {
       val ms = versionManifests(fs, d)
+      val decoded = scala.collection.mutable.Map.empty[Long, Manifest]
+      def at(v: Long, mf: Path): Manifest = decoded.getOrElseUpdate(v, Manifest.read(fs, mf))
       val tagged = GraftStagingCatalog.readTags(fs, d).values.toSet
       // live branches pin their FORK version (branchHead falls back to it)
       // and every file their own commits reference — a WAP branch under
@@ -1971,18 +1924,19 @@ object StagingMaintenance {
       val tail = ms.drop(math.max(0, ms.size - retainLast)).map(_._1).toSet
       // versions committed inside the time window survive regardless of count
       val recent: Set[Long] = horizon.fold(Set.empty[Long])(h =>
-        ms.filter { case (_, f) => GraftStagingCatalog.commitMillis(fs, f) >= h }
+        ms.filter { case (v, f) => at(v, f).ts >= h }
           .map(_._1).toSet)
       val (keep, drop) = ms.partition { case (v, _) =>
         tail(v) || tagged(v) || branchForks(v) || groupPinned(v) || recent(v) }
       val branchFiles = branchReg.keys.flatMap(b =>
         GraftStagingCatalog.branchManifests(fs, d, b)
-          .flatMap { case (_, mf) => manifestFiles(fs, mf) }).toSet
+          .flatMap { case (_, mf) => Manifest.read(fs, mf).files }).toSet
+      val kept = keep.map { case (v, f) => v -> at(v, f) }
       // shallow-clone exemption (r14): files a live registered clone still
       // borrows survive source-side vacuum — see TableClone.cloneReferenced
-      val referenced = keep.flatMap { case (_, f) => manifestFiles(fs, f) }.toSet ++
+      val referenced = kept.flatMap(_._2.files).toSet ++
         branchFiles ++ TableClone.cloneReferenced(fs, d)
-      (keep, drop, dataFiles(fs, d).filterNot(referenced))
+      (kept, drop, dataFiles(fs, d).filterNot(referenced))
     }
     // CONCURRENCY GUARD: a commit that lands after planning could reference
     // a data file the plan classified as dead (a RESTORE is the sharpest
@@ -2009,11 +1963,10 @@ object StagingMaintenance {
       // deletion-vector retention mirrors data-file retention: a DV
       // sidecar lives while any retained manifest references it — branch
       // manifests included (branch appends carry the fork's DVs forward)
-      val referencedDvs = keep.flatMap { case (_, f) =>
-        GraftStagingCatalog.manifestDvs(fs, f) }.toSet ++
+      val referencedDvs = keep.flatMap(_._2.dvs).toSet ++
         GraftStagingCatalog.readBranches(fs, d).keys.flatMap(b =>
           GraftStagingCatalog.branchManifests(fs, d, b)
-            .flatMap { case (_, mf) => GraftStagingCatalog.manifestDvs(fs, mf) })
+            .flatMap { case (_, mf) => Manifest.read(fs, mf).dvs })
       val deadDvs =
         (try fs.listStatus(dvDir).toIndexedSeq
          catch { case _: FileNotFoundException => Seq.empty })
@@ -2025,12 +1978,11 @@ object StagingMaintenance {
       // exist — it is what carries their batchIds (exactly-once) past
       // their reclamation. A crash after this write and before the deletes
       // leaves a valid checkpoint over an un-reclaimed log — retryable.
-      keep.lastOption.foreach { case (hv, hmf) =>
-        GraftStagingCatalog.writeCheckpoint(fs, d, hv,
-          manifestFiles(fs, hmf), GraftStagingCatalog.manifestDvs(fs, hmf),
+      keep.lastOption.foreach { case (hv, hm) =>
+        GraftStagingCatalog.writeCheckpoint(fs, d, Checkpoint(hv,
           GraftStagingCatalog.committedBatchIds(fs, d),
           // exactly the retained set — reclaimed versions leave the history
-          keep.map { case (kv, kmf) => kv -> GraftStagingCatalog.commitMillis(fs, kmf) })
+          keep.map { case (kv, km) => kv -> km.ts }, hm.dvs, hm.files))
       }
       drop.foreach { case (_, f) => fs.delete(f, false) }
       deadNow.foreach(f => fs.delete(new Path(d, f), false))
@@ -2104,10 +2056,10 @@ object StagingMaintenance {
       // horizon (their owner never saw a successful claim), as are
       // orphaned `.tmp-lease-*` spool files from crashed claims.
       if (meta.rowLineage) {
-        val maxW = (GraftStagingCatalog.headManifest(fs, d).iterator ++
+        val maxW = (readHead(fs, d).iterator ++
           GraftStagingCatalog.readBranches(fs, d).keysIterator.flatMap(b =>
-            GraftStagingCatalog.branchHead(fs, d, b).iterator))
-          .map { case (_, mf) => RowLineage.parse(readString(fs, mf))._2 }
+            readHead(fs, d, Some(b)).iterator))
+          .map(_._2.watermark)
           .foldLeft(0L)(math.max)
         val nowMs = System.currentTimeMillis()
         val ld = new Path(d, GraftStagingCatalog.RowLeaseDir)

@@ -98,19 +98,12 @@ object StagingPurge {
       s"cannot purge $catalog.$ns.$table: live shallow clones borrow its " +
         s"files (${clones.mkString(", ")}) — purge or drop the clones first")
     val branchNames = readBranches(fs, d).keys.toSeq.sorted
-    def allManifests(): Seq[Path] =
-      versionManifests(fs, d).map(_._2) ++
-        branchNames.flatMap(b => branchManifests(fs, d, b).map(_._2))
-    val manifests0 = allManifests()
+    val manifests0 = allManifests(fs, d).map(Manifest.read(fs, _))
     // every descriptor any readable version references (r14: purge serves
     // DV-carrying history by remapping these in place after the rewrite)
-    val allDvNames = manifests0.flatMap(mf => manifestDvs(fs, mf)).distinct
-    val union0 = manifests0.flatMap(mf => manifestFiles(fs, mf)).distinct
-    val lineageEntries: Map[String, RowLineage.Entry] =
-      if (!lineage) Map.empty
-      else manifests0.foldLeft(Map.empty[String, RowLineage.Entry]) { (acc, mf) =>
-        acc ++ RowLineage.parse(readString(fs, mf))._1
-      }
+    val allDvNames = manifests0.flatMap(_.dvs).distinct
+    val union0 = manifests0.flatMap(_.files).distinct
+    val lineageEntries = manifests0.foldLeft(Map.empty[String, RowLineage.Entry])(_ ++ _.rowIds)
     require(union0.forall(f => !TableClone.isForeign(f)),
       s"cannot purge $catalog.$ns.$table: it borrows files from a clone " +
         "source — purge the source table, or OPTIMIZE to materialize first")
@@ -171,9 +164,8 @@ object StagingPurge {
     // candidate). A row live on BOTH main and a branch face still counts
     // once per face it is served from.
     val headKeys: Set[String] =
-      (headManifest(fs, d).iterator.map(_._2) ++
-        branchNames.iterator.flatMap(b => branchHead(fs, d, b).iterator.map(_._2)))
-        .flatMap(hmf => manifestFiles(fs, hmf).filter(candSet0).map(dirKey))
+      (readHead(fs, d).iterator ++ branchNames.iterator.flatMap(b => readHead(fs, d, Some(b))))
+        .flatMap(_._2.files.filter(candSet0).map(dirKey))
         .toSet
     val headKeyCol = typedLit(headKeys.toSeq)
     val purgedRows = raw.filter(hit &&
@@ -275,31 +267,20 @@ object StagingPurge {
           purgedByFile, twinCum)
       }
       var touched = 0
-      allManifests().foreach { mf =>
-        val files = manifestFiles(fs, mf)
-        if (files.exists(candSet)) {
-          val newFiles = files.flatMap(f =>
+      allManifests(fs, d).foreach { mf =>
+        val m = Manifest.read(fs, mf)
+        if (m.files.exists(candSet)) {
+          val newFiles = m.files.flatMap(f =>
             if (candSet(f)) repl.getOrElse(f, Seq.empty) else Seq(f))
-          val txt = readString(fs, mf)
-          val arr = newFiles.distinct.sorted.map(f => "\"" + f + "\"").mkString(",")
-          var out = txt.replaceFirst("\"files\":\\[[^\\]]*\\]",
-            java.util.regex.Matcher.quoteReplacement(s""""files":[$arr]"""))
-          if (lineage) {
-            // the rowIds vector follows: purged originals drop out, twins
-            // enter MATERIALIZED (their ids live in the physical column;
-            // the carried base is inert but kept for provenance)
-            val (ents, _) = RowLineage.parse(txt)
-            val newEnts = ents.flatMap { case (f, e) =>
-              if (!candSet(f)) Seq(f -> e)
-              else repl.getOrElse(f, Seq.empty)
-                .map(t => t -> RowLineage.Entry(e.base, mat = true))
-            }
-            val vec = RowLineage.renderVector(newEnts)
-              .map(e => "\"" + e + "\"").mkString(",")
-            out = out.replaceFirst("\"rowIds\":\\[[^\\]]*\\]",
-              java.util.regex.Matcher.quoteReplacement(s""""rowIds":[$vec]"""))
+          // the rowIds vector follows: purged originals drop out, twins
+          // enter MATERIALIZED (their ids live in the physical column; the
+          // carried base is inert but kept for provenance)
+          val newEnts = m.rowIds.flatMap { case (f, e) =>
+            if (!candSet(f)) Seq(f -> e)
+            else repl.getOrElse(f, Seq.empty)
+              .map(t => t -> RowLineage.Entry(e.base, mat = true))
           }
-          writeString(fs, mf, out)
+          Manifest.replace(fs, mf, m.copy(files = newFiles, rowIds = newEnts))
           touched += 1
         }
       }
@@ -311,10 +292,10 @@ object StagingPurge {
         val vd = new Path(d, VersionsDir)
         fs.delete(new Path(vd, CkptPointer), false)
         dropStaleCheckpoints(fs, d)
-        headManifest(fs, d).foreach { case (hv, hmf) =>
-          writeCheckpoint(fs, d, hv, manifestFiles(fs, hmf),
-            manifestDvs(fs, hmf), batchIds,
-            versionManifests(fs, d).map { case (v, m) => v -> commitMillis(fs, m) })
+        readHead(fs, d).foreach { case (hv, hm) =>
+          writeCheckpoint(fs, d, Checkpoint(hv, batchIds,
+            versionManifests(fs, d).map { case (v, mf) => v -> Manifest.read(fs, mf).ts },
+            hm.dvs, hm.files))
         }
       }
       // materialized change-feed caches hold pre-purge rows; they lazily

@@ -51,7 +51,7 @@ private[catalog] class StagingMicroBatchStream(
     options: Map[String, String])
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
-  import GraftStagingCatalog.{headManifest, manifestFiles, manifestKind, probeManifest}
+  import GraftStagingCatalog.{headManifest, probeManifest}
 
   private val dir = new Path(tableDirStr)
   private def fs: FileSystem =
@@ -118,16 +118,19 @@ private[catalog] class StagingMicroBatchStream(
         s"streaming read of $tableDirStr: version $v was VACUUMed away before " +
           "the stream consumed it — raise the vacuum retention or restart " +
           "the stream from a newer graft.starting-version"))
-    def filesOf(v: Long): Seq[String] =
-      if (v <= 0L) Seq.empty else manifestFiles(fs, manifestOf(v))
+    def at(v: Long): Manifest = if (v <= 0L) Manifest(0L) else Manifest.read(fs, manifestOf(v))
+    // each version is read once; its predecessor is the previous step's
+    var last: Option[Manifest] = None
     ((fromV + 1L) to toV).flatMap { v =>
-      manifestKind(fs, manifestOf(v)) match {
+      val m = at(v)
+      val before = last
+      last = Some(m)
+      lazy val prev = before.getOrElse(at(v - 1L)).files.toSet
+      m.kind match {
         // "clone" (a shallow clone's first version) and "sync" (an
         // incremental refresh absorbing source appends) are pure
         // file-additions — append semantics, r14
-        case "commit" | "clone" | "sync" =>
-          val prev = filesOf(v - 1L).toSet
-          filesOf(v).filterNot(prev)
+        case "commit" | "clone" | "sync" => m.files.filterNot(prev)
         case "optimize" => Seq.empty // layout-only: identical rows
         case changed if ignoreChanges =>
           // Delta's ignoreChanges semantics, not a stronger loss mode (r9
@@ -137,8 +140,7 @@ private[catalog] class StagingMicroBatchStream(
           // rewritten files re-emit their surviving rows (downstream must
           // tolerate duplicates — the documented trade). Only the REMOVED
           // files' rows disappear without a signal.
-          val prev = filesOf(v - 1L).toSet
-          filesOf(v).filterNot(prev)
+          m.files.filterNot(prev)
         case changed => throw new IllegalStateException(
           s"streaming read of $tableDirStr: version $v is a '$changed' commit — " +
             "the table is no longer append-only at this offset. Set " +
@@ -217,7 +219,7 @@ private[catalog] case class VersionsPerTrigger(maxVersions: Long) extends ReadLi
 private[catalog] object StagingAdmission {
   import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit,
     ReadAllAvailable, ReadMaxFiles}
-  import GraftStagingCatalog.{manifestFiles, manifestKind, probeManifest}
+  import GraftStagingCatalog.probeManifest
 
   /** Per-trigger rate options, parsed once at stream construction. */
   def caps(options: Map[String, String], tableDirStr: String): (Option[Long], Option[Long]) = {
@@ -267,16 +269,16 @@ private[catalog] object StagingAdmission {
                 s"streaming read of $tableDirStr: version $v was VACUUMed away before " +
                   "the stream consumed it — raise the vacuum retention or restart " +
                   "from a newer graft.starting-version"))
-            def filesOf(v: Long): Set[String] =
-              if (v <= 0L) Set.empty else manifestFiles(fs, manifestOf(v)).toSet
+            def at(v: Long): Manifest =
+              if (v <= 0L) Manifest(0L) else Manifest.read(fs, manifestOf(v))
             var v = startV
             var admitted = 0L
-            var prev = filesOf(startV)
+            var prev = at(startV).files.toSet
             var stop = false
             while (!stop && v < vCap) {
-              val nm = manifestOf(v + 1L)
-              val cur = manifestFiles(fs, nm).toSet
-              val delta: Long = manifestKind(fs, nm) match {
+              val nm = at(v + 1L)
+              val cur = nm.files.toSet
+              val delta: Long = nm.kind match {
                 case "optimize" => 0L // layout-only: both faces skip it
                 case "commit"   => (cur -- prev).size.toLong
                 case _          =>
@@ -454,7 +456,7 @@ private[catalog] class ChangeFeedMicroBatchStream(
     options: Map[String, String])
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
-  import GraftStagingCatalog.{headManifest, manifestFiles, manifestKind, probeManifest}
+  import GraftStagingCatalog.headManifest
 
   private val dir = new Path(tableDirStr)
   private def fs: FileSystem =
@@ -521,7 +523,7 @@ private[catalog] class ChangeFeedMicroBatchStream(
   * when absence is legal (the batch face).
   */
 private[catalog] object ChangeFeedPlanner {
-  import GraftStagingCatalog.{manifestFiles, manifestKind, probeManifest}
+  import GraftStagingCatalog.probeManifest
 
   private def scanFor(paths: Seq[String], schema: StructType, label: String): Scan = {
     val table = ParquetTable(label, SparkSession.active,
@@ -546,14 +548,14 @@ private[catalog] object ChangeFeedPlanner {
     // diff reads exactly its added files.
     val lineage = TableMeta.read(fs, dir).rowLineage
     versions.foreach { v =>
-      val mf = manifestOf(v)
-      manifestKind(fs, mf) match {
+      val m = Manifest.read(fs, manifestOf(v))
+      m.kind match {
         case "optimize" => () // layout-only: no row changes, never re-fed
         case "commit" if !lineage =>
           val prev: Set[String] =
             if (v <= 1L) Set.empty
-            else manifestFiles(fs, manifestOf(v - 1L)).toSet
-          val added = manifestFiles(fs, mf).filterNot(prev)
+            else Manifest.read(fs, manifestOf(v - 1L)).files.toSet
+          val added = m.files.filterNot(prev)
             .map(f => new Path(dir, f).toString)
           if (added.nonEmpty) {
             val scan = scanFor(added, baseSchema, s"$tableDirStr[cdf insert v$v]")

@@ -114,16 +114,16 @@ object TableClone {
     // resolve the source snapshot manifest
     val resolvedTag = tag.map(t => StagingMaintenance.resolveTag(
       spark, catalog, ns, table, t))
-    val (srcV, mf) = branch match {
+    val (srcV, srcM) = branch match {
       case Some(b) =>
-        branchHead(fs, src, b).getOrElse(throw new IllegalArgumentException(
+        readHead(fs, src, branch).getOrElse(throw new IllegalArgumentException(
           s"$catalog.$ns.$table has no branch '$b'"))
       case None =>
         version.orElse(resolvedTag) match {
-          case Some(v) => (v, probeManifest(fs, src, v).getOrElse(
+          case Some(v) => (v, readVersion(fs, src, v).getOrElse(
             throw new IllegalArgumentException(
               s"$catalog.$ns.$table has no version $v")))
-          case None => headManifest(fs, src).getOrElse(
+          case None => readHead(fs, src).getOrElse(
             throw new IllegalArgumentException(
               s"$catalog.$ns.$table has no committed version to clone"))
         }
@@ -133,12 +133,12 @@ object TableClone {
     require(!srcMeta.rowLineage,
       s"cannot shallow-clone $catalog.$ns.$table: row-lineage tables' " +
         "per-file id bases do not transfer (materialize with CTAS instead)")
-    val names = manifestFiles(fs, mf)
+    val names = srcM.files
     // MERGE-ON-READ snapshot (late r14): the in-force descriptors
     // transplant into the clone's own sidecar dir, references renamed to
     // the bare names the borrowed-entry read path keys by — unambiguous
     // only when no two covered files share a bare name
-    val srcDvNames = manifestDvs(fs, mf)
+    val srcDvNames = srcM.dvs
     if (srcDvNames.nonEmpty) {
       val collide = names.groupBy(f => f.substring(f.lastIndexOf('/') + 1))
         .filter(_._2.size > 1)
@@ -295,11 +295,11 @@ object TableClone {
     require(!srcMeta.rowLineage,
       s"clone source $src enabled row lineage after the clone — re-clone")
     def stateAt(v: Long): (Seq[String], Set[String]) = {
-      val mf = probeManifest(fs, src, v).getOrElse(
+      val m = readVersion(fs, src, v).getOrElse(
         throw new IllegalStateException(
           s"sync: source version $v was vacuumed past the clone's " +
             s"watermark $lastV — the file delta cannot be reconstructed; re-clone"))
-      (manifestFiles(fs, mf), manifestDvs(fs, mf).toSet)
+      (m.files, m.dvs.toSet)
     }
     val fp = if (lines.length >= 4) lines(3).trim
              else schemaFingerprint(srcMeta)
@@ -349,9 +349,9 @@ object TableClone {
     }
     val absolute = added.toSeq.map(f =>
       if (isForeign(f)) f else new Path(src, f).toString)
-    val head = headManifest(fs, d)
-    val curFiles = head.map { case (_, mf) => manifestFiles(fs, mf) }.getOrElse(Seq.empty)
-    val base = head.map(_._1).getOrElse(0L)
+    val head = readHead(fs, d)
+    val curFiles = head.fold(Seq.empty[String])(_._2.files)
+    val base = head.fold(0L)(_._1)
     // transitive chains: files the SOURCE itself borrowed arrive as
     // foreign entries pointing at ITS upstream — register there too (once)
     // so that upstream's vacuum keeps walking this clone's manifests
@@ -457,12 +457,8 @@ object TableClone {
           catch { case _: FileNotFoundException => false }
         if (!live) { fs.delete(st.getPath, false); Iterator.empty }
         else {
-          val mains = GraftStagingCatalog.versionManifests(fs, cloneDir)
-          val branches = GraftStagingCatalog.readBranches(fs, cloneDir)
-            .keysIterator.flatMap(b =>
-              GraftStagingCatalog.branchManifests(fs, cloneDir, b))
-          (mains.iterator ++ branches)
-            .flatMap { case (_, mf) => GraftStagingCatalog.manifestFiles(fs, mf) }
+          GraftStagingCatalog.allManifests(fs, cloneDir).iterator
+            .flatMap(Manifest.read(fs, _).files)
             .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
         }
       }.toSet

@@ -41,7 +41,7 @@ class StagingProtocolSpec extends graft.SparkSpec {
     writeCommitManifest(fs, d, TableMeta(), before = Set("a.parquet", "b.parquet"))
     val (v3, mf3) = versionManifests(fs, d).last
     assert(v3 === 3L)
-    assert(manifestFiles(fs, mf3).toSet === Set("a.parquet", "b.parquet", "c.parquet"))
+    assert(Manifest.read(fs, mf3).files.toSet === Set("a.parquet", "b.parquet", "c.parquet"))
     // a REWRITE commit computed against v1 must NOT replace v3's state
     val e = intercept[java.util.ConcurrentModificationException] {
       writeExplicitManifest(fs, d, TableMeta(), Seq("rewritten.parquet"),
@@ -54,7 +54,7 @@ class StagingProtocolSpec extends graft.SparkSpec {
     val v4 = writeExplicitManifest(fs, d, TableMeta(), Seq("rewritten.parquet"),
       kind = "update", expectedBase = Some(3L))
     assert(v4 === 4L)
-    assert(manifestFiles(fs, versionManifests(fs, d).last._2) === Seq("rewritten.parquet"))
+    assert(Manifest.read(fs, versionManifests(fs, d).last._2).files === Seq("rewritten.parquet"))
   }
 
   test("zone-map canMatch is SOUND: a pruned file can contain no matching value") {
@@ -261,7 +261,7 @@ class StagingProtocolSpec extends graft.SparkSpec {
           model = carried + f
       }
       val cur = versionManifests(fs, d).lastOption
-        .map { case (_, mf) => manifestFiles(fs, mf).toSet }.getOrElse(Set.empty)
+        .map { case (_, mf) => Manifest.read(fs, mf).files.toSet }.getOrElse(Set.empty)
       assert(cur === model, s"current diverged from model after step: $cur vs $model")
     }
   }
